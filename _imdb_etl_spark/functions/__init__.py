@@ -28,6 +28,8 @@ reproducible across retries and partition counts, which float sums do not.
 
 from __future__ import annotations
 
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -80,7 +82,9 @@ _FIXED_WIDTH = {
 # UPPER BOUND on the frame's cardinality, so the broadcast gate can
 # prove "small enough" without running its eager measure job.
 # Generate (explode), Join, Union etc. can multiply rows and must
-# fall through to the measured pass.
+# fall through to the measured pass. One exception: a global
+# Aggregate over empty input still yields one row, so a plan with an
+# Aggregate is bounded by max(footer sum, 1).
 _CARD_NONINCREASING = {
     "Project",
     "Filter",
@@ -104,10 +108,12 @@ def _footer_rows_upper(df) -> int | None:
     storage or exotic plans degrade to the old behavior."""
     try:
         stack = [df._jdf.queryExecution().analyzed()]
+        aggregates = False
         while stack:
             node = stack.pop()
             if node.nodeName() not in _CARD_NONINCREASING:
                 return None
+            aggregates |= node.nodeName() == "Aggregate"
             for i in range(node.children().size()):
                 stack.append(node.children().apply(i))
         files = df.inputFiles()
@@ -117,13 +123,11 @@ def _footer_rows_upper(df) -> int | None:
 
         total = 0
         for f in files:
-            if not f.startswith("file:"):
+            uri = urlparse(f)
+            if uri.scheme != "file" or uri.netloc:
                 return None
-            path = f[len("file:"):]
-            while path.startswith("//"):
-                path = path[1:]
-            total += pq.ParquetFile(path).metadata.num_rows
-        return total
+            total += pq.ParquetFile(unquote(uri.path)).metadata.num_rows
+        return max(total, 1) if aggregates else total
     except Exception:  # noqa: BLE001
         return None
 

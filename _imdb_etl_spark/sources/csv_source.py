@@ -18,18 +18,22 @@ here — ``DROPMALFORMED`` drops rows depending on which columns a given
 query parses (projection pruning). So typing is done explicitly: read
 every field as string, validate with ``try_cast`` (null raw value is
 fine; non-null raw value that fails its cast marks the row), then
-either abort (one counting pass over the marked rows at load time),
-filter the marked rows, or keep them nulled. Structural malformation
-(wrong field count) cannot be seen through the all-string schema — the
-PERMISSIVE parse silently null-pads short rows and truncates long ones
-— so the read also requests ``columnNameOfCorruptRecord`` and treats a
-populated corrupt column as a bad row. Spark refuses scans whose
+either abort, filter the marked rows, or keep them nulled. Structural
+malformation (wrong field count) cannot be seen through the all-string
+schema — the PERMISSIVE parse silently null-pads short rows and
+truncates long ones — so the read also requests
+``columnNameOfCorruptRecord`` and treats a populated corrupt column as
+a bad row. Spark refuses scans whose
 pruned schema is only the corrupt column, and Catalyst's constraint
 propagation elides naive extra references, so the predicate carries a
 non-foldable probe over the data columns to keep them in the scan.
-Everything stays in whole-stage codegen — streaming passes, no cache,
-deterministic under any downstream projection, identical semantics at
-any scale.
+
+Two loaders share that raw read and predicate. ``read_staging_csv``
+returns a lazy view: abort costs one counting pass at load time, and
+every later action parses the file again. ``cache_staging_csv`` is the
+physical staging table of the reference's COPY INTO: one job parses
+the file, caches the typed rows and, under abort, counts the bad rows
+through an ``Observation`` on that same scan.
 """
 
 from __future__ import annotations
@@ -37,7 +41,7 @@ from __future__ import annotations
 import functools
 import operator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -55,25 +59,11 @@ def _bad_row_predicate(schema: StructType) -> Column | None:
     return functools.reduce(operator.or_, bad) if bad else None
 
 
-def read_staging_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    drop_malformed: bool = False,
-    on_error: str | None = None,
-) -> DataFrame:
-    """Read a staging CSV with COPY INTO semantics.
-
-    on_error: 'abort' (default; type errors fail the load, like
-    Snowflake's ABORT_STATEMENT), 'continue' (skip bad rows, like
-    ON_ERROR='CONTINUE'), or 'permissive' (keep rows, null bad fields).
-    ``drop_malformed=True`` is shorthand for 'continue'.
-    """
-    if on_error is None:
-        on_error = "continue" if drop_malformed else "abort"
-    if on_error not in ("abort", "continue", "permissive"):
-        raise ValueError(f"on_error must be abort|continue|permissive: {on_error}")
-
+def _raw_read(
+    spark: SparkSession, path: str, schema: StructType
+) -> tuple[DataFrame, Column]:
+    """The all-string PERMISSIVE scan of a staging CSV and the predicate
+    that marks its bad rows (a typed or a structural parse failure)."""
     corrupt_col = "_corrupt_record"
     raw_schema = StructType(
         [StructField(f.name, StringType(), True) for f in schema.fields]
@@ -98,17 +88,76 @@ def read_staging_csv(
     )
     structural = F.col(corrupt_col).isNotNull() & probe
     typed = _bad_row_predicate(schema)
-    bad = structural if typed is None else structural | typed
+    return raw, structural if typed is None else structural | typed
+
+
+def _malformed(raw: DataFrame, bad: Column, n_bad: int, path: str) -> MalformedRowsError:
+    sample = [r.asDict() for r in raw.where(bad).head(3)]
+    return MalformedRowsError(
+        f"{n_bad} row(s) in {path} fail typed or structural "
+        f"parsing (on_error='abort'); sample: {sample}"
+    )
+
+
+def _typed(rows: DataFrame, schema: StructType) -> DataFrame:
+    return rows.select(
+        *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
+def read_staging_csv(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    drop_malformed: bool = False,
+    on_error: str | None = None,
+) -> DataFrame:
+    """Read a staging CSV with COPY INTO semantics, as a lazy view that
+    re-parses the file on every action.
+
+    on_error: 'abort' (default; type errors fail the load, like
+    Snowflake's ABORT_STATEMENT), 'continue' (skip bad rows, like
+    ON_ERROR='CONTINUE'), or 'permissive' (keep rows, null bad fields).
+    ``drop_malformed=True`` is shorthand for 'continue'.
+    """
+    if on_error is None:
+        on_error = "continue" if drop_malformed else "abort"
+    if on_error not in ("abort", "continue", "permissive"):
+        raise ValueError(f"on_error must be abort|continue|permissive: {on_error}")
+
+    raw, bad = _raw_read(spark, path, schema)
     if on_error == "abort":
         n_bad = raw.where(bad).count()
         if n_bad:
-            sample = [r.asDict() for r in raw.where(bad).head(3)]
-            raise MalformedRowsError(
-                f"{n_bad} row(s) in {path} fail typed or structural "
-                f"parsing (on_error='abort'); sample: {sample}"
-            )
+            raise _malformed(raw, bad, n_bad, path)
     elif on_error == "continue":
         raw = raw.where(~bad)
-    return raw.select(
-        *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
+    return _typed(raw, schema)
+
+
+def cache_staging_csv(
+    spark: SparkSession, path: str, schema: StructType, drop_malformed: bool = False
+) -> DataFrame:
+    """COPY INTO a physical staging table, under 'abort' or, with
+    ``drop_malformed=True``, 'continue' (see ``read_staging_csv``). One
+    job parses the CSV and caches the typed rows in memory; under
+    'abort' an ``Observation`` on that same scan counts the bad rows.
+    Later queries read the cached rows, not the file. The caller frees
+    them with ``unpersist()`` or by dropping a temp view made from the
+    frame; on failure they are freed here."""
+    raw, bad = _raw_read(spark, path, schema)
+    seen = Observation()
+    if drop_malformed:
+        rows = raw.where(~bad)
+    else:
+        rows = raw.observe(seen, F.count_if(bad).alias("n_bad"))
+    staged = _typed(rows, schema).cache()
+    try:
+        staged.write.format("noop").mode("overwrite").save()
+        n_bad = 0 if drop_malformed else seen.get["n_bad"]
+        if n_bad:
+            raise _malformed(raw, bad, n_bad, path)
+    except BaseException:
+        staged.unpersist()
+        raise
+    return staged

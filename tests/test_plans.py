@@ -637,6 +637,51 @@ def test_broadcast_gate_footer_short_circuit(spark, sf_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
+def test_footer_bound_counts_global_aggregate_row(spark, tmp_path):
+    """A global aggregate over an empty file yields one row, so the
+    footer bound of a plan with an Aggregate is at least 1, while a
+    plain projection of the same file stays at the footer sum of 0."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from _imdb_etl_spark.functions import _footer_rows_upper
+
+    path = str(tmp_path / "empty.parquet")
+    pq.write_table(pa.table({"x": pa.array([], pa.int64())}), path)
+    df = spark.read.parquet(path)
+    assert _footer_rows_upper(df.select("x")) == 0
+    agg = df.agg(F.max("x").alias("m"))
+    assert agg.count() == 1
+    assert _footer_rows_upper(agg) == 1
+
+
+def test_footer_short_circuit_on_path_with_space(spark, tmp_path):
+    """inputFiles() percent-encodes the path; the footer read must
+    decode it, so a table under a directory with a space still gets the
+    short-circuit and runs no measure job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from _imdb_etl_spark.functions import _footer_rows_upper, broadcast_if_bounded
+
+    d = tmp_path / "with space"
+    d.mkdir()
+    pq.write_table(pa.table({"k": pa.array(range(7), pa.int64())}), str(d / "t.parquet"))
+    df = spark.read.parquet(str(d)).select("k")
+    assert any("%20" in f for f in df.inputFiles())
+    assert _footer_rows_upper(df) == 7
+    sc = spark.sparkContext
+    sc.setJobGroup("gate-space", "footer probe under a spaced path")
+    try:
+        hinted = broadcast_if_bounded(df)
+        assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
+        assert sc.statusTracker().getJobIdsForGroup("gate-space") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_regression_tripwire_normalizes_by_canary():
     """The bench tripwire must scale its 1.5x threshold by the canary
     load factor (round-11 verdict task 4): a uniformly inflated run

@@ -70,6 +70,32 @@ def test_structural_malformation_detected(spark, tmp_path):
     assert padded.count() == 4
 
 
+def test_cached_staging_keeps_copy_into_semantics(spark, tmp_path):
+    """The once-parsed staging load flags the same structural rows as
+    the lazy read: abort raises and frees its cache, continue keeps the
+    well-formed rows in memory so they outlive the file."""
+    import pytest
+
+    from _imdb_etl_spark.sources.csv_source import MalformedRowsError, cache_staging_csv
+
+    p = tmp_path / "struct.csv"
+    p.write_text('a,b,c\n1,x,2\n2,y\n3,z,4,9\n4,"q,uoted",5\n')
+    schema = StructType(
+        [StructField(c, StringType()) for c in ("a", "b", "c")]
+    )
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(MalformedRowsError, match="2 row\\(s\\)"):
+        cache_staging_csv(spark, str(p), schema)
+    assert jsc.getPersistentRDDs().size() == before
+
+    kept = cache_staging_csv(spark, str(p), schema, drop_malformed=True)
+    p.unlink()
+    assert {r["a"] for r in kept.collect()} == {"1", "4"}
+    kept.unpersist()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_explicit_schema_no_inference(spark, tmp_path):
     p = tmp_path / "t.csv"
     p.write_text('a,b\n"1","x"\nNULL,y\n')

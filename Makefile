@@ -8,8 +8,11 @@ check:
 test:
 	python -m pytest tests/ -q
 
+# the benchmark of record: both perfbench workloads, then its smoke test
 bench:
-	python bench.py
+	python3 perfbench/run.py --workload imdb_etl --seed 1 --seconds 24
+	python3 perfbench/run.py --workload dashboard --seed 1 --seconds 24
+	python3 perfbench/smoke.py
 
 smoke:
 	python -c "import __spark_entry__ as e; \

@@ -38,7 +38,7 @@ from _imdb_etl_spark.functions import (
     md5_prefix_int_sql,
 )
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables, spread
+from _imdb_etl_spark.sources import load_tables, spread, write_read_back
 
 _EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 _IPV4_RE = "\\b\\d{1,3}(\\.\\d{1,3}){3}\\b"
@@ -1030,8 +1030,7 @@ def _bpe_ckpt_stream(
     os.makedirs(os.path.dirname(base), exist_ok=True)
     reap_stale_pid_dirs(os.path.dirname(base), "bpe_ckpt")
     path = f"{base}/run{run_id}_gen_{gen}"
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return write_read_back(df, path)
 
 
 def _bpe_train(

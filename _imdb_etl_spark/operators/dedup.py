@@ -28,7 +28,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables, spread, stage_to_parquet
+from _imdb_etl_spark.sources import (
+    load_tables,
+    spread,
+    stage_to_parquet,
+    write_read_back,
+)
 
 _EXACT_SQL = """
 SELECT md5(text) AS text_hash, COUNT(*) AS n_copies, MIN(doc_id) AS keep_id
@@ -949,8 +954,7 @@ def _cc_stage(df: DataFrame, path: str) -> DataFrame:
     one tiny columnar write per round (2 long columns) and leaves the
     heap clean; the per-run directory is never overwritten mid-plan
     (run-counter namespaced) and is reaped by the shared pid GC."""
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return write_read_back(df, path)
 
 
 _ITER_RUN_DIRS: dict = {}

@@ -24,7 +24,12 @@ from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import md5_prefix_int_sql
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables, spread, stage_sorted
+from _imdb_etl_spark.sources import (
+    load_tables,
+    spread,
+    stage_sorted,
+    write_read_back,
+)
 
 def _toks():
     return F.split(F.col("text"), " ")
@@ -1342,7 +1347,9 @@ def _winnow_rare_postings(
     )
     # per-doc distinct happens MAP-SIDE inside the array (round 13):
     # (doc_id, v) rows from array_distinct are already globally
-    # distinct because doc_id scopes them, so the old .distinct() was
+    # distinct because doc_id scopes them (doc_id is unique per
+    # documents row, pinned by tests/test_sources.py::
+    # test_documents_doc_id_unique), so the old .distinct() was
     # a full exchange of the posting stream (236M rows at 1000x) that
     # bought nothing — the index now writes straight off the map pass
     # (measured 26.6 -> 23.1 s at 100x for the posting stream alone)
@@ -1356,8 +1363,7 @@ def _winnow_rare_postings(
             )
         ).alias("v"),
     )
-    fp_lazy.write.mode("overwrite").parquet(path)
-    fp = spark.read.parquet(path)
+    fp = write_read_back(fp_lazy, path)
     n_docs = docs.count()
     cap = max(
         _WIN_DF_FLOOR, min(_WIN_DF_CEIL, -(-_WIN_DF_PERMILLE * n_docs // 1000))
@@ -1473,16 +1479,13 @@ def dedup_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # postings table hit at the 100x probe, and the parquet route is
     # the consistent persisted-index answer at 100 TB.
     gpath = f"{_winnow_stage_base()}/run{next(_WIN_RUN_SEQ)}_groups"
-    (
-        docsets.groupBy("vs")
-        .agg(
+    gmap = write_read_back(
+        docsets.groupBy("vs").agg(
             F.min("doc_id").alias("gid"),
             F.count(F.lit(1)).alias("members"),
-        )
-        .write.mode("overwrite")
-        .parquet(gpath)
+        ),
+        gpath,
     )
-    gmap = spark.read.parquet(gpath)
     # Per-VALUE spanning forests instead of the full qualifying-pair
     # relation. The global qualifying graph is the union over value
     # buckets of each bucket's local qualifying subgraph (every

@@ -53,79 +53,22 @@ GATE_WINDOW_SIZE = 50
 # window to the BACK of _GATE_REST, replay the new window at sf0.01
 # (tools/check.py) before committing.
 #
-# Round 13 window (rotation per the round-12 verdict task 9): the
-# pure prefix take _GATE_REST[:50] of the round-12 queue — the last
-# of the freshness tail (text_embed_batch_inference through
-# shipping_lag_percentiles; the queue was built strictly
-# oldest-driver-row-first in round 9 and each rotation since has been
-# a prefix take + back-append, preserving that invariant). This
-# rotation retires the freshness tail entirely — every registered
-# face has now had a driver row within the rotation horizon. The
-# window also happens to re-gate several faces this optimization
-# round touched (text_tfidf_keywords, corpus_dsir_importance,
-# parts_abc_classification, audit_referential_integrity). The retired
-# round-12 window moved to the BACK of _GATE_REST. Replayed green at
-# sf0.01 (tools/check.py) before commit.
+# Current window: the six faces round 13 changed without a driver row
+# (tpch_q8, tpch_q19, dedup_simhash, neardup_pagerank,
+# split_leakage_audit, dedup_winnow_clusters — the registered face of
+# the winnow pair relation) lead it, pulled out of _GATE_REST; the
+# rest is the prefix take of the remaining queue (supplier_hhi_by_nation
+# through source_schema_evolution). The retired round-13 window moved
+# to the BACK of _GATE_REST. The six were replayed green with
+# tools/check.py at sf0.001, sf0.01 and sf0.1, and the whole window at
+# sf0.01, before commit.
 GATE_WINDOW = [
-    "text_embed_batch_inference",
-    "text_lm_heldout_perplexity",
-    "text_tfidf_keywords",
-    "tokenizer_bpe_apply_merge",
-    "tokenizer_bpe_first_merges",
-    "udtf_polymorphic_first_tokens",
-    "audit_benford_totalprice",
-    "audit_referential_integrity",
-    "bucketed_join_orders_lineitem",
-    "corpus_dsir_importance",
-    "corpus_js_divergence",
-    "corpus_weighted_reservoir",
-    "cube_orders_status_year",
-    "customers_gini_spend",
-    "customers_rfm_segments",
-    "customers_tier_migration",
-    "dedup_incremental_minhash",
-    "dedup_jaccard_prefix",
-    "dedup_soft_weights",
-    "embedding_matryoshka_recall",
-    "embedding_outlier_mahalanobis",
-    "events_ab_conversion_ztest",
-    "events_ab_srm_check",
-    "events_acf_lag1",
-    "events_attribution_first_touch",
-    "events_attribution_time_decay",
-    "events_bot_regularity",
-    "events_dau_wau_mau",
-    "events_decompose_additive",
-    "events_gapfill_interpolate",
-    "events_interval_coalesce",
-    "events_ks_two_sample",
-    "events_mannwhitney_u",
-    "events_seasonal_anomaly",
-    "events_sequence_pattern",
-    "events_survival_km",
-    "lineitem_weighted_median_price",
-    "median_exact_price_per_brand",
-    "multimodal_audio_segments",
-    "neardup_clustering_coefficient",
-    "neardup_rate_by_source",
-    "orders_cohort_ltv",
-    "orders_mom_yoy_growth",
-    "orders_spearman_price_items",
-    "parts_abc_classification",
-    "privacy_dp_noisy_counts",
-    "profile_table_orders",
-    "quality_calibration_bins",
-    "scalar_bitwise_suite",
-    "shipping_lag_percentiles",
-]
-# everything below keeps per-round local coverage (tools/check.py +
-# pytest); ordering = rotation priority, strictly oldest driver row
-# first (ties broken by name), rebuilt this round from the raw
-# CORRECTNESS_r1..r8 artifacts. Round 10+: take _GATE_REST[:50] as the
-# window, append the retired window to the BACK (its rows are then the
-# newest), re-sorting is only needed if a demotion/registration
-# changes the set.
-_GATE_REST = [
+    "tpch_q8_national_market_share",
+    "tpch_q19_discounted_revenue",
+    "dedup_simhash",
+    "neardup_pagerank",
+    "split_leakage_audit",
+    "dedup_winnow_clusters",
     "supplier_hhi_by_nation",
     "text_cooccurrence_pmi",
     "text_remove_duplicate_spans",
@@ -142,7 +85,6 @@ _GATE_REST = [
     "dedup_jaccard_prefix_persisted",
     "dedup_lsh_recall_audit",
     "dedup_minhash_index_persisted",
-    "dedup_winnow_clusters",
     "distinct_users_bitmap_exact",
     "dq_observe_metrics",
     "embedding_silhouette_simplified",
@@ -171,6 +113,15 @@ _GATE_REST = [
     "sink_dynamic_partition_backfill",
     "sketch_distinct_kmv_setops",
     "source_schema_evolution",
+]
+# everything below keeps per-round local coverage (tools/check.py +
+# pytest); ordering = rotation priority, strictly oldest driver row
+# first (ties broken by name), rebuilt this round from the raw
+# CORRECTNESS_r1..r8 artifacts. Round 10+: take _GATE_REST[:50] as the
+# window, append the retired window to the BACK (its rows are then the
+# newest), re-sorting is only needed if a demotion/registration
+# changes the set.
+_GATE_REST = [
     "sql_identifier_binding",
     "sql_session_variable",
     "streaming_foreachbatch_upsert",
@@ -209,7 +160,6 @@ _GATE_REST = [
     "tpch_q14_promo_effect",
     "tpch_q17_small_quantity",
     "tpch_q18_large_volume",
-    "tpch_q19_discounted_revenue",
     "tpch_q4_order_priority",
     "tpch_q5_local_supplier_volume",
     "tpch_q6_forecast_revenue",
@@ -244,7 +194,6 @@ _GATE_REST = [
     "tpch_q21_waiting_orders",
     "tpch_q22_prospective_customers",
     "tpch_q2_min_cost_supplier",
-    "tpch_q8_national_market_share",
     "tpch_q9_product_type_profit",
     "vocab_top_words",
     "window_suite2_distribution",
@@ -256,7 +205,6 @@ _GATE_REST = [
     "corpus_pack_shards",
     "dedup_corpus_lines",
     "dedup_incremental_batch",
-    "dedup_simhash",
     "embedding_norms_arrow",
     "events_daily_pivot",
     "events_gapfill_hourly",
@@ -320,14 +268,12 @@ _GATE_REST = [
     "multimodal_phash_dedup",
     "multimodal_shot_boundaries",
     "neardup_graph_stats",
-    "neardup_pagerank",
     "pipeline_pretrain_mix",
     "pysink_roundtrip_docs",
     "recursive_cte_amortization",
     "scd2_point_in_time_join",
     "sim_knn_ivf_trained",
     "sim_knn_pq",
-    "split_leakage_audit",
     "sql_tvf_brand_stats",
     "sql_udf_revenue",
     "streaming_join_view_purchase",
@@ -380,6 +326,56 @@ _GATE_REST = [
     "streaming_corpus_ingest",
     "text_bigram_lm_score",
     "text_bm25_search",
+    "text_embed_batch_inference",
+    "text_lm_heldout_perplexity",
+    "text_tfidf_keywords",
+    "tokenizer_bpe_apply_merge",
+    "tokenizer_bpe_first_merges",
+    "udtf_polymorphic_first_tokens",
+    "audit_benford_totalprice",
+    "audit_referential_integrity",
+    "bucketed_join_orders_lineitem",
+    "corpus_dsir_importance",
+    "corpus_js_divergence",
+    "corpus_weighted_reservoir",
+    "cube_orders_status_year",
+    "customers_gini_spend",
+    "customers_rfm_segments",
+    "customers_tier_migration",
+    "dedup_incremental_minhash",
+    "dedup_jaccard_prefix",
+    "dedup_soft_weights",
+    "embedding_matryoshka_recall",
+    "embedding_outlier_mahalanobis",
+    "events_ab_conversion_ztest",
+    "events_ab_srm_check",
+    "events_acf_lag1",
+    "events_attribution_first_touch",
+    "events_attribution_time_decay",
+    "events_bot_regularity",
+    "events_dau_wau_mau",
+    "events_decompose_additive",
+    "events_gapfill_interpolate",
+    "events_interval_coalesce",
+    "events_ks_two_sample",
+    "events_mannwhitney_u",
+    "events_seasonal_anomaly",
+    "events_sequence_pattern",
+    "events_survival_km",
+    "lineitem_weighted_median_price",
+    "median_exact_price_per_brand",
+    "multimodal_audio_segments",
+    "neardup_clustering_coefficient",
+    "neardup_rate_by_source",
+    "orders_cohort_ltv",
+    "orders_mom_yoy_growth",
+    "orders_spearman_price_items",
+    "parts_abc_classification",
+    "privacy_dp_noisy_counts",
+    "profile_table_orders",
+    "quality_calibration_bins",
+    "scalar_bitwise_suite",
+    "shipping_lag_percentiles",
 ]
 _GATE_ORDER = GATE_WINDOW + _GATE_REST
 

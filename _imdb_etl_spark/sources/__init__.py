@@ -5,6 +5,7 @@ from _imdb_etl_spark.sources.catalog import (
     stage_sorted,
     stage_to_parquet,
     table,
+    write_read_back,
 )
 from _imdb_etl_spark.sources.csv_source import read_staging_csv
 
@@ -15,5 +16,6 @@ __all__ = [
     "stage_sorted",
     "stage_to_parquet",
     "table",
+    "write_read_back",
     "read_staging_csv",
 ]

@@ -5,6 +5,20 @@ Maps the reference's named stage + COPY INTO world
 scan: `spark.read.parquet` gives predicate pushdown, column pruning and
 vectorized decoding for free — the analog of Snowflake micro-partitions.
 
+The reference declares every table once in DDL and never works a
+schema out again; here a plain `spark.read.parquet(path)` would launch
+one schema-inference job per open. So opens go through one schema memo
+(`parquet_schema`): a driver-table file's schema is inferred once per
+(real path, st_mtime_ns, st_size, the session confs that change parquet
+inference) and every later open passes it to `spark.read.schema`, which
+launches no job. A rewritten file changes its stat key and is inferred
+again. Only the schema is memoised, never the DataFrame: a query that
+joins a table to itself needs distinct attribute IDs per open, and a
+kept DataFrame would pin a stale file listing. Files this program
+writes and reads straight back (`write_read_back`) reopen with the
+writer's own schema instead, which is what inference would find in the
+footer.
+
 At cluster scale the same call fans out over all files under the prefix;
 nothing here is local-mode-specific.
 """
@@ -16,6 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DRIVER_TABLES = (
     "region",
@@ -66,9 +81,51 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+# The session confs that change what parquet schema inference returns;
+# part of the memo key, so a session that flips one re-infers.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+# (real path, conf values) -> ((st_mtime_ns, st_size), schema): one
+# entry per file and conf setting, replaced when the file changes.
+_SCHEMAS: dict[tuple, tuple[tuple[int, int], StructType]] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema `spark.read.parquet(path)` would infer, inferred at
+    most once per (real path, st_mtime_ns, st_size, _SCHEMA_CONFS
+    values). A directory is keyed by its own stat, which changes when
+    its files are replaced (a Spark overwrite recreates it). A path the
+    local file system cannot stat (a remote URI, a missing file) is
+    inferred every time, so Spark reports its own errors."""
+    try:
+        real = os.path.realpath(path)
+        st = os.stat(real)
+    except OSError:
+        return spark.read.parquet(path).schema
+    key = (real, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[key] = (stamp, schema)
+    return schema
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Open one driver table as a fresh DataFrame. The schema comes
+    from the `parquet_schema` memo (key: real path, st_mtime_ns,
+    st_size and the parquet-inference confs), so only the first open of
+    a file launches an inference job. The DataFrame itself is built anew
+    on every call: each open gets its own attribute IDs (self-joins
+    resolve) and its own file listing."""
     _tune(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df
@@ -160,6 +217,16 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, old)
 
 
+def write_read_back(df: DataFrame, path: str) -> DataFrame:
+    """Overwrite ``path`` with ``df`` as parquet (eager: one write job)
+    and reopen it with the writer's schema, so the read-back launches
+    no inference job. Inference would read that same schema back from
+    the footer Spark wrote. Not for ``partitionBy`` or ``mergeSchema``
+    output, whose types partition discovery decides."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 def stage_to_parquet(df: DataFrame, tag: str) -> DataFrame:
     """Materialize a multi-consumer intermediate to parquet and read
     it back — the repo's lineage-truncation pattern, replacing
@@ -178,6 +245,11 @@ def stage_to_parquet(df: DataFrame, tag: str) -> DataFrame:
     invocation never re-reads files a later one rewrote, and per-tag
     in-session retention of the newest _STAGE_RETAIN runs (reaped runs
     leave a descriptive tombstone — see _STAGE_TOMBSTONE).
+
+    The read-back goes through `write_read_back`: it reopens with the
+    writer's schema, so staging costs exactly one job, the write. The
+    returned DataFrame is a fresh scan of this run's directory and is
+    not memoised.
     """
     import shutil
 
@@ -202,8 +274,7 @@ def stage_to_parquet(df: DataFrame, tag: str) -> DataFrame:
         except OSError:
             pass  # best-effort: GC must never fail the live query
     del prior[: -_STAGE_RETAIN]
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return write_read_back(df, path)
 
 
 def stage_sorted(df: DataFrame, tag: str, *order_cols: str) -> DataFrame:

@@ -255,7 +255,9 @@ def streaming_pysource_bucket_counts(
         q.stop()
         if ckpt is not None:
             shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name).orderBy("bucket")
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)  # as streaming.events._run_to_memory
+    return out.orderBy("bucket")
 
 
 # ---------------------------------------------------------------------------

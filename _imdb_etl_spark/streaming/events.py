@@ -36,16 +36,16 @@ _counter = itertools.count()
 
 def read_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """File-source stream over one driver parquet table: schema pinned
-    from a batch read, directory source narrowed to the table's file by
-    pathGlobFilter. The single definition of the stream-source pattern
-    — events and documents streams both build on it."""
-    from _imdb_etl_spark.sources.catalog import _tune
+    from the catalog's memoised `parquet_schema`, directory source
+    narrowed to the table's file by pathGlobFilter. The single
+    definition of the stream-source pattern — events and documents
+    streams both build on it."""
+    from _imdb_etl_spark.sources.catalog import _tune, parquet_schema
 
     _tune(spark)
     path = os.path.join(sf_dir, f"{table}.parquet")
-    raw_schema = spark.read.parquet(path).schema
     return (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("pathGlobFilter", f"{table}.parquet")
         .parquet(sf_dir)
     )
@@ -110,7 +110,11 @@ def _run_to_memory(df: DataFrame, name: str, output_mode: str = "complete") -> D
             import shutil
 
             shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    # the resolved plan holds the memory sink's rows; dropping the view
+    # keeps a long-lived session from gaining one catalog table per call
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 _STREAM_HOURLY_SQL = """
@@ -380,7 +384,7 @@ def streaming_foreachbatch_upsert(
 ) -> DataFrame:
     import shutil
 
-    from _imdb_etl_spark.sources import load_tables
+    from _imdb_etl_spark.sources import load_tables, write_read_back
     from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
 
     warehouse = "/root/repo/spark-warehouse"
@@ -392,8 +396,7 @@ def streaming_foreachbatch_upsert(
     shutil.rmtree(base, ignore_errors=True)
 
     (events,) = load_tables(spark, sf_dir, "events")
-    events.repartition(8).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
+    schema = write_read_back(events.repartition(8), src).schema
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         part = batch_df.groupBy("user_id").agg(

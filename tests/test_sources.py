@@ -147,27 +147,29 @@ def test_events_ts_normalizes_for_both_physical_types(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from _imdb_etl_spark.sources.catalog import _tune, normalize_event_ts
+    from _imdb_etl_spark.sources.catalog import _tune, normalize_event_ts, table
 
     _tune(spark)  # nanosAsLong + UTC, as every production read path sets
 
     instants_us = [1704067200_000_000, 1704070800_123_456]
-    nanos_dir, micros_dir = str(tmp_path / "ns"), str(tmp_path / "us")
-    pq.write_table(
-        pa.table({"ts": pa.array([v * 1000 for v in instants_us],
-                                 pa.timestamp("ns"))}),
-        f"{nanos_dir}.parquet",
-    )
-    pq.write_table(
-        pa.table({"ts": pa.array(instants_us, pa.timestamp("us"))}),
-        f"{micros_dir}.parquet",
-    )
+    arrays = {
+        "ns": pa.array([v * 1000 for v in instants_us], pa.timestamp("ns")),
+        "us": pa.array(instants_us, pa.timestamp("us")),
+    }
     got = {}
-    for name, path in (("ns", f"{nanos_dir}.parquet"), ("us", f"{micros_dir}.parquet")):
-        df = normalize_event_ts(spark.read.parquet(path))
-        assert dict(df.dtypes)["ts"] == "timestamp", (name, df.dtypes)
-        got[name] = sorted(r.ts for r in df.collect())
-    assert got["ns"] == got["us"]
+    for unit, arr in arrays.items():
+        d = tmp_path / unit
+        d.mkdir()
+        path = str(d / "events.parquet")
+        pq.write_table(pa.table({"ts": arr}), path)
+        # the raw read, and the catalog open with its memoised schema
+        for how, df in (
+            ("read", normalize_event_ts(spark.read.parquet(path))),
+            ("table", table(spark, str(d), "events")),
+        ):
+            assert dict(df.dtypes)["ts"] == "timestamp", (unit, how, df.dtypes)
+            got[unit, how] = sorted(r.ts for r in df.collect())
+    assert len(set(map(tuple, got.values()))) == 1, got
 
 
 def test_reap_stale_pid_dirs(tmp_path):
@@ -337,3 +339,141 @@ def test_scoped_conf_restores_on_exception(spark):
             raise RuntimeError("boom")
     assert spark.conf.get(set_key) == old
     assert spark.conf.get(unset_key) == default
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return (its result, the
+    IDs of the jobs it launched). A marker job in a second group runs
+    after it: the status store reports jobs in submission order, so
+    once the marker is reported every job of ``group`` is too."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    marker = f"{group}-marker"
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        sc.setJobGroup(marker, marker)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reported"
+        time.sleep(0.05)
+    return out, sorted(tracker.getJobIdsForGroup(group))
+
+
+def test_table_schema_equals_inference_for_driver_tables(spark, sf_dir):
+    """The memoised schema of every driver table is exactly what
+    inference gives, so an open with it resolves NANOS, micros and NTZ
+    columns as a plain ``spark.read.parquet`` would."""
+    from _imdb_etl_spark.sources.catalog import (
+        DRIVER_TABLES,
+        _tune,
+        normalize_event_ts,
+        parquet_schema,
+        table,
+    )
+
+    _tune(spark)
+    for name in DRIVER_TABLES:
+        path = os.path.join(sf_dir, f"{name}.parquet")
+        inferred = spark.read.parquet(path)
+        assert parquet_schema(spark, path) == inferred.schema, name
+        if name == "events":
+            inferred = normalize_event_ts(inferred)
+        assert table(spark, sf_dir, name).schema == inferred.schema, name
+
+
+def test_second_table_open_launches_no_job(spark, sf_dir):
+    from _imdb_etl_spark.sources.catalog import table
+
+    path = os.path.join(sf_dir, "orders.parquet")
+    # control: inference does launch a job this probe can see
+    _, infer_jobs = _jobs_in_group(
+        spark, "schema-infer", lambda: spark.read.parquet(path)
+    )
+    assert infer_jobs
+    table(spark, sf_dir, "orders")
+    df, jobs = _jobs_in_group(
+        spark, "table-reopen", lambda: table(spark, sf_dir, "orders")
+    )
+    assert jobs == []
+    assert df.count() > 0
+
+
+def test_table_reinfers_a_rewritten_file(spark, sf_dir, tmp_path):
+    """The memo is keyed by the file's stat: rewriting the file with
+    one more column shows that column on the next open."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from _imdb_etl_spark.sources.catalog import table
+
+    path = tmp_path / "nation.parquet"
+    shutil.copy(os.path.join(sf_dir, "nation.parquet"), path)
+    before = table(spark, str(tmp_path), "nation").columns
+    assert "extra" not in before
+    t = pq.read_table(path)
+    t = t.append_column("extra", pa.array(range(t.num_rows), pa.int64()))
+    pq.write_table(t, path)
+    after = table(spark, str(tmp_path), "nation")
+    assert after.columns == before + ["extra"]
+    assert sorted(r.extra for r in after.collect()) == list(range(t.num_rows))
+
+
+def test_stage_to_parquet_is_one_job_with_inferred_schema(spark):
+    """Staging launches exactly one job, the write, and reopens with
+    the schema inference would find, for every column kind the
+    pipelines stage."""
+    from _imdb_etl_spark.sources import catalog
+
+    df = spark.sql(
+        """
+        SELECT id,
+               timestamp_seconds(1704067200 + id * 3601) AS ts,
+               CAST(timestamp_seconds(1704067200 + id) AS TIMESTAMP_NTZ) AS ntz,
+               CAST(id * 1.25 AS DECIMAL(12, 2)) AS dec,
+               array(id, id + 1) AS arr,
+               named_struct('a', id, 'b', CAST(id AS STRING)) AS st,
+               map(CAST(id AS STRING), id) AS m
+        FROM range(5)
+        """
+    )
+    tag = "schema_pytest"
+    staged, jobs = _jobs_in_group(
+        spark, "stage-one-job", lambda: catalog.stage_to_parquet(df, tag)
+    )
+    assert len(jobs) == 1
+    inferred = spark.read.parquet(catalog._STAGE_RUN_DIRS[tag][-1])
+    assert staged.schema == inferred.schema
+    def rows(d):
+        return sorted(d.collect(), key=lambda r: r.id)
+
+    assert rows(staged) == rows(inferred) == rows(df)
+
+
+def test_documents_doc_id_unique(sf_dir, tmp_path):
+    """The winnow postings (operators/text.py:_winnow_rare_postings)
+    take (doc_id, v) rows straight from a per-document array_distinct
+    as globally distinct, which holds only while doc_id is unique in
+    ``documents``. Pinned here over every test scale and the
+    benchmark's generated tables, instead of a runtime check that
+    would add a job to every open."""
+    import pyarrow.parquet as pq
+
+    from perfbench import tpchgen
+
+    tpchgen.write(str(tmp_path), 0.001, seed=1)
+    root = os.path.dirname(sf_dir)
+    for d in (sf_dir, os.path.join(root, "sf0.01"), os.path.join(root, "sf0.1"),
+              str(tmp_path)):
+        ids = pq.read_table(
+            os.path.join(d, "documents.parquet"), columns=["doc_id"]
+        ).column("doc_id").to_pylist()
+        assert len(ids) == len(set(ids)) > 0, d

@@ -65,3 +65,27 @@ def test_checkpoint_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == events.count()
     assert got.select("event_id").distinct().count() == events.count()
+
+
+def test_memory_sink_queries_match_oracle_and_leave_no_table(spark, sf_dir):
+    """The memory-sink runs equal their batch oracles, and each drops
+    its sink's temp view once resolved, so a long-lived session gains
+    no catalog table per call."""
+    import duckdb
+
+    from _imdb_etl_spark.plans import REGISTRY
+    from _imdb_etl_spark.sources.catalog import DRIVER_TABLES
+    from _imdb_etl_spark.testing import canon_rows
+
+    con = duckdb.connect()
+    for t in DRIVER_TABLES:
+        con.sql(f"CREATE VIEW {t} AS FROM read_parquet('{sf_dir}/{t}.parquet')")
+    for name in ("streaming_hourly_rollup", "streaming_sessionize"):
+        df = REGISTRY[name].spark(spark, sf_dir)
+        got = canon_rows(df.columns, [tuple(r) for r in df.collect()])
+        rel = con.sql(REGISTRY[name].oracle)
+        want = canon_rows([d[0] for d in rel.description], rel.fetchall())
+        assert got == want, name
+    con.close()
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_")]
+    assert left == []

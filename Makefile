@@ -5,8 +5,15 @@ SF_CHECK ?= /root/testdata/sf0.01
 check:
 	SPARK_GRAFT_CPUS=16 python tools/check.py $(SF_CHECK)
 
+# the tier-1 suite; then, pass or fail, a check that it left nothing in
+# spark-warehouse/
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider; \
+	status=$$?; \
+	if [ -n "$$(ls -A spark-warehouse 2>/dev/null)" ]; then \
+		echo "spark-warehouse/ is not empty:"; ls spark-warehouse; exit 1; fi; \
+	exit $$status
 
 # the benchmark of record: both perfbench workloads, then its smoke test
 bench:

@@ -38,7 +38,7 @@ from _imdb_etl_spark.functions import (
     md5_prefix_int_sql,
 )
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables, spread, write_read_back
+from _imdb_etl_spark.sources import load_tables, scratch_run, spread, write_read_back
 
 _EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
 _IPV4_RE = "\\b\\d{1,3}(\\.\\d{1,3}){3}\\b"
@@ -995,17 +995,9 @@ def bpe_train_rounds(
 
 _BPE_CKPT_EVERY = 16  # merges applied between lineage truncations
 
-# per-invocation checkpoint namespace: the strict and batched trainers
-# (and repeated invocations of either in one process) must not share
-# gen_<N> paths — a later run's overwrite would corrupt an earlier
-# run's still-referenced lazy lineage (round-7 advisory)
-import itertools as _itertools  # noqa: E402
-
-_BPE_RUN_SEQ = _itertools.count()
-
 
 def _bpe_ckpt_stream(
-    spark: SparkSession, df: DataFrame, gen: int, run_id: int
+    spark: SparkSession, df: DataFrame, gen: int, run_dir: str
 ) -> DataFrame:
     """Parquet lineage checkpoint for the BPE symbol stream — the
     'parquet checkpoint at 100 TB' the trainer docstring names, made
@@ -1018,19 +1010,10 @@ def _bpe_ckpt_stream(
     without shrinking the plan. Never triggers on the registered
     8-round faces (16 > 8); at production vocab sizes it bounds plan
     depth at _BPE_CKPT_EVERY generations for ~1 s of parquet I/O per
-    window. pid-staged dir, reaped by the shared GC; ``run_id``
-    (one _BPE_RUN_SEQ draw per trainer invocation) keeps concurrent
-    or successive trainer runs in one process from overwriting each
-    other's still-referenced checkpoints."""
-    import os
-
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
-    base = f"/root/repo/spark-warehouse/bpe_ckpt_{os.getpid()}"
-    os.makedirs(os.path.dirname(base), exist_ok=True)
-    reap_stale_pid_dirs(os.path.dirname(base), "bpe_ckpt")
-    path = f"{base}/run{run_id}_gen_{gen}"
-    return write_read_back(df, path)
+    window. ``run_dir`` (one `scratch_run` per trainer invocation)
+    keeps concurrent or successive trainer runs in one process from
+    overwriting each other's still-referenced checkpoints."""
+    return write_read_back(df, f"{run_dir}/gen_{gen}")
 
 
 def _bpe_train(
@@ -1084,7 +1067,7 @@ def _bpe_train(
     # partitions instead of re-deriving rounds 1..k; a final scalar
     # agg closes out the last round's total.
     merge_table = []
-    run_id = next(_BPE_RUN_SEQ)  # private checkpoint namespace
+    run_dir = scratch_run("bpe_ckpt")  # private checkpoint namespace
     prev = stream.persist()
     old = None  # previous generation, kept cached until its child runs
     pending = None  # (k, sym_a, sym_b, pair_cnt) awaiting symbols_after
@@ -1130,7 +1113,7 @@ def _bpe_train(
             "freq",
         )
         if k % _BPE_CKPT_EVERY == 0:  # bound Catalyst plan depth
-            nxt = _bpe_ckpt_stream(spark, nxt, k, run_id)
+            nxt = _bpe_ckpt_stream(spark, nxt, k, run_dir)
         nxt = nxt.persist()
         old, prev = prev, nxt
         pending = (k, sym_a, sym_b, pair_cnt)
@@ -1296,7 +1279,7 @@ def bpe_train_batched_rounds(
         "ELSE array() END"
     )
     out_rows: list[tuple] = []
-    run_id = next(_BPE_RUN_SEQ)  # private checkpoint namespace
+    run_dir = scratch_run("bpe_ckpt")  # private checkpoint namespace
     merges_applied = 0  # checkpoint keys on MERGES, not rounds: each
     last_ckpt = 0  # round nests up to k replaces, so a round-keyed
     # interval would carry 16*k chained replaces (round-7 advisory)
@@ -1357,7 +1340,7 @@ def bpe_train_batched_rounds(
         if merges_applied - last_ckpt >= _BPE_CKPT_EVERY:
             # bound Catalyst plan depth at _BPE_CKPT_EVERY chained
             # replaces regardless of k
-            nxt = _bpe_ckpt_stream(spark, nxt, merges_applied, run_id)
+            nxt = _bpe_ckpt_stream(spark, nxt, merges_applied, run_dir)
             last_ckpt = merges_applied
         nxt = nxt.persist()
         old, prev = prev, nxt

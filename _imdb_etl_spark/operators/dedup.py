@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import (
     load_tables,
+    scratch_dir,
+    scratch_run,
     spread,
     stage_to_parquet,
     write_read_back,
@@ -939,9 +941,6 @@ ORDER BY doc_id
 """
 
 
-_CC_RUN_SEQ = __import__("itertools").count()
-
-
 def _cc_stage(df: DataFrame, path: str) -> DataFrame:
     """Materialize a CC frontier to parquet and read it back — the
     repo's persisted-staging pattern (cf. _winnow_rare_postings) in
@@ -952,42 +951,9 @@ def _cc_stage(df: DataFrame, path: str) -> DataFrame:
     CC loop vs 171 s in a fresh session — the leaked rounds halved
     the heap available to everyone downstream. Parquet staging costs
     one tiny columnar write per round (2 long columns) and leaves the
-    heap clean; the per-run directory is never overwritten mid-plan
-    (run-counter namespaced) and is reaped by the shared pid GC."""
+    heap clean; each invocation stages under its own `scratch_run`
+    leaf, so a round's directory is never overwritten mid-plan."""
     return write_read_back(df, path)
-
-
-_ITER_RUN_DIRS: dict = {}
-
-
-def _iter_stage_dir(tag: str) -> str:
-    """Per-invocation staging directory for an iterative loop's
-    frontiers: pid-suffixed base (concurrent harness runs never share
-    a path; reaped by the shared pid GC) + run-counter leaf (a still-
-    referenced DataFrame from a prior invocation never re-reads files
-    a later invocation rewrote — the winnow/BPE namespacing rule).
-
-    In-session retention (round 10): the pid GC only reaps DEAD
-    processes, so a long bench session re-invoking CC/pagerank/kcore
-    faces would otherwise accumulate one full label-table parquet per
-    invocation for its own lifetime. Per tag we retain the current
-    run and its immediate predecessor (whose DataFrames a caller may
-    still hold) and delete anything older — two invocations back, no
-    live plan can reference those files."""
-    import os
-    import shutil
-
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
-    base = f"/root/repo/spark-warehouse/cc_frontier_{os.getpid()}"
-    reap_stale_pid_dirs(os.path.dirname(base), "cc_frontier")
-    run_dir = f"{base}/{tag}_run{next(_CC_RUN_SEQ)}"
-    prior = _ITER_RUN_DIRS.setdefault(tag, [])
-    prior.append(run_dir)
-    for old in prior[:-2]:
-        shutil.rmtree(old, ignore_errors=True)
-    del prior[:-2]
-    return run_dir
 
 
 def connected_components(
@@ -1019,7 +985,7 @@ def connected_components(
     convergence probe runs every ``probe_every`` rounds to halve
     driver-side actions.
     """
-    run_dir = _iter_stage_dir("cc")
+    run_dir = scratch_run("cc")
     # init: every node labels itself with the smallest neighbor (or self)
     labels = _cc_stage(
         edges.groupBy("a")
@@ -1254,7 +1220,7 @@ ORDER BY rank_order
 def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    run_dir = _iter_stage_dir("pr")
+    run_dir = scratch_run("pr")
     # Pair stage = the PPJoin prefix-filtered exact join (round 13):
     # provably the SAME pair set as dedup_ngram_jaccard's quadratic
     # shared-shingle self-join (prefix filtering is lossless —
@@ -1822,18 +1788,6 @@ def _prefix_pairs(doc_sets: DataFrame) -> DataFrame:
 # join, so the hash match keeps proving losslessness end to end
 # through the storage round-trip.
 
-_JPREFIX_DIR = None  # assigned per-process on first use
-
-
-def _jprefix_dir() -> str:
-    import os
-
-    global _JPREFIX_DIR
-    if _JPREFIX_DIR is None:
-        _JPREFIX_DIR = f"/root/repo/spark-warehouse/jprefix_index_{os.getpid()}"
-    return _JPREFIX_DIR
-
-
 @register(
     "dedup_jaccard_prefix_persisted",
     _JACCARD_PREFIX_SQL,
@@ -1852,13 +1806,7 @@ def _jprefix_dir() -> str:
     "prefix-collision-linear.",
 )
 def dedup_jaccard_prefix_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
-    base = _jprefix_dir()
-    os.makedirs(os.path.dirname(base), exist_ok=True)
-    reap_stale_pid_dirs(os.path.dirname(base), "jprefix_index")
+    base = scratch_dir("jprefix_index")
 
     # -- build phase: one execution of the shingle pipeline, written
     # once. No partitionBy: consumers scan the whole index but join on
@@ -1937,15 +1885,7 @@ _INC_IS_BATCH = "doc_id % 5 = 4"  # the corpus-wide increment slice
 def dedup_jaccard_prefix_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
-    # pid LAST in the dir name: reap_stale_pid_dirs only matches
-    # <prefix>_<pid>, so a trailing suffix would never be GC'd
-    base = f"/root/repo/spark-warehouse/jprefix_inc_{os.getpid()}"
-    os.makedirs(os.path.dirname(base), exist_ok=True)
-    reap_stale_pid_dirs(os.path.dirname(base), "jprefix_inc")
+    base = scratch_dir("jprefix_inc")
 
     (docs,) = load_tables(spark, sf_dir, "documents")
     is_batch = F.expr(_INC_IS_BATCH)
@@ -2552,7 +2492,7 @@ ORDER BY doc_id
     "budget is pinned in pytest.",
 )
 def neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    run_dir = _iter_stage_dir("kcore")
+    run_dir = scratch_run("kcore")
     pairs = _cc_stage(
         dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"),
         f"{run_dir}/pairs",

@@ -25,7 +25,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables, spread, stage_sorted, stage_to_parquet
+from _imdb_etl_spark.sources import (
+    load_tables,
+    scratch_dir,
+    scratch_run,
+    spread,
+    stage_sorted,
+    stage_to_parquet,
+)
 
 _N_QUERIES = 8  # vec_id < 8 are the query vectors
 _TOP_K = 5
@@ -1163,7 +1170,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codegen dot measured 115 s vs ~4 s BLAS at 10x scale — and the
     # clusters consume only the pair ids, so the scoring route is free
     # to be the fast one
-    from _imdb_etl_spark.operators.dedup import _cc_stage, _iter_stage_dir
+    from _imdb_etl_spark.operators.dedup import _cc_stage
 
     pairs = dedup_embedding_cosine_ivf(spark, sf_dir).select("vec_a", "vec_b")
     # pair stage (IVF probe + verify) runs once; parquet-staged (the
@@ -1175,7 +1182,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"))
         )
         .distinct(),
-        f"{_iter_stage_dir('sem')}/edges",
+        f"{scratch_run('sem')}/edges",
     )
     labels, _ = connected_components(edges)
     labels = labels.withColumnRenamed("doc_id", "vec_id")
@@ -1338,18 +1345,6 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from the persisted index IS the save/load fidelity proof (floats
 # survive parquet round-tripping exactly; any drift flips the hash).
 
-_INDEX_DIR = None  # assigned per-process on first use
-
-
-def _index_dir() -> str:
-    import os
-
-    global _INDEX_DIR
-    if _INDEX_DIR is None:
-        _INDEX_DIR = f"/root/repo/spark-warehouse/ivf_index_{os.getpid()}"
-    return _INDEX_DIR
-
-
 @register(
     "sim_knn_ivf_persisted",
     _IVF_SQL,
@@ -1361,13 +1356,7 @@ def _index_dir() -> str:
     "index prove save/load fidelity bit for bit.",
 )
 def sim_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
-    base = _index_dir()
-    os.makedirs(os.path.dirname(base), exist_ok=True)
-    reap_stale_pid_dirs(os.path.dirname(base), "ivf_index")
+    base = scratch_dir("ivf_index")
 
     # -- build phase (the offline indexing job): sim_knn_ivf's centroid
     # selection and assignment stages, shared via _ivf_assign so a

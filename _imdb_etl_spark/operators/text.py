@@ -17,8 +17,6 @@ per engine).
 
 from __future__ import annotations
 
-import itertools as _itertools
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,6 +24,7 @@ from _imdb_etl_spark.functions import md5_prefix_int_sql
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import (
     load_tables,
+    scratch_run,
     spread,
     stage_sorted,
     write_read_back,
@@ -1287,19 +1286,6 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WIN_RUN_SEQ = _itertools.count()
-
-
-def _winnow_stage_base() -> str:
-    """Per-process root for winnow staging parquet (postings index,
-    contracted group table). pid-suffixed so concurrent harness runs
-    never race on one path; leaves under it are run-counter-namespaced
-    per invocation (see _WIN_RUN_SEQ uses)."""
-    import os
-
-    return f"/root/repo/spark-warehouse/winnow_fp_{os.getpid()}"
-
-
 def _winnow_rare_postings(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -1329,22 +1315,10 @@ def _winnow_rare_postings(
     64-bit collision (p ~ n^2 / 2^65 over md5-hex inputs) would merge
     two fingerprint values; negligible, and detectable by comparing
     count(distinct md5) upstream to count(distinct v) on the index.
-    pid-staged dir, reaped by the shared GC; the leaf is additionally
-    namespaced with a per-invocation run counter (the BPE _BPE_RUN_SEQ
-    pattern) so a still-referenced lazy DataFrame from a PRIOR
-    invocation never re-reads files a later invocation rewrote
-    mid-plan, and two sf_dirs sharing a basename cannot collide."""
-    import os
-
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
+    Each invocation stages under its own `scratch_run` leaf, so a
+    still-referenced lazy DataFrame from a PRIOR invocation never
+    re-reads files a later invocation rewrote mid-plan."""
     (docs,) = load_tables(spark, sf_dir, "documents")
-    base = _winnow_stage_base()
-    reap_stale_pid_dirs(os.path.dirname(base), "winnow_fp")
-    path = (
-        f"{base}/run{next(_WIN_RUN_SEQ)}_"
-        f"{os.path.basename(os.path.normpath(sf_dir))}"
-    )
     # per-doc distinct happens MAP-SIDE inside the array (round 13):
     # (doc_id, v) rows from array_distinct are already globally
     # distinct because doc_id scopes them (doc_id is unique per
@@ -1363,7 +1337,7 @@ def _winnow_rare_postings(
             )
         ).alias("v"),
     )
-    fp = write_read_back(fp_lazy, path)
+    fp = write_read_back(fp_lazy, scratch_run("winnow_fp"))
     n_docs = docs.count()
     cap = max(
         _WIN_DF_FLOOR, min(_WIN_DF_CEIL, -(-_WIN_DF_PERMILLE * n_docs // 1000))
@@ -1478,13 +1452,12 @@ def dedup_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint is the same mechanism whose GCLocker thrash the
     # postings table hit at the 100x probe, and the parquet route is
     # the consistent persisted-index answer at 100 TB.
-    gpath = f"{_winnow_stage_base()}/run{next(_WIN_RUN_SEQ)}_groups"
     gmap = write_read_back(
         docsets.groupBy("vs").agg(
             F.min("doc_id").alias("gid"),
             F.count(F.lit(1)).alias("members"),
         ),
-        gpath,
+        scratch_run("winnow_groups"),
     )
     # Per-VALUE spanning forests instead of the full qualifying-pair
     # relation. The global qualifying graph is the union over value

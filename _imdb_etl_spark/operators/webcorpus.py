@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import doc_permille_bucket
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables, spread, stage_to_parquet
+from _imdb_etl_spark.sources import load_tables, scratch_dir, spread, stage_to_parquet
 
 _DOMAIN_CAP = 10
 
@@ -1543,18 +1543,12 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_index_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
     from _imdb_etl_spark.operators.dedup import (
         band_table,
         minhash_doc_sets,
     )
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
 
-    warehouse = "/root/repo/spark-warehouse"
-    os.makedirs(warehouse, exist_ok=True)
-    reap_stale_pid_dirs(warehouse, "mh_index")
-    base = os.path.join(warehouse, f"mh_index_{os.getpid()}")
+    base = scratch_dir("mh_index")
 
     (docs,) = load_tables(spark, sf_dir, "documents")
     corpus = docs.where(~F.expr(_IS_BATCH))

@@ -2,7 +2,7 @@
 
 Each entry pairs an idiomatic-DataFrame builder with the equivalent ANSI
 SQL the DuckDB oracle runs on the same parquet tables. The driver
-contract (/root/repo/__spark_entry__.py) exposes exactly this mapping.
+contract (`__spark_entry__.py` at the repo root) exposes exactly this mapping.
 
 Column-name discipline: the builder aliases every computed column and the
 oracle SQL uses identical `AS` names — the driver sorts columns by name

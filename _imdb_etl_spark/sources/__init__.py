@@ -1,6 +1,8 @@
 from _imdb_etl_spark.sources.catalog import (
     load_tables,
     scoped_conf,
+    scratch_dir,
+    scratch_run,
     spread,
     stage_sorted,
     stage_to_parquet,
@@ -12,6 +14,8 @@ from _imdb_etl_spark.sources.csv_source import read_staging_csv
 __all__ = [
     "load_tables",
     "scoped_conf",
+    "scratch_dir",
+    "scratch_run",
     "spread",
     "stage_sorted",
     "stage_to_parquet",

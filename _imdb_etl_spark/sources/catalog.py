@@ -25,8 +25,14 @@ nothing here is local-mode-specific.
 
 from __future__ import annotations
 
+import atexit
 import contextlib as _contextlib
+import itertools
 import os
+import re
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -137,18 +143,13 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFram
 
 
 def reap_stale_pid_dirs(base: str, prefix: str) -> None:
-    """Best-effort GC of pid-suffixed output dirs (``<prefix>_<pid>``)
-    left by finished processes — a dir is stale when its embedded pid
-    is no longer alive. Keeps per-process sink/staging outputs (used
-    so concurrent harness runs never race on one path) from
-    accumulating one directory per run."""
-    import re
-    import shutil
-
+    """Best-effort GC of pid-suffixed dirs (``<prefix>-<pid>`` or
+    ``<prefix>_<pid>``) under ``base`` left by finished processes — a
+    dir is stale when its embedded pid is no longer alive."""
     if not os.path.isdir(base):
         return
     for entry in os.listdir(base):
-        m = re.fullmatch(re.escape(prefix) + r"_(\d+)", entry)
+        m = re.fullmatch(re.escape(prefix) + r"[-_](\d+)", entry)
         if not m or int(m.group(1)) == os.getpid():
             continue
         try:
@@ -159,27 +160,60 @@ def reap_stale_pid_dirs(base: str, prefix: str) -> None:
             pass  # pid alive under another uid — leave it
 
 
-_STAGE_RUN_SEQ = __import__("itertools").count()
-_STAGE_RUN_DIRS: dict = {}
-# Per-tag in-session retention depth (current + previous run by
-# default). A caller that must hold a staged DataFrame across TWO OR
-# MORE later invocations of the same face can widen this (module
-# constant, not per-call: retention is a session lifecycle policy,
-# and every widening costs disk for every tag).
+def _scratch_root() -> str:
+    base = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
+    return os.path.join(base or tempfile.gettempdir(), f"spark-graft-{os.getpid()}")
+
+
+_scratch_lock = threading.Lock()
+_scratch_claimed = False
+
+
+def scratch_dir(tag: str) -> str:
+    """``<root>/<tag>``: this process's scratch location for ``tag``.
+    The root is ``spark-graft-<pid>`` under the first SPARK_LOCAL_DIRS
+    entry (else the temp dir); it must be a local path, since this
+    process deletes it and DuckDB oracles read from it. The root is tied
+    to the process, not to a session, because the jsonl oracle embeds
+    its path at import time, before any session exists. Tags that
+    overwrite keep disk bounded during a session.
+
+    Computing a path creates nothing (Python workers import the
+    callers). The first call in a process reaps roots left by killed
+    processes and registers removal of this process's root at exit."""
+    global _scratch_claimed
+    with _scratch_lock:
+        if not _scratch_claimed:
+            _scratch_claimed = True
+            reap_stale_pid_dirs(os.path.dirname(_scratch_root()), "spark-graft")
+            # the root is resolved at exit, so a forked child never
+            # removes its parent's root
+            atexit.register(lambda: shutil.rmtree(_scratch_root(), ignore_errors=True))
+    return os.path.join(_scratch_root(), tag)
+
+
+_RUN_SEQ = itertools.count()
+_RUN_DIRS: dict[str, list[str]] = {}
+# Runs kept per tag: the current one and its predecessor, whose
+# DataFrames a caller may still hold.
 _STAGE_RETAIN = 2
-# Reaped run dirs are not deleted outright — each is replaced by a
-# directory holding only this breadcrumb file (ADVICE r10). A held
-# DataFrame that outlives retention fails FAILED_READ_FILE.FILE_NOT_
-# EXIST naming ".../stage_<pid>/<tag>_runN/part-...": the path names
-# this policy's dir, and inspecting it finds the tombstone with the
-# full explanation (the scan replays remembered file names, so the
-# message itself cannot be intercepted). A consumer that RE-LISTS the
-# old path (fresh read.parquet) fails better still — "Could not read
-# footer ... REAPED-....txt" puts the cause in the message.
-_STAGE_TOMBSTONE = (
-    "REAPED-dataframe-outlived-stage_to_parquet-retention-"
-    "widen-_STAGE_RETAIN-in-sources-catalog.txt"
-)
+
+
+def scratch_run(tag: str) -> str:
+    """A fresh ``<root>/<tag>_run<N>`` leaf, for staging that a still-
+    referenced DataFrame from an earlier call must not see rewritten.
+    The newest _STAGE_RETAIN runs per tag are kept; older ones are
+    deleted. A frame held past that fails naming its ``<tag>_run<N>``
+    path."""
+    path = f"{scratch_dir(tag)}_run{next(_RUN_SEQ)}"
+    with _scratch_lock:
+        runs = _RUN_DIRS.setdefault(tag, [])
+        runs.append(path)
+        retired = runs[:-_STAGE_RETAIN]
+        del runs[:-_STAGE_RETAIN]
+    for old in retired:
+        shutil.rmtree(old, ignore_errors=True)
+    return path
 
 
 @_contextlib.contextmanager
@@ -238,43 +272,16 @@ def stage_to_parquet(df: DataFrame, tag: str) -> DataFrame:
     that re-plans from disk — exactly what a production pipeline's
     materialized intermediate table is at 100 TB.
 
-    Namespacing and GC mirror the CC-frontier stager
-    (operators/dedup.py:_iter_stage_dir): pid-suffixed root so
-    concurrent harness runs never race (dead-pid roots reaped),
-    run-counter leaf so a still-referenced DataFrame from a prior
-    invocation never re-reads files a later one rewrote, and per-tag
-    in-session retention of the newest _STAGE_RETAIN runs (reaped runs
-    leave a descriptive tombstone — see _STAGE_TOMBSTONE).
+    The leaf is a `scratch_run(tag)`: a DataFrame from an earlier
+    call never re-reads files a later call rewrote, and the newest
+    _STAGE_RETAIN runs per tag are kept.
 
     The read-back goes through `write_read_back`: it reopens with the
     writer's schema, so staging costs exactly one job, the write. The
     returned DataFrame is a fresh scan of this run's directory and is
     not memoised.
     """
-    import shutil
-
-    base = f"/root/repo/spark-warehouse/stage_{os.getpid()}"
-    reap_stale_pid_dirs(os.path.dirname(base), "stage")
-    path = f"{base}/{tag}_run{next(_STAGE_RUN_SEQ)}"
-    prior = _STAGE_RUN_DIRS.setdefault(tag, [])
-    prior.append(path)
-    for old in prior[: -_STAGE_RETAIN]:
-        shutil.rmtree(old, ignore_errors=True)
-        try:  # descriptive-failure tombstone (see _STAGE_TOMBSTONE)
-            os.makedirs(old, exist_ok=True)
-            with open(os.path.join(old, _STAGE_TOMBSTONE), "w") as f:
-                f.write(
-                    "This staged intermediate was retired by the per-tag "
-                    f"retention policy (_STAGE_RETAIN={_STAGE_RETAIN}): a "
-                    "DataFrame returned by stage_to_parquet was held across "
-                    f"{_STAGE_RETAIN}+ later invocations of the same tag. "
-                    "Re-stage the frame, or widen _STAGE_RETAIN in "
-                    "_imdb_etl_spark/sources/catalog.py.\n"
-                )
-        except OSError:
-            pass  # best-effort: GC must never fail the live query
-    del prior[: -_STAGE_RETAIN]
-    return write_read_back(df, path)
+    return write_read_back(df, scratch_run(tag))
 
 
 def stage_sorted(df: DataFrame, tag: str, *order_cols: str) -> DataFrame:

@@ -14,27 +14,21 @@ layout keeps files at 64-256 MB for scan parallelism).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables
-
-# Per-process output directory (pid-suffixed, substituted into the
-# oracle SQL at registration time): concurrent harness runs — bench +
-# check + planlint, or two sessions — must never race on one shared
-# path, and an oracle run without a prior Spark build in the same
-# process now fails loudly (missing dir) instead of silently reading
-# another run's stale files. The build-before-oracle ordering within a
-# process is the driver's documented contract.
-_OUT_DIR = f"/root/repo/spark-warehouse/jsonl_docs_{os.getpid()}"
+from _imdb_etl_spark.sources import load_tables, scratch_dir
 
 _DOC_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
 
+# The oracle reads this process's output directory, substituted at
+# registration time: an oracle run without a prior Spark build in the
+# same process fails loudly (missing dir) instead of reading another
+# run's stale files. The build-before-oracle ordering within a process
+# is the driver's documented contract.
 _JSONL_SQL = f"""
 SELECT lang,
        COUNT(*) AS n_docs,
@@ -42,7 +36,7 @@ SELECT lang,
        CAST(SUM(length(text)) AS BIGINT) AS sum_text_len,
        MIN(doc_id) AS min_doc,
        MAX(doc_id) AS max_doc
-FROM read_json('{_OUT_DIR}/*.json', format='newline_delimited',
+FROM read_json('{scratch_dir("jsonl_docs")}/*.json', format='newline_delimited',
                columns={{'doc_id': 'BIGINT', 'text': 'VARCHAR',
                          'lang': 'VARCHAR', 'source': 'VARCHAR',
                          'n_chars': 'BIGINT'}})
@@ -62,16 +56,13 @@ ORDER BY lang
     "bytes, counts) — not just the aggregate math.",
 )
 def jsonl_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
     (docs,) = load_tables(spark, sf_dir, "documents")
-    os.makedirs(os.path.dirname(_OUT_DIR), exist_ok=True)
-    reap_stale_pid_dirs(os.path.dirname(_OUT_DIR), "jsonl_docs")
-    docs.write.mode("overwrite").json(_OUT_DIR)
+    out = scratch_dir("jsonl_docs")
+    docs.write.mode("overwrite").json(out)
     back = (
         spark.read.schema(_DOC_SCHEMA)
         .option("mode", "FAILFAST")
-        .json(_OUT_DIR)
+        .json(out)
     )
     return (
         back.groupBy("lang")

@@ -19,17 +19,11 @@ pushdown into the ORC reader is plan-asserted in tests/test_sinks.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables
-
-# Per-process output dir (the jsonl_roundtrip_source discipline):
-# concurrent harness runs must never race on one path.
-_OUT_DIR = f"/root/repo/spark-warehouse/orc_docs_{os.getpid()}"
+from _imdb_etl_spark.sources import load_tables, scratch_dir
 
 _DOC_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -69,13 +63,10 @@ ORDER BY lang
     "row, byte for byte.",
 )
 def orc_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
     (docs,) = load_tables(spark, sf_dir, "documents")
-    os.makedirs(os.path.dirname(_OUT_DIR), exist_ok=True)
-    reap_stale_pid_dirs(os.path.dirname(_OUT_DIR), "orc_docs")
-    docs.write.mode("overwrite").orc(_OUT_DIR)
-    back = spark.read.schema(_DOC_SCHEMA).orc(_OUT_DIR)
+    out = scratch_dir("orc_docs")
+    docs.write.mode("overwrite").orc(out)
+    back = spark.read.schema(_DOC_SCHEMA).orc(out)
     # doc_id folded modulo 2^21 so id*2^32 + 32-bit md5 prefix stays
     # inside int64 at any corpus size (no overflow-wrap divergence)
     sig = F.bit_xor(

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import dec, dsum
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables, scoped_conf
+from _imdb_etl_spark.sources import load_tables, scoped_conf, scratch_dir
 
 _BACKFILL_DAY = "2024-01-05"  # driver events all land in 2024-01
 
@@ -54,12 +54,7 @@ def sink_dynamic_partition_backfill(
 ) -> DataFrame:
     import shutil
 
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
-    warehouse = "/root/repo/spark-warehouse"
-    os.makedirs(warehouse, exist_ok=True)
-    reap_stale_pid_dirs(warehouse, "part_backfill")
-    tbl = os.path.join(warehouse, f"part_backfill_{os.getpid()}")
+    tbl = scratch_dir("part_backfill")
     shutil.rmtree(tbl, ignore_errors=True)
 
     (events,) = load_tables(spark, sf_dir, "events")
@@ -143,19 +138,12 @@ def bucketed_join_orders_lineitem(
 
 
 def _bucket_table(side: str) -> str:
-    return f"bjoin_{side}_{os.getpid()}"
+    return f"bjoin_{side}"
 
 
 def bucketed_orders_lineitem(spark: SparkSession, sf_dir: str) -> None:
-    """Write orders + lineitem as orderkey-bucketed managed tables
-    (idempotent per process; pid-suffixed so concurrent harness runs
-    never race on a table path)."""
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
-    warehouse = "/root/repo/spark-warehouse"
-    os.makedirs(warehouse, exist_ok=True)
-    reap_stale_pid_dirs(warehouse, "bjoin_o")
-    reap_stale_pid_dirs(warehouse, "bjoin_l")
+    """Write orders + lineitem as orderkey-bucketed tables under this
+    process's scratch root (idempotent per process)."""
     orders, lineitem = load_tables(spark, sf_dir, "orders", "lineitem")
     for side, df, key in (
         ("o", orders, "o_orderkey"),
@@ -166,9 +154,8 @@ def bucketed_orders_lineitem(spark: SparkSession, sf_dir: str) -> None:
         # builtin per process, so marker names would never match across
         # restarts and stale markers would pile up (round-7 advisory fix)
         src_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        marker = os.path.join(
-            warehouse, f"bjoin_{side}_{os.getpid()}", f"_src_{src_tag}"
-        )
+        path = scratch_dir(name)
+        marker = os.path.join(path, f"_src_{src_tag}")
         if spark.catalog.tableExists(name) and os.path.exists(marker):
             continue  # already materialized for this sf_dir in this process
         spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -176,7 +163,7 @@ def bucketed_orders_lineitem(spark: SparkSession, sf_dir: str) -> None:
             df.write.bucketBy(_N_BUCKETS, key)
             .sortBy(key)
             .mode("overwrite")
-            .option("path", os.path.join(warehouse, name))
+            .option("path", path)
             .saveAsTable(name)
         )
         open(marker, "w").close()
@@ -194,8 +181,7 @@ def bucketed_orders_lineitem(spark: SparkSession, sf_dir: str) -> None:
 # with NULLs — any footer-merging or NULL-fill defect flips the
 # per-language counts against the oracle, which recomputes the same
 # split rule directly. Batch assignment is doc_id parity (content-
-# stable, engine-portable); directories are pid-isolated like the
-# backfill sink.
+# stable, engine-portable).
 
 _SCHEMA_EVO_SQL = """
 SELECT lang,
@@ -228,12 +214,7 @@ ORDER BY lang
 def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
-    warehouse = "/root/repo/spark-warehouse"
-    os.makedirs(warehouse, exist_ok=True)
-    reap_stale_pid_dirs(warehouse, "schema_evo")
-    tbl = os.path.join(warehouse, f"schema_evo_{os.getpid()}")
+    tbl = scratch_dir("schema_evo")
     shutil.rmtree(tbl, ignore_errors=True)
 
     (docs,) = load_tables(spark, sf_dir, "documents")

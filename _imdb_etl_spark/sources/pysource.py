@@ -341,8 +341,6 @@ class JsonLinesSinkDataSource(DataSource):
         return JsonLinesSinkWriter(self.options, overwrite)
 
 
-_PYSINK_DIR = f"/root/repo/spark-warehouse/pysink_docs_{os.getpid()}"
-
 _PYSINK_SQL = """
 SELECT lang,
        COUNT(*) AS n_docs,
@@ -368,21 +366,20 @@ ORDER BY lang
     "(batch read / stream read / write).",
 )
 def pysink_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.sources import load_tables
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
+    from _imdb_etl_spark.sources import load_tables, scratch_dir
 
-    reap_stale_pid_dirs(os.path.dirname(_PYSINK_DIR), "pysink_docs")
+    out = scratch_dir("pysink_docs")
     spark.dataSource.register(JsonLinesSinkDataSource)
     (docs,) = load_tables(spark, sf_dir, "documents")
     (
         docs.select("doc_id", "lang", "n_chars")
         .write.format("pysink_jsonl")
-        .option("path", _PYSINK_DIR)
+        .option("path", out)
         .mode("overwrite")
         .save()
     )
     back = spark.read.schema("doc_id bigint, lang string, n_chars bigint").json(
-        f"{_PYSINK_DIR}/part-*.json"
+        f"{out}/part-*.json"
     )
     return (
         back.groupBy("lang")

@@ -18,17 +18,11 @@ keep files bounded — same discipline as JSONL).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.plans.registry import register
-from _imdb_etl_spark.sources import load_tables
-from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
-
-# per-process dir: concurrent harness runs must never race on one path
-_OUT_DIR = f"/root/repo/spark-warehouse/xml_docs_{os.getpid()}"
+from _imdb_etl_spark.sources import load_tables, scratch_dir
 
 _DOC_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -59,19 +53,18 @@ ORDER BY lang
 )
 def xml_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
-    os.makedirs(os.path.dirname(_OUT_DIR), exist_ok=True)
-    reap_stale_pid_dirs(os.path.dirname(_OUT_DIR), "xml_docs")
+    out = scratch_dir("xml_docs")
     (
         docs.write.mode("overwrite")
         .format("xml")
         .option("rowTag", "doc")
-        .save(_OUT_DIR)
+        .save(out)
     )
     back = (
         spark.read.format("xml")
         .option("rowTag", "doc")
         .schema(_DOC_SCHEMA)
-        .load(_OUT_DIR)
+        .load(out)
     )
     return (
         back.groupBy("lang")

@@ -384,13 +384,9 @@ def streaming_foreachbatch_upsert(
 ) -> DataFrame:
     import shutil
 
-    from _imdb_etl_spark.sources import load_tables, write_read_back
-    from _imdb_etl_spark.sources.catalog import reap_stale_pid_dirs
+    from _imdb_etl_spark.sources import load_tables, scratch_dir, write_read_back
 
-    warehouse = "/root/repo/spark-warehouse"
-    os.makedirs(warehouse, exist_ok=True)
-    reap_stale_pid_dirs(warehouse, "fb_upsert")
-    base = os.path.join(warehouse, f"fb_upsert_{os.getpid()}")
+    base = scratch_dir("fb_upsert")
     src = os.path.join(base, "src")
     state = os.path.join(base, "state")
     shutil.rmtree(base, ignore_errors=True)

@@ -428,7 +428,8 @@ def sf1_spot(spark) -> dict | None:
     from _imdb_etl_spark.plans import REGISTRY
 
     sf1_dir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR", "/root/repo/.benchdata/sf1"
+        "SPARK_GRAFT_SF1_DIR",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)), ".benchdata", "sf1"),
     )
     section: dict = {"sf": 1.0, "queries": {}, "failed": []}
     try:

@@ -1,4 +1,4 @@
-"""Synthetic IMDB-shaped CSV fixtures per /root/repo/FIXTURES.md.
+"""Synthetic IMDB-shaped CSV fixtures per FIXTURES.md at the repo root.
 
 Reproduces the reference data's semantics-bearing quirks: literal
 ``NULL`` strings for missing values, comma-containing quoted fields,

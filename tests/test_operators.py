@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from _imdb_etl_spark.operators import multimodal
 from _imdb_etl_spark.plans import REGISTRY
-from _imdb_etl_spark.sources import load_tables
+from _imdb_etl_spark.sources import load_tables, scratch_dir
 from _imdb_etl_spark.streaming import read_events_stream, streaming_hourly_rollup
 
 
@@ -1354,12 +1354,10 @@ def test_ivf_persisted_matches_in_memory_index(spark, sf_dir):
     IVF results, and the lists land partitioned by centroid id."""
     import os
 
-    from _imdb_etl_spark.operators.similarity import _index_dir
-
     mem = REGISTRY["sim_knn_ivf"].spark(spark, sf_dir).collect()
     stored = REGISTRY["sim_knn_ivf_persisted"].spark(spark, sf_dir).collect()
     assert stored == mem
-    parts = os.listdir(f"{_index_dir()}/lists")
+    parts = os.listdir(f"{scratch_dir('ivf_index')}/lists")
     assert any(p.startswith("centroid_id=") for p in parts)
 
 
@@ -1509,6 +1507,45 @@ def test_bpe_checkpoint_namespace_isolated_across_invocations(
     after = sorted(tuple(r) for r in s1.collect())
     s2.unpersist()
     assert after == before
+
+
+def test_bpe_checkpoint_path_matches_unpatched_faces(spark, sf_dir, monkeypatch):
+    """With a checkpoint every 2 merges, both trainers (the strict one
+    behind tokenizer_bpe_train_n / tokenizer_bpe_encode and the
+    batched one) go through _bpe_ckpt_stream and return exactly the
+    unpatched merge tables and encoded output; the shared scratch
+    retention leaves at most _STAGE_RETAIN checkpoint runs."""
+    import glob
+
+    from _imdb_etl_spark.operators import corpus
+    from _imdb_etl_spark.sources.catalog import _STAGE_RETAIN
+
+    faces = (
+        "tokenizer_bpe_train_n",
+        "tokenizer_bpe_train_batched",
+        "tokenizer_bpe_encode",
+    )
+
+    def run():
+        return {
+            q: sorted(tuple(r) for r in REGISTRY[q].spark(spark, sf_dir).collect())
+            for q in faces
+        }
+
+    want = run()
+    calls = []
+    real_ckpt = corpus._bpe_ckpt_stream
+
+    def spy_ckpt(spark, df, gen, run_dir):
+        calls.append(run_dir)
+        return real_ckpt(spark, df, gen, run_dir)
+
+    monkeypatch.setattr(corpus, "_BPE_CKPT_EVERY", 2)
+    monkeypatch.setattr(corpus, "_bpe_ckpt_stream", spy_ckpt)
+    assert run() == want
+    assert len(set(calls)) == len(faces), calls
+    runs = glob.glob(f"{scratch_dir('bpe_ckpt')}_run*")
+    assert 1 <= len(runs) <= _STAGE_RETAIN, runs
 
 
 def test_bpe_merges_count_positions_exactly(spark, sf_dir):
@@ -3281,8 +3318,6 @@ def test_minhash_index_persisted_serves_from_index(spark, sf_dir):
     scans the persisted index files and reads the documents table
     exactly once (the increment) — corpus signatures genuinely come
     from storage."""
-    import os
-
     got = (
         REGISTRY["dedup_minhash_index_persisted"].spark(spark, sf_dir)
     )
@@ -3297,8 +3332,9 @@ def test_minhash_index_persisted_serves_from_index(spark, sf_dir):
     # early (e.g. behind the staged batch signatures) may appear only
     # in the Initial Plan echo of the same tree
     all_scans = [ln for ln in plan.splitlines() if "FileScan" in ln]
-    assert any(f"mh_index_{os.getpid()}/bands" in ln for ln in all_scans), plan
-    assert any(f"mh_index_{os.getpid()}/sets" in ln for ln in all_scans), plan
+    index = scratch_dir("mh_index")
+    assert any(f"{index}/bands" in ln for ln in all_scans), plan
+    assert any(f"{index}/sets" in ln for ln in all_scans), plan
     # count: restrict to the final section (the Initial Plan echo
     # would double-count)
     final = plan.split("== Initial Plan ==")[0]

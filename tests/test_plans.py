@@ -689,11 +689,13 @@ def test_regression_tripwire_normalizes_by_canary():
     NOT flag, the same run with a nominal canary MUST, and the factor
     clamps at 3x so heavy load can't hide a real regression."""
     import json
+    import os
 
     import bench
 
+    r01 = os.path.join(os.path.dirname(bench.__file__), "BENCH_r01.json")
     base = (
-        json.load(open("/root/repo/BENCH_r01.json")).get("parsed") or {}
+        json.load(open(r01)).get("parsed") or {}
     ).get("queries") or {}
     assert base, "r1 baseline required by the tripwire"
     nominal = {"jvm_sec": bench._CANARY_NOMINAL_JVM, "gemm_sec": 0.01}

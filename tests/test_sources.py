@@ -191,38 +191,82 @@ def test_reap_stale_pid_dirs(tmp_path):
     )
 
 
-def test_iter_stage_dir_caps_in_session_retention():
-    """Round-10 in-session GC for iterative-frontier staging (ADVICE):
-    the pid GC only reaps dead processes, so within one long session
-    _iter_stage_dir must itself cap retention — per tag, the current
-    run dir plus its immediate predecessor survive, older runs are
-    deleted; other tags are untouched."""
+def test_scratch_claim_reaps_dead_pid_roots(tmp_path, monkeypatch):
+    """The first scratch_dir call in a process (the claim) reaps
+    ``spark-graft-<pid>`` roots of dead processes under the scratch
+    base, keeps live ones, and creates nothing itself."""
     import os
+    import subprocess
 
-    import _imdb_etl_spark.plans  # noqa: F401  (break the operator-module import cycle)
-    from _imdb_etl_spark.operators.dedup import (
-        _ITER_RUN_DIRS,
-        _iter_stage_dir,
-    )
+    from _imdb_etl_spark.sources import catalog
+
+    dead = subprocess.Popen(["true"])
+    dead.wait()
+    os.makedirs(tmp_path / f"spark-graft-{dead.pid}" / "stage_run0")
+    os.makedirs(tmp_path / "spark-graft-1")  # init: alive
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{tmp_path},/elsewhere")
+    monkeypatch.setattr(catalog, "_scratch_claimed", False)
+    path = catalog.scratch_dir("jsonl_docs")
+    assert path == str(tmp_path / f"spark-graft-{os.getpid()}" / "jsonl_docs")
+    assert sorted(os.listdir(tmp_path)) == ["spark-graft-1"]
+
+
+def test_scratch_run_caps_in_session_retention():
+    """Within one long session scratch_run caps retention itself: per
+    tag, the current run dir plus its immediate predecessor survive,
+    older runs are deleted; other tags are untouched."""
+    import os
+    import shutil
+
+    from _imdb_etl_spark.sources import catalog
+    from _imdb_etl_spark.sources.catalog import scratch_run
 
     dirs = []
     for _ in range(4):
-        d = _iter_stage_dir("t_retention")
+        d = scratch_run("t_retention")
         os.makedirs(d, exist_ok=True)
         dirs.append(d)
-    other = _iter_stage_dir("t_other")
+    other = scratch_run("t_other")
     os.makedirs(other, exist_ok=True)
     assert not os.path.isdir(dirs[0]) and not os.path.isdir(dirs[1])
     assert os.path.isdir(dirs[2]) and os.path.isdir(dirs[3])
     assert os.path.isdir(other)
-    assert _ITER_RUN_DIRS["t_retention"] == dirs[-2:]
-    # cleanup the test's leaves
-    import shutil
-
+    assert catalog._RUN_DIRS["t_retention"] == dirs[-2:]
     for d in dirs[2:] + [other]:
         shutil.rmtree(d, ignore_errors=True)
-    _ITER_RUN_DIRS.pop("t_retention", None)
-    _ITER_RUN_DIRS.pop("t_other", None)
+    catalog._RUN_DIRS.pop("t_retention", None)
+    catalog._RUN_DIRS.pop("t_other", None)
+
+
+def test_winnow_staging_keeps_two_runs_per_tag(spark, sf_dir):
+    """Three dedup_winnow_clusters runs in one session each match the
+    oracle, and each winnow staging tag keeps at most _STAGE_RETAIN
+    run directories afterwards (one per call before the shared
+    retention)."""
+    import glob
+
+    import duckdb
+
+    from _imdb_etl_spark.plans import REGISTRY
+    from _imdb_etl_spark.sources.catalog import _STAGE_RETAIN, scratch_dir
+    from _imdb_etl_spark.testing import canon_rows
+
+    spec = REGISTRY["dedup_winnow_clusters"]
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW documents AS "
+        f"SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+    )
+    rel = con.sql(spec.oracle)
+    _, want = canon_rows([d[0] for d in rel.description], rel.fetchall())
+    con.close()
+    for _ in range(3):
+        df = spec.spark(spark, sf_dir)
+        _, got = canon_rows(df.columns, [tuple(r) for r in df.collect()])
+        assert got == want
+    for tag in ("winnow_fp", "winnow_groups"):
+        runs = glob.glob(f"{scratch_dir(tag)}_run*")
+        assert 1 <= len(runs) <= _STAGE_RETAIN, (tag, runs)
 
 
 def test_python_source_filter_pushdown_prunes_partitions(spark):
@@ -256,14 +300,12 @@ def test_schema_evolution_merge_semantics(spark, sf_dir):
     from _imdb_etl_spark.sources import load_tables
 
     REGISTRY["source_schema_evolution"].spark(spark, sf_dir).collect()
-    import glob
     import os
 
-    tbl = max(
-        glob.glob(f"/root/repo/spark-warehouse/schema_evo_{os.getpid()}"),
-        default=None,
-    )
-    assert tbl, "schema_evo table dir missing"
+    from _imdb_etl_spark.sources import scratch_dir
+
+    tbl = scratch_dir("schema_evo")
+    assert os.path.isdir(tbl), "schema_evo table dir missing"
     merged = (
         spark.read.option("mergeSchema", "true")
         .option("basePath", tbl)
@@ -282,32 +324,27 @@ def test_schema_evolution_merge_semantics(spark, sf_dir):
             assert r.batch == 2 and r.quality_score == r.n_chars % 100
 
 
-def test_stage_to_parquet_reaps_with_descriptive_tombstone(spark):
-    """A DataFrame held past the per-tag retention depth must fail
-    with the CAUSE IN THE ERROR (the tombstone file name), not a bare
-    missing-path error far from stage_to_parquet (ADVICE r10)."""
+def test_stage_to_parquet_retention_names_run_in_error(spark):
+    """A DataFrame held past the per-tag retention depth fails with an
+    error naming its retired ``<tag>_run<N>`` directory, and the
+    newest run still reads."""
+    import os
+
     import pytest
 
     from _imdb_etl_spark.sources import catalog
 
-    tag = "tombstone_pytest"
+    tag = "retention_pytest"
     held = catalog.stage_to_parquet(spark.range(5).toDF("x"), tag)
-    held_path = catalog._STAGE_RUN_DIRS[tag][-1]
+    held_path = catalog._RUN_DIRS[tag][-1]
     assert held.count() == 5
     for _ in range(catalog._STAGE_RETAIN):
         catalog.stage_to_parquet(spark.range(5).toDF("x"), tag)
-    # the first run dir is now retired: data gone, tombstone present
-    import os
-
-    assert os.path.isfile(os.path.join(held_path, catalog._STAGE_TOMBSTONE))
+    assert not os.path.exists(held_path)
     # the held frame replays remembered file names, so its error names
-    # the retired run dir (the policy's locus, where the tombstone sits)
+    # the retired run dir
     with pytest.raises(Exception, match=tag + "_run"):
         held.count()
-    # a consumer that RE-LISTS the old path gets the cause in the
-    # message: the footer read fails on the tombstone file itself
-    with pytest.raises(Exception, match="REAPED"):
-        spark.read.parquet(held_path).count()
     # the newest run is untouched
     assert catalog.stage_to_parquet(spark.range(3).toDF("x"), tag).count() == 3
 
@@ -450,7 +487,7 @@ def test_stage_to_parquet_is_one_job_with_inferred_schema(spark):
         spark, "stage-one-job", lambda: catalog.stage_to_parquet(df, tag)
     )
     assert len(jobs) == 1
-    inferred = spark.read.parquet(catalog._STAGE_RUN_DIRS[tag][-1])
+    inferred = spark.read.parquet(catalog._RUN_DIRS[tag][-1])
     assert staged.schema == inferred.schema
     def rows(d):
         return sorted(d.collect(), key=lambda r: r.id)
@@ -477,3 +514,61 @@ def test_documents_doc_id_unique(sf_dir, tmp_path):
             os.path.join(d, "documents.parquet"), columns=["doc_id"]
         ).column("doc_id").to_pylist()
         assert len(ids) == len(set(ids)) > 0, d
+
+
+# one registered query per scratch family: stage, CC frontier, winnow,
+# jsonl, orc, xml, pysink, bucketed join, backfill, schema evolution,
+# foreachBatch, the IVF, MinHash and both PPJoin indexes
+_SCRATCH_FAMILY_QUERIES = (
+    "embedding_norms_arrow",
+    "dedup_clusters",
+    "dedup_winnow_clusters",
+    "jsonl_roundtrip_source",
+    "orc_roundtrip_source",
+    "xml_roundtrip_source",
+    "pysink_roundtrip_docs",
+    "bucketed_join_orders_lineitem",
+    "sink_dynamic_partition_backfill",
+    "source_schema_evolution",
+    "streaming_foreachbatch_upsert",
+    "sim_knn_ivf_persisted",
+    "dedup_minhash_index_persisted",
+    "dedup_jaccard_prefix_persisted",
+    "dedup_jaccard_prefix_incremental",
+)
+
+
+def test_hermetic_run_leaves_no_scratch(tmp_path, sf_dir):
+    """A process started in another directory, with SPARK_LOCAL_DIRS
+    pointed there, runs every scratch family against its oracle and
+    exits leaving nothing behind: no entry under ./spark-warehouse and
+    no spark-graft-* root."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    local = tmp_path / "local"
+    env = dict(
+        os.environ,
+        SPARK_LOCAL_DIRS=str(local),
+        PYTHONPATH=os.pathsep.join(
+            p for p in (repo, os.environ.get("PYTHONPATH")) if p
+        ),
+    )
+    env.setdefault("SPARK_GRAFT_CPUS", "4")
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "check.py"), sf_dir,
+         *_SCRATCH_FAMILY_QUERIES],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    n = len(_SCRATCH_FAMILY_QUERIES)
+    assert proc.returncode == 0, proc.stdout[-4000:] + proc.stderr[-4000:]
+    assert f"{n}/{n} passed" in proc.stdout, proc.stdout[-4000:]
+    warehouse = tmp_path / "spark-warehouse"
+    assert not warehouse.exists() or not os.listdir(warehouse)
+    assert not list(local.glob("spark-graft-*"))

@@ -6,9 +6,11 @@ Usage: python tools/explain.py <query_name> [sf_dir] [mode]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 
 def main() -> int:

@@ -15,16 +15,18 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 
 def main() -> int:
     from _imdb_etl_spark.plans import GATE_WINDOW, REGISTRY
 
     seen: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
         try:
             rows = json.load(open(path))

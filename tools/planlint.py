@@ -24,10 +24,12 @@ Exit 1 if any non-allow-listed flag fires.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 # Queries whose flagged shape is by design, with the reason recorded so
 # the allow-list is an audit trail, not an escape hatch.

@@ -33,7 +33,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 _SRC = "/root/testdata/sf0.1"
 
@@ -71,8 +72,8 @@ def main() -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    dst = f"/root/repo/.benchdata/sf{factor // 10}" if factor % 10 == 0 else None
-    dst = dst or f"/root/repo/.benchdata/x{factor}"
+    name = f"sf{factor // 10}" if factor % 10 == 0 else f"x{factor}"
+    dst = os.path.join(_ROOT, ".benchdata", name)
     gen = ensure_scaled(spark, _SRC, dst, factor=factor)
     if gen is not None:
         print(f"# generated {dst} in {gen:.0f}s", flush=True)

@@ -22,7 +22,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 
 def main() -> int:
@@ -37,7 +38,7 @@ def main() -> int:
         winnow_arrays,
     )
     from _imdb_etl_spark.session import get_spark
-    from _imdb_etl_spark.sources import load_tables
+    from _imdb_etl_spark.sources import load_tables, scratch_dir
     from _imdb_etl_spark.sources.scaleup import ensure_scaled
 
     spark = get_spark(
@@ -46,12 +47,12 @@ def main() -> int:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    dst = f"/root/repo/.benchdata/sf{factor // 10}"
+    dst = os.path.join(_ROOT, ".benchdata", f"sf{factor // 10}")
     ensure_scaled(spark, "/root/testdata/sf0.1", dst, factor=factor)
 
     (docs,) = load_tables(spark, dst, "documents")
     t0 = time.time()
-    path = f"/root/repo/spark-warehouse/winnow_struct_probe_{os.getpid()}"
+    path = scratch_dir("winnow_struct_probe")
     fp = (
         winnow_arrays(docs)
         .select(

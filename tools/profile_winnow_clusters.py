@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 
 def main() -> int:
@@ -33,6 +34,7 @@ def main() -> int:
     import _imdb_etl_spark.plans  # noqa: F401  (registry first: import cycle)
     from _imdb_etl_spark.operators import text as T
     from _imdb_etl_spark.session import get_spark
+    from _imdb_etl_spark.sources import scratch_dir
     from _imdb_etl_spark.sources.scaleup import ensure_scaled
 
     spark = get_spark(
@@ -43,7 +45,7 @@ def main() -> int:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    dst = f"/root/repo/.benchdata/sf{factor // 10}"
+    dst = os.path.join(_ROOT, ".benchdata", f"sf{factor // 10}")
     ensure_scaled(spark, "/root/testdata/sf0.1", dst, factor=factor)
 
     def mark(label, t0):
@@ -68,7 +70,7 @@ def main() -> int:
         .agg(F.sort_array(F.collect_set("vid")).alias("vs"))
         .where(F.size("vs") >= T._WIN_MIN_SHARED)
     )
-    gpath = f"{T._winnow_stage_base()}/profile_groups"
+    gpath = scratch_dir("winnow_profile_groups")
     (
         docsets.groupBy("vs")
         .agg(F.min("doc_id").alias("gid"), F.count(F.lit(1)).alias("members"))

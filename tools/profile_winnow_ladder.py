@@ -13,7 +13,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 
 def main() -> int:
@@ -31,7 +32,7 @@ def main() -> int:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    dst = f"/root/repo/.benchdata/sf{factor // 10}"
+    dst = os.path.join(_ROOT, ".benchdata", f"sf{factor // 10}")
     ensure_scaled(spark, "/root/testdata/sf0.1", dst, factor=factor)
     (docs,) = load_tables(spark, dst, "documents")
     docs = spread(docs)

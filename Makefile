@@ -1,6 +1,6 @@
 SF_CHECK ?= /root/testdata/sf0.01
 
-.PHONY: check test bench smoke explain lint verify ledger
+.PHONY: check test bench probe smoke explain lint verify ledger
 
 check:
 	SPARK_GRAFT_CPUS=16 python tools/check.py $(SF_CHECK)
@@ -20,6 +20,23 @@ bench:
 	python3 perfbench/run.py --workload imdb_etl --seed 1 --seconds 24
 	python3 perfbench/run.py --workload dashboard --seed 1 --seconds 24
 	python3 perfbench/smoke.py
+
+# off-benchmark scale probes at 10x sf0.1 (tools/probe_scale.py):
+# queries whose growth from sf0.1 should stay about linear, including
+# the registered LSH/IVF pair faces; then the hot-shingle corpus over
+# the pair faces its skew stresses
+PROBE_SPOT = fact_star_left_joins dedup_minhash_lsh tpch_q1_pricing_summary \
+	tpch_q5_local_supplier_volume events_hourly_rollup text_duplicate_spans \
+	pipeline_pretrain_mix dedup_cdc_chunks text_bm25_search corpus_epoch_shuffle \
+	quality_score_auc corpus_upsample_epochs events_funnel_time_bound \
+	tokenizer_bpe_train_n dedup_incremental_minhash events_interval_coalesce \
+	text_remove_duplicate_spans multimodal_audio_segments \
+	dedup_jaccard_lsh dedup_embedding_cosine_ivf
+PROBE_HOT = dedup_jaccard_lsh dedup_jaccard_prefix_persisted dedup_winnow_clusters
+
+probe:
+	python tools/probe_scale.py 10 $(PROBE_SPOT)
+	python tools/probe_scale.py 10 --hot-shingle $(PROBE_HOT)
 
 smoke:
 	python -c "import __spark_entry__ as e; \

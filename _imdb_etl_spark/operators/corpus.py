@@ -284,7 +284,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Near-dup pairs that STRADDLE a train/val/test boundary are silent
 # eval contamination: the doc in train teaches the model the doc in
 # val. The audit joins the near-dup pair set (word-3-gram Jaccard >=
-# 0.6, dedup_ngram_jaccard's exact semantics) against the
+# 0.6, _JACCARD_SQL's exact semantics) against the
 # content-stable split assignment (split_train_val_test's md5-prefix
 # rule) and reports the pair count per (split, split) cell — the
 # off-diagonal cells are the leakage. At 100 TB the pair set comes
@@ -293,7 +293,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _leakage_sql() -> str:
-    # the pair stage is dedup_ngram_jaccard's canonical SQL, embedded
+    # the pair stage is the exact all-pairs Jaccard SQL, embedded
     # verbatim as a subquery (the neardup_pagerank convention) — one
     # definition of the 0.6-threshold shingle-join semantics, never a
     # hand-copied drift-prone duplicate
@@ -347,8 +347,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     (docs,) = load_tables(spark, sf_dir, "documents")
     # Pair stage = the PPJoin prefix-filtered exact join (round 13, the
-    # neardup_pagerank swap): provably the SAME pair set as
-    # dedup_ngram_jaccard's quadratic shared-shingle self-join (prefix
+    # neardup_pagerank swap): provably the SAME pair set as the
+    # quadratic shared-shingle self-join (prefix
     # filtering is lossless; the dedup_jaccard_prefix face's oracle IS
     # the unfiltered all-pairs SQL, so its driver hash match is the
     # standing no-missed-pair proof). The quadratic pair join was this

@@ -4,9 +4,9 @@ n-gram Jaccard, MinHash+LSH, SimHash.
 Design for 100 TB:
 - Exact / normalized dedup is a hash groupBy: map-side partial
   aggregation collapses duplicates before the shuffle.
-- The all-pairs n-gram Jaccard (`dedup_ngram_jaccard`) is the exact
-  *verifier*; its shingle self-join is quadratic in the worst case and
-  exists as the small-scale oracle / final-verify stage.
+- The all-pairs n-gram Jaccard exists only as DuckDB oracle SQL
+  (`_JACCARD_SQL`): its shingle self-join is quadratic in the worst
+  case, so Spark runs pruned joins that verify with the same ratio.
 - `dedup_minhash_lsh` is the scale path: cost is O(docs x shingles x k)
   map work + a shuffle keyed on (band, band-signature); only bucket
   collisions are verified exactly. All hashing is md5 (the only hash
@@ -144,44 +144,6 @@ ORDER BY doc_a, doc_b
 """
 
 
-# NOT registered (round 6): the shared-shingle self-join is quadratic on
-# a boilerplate-heavy corpus, so the registered scale face is
-# dedup_jaccard_lsh (LSH candidates + this exact ratio as the verify
-# step); this exact form remains the pytest recall/containment oracle
-# (tests/test_operators.py) and the library entry point other operators
-# compose (crossmodal_textdup_cosine, split_leakage_audit).
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact near-dup pairs by word-3-gram Jaccard >= 0.6 via shingle
-    self-join. Quadratic worst case — the exact verifier behind
-    dedup_jaccard_lsh's registered scale path."""
-    (docs,) = load_tables(spark, sf_dir, "documents")
-    sh = _shingles(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jacc = F.col("n_inter").cast("double") / (
-        F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_inter")
-    )
-    return (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .where(jacc >= 0.6)
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 _CONTAIN_TAU = 0.8
 
 _CONTAIN_SQL = f"""
@@ -201,43 +163,6 @@ JOIN sizes sa USING (doc_id)
 WHERE CAST(n_inter AS DOUBLE) / sa.n_sh >= {_CONTAIN_TAU}
 ORDER BY doc_id, container_id
 """
-
-
-# NOT registered (round 6): same quadratic shared-shingle pair stage as
-# dedup_ngram_jaccard — demoted to the pytest verifier behind the
-# registered dedup_containment_lsh scale face.
-def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directional containment dedup: |A∩B| / |A| over word-3-gram
-    shingle sets, flagging docs >= 0.8 contained in
-    another doc — catches quotes, excerpts, and page-within-page
-    duplication that symmetric Jaccard misses (a 100-line doc pasted
-    into a 10,000-line doc has Jaccard ~0.01 but containment 1.0;
-    Broder's containment measure, 'On the resemblance and
-    containment of documents', 1997). Exact verifier; the registered
-    scale face is dedup_containment_lsh."""
-    (docs,) = load_tables(spark, sf_dir, "documents")
-    sh = _shingles(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("container_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    contain = F.col("n_inter").cast("double") / F.col("n_sh")
-    return (
-        inter.join(sizes, "doc_id")
-        .where(contain >= _CONTAIN_TAU)
-        .select("doc_id", "container_id", F.round(contain, 6).alias("containment"))
-        .orderBy("doc_id", "container_id")
-    )
 
 
 _N_HASHES = 12
@@ -471,9 +396,8 @@ ORDER BY i.doc_a, i.doc_b
 @register(
     "dedup_jaccard_lsh",
     _JACCARD_LSH_SQL,
-    doc="The registered scale face of n-gram Jaccard dedup (round 6; "
-    "replaces the quadratic dedup_ngram_jaccard registration, now the "
-    "pytest verifier): MinHash-LSH banding prunes to colliding pairs, "
+    doc="The scale face of n-gram Jaccard dedup: MinHash-LSH banding "
+    "prunes to colliding pairs, "
     "then the exact Jaccard ratio verifies — with the MinHash estimate "
     "(matching signature fraction) reported next to the exact value, "
     "the estimator-vs-truth audit column a production pipeline uses to "
@@ -511,9 +435,8 @@ ORDER BY i.doc_id, i.container_id
 @register(
     "dedup_containment_lsh",
     _CONTAIN_LSH_SQL,
-    doc="The registered scale face of directional containment dedup "
-    "(round 6; replaces the quadratic dedup_containment registration, "
-    "now the pytest verifier): each unordered LSH candidate pair is "
+    doc="The scale face of directional containment dedup "
+    "(|A∩B|/|A|, Broder 1997): each unordered LSH candidate pair is "
     "checked in BOTH directions for |A∩B|/|A| >= 0.8. Honest recall "
     "caveat, pinned in pytest: symmetric MinHash banding under-recalls "
     "extreme-asymmetry containment (tiny doc inside a huge one has "
@@ -1222,8 +1145,8 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     run_dir = scratch_run("pr")
     # Pair stage = the PPJoin prefix-filtered exact join (round 13):
-    # provably the SAME pair set as dedup_ngram_jaccard's quadratic
-    # shared-shingle self-join (prefix filtering is lossless —
+    # provably the SAME pair set as the quadratic shared-shingle
+    # self-join (prefix filtering is lossless —
     # Chaudhuri/Bayardo; the dedup_jaccard_prefix face's oracle IS the
     # unfiltered all-pairs SQL, so its driver hash match is the
     # standing no-missed-pair proof), at a fraction of the pair-stage
@@ -1579,7 +1502,7 @@ _JACCARD_PREFIX_SQL = _JACCARD_SQL
     "n - ceil(tau*n) + 1 rarest shingles, candidates = prefix-shingle "
     "collisions + length filter, then exact verify by sorted-set "
     "intersection on candidates only. Same result set as the quadratic "
-    "dedup_ngram_jaccard (prefix filtering is lossless) at a fraction "
+    "all-pairs self-join (prefix filtering is lossless) at a fraction "
     "of the pair-stage cost, and unlike MinHash-LSH it has NO false "
     "negatives — the route a compliance-grade dedup takes at 100 TB. "
     "The oracle is the unfiltered exact all-pairs Jaccard SQL, so the "

@@ -288,8 +288,8 @@ def _pq_encode_lut(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     them in a window keyed (vec_id, s), which was the PQ family's
     dominant stage at 1000x (~30x the data bytes shuffled twice). The
     expression route survives as _pq_encode_expression, pinned
-    output-equal by test_pq_encode_gemm_matches_expression_route —
-    the same demotion pattern as dedup_embedding_ivf. The LUT side
+    output-equal by test_pq_encode_gemm_matches_expression_route.
+    The LUT side
     stays expression-based: it touches only the _N_QUERIES query
     vectors x the broadcast codebook (a few thousand rows)."""
     encoded = _pq_encode_gemm(emb)

@@ -7,9 +7,10 @@
   on an 8-bit sign signature, rank only within buckets. The hyperplane
   sign matrix is derived from md5 in Python and embedded as literals so
   Spark and the DuckDB oracle use the identical projection.
-- `dedup_embedding_cosine`: near-dup pairs by cosine >= threshold
-  (semantic dedup). All-pairs at test scale; at 100 TB the same query
-  runs after `sim_knn_lsh`-style bucketing.
+- `dedup_embedding_cosine_ivf`: near-dup pairs by cosine >= threshold
+  (semantic dedup), scored only within IVF inverted lists so pair work
+  stays ~N^2/k; the all-pairs form exists only as DuckDB SQL
+  (`_EMB_DEDUP_SQL`), the recall truth in pytest.
 
 Float policy: embeddings are float32; all dot products/norms accumulate
 in float64 element-by-element in both engines, and similarities are
@@ -665,108 +666,6 @@ ORDER BY vec_a, vec_b
 """
 
 
-_N_BLOCKS = 8  # block-pair decomposition width; grow ~sqrt(N) with corpus
-
-
-# NOT registered (round 6): exact all-pairs block GEMM is quadratic in
-# the corpus — demoted to the pytest recall verifier behind the two
-# registered IVF-routed scale faces (dedup_embedding_ivf and
-# dedup_embedding_cosine_ivf). Still the library entry point for
-# bounded exact passes (tests/test_properties.py proves it equals the
-# naive quadratic loop on arbitrary vector sets).
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic near-dup pairs: cosine >= threshold over ALL pairs via
-    the distributed block-pair GEMM — the exact verifier behind the
-    registered IVF scale faces."""
-    (emb,) = load_tables(spark, sf_dir, "embeddings")
-    return blockpair_cosine_pairs(emb).orderBy("vec_a", "vec_b")
-
-
-def blockpair_cosine_pairs(emb: DataFrame) -> DataFrame:
-    """Exact all-pairs via block-pair decomposition: vector i belongs to
-    block ``vec_id % B``; each row is replicated to the B unordered
-    block pairs it participates in, the shuffle groups on the pair key,
-    and each group runs one numpy/BLAS GEMM (block_a x block_b, or the
-    upper triangle when a == b). Every unordered vector pair is scored
-    in exactly one group, so the result matches the quadratic oracle
-    bit-for-bit while each task holds only ~2N/B vectors. At 100 TB,
-    grow B ~ sqrt(N) (replication is B x rows, group memory is 2N/B
-    x 8*dim bytes) and/or pre-filter candidate pairs with the
-    sim_knn_lsh sign buckets before the exact pass.
-
-    Float-parity caveat: GEMM accumulation order (and numpy's half-even
-    rounding) differs from the oracle's sequential fold + half-away
-    ROUND, so a cosine within ~1 ulp of a 6-decimal rounding midpoint
-    could in principle round differently per engine (~1e-9 probability
-    per pair); the expression-based `_dot` formulation used by the kNN
-    queries is the bitwise-parity path."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    replicated = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            (F.col("vec_id") % _N_BLOCKS).alias("blk"),
-            F.explode(
-                F.array(*[F.lit(j) for j in range(_N_BLOCKS)])
-            ).alias("other"),
-        )
-        .select(
-            "vec_id",
-            "embedding",
-            "blk",
-            F.least("blk", "other").alias("bp_lo"),
-            F.greatest("blk", "other").alias("bp_hi"),
-        )
-    )
-
-    schema = StructType(
-        [
-            StructField("vec_a", LongType()),
-            StructField("vec_b", LongType()),
-            StructField("cosine_sim", DoubleType()),
-        ]
-    )
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
-        m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        lo, hi = int(pdf["bp_lo"].iat[0]), int(pdf["bp_hi"].iat[0])
-        if lo == hi:
-            # half-up to match the twins' ROUND (ADVICE r11); emitted
-            # sims pass a positive threshold, so sign handling is moot,
-            # but copysign keeps the mechanism uniform repo-wide
-            s_raw = m @ m.T
-            sims = np.copysign(np.floor(np.abs(s_raw) * 1e6 + 0.5), s_raw) / 1e6
-            ai, bi = np.nonzero(
-                (sims >= _COS_THRESH) & (ids[:, None] < ids[None, :])
-            )
-            va, vb = ids[ai], ids[bi]
-        else:
-            is_lo = pdf["blk"].to_numpy() == lo
-            ida, idb = ids[is_lo], ids[~is_lo]
-            s_raw = m[is_lo] @ m[~is_lo].T
-            sims = np.copysign(np.floor(np.abs(s_raw) * 1e6 + 0.5), s_raw) / 1e6
-            ai, bi = np.nonzero(sims >= _COS_THRESH)
-            va = np.minimum(ida[ai], idb[bi])
-            vb = np.maximum(ida[ai], idb[bi])
-        return pd.DataFrame(
-            {"vec_a": va, "vec_b": vb, "cosine_sim": sims[ai, bi]}
-        )
-
-    return replicated.groupBy("bp_lo", "bp_hi").applyInPandas(
-        score_group, schema
-    )
-
-
 _DEDUP_PROBE = 2
 
 # k sizing (round 6, bounded round 10): a FIXED centroid count makes
@@ -845,65 +744,6 @@ WHERE ROUND(({_DOT_SQL.format(a='a.embedding', b='e.embedding', dim=_DIM)})
             / (a.nrm * e.nrm), 6) >= {_COS_THRESH}
 ORDER BY vec_a, vec_b
 """
-
-
-# NOT registered (round 8, the round-6 precedent for exact forms whose
-# scale face is pinned output-equal): the expression-dot IVF face
-# measured 434 s at sf1 — 22x its GEMM sibling dedup_embedding_cosine_ivf,
-# which produces IDENTICAL output (shared candidates, threshold, and
-# rounding; pinned by test_embedding_cosine_ivf_matches_expression_route
-# and the shared oracle SQL). The per-pair codegen dot is the
-# bitwise-parity REFERENCE, not the volume path — demoted to the pytest
-# verifier behind the registered GEMM face, exactly as
-# dedup_embedding_cosine was demoted behind the IVF routes in round 6.
-_EMB_IVF_DEDUP_DOC = (
-    "The scale path for semantic dedup: IVF coarse quantization as "
-    "the candidate pre-filter in front of the exact cosine verify. "
-    f"Every vector joins its {_DEDUP_PROBE} nearest of {_N_CENTROIDS} "
-    "centroids' inverted lists (multi-probe assignment, the knob that "
-    "trades pair work for recall); candidate pairs are same-list "
-    f"co-occupants only, exact-verified at cosine >= {_COS_THRESH} and "
-    "deduplicated. Pair work is sum(|list|^2) ~ N^2/k instead of N^2 "
-    "— grow k ~ sqrt(N) and the per-list work stays bounded; the "
-    "shuffle keys on the list id. Candidate recall vs the exact "
-    "dedup_embedding_cosine pairs is asserted in pytest "
-    "(weak-similarity pairs; production near-dups at cosine >= 0.8 "
-    "probe-collide with near certainty). Sign-LSH was evaluated and "
-    "rejected for this threshold regime: at cosine ~0.5 the per-bit "
-    "agreement (0.66) is too close to random (0.5) for banding to "
-    "prune without losing recall. Role note (round 6): this is the "
-    "expression-dot PARITY face — at 10x data the per-pair codegen "
-    "dot measured ~26x slower than the per-list BLAS GEMM, so "
-    "volume work (clusters, sweeps) routes through "
-    "dedup_embedding_cosine_ivf, which is pinned output-equal."
-)
-
-
-def dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The expression-dot IVF parity face (see _EMB_IVF_DEDUP_DOC and
-    the demotion note above): library/pytest verifier behind the
-    registered GEMM face dedup_embedding_cosine_ivf."""
-    (emb,) = load_tables(spark, sf_dir, "embeddings")
-    lists = ivf_inverted_lists(emb)
-    left = lists.select(
-        F.col("cid").alias("acid"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("nrma"),
-    )
-    pair_sim = F.round(
-        _dot(F.col("ea"), F.col("embedding")) / (F.col("nrma") * F.col("nrm")), 6
-    )
-    return (
-        left.join(
-            lists,
-            (F.col("acid") == F.col("cid")) & (F.col("vec_a") < F.col("vec_id")),
-        )
-        .select("vec_a", F.col("vec_id").alias("vec_b"), pair_sim.alias("cosine_sim"))
-        .where(F.col("cosine_sim") >= _COS_THRESH)
-        .distinct()
-        .orderBy("vec_a", "vec_b")
-    )
 
 
 def _rank_centroids_desc(raw):
@@ -1058,17 +898,18 @@ def ivf_inverted_lists(emb: DataFrame) -> DataFrame:
 @register(
     "dedup_embedding_cosine_ivf",
     _EMB_IVF_DEDUP_SQL,
-    doc="Round 6: the GEMM-verified IVF route — dedup_embedding_cosine's "
-    "threshold-pairs output routed through dedup_embedding_ivf's "
-    "candidate pre-filter, exactly the composition its demoted "
-    "quadratic form documented. Each inverted list becomes one "
-    "applyInPandas group scored by a single numpy/BLAS GEMM (upper "
-    "triangle), pairs co-occurring in two probe lists deduplicated. "
-    "Same logical result as dedup_embedding_ivf (shared oracle); the "
-    "physical strategy differs — batched BLAS per list instead of "
-    "per-pair codegen expressions — which wins when |list| x dim makes "
-    "vectorized math the bottleneck. Group memory is |list| x 8*dim "
-    "bytes, bounded by the k ~ sqrt(N) sizing rule.",
+    doc="The scale path for semantic dedup: IVF coarse quantization as "
+    "the candidate pre-filter in front of the exact cosine verify. "
+    f"Every vector joins its {_DEDUP_PROBE} nearest centroids' inverted "
+    "lists (multi-probe, the knob that trades pair work for recall); "
+    f"same-list co-occupants are verified at cosine >= {_COS_THRESH}. "
+    "Each inverted list becomes one applyInPandas group scored by a "
+    "single numpy/BLAS GEMM (upper triangle), pairs co-occurring in two "
+    "probe lists deduplicated — batched BLAS per list, measured 22x "
+    "faster at sf1 than per-pair codegen dots for the same rows as the "
+    "oracle's expression-dot SQL. Pair work is "
+    "sum(|list|^2) ~ N^2/k and group memory |list| x 8*dim bytes, both "
+    "bounded by the k ~ sqrt(N) sizing rule.",
 )
 def dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
@@ -1155,7 +996,7 @@ ORDER BY vec_id
     _SEM_CLUSTER_SQL,
     doc="Semantic duplicate clusters: connected components over the "
     "embedding near-dup pairs from the IVF candidate pre-filter "
-    "(dedup_embedding_ivf's exact pair semantics) — the step that "
+    "(dedup_embedding_cosine_ivf's pairs) — the step that "
     "turns pairwise cosine hits into keep-one groups, completing the "
     "semantic-dedup path the same way dedup_clusters completes the "
     "MinHash path. Same pointer-jumping propagation (O(log diameter) "

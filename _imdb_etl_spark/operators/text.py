@@ -1252,8 +1252,7 @@ ORDER BY p.doc_a, p.doc_b
 # registered cluster face is reconciled as exactly the connected
 # components of this edge set
 # (test_winnow_clusters_reconcile_with_pair_face) — the same structure
-# as fuzzy_part_match behind fuzzy_part_name_groups (r9),
-# dedup_embedding_cosine behind the GEMM/IVF routes (r6/r8).
+# as fuzzy_part_match behind fuzzy_part_name_groups (r9).
 def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing pair matching (the MOSS match step): documents
     sharing >= _WIN_MIN_SHARED winnowed fingerprint values — each

@@ -302,9 +302,7 @@ ORDER BY part_a, part_b
 # n_pairs against this face's actual expansion counts
 # (test_fuzzy_groups_n_pairs_equals_expansion_counts) and replays
 # _FUZZY_SQL via DuckDB against this face bitwise
-# (test_fuzzy_expansion_matches_duckdb_oracle) at test scale, exactly
-# as dedup_embedding_cosine (r6) and dedup_embedding_ivf (r8) were
-# demoted behind their registered GEMM/IVF siblings.
+# (test_fuzzy_expansion_matches_duckdb_oracle) at test scale.
 _FUZZY_MATCH_DOC = (
     "Fuzzy matching restructured around the data's true shape "
     "(round 6, after the 10x audit): the corpus has ~64 DISTINCT "

@@ -227,7 +227,7 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     SINGLE-BUILDER CONTRACT. Session confs are process-global, so a
     face that plans under mutated confs is safe only when query
     builds on the session are sequential — which the driver, check.py,
-    bench.py, and the probes all are. Concurrent BUILDS on one
+    perfbench, and the probes all are. Concurrent BUILDS on one
     SparkSession are not a supported mode of this registry; if that
     ever changes, add a lock around this manager first. (Concurrent
     EXECUTION of already-built DataFrames is unaffected: the pattern

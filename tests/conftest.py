@@ -3,11 +3,13 @@ from __future__ import annotations
 import os
 import sys
 
+import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from _imdb_etl_spark.session import get_spark  # noqa: E402
+from _imdb_etl_spark.sources.catalog import DRIVER_TABLES  # noqa: E402
 from tests import fixtures  # noqa: E402
 
 
@@ -29,3 +31,27 @@ def imdb_stage(tmp_path_factory) -> str:
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def duck():
+    """duck(sf_dir, sql) -> (cols, rows): run oracle SQL on DuckDB over
+    the driver tables present in sf_dir, as tools/check.py does. A
+    table may be a parquet file or a Spark-written parquet directory."""
+
+    def run(sf_dir: str, sql: str) -> tuple[list[str], list[tuple]]:
+        con = duckdb.connect()
+        try:
+            for t in DRIVER_TABLES:
+                p = os.path.join(sf_dir, f"{t}.parquet")
+                if os.path.isdir(p):
+                    p = os.path.join(p, "*.parquet")
+                elif not os.path.exists(p):
+                    continue
+                con.sql(f"CREATE VIEW {t} AS FROM read_parquet('{p}')")
+            rel = con.sql(sql)
+            return rel.columns, rel.fetchall()
+        finally:
+            con.close()
+
+    return run

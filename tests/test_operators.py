@@ -12,17 +12,17 @@ from _imdb_etl_spark.operators import multimodal
 from _imdb_etl_spark.plans import REGISTRY
 from _imdb_etl_spark.sources import load_tables, scratch_dir
 from _imdb_etl_spark.streaming import read_events_stream, streaming_hourly_rollup
+from _imdb_etl_spark.testing import canon_rows, canon_value
 
 
 @pytest.fixture(scope="module")
-def exact_pairs(spark, sf_dir):
-    # the demoted quadratic form IS the recall oracle for every
-    # LSH-composed registered face (round 6: verifier role, not a
-    # registered query)
-    from _imdb_etl_spark.operators.dedup import dedup_ngram_jaccard
+def exact_pairs(duck, sf_dir):
+    # the all-pairs Jaccard oracle SQL, run by DuckDB, is the recall
+    # truth for every LSH-composed registered face
+    from _imdb_etl_spark.operators.dedup import _JACCARD_SQL
 
-    rows = dedup_ngram_jaccard(spark, sf_dir).collect()
-    return {(r.doc_a, r.doc_b): r.jaccard for r in rows}
+    _, rows = duck(sf_dir, _JACCARD_SQL)
+    return {(a, b): j for a, b, j in rows}
 
 
 def test_minhash_lsh_recall(spark, sf_dir, exact_pairs):
@@ -46,7 +46,9 @@ def test_jaccard_lsh_face_subset_of_exact(spark, sf_dir, exact_pairs):
     assert rows
     for r in rows:
         assert (r.doc_a, r.doc_b) in exact_pairs
-        assert r.jaccard == exact_pairs[(r.doc_a, r.doc_b)]
+        assert canon_value(r.jaccard) == canon_value(
+            exact_pairs[(r.doc_a, r.doc_b)]
+        )
         # the MinHash estimate is a [0,1] signature-agreement fraction
         assert 0.0 <= r.jaccard_est <= 1.0
     # and it matches dedup_minhash_lsh's pair set (same candidates,
@@ -92,21 +94,24 @@ def test_lsh_recall_audit_reconciles_with_truth_and_lsh(
         assert r.recall == round(r.n_found / r.n_true, 6)
 
 
-def test_containment_lsh_face_subset_of_exact(spark, sf_dir):
-    """Registered containment face = exact containment restricted to
-    LSH candidates: a subset with identical ratios, and the dominant
-    near-equal-size containment pairs are retained."""
-    from _imdb_etl_spark.operators.dedup import dedup_containment
+def test_containment_lsh_face_subset_of_exact(spark, duck, sf_dir):
+    """Registered containment face = exact containment (the all-pairs
+    oracle SQL) restricted to LSH candidates: a subset with identical
+    ratios, and the dominant near-equal-size containment pairs are
+    retained."""
+    from _imdb_etl_spark.operators.dedup import _CONTAIN_SQL
 
-    exact = {
-        (r.doc_id, r.container_id): r.containment
-        for r in dedup_containment(spark, sf_dir).collect()
-    }
+    _, exact_rows = duck(sf_dir, _CONTAIN_SQL)
+    exact = {(d, c): x for d, c, x in exact_rows}
+    assert exact, "corpus should contain containment pairs"
+    assert all(0.8 <= x <= 1.0 for x in exact.values())
     rows = REGISTRY["dedup_containment_lsh"].spark(spark, sf_dir).collect()
     assert rows, "LSH candidates should retain containment pairs"
     for r in rows:
         assert (r.doc_id, r.container_id) in exact
-        assert r.containment == exact[(r.doc_id, r.container_id)]
+        assert canon_value(r.containment) == canon_value(
+            exact[(r.doc_id, r.container_id)]
+        )
     # symmetric full-dup pairs (containment in both directions) are the
     # strongest near-dups — banding must keep at least one
     got = {(r.doc_id, r.container_id) for r in rows}
@@ -159,25 +164,16 @@ def test_ivf_adaptive_k_matches_sql_and_is_bounded():
     assert _adaptive_k(10**10) * 64 * 8 < 256 * 1024 * 1024
 
 
-def test_embedding_cosine_ivf_matches_expression_route(spark, sf_dir):
-    """The GEMM-verified IVF face and the expression-dot IVF face share
-    candidates and threshold, so their outputs must be identical.
-    (Round 8: the expression face is demoted to this library verifier
-    — 434 s vs 19.7 s at sf1 for identical output — so this pin IS its
-    correctness evidence now.)"""
-    from _imdb_etl_spark.operators.similarity import dedup_embedding_ivf
+def test_embedding_cosine_ivf_matches_expression_route(spark, duck, sf_dir):
+    """The GEMM-verified IVF face and the oracle's expression-dot IVF
+    SQL share candidates and threshold, so their outputs must be
+    identical, scores compared as the gate compares them."""
+    from _imdb_etl_spark.operators.similarity import _EMB_IVF_DEDUP_SQL
 
-    expr_rows = {
-        (r.vec_a, r.vec_b): r.cosine_sim
-        for r in dedup_embedding_ivf(spark, sf_dir).collect()
-    }
-    gemm_rows = {
-        (r.vec_a, r.vec_b): r.cosine_sim
-        for r in REGISTRY["dedup_embedding_cosine_ivf"]
-        .spark(spark, sf_dir)
-        .collect()
-    }
-    assert gemm_rows == expr_rows
+    df = REGISTRY["dedup_embedding_cosine_ivf"].spark(spark, sf_dir)
+    got = canon_rows(df.columns, [tuple(r) for r in df.collect()])
+    assert got[0], "fixture should contain near-dup pairs"
+    assert got == canon_rows(*duck(sf_dir, _EMB_IVF_DEDUP_SQL))
 
 
 def test_corpus_charset_safe_for_delimiters_and_collation(spark, sf_dir):
@@ -651,8 +647,8 @@ def test_rate_source_drives_streaming_topology(spark):
         import time
 
         # Generous deadline: the loop exits on the first emitted row, so
-        # this only costs time when the box is under external load (the
-        # co-tenant spikes documented in bench.py) — 15 s flaked there.
+        # this only costs time when the box is under external load
+        # (co-tenant CPU spikes) — 15 s flaked there.
         deadline = time.time() + 60
         while time.time() < deadline:
             if spark.sql("SELECT sum(n) FROM rate_smoke").collect()[0][0]:
@@ -910,19 +906,16 @@ def test_jsonl_roundtrip_preserves_rowcount(spark, sf_dir):
     assert out.agg(F.sum("n_docs")).collect()[0][0] == docs.count()
 
 
-def test_embedding_ivf_dedup_recall(spark, sf_dir):
-    from _imdb_etl_spark.operators.similarity import (
-        dedup_embedding_cosine,
-        dedup_embedding_ivf,
-    )
+def test_embedding_ivf_dedup_recall(spark, duck, sf_dir):
+    from _imdb_etl_spark.operators.similarity import _EMB_DEDUP_SQL
 
-    exact = {
-        (r.vec_a, r.vec_b)
-        for r in dedup_embedding_cosine(spark, sf_dir).collect()
-    }
+    _, exact_rows = duck(sf_dir, _EMB_DEDUP_SQL)
+    exact = {(a, b) for a, b, _ in exact_rows}
     got = {
         (r.vec_a, r.vec_b)
-        for r in dedup_embedding_ivf(spark, sf_dir).collect()
+        for r in REGISTRY["dedup_embedding_cosine_ivf"]
+        .spark(spark, sf_dir)
+        .collect()
     }
     assert exact, "fixture should contain near-dup pairs"
     # candidate pre-filter never invents pairs; exact verify bounds them
@@ -974,20 +967,6 @@ def test_phash_invariants():
 
     for a, b in itertools.combinations(h.values(), 2):
         assert bin(a ^ b).count("1") >= 4
-
-
-def test_containment_asymmetry_and_bounds(spark, sf_dir):
-    from _imdb_etl_spark.operators.dedup import dedup_containment
-
-    rows = dedup_containment(spark, sf_dir).collect()
-    assert rows, "corpus should contain containment pairs"
-    for r in rows:
-        assert 0.8 <= r.containment <= 1.0
-    # directional: (a contained-in b) does not force (b contained-in a)
-    # when sizes differ, but every planted full-dup pair appears in both
-    # directions — assert at least one symmetric pair exists
-    pairs = {(r.doc_id, r.container_id) for r in rows}
-    assert any((b, a) in pairs for a, b in pairs)
 
 
 def test_cohesion_matches_numpy(spark, sf_dir):
@@ -1152,11 +1131,11 @@ def test_pagerank_mass_conserved(spark, sf_dir):
 
 
 def test_semantic_clusters_consistent_with_pairs(spark, sf_dir):
-    from _imdb_etl_spark.operators.similarity import dedup_embedding_ivf
-
     pairs = [
         (r.vec_a, r.vec_b)
-        for r in dedup_embedding_ivf(spark, sf_dir).collect()
+        for r in REGISTRY["dedup_embedding_cosine_ivf"]
+        .spark(spark, sf_dir)
+        .collect()
     ]
     labels = {
         r.vec_id: r.cluster_id
@@ -1863,25 +1842,39 @@ def test_intersect_all_multiplicity_is_min_of_counts(spark, sf_dir):
     assert rows == want
 
 
-def test_bench_run_capped_watchdog(spark):
-    """bench._run_capped must time a fast query, kill a pathological
-    one at the cap (job-group cancellation -> exception, not a hang),
-    and leave the session usable afterwards."""
-    import bench
+def test_probe_run_capped_watchdog(spark):
+    """probe_scale.run_capped must time a fast query, kill a
+    pathological one at the cap (job-group cancellation reported as
+    CAP, not a hang), report any other failure as FAIL, and leave the
+    session usable with no job-group properties set afterwards."""
+    from tools.probe_scale import run_capped
 
-    t = bench._run_capped(
+    status, t, _ = run_capped(
         spark, lambda: spark.range(1000).selectExpr("id * 2 AS x"), 60.0
     )
-    assert 0 <= t < 60
+    assert status == "ok" and 0 <= t < 60
 
     def quadratic():
         a = spark.range(300_000).withColumnRenamed("id", "a")
         b = spark.range(300_000).withColumnRenamed("id", "b")
         return a.crossJoin(b).selectExpr("sum(a * b) AS s")
 
-    with pytest.raises(Exception):
-        bench._run_capped(spark, quadratic, 2.0)
-    # session survives the cancellation
+    status, _, _ = run_capped(spark, quadratic, 2.0)
+    assert status == "CAP"
+
+    def broken():
+        return spark.range(10).selectExpr("no_such_column")
+
+    status, _, msg = run_capped(spark, broken, 60.0)
+    assert status == "FAIL" and "no_such_column" in msg
+    # session survives the cancellation, and later jobs carry no group
+    sc = spark.sparkContext
+    for key in (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    ):
+        assert sc.getLocalProperty(key) is None, key
     assert spark.range(10).count() == 10
 
 
@@ -2327,18 +2320,16 @@ def test_linear_attribution_conserves_credit(spark, sf_dir):
             assert r.credit_micro > 0 and r.touches > 0
 
 
-def test_prefix_filter_matches_exact_jaccard(spark, sf_dir):
+def test_prefix_filter_matches_exact_jaccard(spark, duck, sf_dir):
     """Losslessness pin for dedup_jaccard_prefix: the prefix-filtered
     join must return EXACTLY the quadratic all-pairs result (prefix
     filtering prunes candidates, never results)."""
-    from _imdb_etl_spark.operators.dedup import (
-        dedup_jaccard_prefix,
-        dedup_ngram_jaccard,
-    )
+    from _imdb_etl_spark.operators.dedup import _JACCARD_SQL, dedup_jaccard_prefix
 
-    exact = {tuple(r) for r in dedup_ngram_jaccard(spark, sf_dir).collect()}
-    pref = {tuple(r) for r in dedup_jaccard_prefix(spark, sf_dir).collect()}
-    assert pref == exact
+    df = dedup_jaccard_prefix(spark, sf_dir)
+    pref = canon_rows(df.columns, [tuple(r) for r in df.collect()])
+    assert pref[0]
+    assert pref == canon_rows(*duck(sf_dir, _JACCARD_SQL))
 
 
 def test_prefix_persisted_matches_lazy_and_gids_injective(spark, sf_dir):
@@ -2373,7 +2364,7 @@ def test_prefix_persisted_matches_lazy_and_gids_injective(spark, sf_dir):
 
 
 def test_prefix_incremental_lossless_and_unknown_shingles(
-    spark, sf_dir, tmp_path
+    spark, duck, sf_dir, tmp_path
 ):
     """dedup_jaccard_prefix_incremental must equal the exact all-pairs
     result restricted to cross-boundary pairs (losslessness under the
@@ -2382,20 +2373,15 @@ def test_prefix_incremental_lossless_and_unknown_shingles(
     near-dup of an index doc must still be caught — the unknown-
     shingle position-shift path exercised deterministically."""
     from _imdb_etl_spark.operators.dedup import (
+        _JACCARD_SQL,
         dedup_jaccard_prefix_incremental,
-        dedup_ngram_jaccard,
     )
 
-    exact = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup_ngram_jaccard(spark, sf_dir).collect()
-        if (r.doc_a % 5 == 4) != (r.doc_b % 5 == 4)
-    }
-    inc = {
-        tuple(r)
-        for r in dedup_jaccard_prefix_incremental(spark, sf_dir).collect()
-    }
-    assert inc == exact
+    cols, rows = duck(sf_dir, _JACCARD_SQL)
+    exact = [r for r in rows if (r[0] % 5 == 4) != (r[1] % 5 == 4)]
+    df = dedup_jaccard_prefix_incremental(spark, sf_dir)
+    inc = canon_rows(df.columns, [tuple(r) for r in df.collect()])
+    assert inc == canon_rows(cols, exact)
 
     # planted corpus: index doc 10 and batch doc 14 share most tokens;
     # doc 14 carries extra tokens seen nowhere in the index corpus
@@ -3694,14 +3680,14 @@ def test_winnowing_guarantee_and_replay(spark, sf_dir):
     assert winnow("tiny") == ([], [])
 
 
-def test_winnow_pairs_replay_and_recall(spark, sf_dir):
+def test_winnow_pairs_replay_and_recall(spark, duck, sf_dir):
     """dedup_winnow_pairs pins: (a) a pure-Python recomputation of
     shared rare-fingerprint counts confirms every emitted pair and its
     overlap score; (b) strong near-duplicates (exact Jaccard >= 0.9)
     are recovered — the local-match guarantee at work."""
     import hashlib
 
-    from _imdb_etl_spark.operators.dedup import dedup_ngram_jaccard
+    from _imdb_etl_spark.operators.dedup import _JACCARD_SQL
     from _imdb_etl_spark.operators.text import (
         _WIN_DF_FLOOR,
         _WIN_DF_PERMILLE,
@@ -3756,11 +3742,7 @@ def test_winnow_pairs_replay_and_recall(spark, sf_dir):
         if len(sets[a] & sets[b] & rare) >= _WIN_MIN_SHARED:
             assert (a, b) in got, (a, b)
     # (b) strong exact near-dups are recovered
-    strong = [
-        (r.doc_a, r.doc_b)
-        for r in dedup_ngram_jaccard(spark, sf_dir).collect()
-        if r.jaccard >= 0.9
-    ]
+    strong = [(a, b) for a, b, j in duck(sf_dir, _JACCARD_SQL)[1] if j >= 0.9]
     assert strong
     hit = sum(1 for p in strong if p in got)
     assert hit / len(strong) >= 0.8, f"winnow recall {hit}/{len(strong)}"
@@ -4009,8 +3991,7 @@ def test_pq_encode_gemm_matches_expression_route(spark, sf_dir):
     their (vec_id, s) -> code_id maps must be identical. (Round 11:
     the expression route is demoted to this library verifier — its
     N x _N_SUB x _N_CODES window stage dominated the PQ family at
-    1000x — so this pin IS its correctness evidence now, the
-    dedup_embedding_ivf precedent.)"""
+    1000x — so this pin IS its correctness evidence now.)"""
     from _imdb_etl_spark.operators.semantic import (
         _pq_encode_expression,
         _pq_encode_gemm,
@@ -4120,53 +4101,35 @@ def test_pq_adc_gemm_matches_join_route(spark, sf_dir):
     assert topk(_pq_adc_topk_gemm(emb)) == topk(_pq_scored_join_route(emb))
 
 
-def test_crossmodal_lsh_pairs_subset_of_exact(spark, sf_dir):
-    """crossmodal_textdup_cosine now composes the registered LSH pair
-    stage (round 11; the exact shared-shingle self-join composition
-    measured 450 s / ~12x-per-decade at 1000x). LSH never invents a
-    pair — its exact-verify keeps only true >= 0.6 Jaccard collisions
-    — so the face's rows must be a subset of the exact-route
-    composition, identical in every shared (jaccard, cosine_sim), and
-    the recall floor mirrors the pair family's own pin."""
-    from _imdb_etl_spark.operators.dedup import dedup_ngram_jaccard
+def test_crossmodal_lsh_pairs_subset_of_exact(spark, duck, sf_dir):
+    """crossmodal_textdup_cosine composes the registered LSH pair stage
+    (the exact shared-shingle self-join composition measured 450 s /
+    ~12x-per-decade at 1000x). LSH never invents a pair — its
+    exact-verify keeps only true >= 0.6 Jaccard collisions — so the
+    face's rows must be a subset of the exact-route composition (the
+    oracle's cross-modal SQL over the all-pairs Jaccard SQL), identical
+    in every shared (jaccard, cosine_sim), and the recall floor mirrors
+    the pair family's own pin."""
+    from _imdb_etl_spark.operators.dedup import _JACCARD_SQL
     from _imdb_etl_spark.operators.similarity import (
-        _dot,
+        _CROSS_SQL_TEMPLATE,
+        _DIM,
+        _DOT_SQL,
         crossmodal_textdup_cosine,
     )
-    from _imdb_etl_spark.sources import load_tables
 
     got = {
-        (r.doc_a, r.doc_b): (r.jaccard, r.cosine_sim)
+        (r.doc_a, r.doc_b): (canon_value(r.jaccard), canon_value(r.cosine_sim))
         for r in crossmodal_textdup_cosine(spark, sf_dir).collect()
     }
-    exact_pairs = dedup_ngram_jaccard(spark, sf_dir)
-    (emb,) = load_tables(spark, sf_dir, "embeddings")
-    normed = emb.select(
-        "vec_id", "embedding", F.sqrt(_dot("embedding", "embedding")).alias("nrm")
-    )
-    a = normed.select(
-        F.col("vec_id").alias("va"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = normed.select(
-        F.col("vec_id").alias("vb"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
+    exact_sql = _CROSS_SQL_TEMPLATE.format(
+        jaccard_sql=_JACCARD_SQL.replace("ORDER BY doc_a, doc_b", ""),
+        norm=_DOT_SQL.format(a="embedding", b="embedding", dim=_DIM),
+        dot=_DOT_SQL.format(a="a.embedding", b="b.embedding", dim=_DIM),
     )
     exact = {
-        (r.doc_a, r.doc_b): (r.jaccard, r.cosine_sim)
-        for r in exact_pairs.join(a, F.col("doc_a") == F.col("va"))
-        .join(b, F.col("doc_b") == F.col("vb"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "jaccard",
-            F.round(
-                _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("cosine_sim"),
-        )
-        .collect()
+        (a, b): (canon_value(j), canon_value(c))
+        for a, b, j, c in duck(sf_dir, exact_sql)[1]
     }
     assert exact, "fixture should contain cross-modal near-dup pairs"
     assert set(got) <= set(exact)

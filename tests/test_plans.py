@@ -378,16 +378,32 @@ def test_funnel_single_user_shuffle(spark, sf_dir):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
-def test_bench_lists_reference_registered_queries():
-    """bench.py silently skips unknown names (fault isolation), so a
-    typo in HEADLINE/SF1_SPOT would shrink the bench instead of
-    failing — pin every listed name to a registry entry."""
-    import bench
+def test_probe_rejects_unknown_query():
+    """A typo in a probe list must fail the run before any session
+    starts or any scaled data is generated, not shrink the probe."""
+    import os
+    import subprocess
+    import sys
 
-    for name in bench.HEADLINE:
-        assert name in REGISTRY, f"HEADLINE lists unregistered {name}"
-    for name in bench.SF1_SPOT:
-        assert name in REGISTRY, f"SF1_SPOT lists unregistered {name}"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    data = os.path.join(root, ".benchdata")
+
+    def snapshot():
+        if not os.path.isdir(data):
+            return None
+        return sorted(
+            (e.name, e.stat().st_mtime_ns) for e in os.scandir(data)
+        )
+
+    before = snapshot()
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "probe_scale.py"),
+         "10", "no_such_query"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode != 0
+    assert "no_such_query" in proc.stderr
+    assert snapshot() == before
 
 
 def test_registry_hygiene_docs_and_gate_rest():
@@ -680,88 +696,3 @@ def test_footer_short_circuit_on_path_with_space(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-
-
-def test_regression_tripwire_normalizes_by_canary():
-    """The bench tripwire must scale its 1.5x threshold by the canary
-    load factor (round-11 verdict task 4): a uniformly inflated run
-    on a box whose fixed-work canary shows the same inflation must
-    NOT flag, the same run with a nominal canary MUST, and the factor
-    clamps at 3x so heavy load can't hide a real regression."""
-    import json
-    import os
-
-    import bench
-
-    r01 = os.path.join(os.path.dirname(bench.__file__), "BENCH_r01.json")
-    base = (
-        json.load(open(r01)).get("parsed") or {}
-    ).get("queries") or {}
-    assert base, "r1 baseline required by the tripwire"
-    nominal = {"jvm_sec": bench._CANARY_NOMINAL_JVM, "gemm_sec": 0.01}
-    # every query 1.8x its r1 time: raw gate (1.5x) flags all of them
-    inflated = {n: 1.8 * t for n, t in base.items()}
-    assert len(bench.regressions(inflated, nominal)) == len(base)
-    # ... but a canary showing the box itself 1.8x loaded absorbs it
-    loaded = {"jvm_sec": 1.8 * bench._CANARY_NOMINAL_JVM}
-    assert bench.regressions(inflated, loaded) == []
-    # the factor clamps: a 10x-loaded canary must not excuse a 6x run
-    storm = {"jvm_sec": 10 * bench._CANARY_NOMINAL_JVM}
-    blown = {n: 6.0 * t for n, t in base.items()}
-    flagged = bench.regressions(blown, storm)
-    assert len(flagged) == len(base)
-    assert all(f["load_factor"] == 3.0 for f in flagged)
-    # missing/garbled canary falls back to the raw gate, never raises
-    assert bench.load_factor(None) == 1.0
-    assert bench.load_factor({"gemm_sec": 0.5}) == 1.0
-
-
-def test_quiet_box_wait_bounded_and_threshold():
-    """The pre-bench quiet-box gate (round-12 verdict task 1) must:
-    proceed immediately on a quiet canary (no sleeping), wait while
-    the canary reads hot and resume once it cools, give up after the
-    bounded budget (never an unbounded stall), honor the kill switch,
-    and swallow probe failures rather than zeroing the bench."""
-    import bench
-
-    nominal = bench._CANARY_NOMINAL_JVM
-    slept: list[float] = []
-
-    def sleeper(s):
-        slept.append(s)
-
-    # quiet box: one probe, zero sleeps, None (the common case)
-    out = bench.wait_for_quiet_box(
-        lambda: {"jvm_sec": nominal}, sleep=sleeper
-    )
-    assert out is None and slept == []
-    # hot then cooling: waits exactly until the probe reads quiet
-    readings = iter([3.0 * nominal, 2.0 * nominal, 1.0 * nominal])
-    out = bench.wait_for_quiet_box(
-        lambda: {"jvm_sec": next(readings)}, sleep=sleeper,
-        step_s=10.0, max_wait_s=100.0,
-    )
-    assert out == {"waited_sec": 20.0, "probes": [3.0, 2.0, 1.0],
-                   "quiet": True}
-    # persistently hot: gives up at the bound and says so
-    out = bench.wait_for_quiet_box(
-        lambda: {"jvm_sec": 5.0 * nominal}, sleep=sleeper,
-        step_s=10.0, max_wait_s=30.0,
-    )
-    assert out is not None and out["quiet"] is False
-    assert out["waited_sec"] == 30.0
-    # kill switch
-    import os
-
-    os.environ["BENCH_QUIET_WAIT"] = "0"
-    try:
-        assert bench.wait_for_quiet_box(
-            lambda: {"jvm_sec": 99.0}, sleep=sleeper
-        ) is None
-    finally:
-        del os.environ["BENCH_QUIET_WAIT"]
-    # probe failure: never raises, proceeds to the bench
-    def boom():
-        raise RuntimeError("no spark")
-
-    assert bench.wait_for_quiet_box(boom, sleep=sleeper) is None

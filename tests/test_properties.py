@@ -148,47 +148,6 @@ def test_scd2_history_invariants(spark, snaps):
             assert match["attr"] == v
 
 
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(data=st.data())
-def test_block_pair_gemm_matches_numpy_all_pairs(spark, data):
-    """dedup_embedding_cosine's block-pair decomposition must equal the
-    naive quadratic loop for any vector set: every unordered pair scored
-    exactly once, thresholded identically."""
-    import numpy as np
-
-    from _imdb_etl_spark.operators import similarity as S
-
-    n = data.draw(st.integers(min_value=2, max_value=24))
-    rng = np.random.default_rng(data.draw(st.integers(0, 2**31)))
-    m = rng.normal(size=(n, S._DIM)).astype(np.float32)
-    ids = list(range(0, 3 * n, 3))  # non-contiguous ids across blocks
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in zip(ids, m)],
-        "vec_id long, embedding array<float>",
-    )
-
-    # expected: numpy all-pairs on float64-normalized rows
-    md = m.astype(np.float64)
-    md /= np.linalg.norm(md, axis=1, keepdims=True)
-    sims = np.round(md @ md.T, 6)
-    expected = {
-        (ids[i], ids[j]): sims[i, j]
-        for i in range(n)
-        for j in range(i + 1, n)
-        if sims[i, j] >= S._COS_THRESH
-    }
-
-    got = {
-        (r["vec_a"], r["vec_b"]): r["cosine_sim"]
-        for r in S.blockpair_cosine_pairs(emb).collect()
-    }
-    assert got == expected
-
-
 _VAL = st.one_of(
     st.none(),
     st.integers(min_value=-(2**62), max_value=2**62),
@@ -834,18 +793,22 @@ def test_weighted_median_machinery_matches_direct(spark, rows):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(data=st.data())
-def test_prefix_filter_lossless_on_random_corpora(spark, tmp_path_factory, data):
+def test_prefix_filter_lossless_on_random_corpora(
+    spark, duck, tmp_path_factory, data
+):
     """Prefix filtering must return EXACTLY the all-pairs Jaccard
-    result on randomly generated corpora with planted near-dups —
-    the hypothesis generalization of the fixed-corpus equality pin."""
+    result (the oracle SQL, run by DuckDB on the same parquet) on
+    randomly generated corpora with planted near-dups — the hypothesis
+    generalization of the fixed-corpus equality pin."""
     import random
 
     import _imdb_etl_spark.plans  # noqa: F401  (ordered operator imports)
     from _imdb_etl_spark.operators.dedup import (
+        _JACCARD_SQL,
         dedup_jaccard_prefix,
         dedup_jaccard_prefix_incremental,
-        dedup_ngram_jaccard,
     )
+    from _imdb_etl_spark.testing import canon_rows
 
     seed = data.draw(st.integers(0, 2**32 - 1))
     rng = random.Random(seed)
@@ -865,21 +828,21 @@ def test_prefix_filter_lossless_on_random_corpora(spark, tmp_path_factory, data)
         1
     ).write.parquet(f"{d}/documents.parquet")
 
-    exact = {tuple(r) for r in dedup_ngram_jaccard(spark, d).collect()}
-    pref = {tuple(r) for r in dedup_jaccard_prefix(spark, d).collect()}
-    assert pref == exact, (seed, len(pref), len(exact))
+    cols, exact = duck(d, _JACCARD_SQL)
+
+    def canon(df):
+        return canon_rows(df.columns, [tuple(r) for r in df.collect()])
+
+    pref = canon(dedup_jaccard_prefix(spark, d))
+    assert pref == canon_rows(cols, exact), (seed, len(pref[0]), len(exact))
 
     # the incremental face must equal exact's cross-boundary slice on
     # the same random corpus (planted mutants land on both sides of
     # the %5 split, and mutated trigram contexts produce shingles the
     # index dictionary has never seen — the asymmetric-dictionary path)
-    inc = {
-        tuple(r) for r in dedup_jaccard_prefix_incremental(spark, d).collect()
-    }
-    want = {
-        (a, b, j) for (a, b, j) in exact if (a % 5 == 4) != (b % 5 == 4)
-    }
-    assert inc == want, (seed, len(inc), len(want))
+    inc = canon(dedup_jaccard_prefix_incremental(spark, d))
+    want = [r for r in exact if (r[0] % 5 == 4) != (r[1] % 5 == 4)]
+    assert inc == canon_rows(cols, want), (seed, len(inc[0]), len(want))
 
 
 # --- round-6 continuation ops under random inputs -------------------------

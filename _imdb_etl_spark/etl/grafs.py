@@ -2,8 +2,8 @@
 faithful to /root/reference/dashboard_visualizations.sql, as idiomatic
 DataFrame builders.
 
-Inputs are the post-ETL tables from ``run_pipeline`` (dims/fact plus the
-staging tables Graf 4/5 still read — reference quirk 3). Each builder
+Inputs are the tables ``star.materialize_pipeline`` returns (dims/fact
+plus the staging tables Graf 4/5 still read — reference quirk 3). Each builder
 appends a deterministic tiebreaker to the reference's ORDER BY (quirk 5:
 the reference's own top-k is nondeterministic under ties) so outputs are
 reproducible and oracle-hashable; tests mirror the same tiebreakers in

@@ -1,5 +1,7 @@
-"""The reference's star-schema ETL, rebuilt as pure DataFrame -> DataFrame
-transforms (reference: /root/reference/etl_imdb_db.sql).
+"""The reference's star-schema ETL (etl_imdb_db.sql), one path:
+``materialize_pipeline`` loads the six staging CSVs into in-memory
+staging tables (COPY INTO) and writes the dims and the fact as catalog
+tables (CTAS) built by the DataFrame -> DataFrame transforms below.
 
 Reference quirks deliberately preserved (SURVEY.md §2.10):
 
@@ -10,11 +12,10 @@ Reference quirks deliberately preserved (SURVEY.md §2.10):
    etl_imdb_db.sql:112-113) producing a fan-out only partially collapsed
    by DISTINCT.
 3. Graf 4/5 read staging tables the ETL later drops
-   (etl_imdb_db.sql:153-158); ``materialize_pipeline`` therefore writes
-   dims/fact and *keeps* the staging tables — each CSV parsed once into
-   memory — until ``drop_staging`` frees them explicitly; statement
-   order is the reference's only dependency mechanism and we encode it
-   as an explicit phase.
+   (etl_imdb_db.sql:153-158), so the staging tables outlive the CTAS
+   until ``drop_staging`` frees them explicitly; statement order is the
+   reference's only dependency mechanism and we encode it as an
+   explicit phase.
 
 Scale posture: every transform is declarative (select/join/distinct), so
 Catalyst plans broadcast joins for the dim-sized sides and two-phase
@@ -32,20 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.schemas import STAGING_LOADS
-from _imdb_etl_spark.sources.csv_source import cache_staging_csv, read_staging_csv
+from _imdb_etl_spark.sources.csv_source import read_staging_csv
 
 STAR_TABLES = ("dim_movies", "dim_genres", "dim_people", "fact_movies")
-
-
-def load_staging(spark: SparkSession, stage_dir: str) -> dict[str, DataFrame]:
-    """COPY INTO equivalents (etl_imdb_db.sql:59-82): one typed CSV scan
-    per staging table from the stage directory."""
-    out: dict[str, DataFrame] = {}
-    for table_name, (file_name, schema, drop_malformed) in STAGING_LOADS.items():
-        out[table_name] = read_staging_csv(
-            spark, os.path.join(stage_dir, file_name), schema, drop_malformed
-        )
-    return out
 
 
 def build_dim_movies(movies_staging: DataFrame) -> DataFrame:
@@ -134,43 +124,6 @@ def build_fact_movies(
     )
 
 
-def run_pipeline(spark: SparkSession, stage_dir: str) -> dict[str, DataFrame]:
-    """Topological order per etl_imdb_db.sql: staging -> {dim_movies,
-    dim_genres, dim_people} -> fact_movies. Returns all tables, staging
-    included (quirk 3: dashboard queries need staging until cleanup).
-
-    Everything returned is LAZY — views over the stage CSVs, recomputed
-    per query, valid only while the stage files exist. For the
-    reference's physical CTAS semantics (tables that survive stage
-    cleanup and are scanned, not re-derived), use
-    ``materialize_pipeline``."""
-    staging = load_staging(spark, stage_dir)
-    dim_movies = build_dim_movies(staging["movies_staging"])
-    dim_genres = build_dim_genres(staging["genres_staging"])
-    dim_people = build_dim_people(
-        staging["name_staging"],
-        staging["role_mapping_staging"],
-        staging["director_mapping_staging"],
-    )
-    fact_movies = build_fact_movies(
-        staging["movies_staging"],
-        staging["ratings_staging"],
-        staging["genres_staging"],
-        dim_genres,
-        dim_people,
-    )
-    tables = dict(staging)
-    tables.update(
-        dim_movies=dim_movies,
-        dim_genres=dim_genres,
-        dim_people=dim_people,
-        fact_movies=fact_movies,
-    )
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables
-
-
 def _concurrently(spark: SparkSession, steps: dict) -> dict:
     """Run independent zero-argument steps on one thread each and return
     their results by name. Each step is wrapped before it is submitted,
@@ -188,7 +141,7 @@ def _concurrently(spark: SparkSession, steps: dict) -> dict:
 def _load_staging_table(
     spark: SparkSession, name: str, path: str, schema, drop_malformed: bool
 ) -> DataFrame:
-    df = cache_staging_csv(spark, path, schema, drop_malformed)
+    df = read_staging_csv(spark, path, schema, drop_malformed)
     df.createOrReplaceTempView(name)
     return df
 
@@ -232,10 +185,6 @@ def materialize_pipeline(spark: SparkSession, stage_dir: str) -> dict[str, DataF
                 for name, (file_name, schema, drop_malformed) in STAGING_LOADS.items()
             },
         )
-        # temp views shadow catalog tables: drop any lazy star views so
-        # each name resolves to the table written below
-        for name in STAR_TABLES:
-            spark.catalog.dropTempView(name)
         dims = {
             "dim_movies": build_dim_movies(staging["movies_staging"]),
             "dim_genres": build_dim_genres(staging["genres_staging"]),

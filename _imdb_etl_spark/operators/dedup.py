@@ -864,21 +864,6 @@ ORDER BY doc_id
 """
 
 
-def _cc_stage(df: DataFrame, path: str) -> DataFrame:
-    """Materialize a CC frontier to parquet and read it back — the
-    repo's persisted-staging pattern (cf. _winnow_rare_postings) in
-    place of localCheckpoint. localCheckpoint pins every round's
-    label table in executor-heap block storage with no public release
-    API, and those pinned blocks outlive the query: measured at 1000x,
-    dedup_jaccard_lsh ran 365 s when probed AFTER dedup_clusters'
-    CC loop vs 171 s in a fresh session — the leaked rounds halved
-    the heap available to everyone downstream. Parquet staging costs
-    one tiny columnar write per round (2 long columns) and leaves the
-    heap clean; each invocation stages under its own `scratch_run`
-    leaf, so a round's directory is never overwritten mid-plan."""
-    return write_read_back(df, path)
-
-
 def connected_components(
     edges: DataFrame, max_rounds: int = 32, probe_every: int = 2
 ) -> tuple[DataFrame, int]:
@@ -899,18 +884,25 @@ def connected_components(
       components on chains longer than the cap).
 
     Each round is two shuffles keyed on node id and ends in a parquet
-    frontier stage (_cc_stage): persist() alone would cache the data
-    but the logical plan would still deepen every round (analysis cost
-    grows with iteration count — the classic iterative-algorithm
-    trap), and localCheckpoint (the previous mechanism) pinned every
-    round's labels in executor heap with no release, degrading every
-    query that ran after a CC face in the same session. The scalar
-    convergence probe runs every ``probe_every`` rounds to halve
-    driver-side actions.
+    frontier stage (``write_read_back``, the repo's persisted-staging
+    pattern): persist() alone would cache the data but the logical plan
+    would still deepen every round (analysis cost grows with iteration
+    count — the classic iterative-algorithm trap), and localCheckpoint
+    (the previous mechanism) pinned every round's labels in executor
+    heap with no public release API, degrading every query that ran
+    after a CC face in the same session: measured at 1000x,
+    dedup_jaccard_lsh ran 365 s after dedup_clusters' CC loop vs 171 s
+    in a fresh session. A parquet stage costs one tiny columnar write
+    per round (2 long columns) and leaves the heap clean; each
+    invocation stages under its own ``scratch_run`` leaf, so a round's
+    directory is never overwritten mid-plan. The other graph faces
+    (pagerank, k-core, semantic clusters) stage their pair and frontier
+    tables the same way. The scalar convergence probe runs every
+    ``probe_every`` rounds to halve driver-side actions.
     """
     run_dir = scratch_run("cc")
     # init: every node labels itself with the smallest neighbor (or self)
-    labels = _cc_stage(
+    labels = write_read_back(
         edges.groupBy("a")
         .agg(F.least(F.col("a"), F.min("b")).alias("lbl"))
         .select(F.col("a").alias("doc_id"), F.col("lbl").alias("cluster_id")),
@@ -933,7 +925,7 @@ def connected_components(
         parent = prop.select(
             F.col("doc_id").alias("p_id"), F.col("cluster_id").alias("p_lbl")
         )
-        new_labels = _cc_stage(
+        new_labels = write_read_back(
             prop.join(parent, prop["cluster_id"] == parent["p_id"], "left")
             .select(
                 "doc_id",
@@ -1161,20 +1153,20 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange (the exact-verify join ran twice — measured 93.8 s vs
     # 46.3 s for one pair pass at 100x), while a staged pair set is
     # read back twice for free
-    pairs = _cc_stage(
+    pairs = write_read_back(
         _prefix_pairs(_prefix_doc_sets(docs)).select("doc_a", "doc_b"),
         f"{run_dir}/pairs",
     )
     edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionByName(
         pairs.selectExpr("doc_b AS src", "doc_a AS dst")
     )
-    # edges also parquet-staged (_cc_stage) so nothing stays pinned in
-    # executor heap after the query
-    edges = _cc_stage(edges, f"{run_dir}/edges")
+    # edges also parquet-staged (see connected_components) so nothing
+    # stays pinned in executor heap after the query
+    edges = write_read_back(edges, f"{run_dir}/edges")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     # fold degree into the edge table once — otherwise every round's
     # lazy plan re-aggregates edges and does a second join
-    wedges = _cc_stage(edges.join(deg, "src"), f"{run_dir}/wedges")
+    wedges = write_read_back(edges.join(deg, "src"), f"{run_dir}/wedges")
     nodes = edges.select(F.col("src").alias("node")).distinct()
     n = nodes.count()
     if n == 0:
@@ -1196,7 +1188,7 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rank")
         )
         if (i + 1) % 5 == 0:
-            ranks = _cc_stage(ranks, f"{run_dir}/ranks_r{i}")
+            ranks = write_read_back(ranks, f"{run_dir}/ranks_r{i}")
     w = Window.orderBy(F.desc("rank"), F.asc("node"))
     # global window over the top-k only would still need the sort; the
     # orderBy+limit collapses to TakeOrderedAndProject and the final
@@ -2416,7 +2408,7 @@ ORDER BY doc_id
 )
 def neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_dir = scratch_run("kcore")
-    pairs = _cc_stage(
+    pairs = write_read_back(
         dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b"),
         f"{run_dir}/pairs",
     )
@@ -2433,7 +2425,7 @@ def neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             edges["b"] == F.col("nb"),
             "left_semi",
         )
-        alive = _cc_stage(  # bounded (<= node count); cuts lineage
+        alive = write_read_back(  # bounded (<= node count); cuts lineage
             live_edges.groupBy("a")
             .agg(F.count(F.lit(1)).alias("d"))
             .where(F.col("d") >= _KCORE_K)

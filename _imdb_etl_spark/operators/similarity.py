@@ -33,6 +33,7 @@ from _imdb_etl_spark.sources import (
     spread,
     stage_sorted,
     stage_to_parquet,
+    write_read_back,
 )
 
 _N_QUERIES = 8  # vec_id < 8 are the query vectors
@@ -1011,13 +1012,11 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codegen dot measured 115 s vs ~4 s BLAS at 10x scale — and the
     # clusters consume only the pair ids, so the scoring route is free
     # to be the fast one
-    from _imdb_etl_spark.operators.dedup import _cc_stage
-
     pairs = dedup_embedding_cosine_ivf(spark, sf_dir).select("vec_a", "vec_b")
     # pair stage (IVF probe + verify) runs once; parquet-staged (the
     # CC-frontier pattern) so the CC rounds below re-read a columnar
     # file instead of holding the edge table pinned in executor heap
-    edges = _cc_stage(
+    edges = write_read_back(
         pairs.select(F.col("vec_a").alias("a"), F.col("vec_b").alias("b"))
         .unionByName(
             pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"))

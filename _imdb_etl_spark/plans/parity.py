@@ -6,8 +6,11 @@ its richest dashboard query (Graf 4, dashboard_visualizations.sql:45-70)
 on the reference repo's OWN CSV data — promoted from pytest
 (tests/test_reference_data.py) into the driver's CORRECTNESS gate.
 
-Spark side: the IMDB-faithful pipeline from _imdb_etl_spark/etl (lazy
-views over the stage CSVs; quirks 1-6 preserved). Oracle side: one
+Spark side: the IMDB-faithful pipeline from _imdb_etl_spark/etl
+(``materialize_pipeline``: in-memory staging tables and CTAS catalog
+tables; quirks 1-6 preserved). The face collects its rows and then drops
+the staging and the star tables it wrote, so it leaves no catalog
+table or cached staging behind in the caller's session. Oracle side: one
 self-contained DuckDB statement that read_csv's the same files with the
 reference's COPY semantics (header, literal-NULL null string, quote "",
 ON_ERROR=CONTINUE on names.csv) and replays the reference SQL as CTEs.
@@ -160,15 +163,22 @@ def imdb_reference_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from _imdb_etl_spark.etl import grafs as g
-    from _imdb_etl_spark.etl.star import run_pipeline
+    from _imdb_etl_spark.etl.star import STAR_TABLES, drop_staging, materialize_pipeline
+    from _imdb_etl_spark.sources.sinks import drop_table
 
-    tables = run_pipeline(spark, REF_DATA)
-    out = g.graf4_top3_directors_top3_genres(
-        tables["fact_movies"],
-        tables["dim_people"],
-        tables["dim_genres"],
-        tables["ratings_staging"],
-    )
-    return out.select(
-        "director_name", F.col("movie_count").cast("long").alias("movie_count")
-    ).orderBy("director_name", "movie_count")
+    try:
+        tables = materialize_pipeline(spark, REF_DATA)
+        out = g.graf4_top3_directors_top3_genres(
+            tables["fact_movies"],
+            tables["dim_people"],
+            tables["dim_genres"],
+            tables["ratings_staging"],
+        ).select(
+            "director_name", F.col("movie_count").cast("long").alias("movie_count")
+        ).orderBy("director_name", "movie_count")
+        rows = out.collect()
+    finally:
+        drop_staging(spark)
+        for name in STAR_TABLES:
+            drop_table(spark, name)
+    return spark.createDataFrame(rows, out.schema)

@@ -56,12 +56,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable parity configs to an externally-owned session
-    (the driver hands us its own SparkSession; timezone and AQE are
-    runtime-mutable, master/memory are not)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark

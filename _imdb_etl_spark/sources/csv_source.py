@@ -5,35 +5,30 @@ Reference behavior being reproduced (cites into /root/reference):
   SKIP_HEADER=1)` x6 (etl_imdb_db.sql:59-82): header skipped, quoted
   fields, values loaded into explicitly typed staging columns. The
   Snowflake default on type errors is ON_ERROR='ABORT_STATEMENT' — a
-  bad value fails the load loudly — and that is this reader's default
-  (`on_error="abort"`).
+  bad value fails the load loudly — and that is this reader's default.
 - The CSVs encode missing values as the literal 4-char string ``NULL``
   (e.g. imdb_db/movie.csv:2); typed columns null them on parse.
   Spark equivalent: ``nullValue='NULL'``.
 - `ON_ERROR = 'CONTINUE'` on the names load only (etl_imdb_db.sql:82):
-  rows with type errors are skipped, not fatal (`on_error="continue"`).
+  rows with type errors are skipped, not fatal (`drop_malformed=True`).
 
 Implementation note: Spark's own malformed-row modes are unsuitable
 here — ``DROPMALFORMED`` drops rows depending on which columns a given
 query parses (projection pruning). So typing is done explicitly: read
 every field as string, validate with ``try_cast`` (null raw value is
 fine; non-null raw value that fails its cast marks the row), then
-either abort, filter the marked rows, or keep them nulled. Structural
-malformation (wrong field count) cannot be seen through the all-string
-schema — the PERMISSIVE parse silently null-pads short rows and
-truncates long ones — so the read also requests
-``columnNameOfCorruptRecord`` and treats a populated corrupt column as
-a bad row. Spark refuses scans whose
-pruned schema is only the corrupt column, and Catalyst's constraint
-propagation elides naive extra references, so the predicate carries a
-non-foldable probe over the data columns to keep them in the scan.
+either abort or filter the marked rows. Structural malformation (wrong
+field count) cannot be seen through the all-string schema — the
+PERMISSIVE parse silently null-pads short rows and truncates long ones —
+so the read also requests ``columnNameOfCorruptRecord`` and treats a
+populated corrupt column as a bad row. Spark refuses scans whose pruned
+schema is only the corrupt column, and Catalyst's constraint propagation
+elides naive extra references, so the predicate carries a non-foldable
+probe over the data columns to keep them in the scan.
 
-Two loaders share that raw read and predicate. ``read_staging_csv``
-returns a lazy view: abort costs one counting pass at load time, and
-every later action parses the file again. ``cache_staging_csv`` is the
-physical staging table of the reference's COPY INTO: one job parses
-the file, caches the typed rows and, under abort, counts the bad rows
-through an ``Observation`` on that same scan.
+``read_staging_csv`` is the physical staging table of the reference's
+COPY INTO: one job parses the file, caches the typed rows and, under
+abort, counts the bad rows through an ``Observation`` on that same scan.
 """
 
 from __future__ import annotations
@@ -47,7 +42,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 
 class MalformedRowsError(ValueError):
-    """Raised by on_error='abort' when typed parsing fails for any row."""
+    """Raised by an aborting load when typed parsing fails for any row."""
 
 
 def _bad_row_predicate(schema: StructType) -> Column | None:
@@ -91,72 +86,35 @@ def _raw_read(
     return raw, structural if typed is None else structural | typed
 
 
-def _malformed(raw: DataFrame, bad: Column, n_bad: int, path: str) -> MalformedRowsError:
-    sample = [r.asDict() for r in raw.where(bad).head(3)]
-    return MalformedRowsError(
-        f"{n_bad} row(s) in {path} fail typed or structural "
-        f"parsing (on_error='abort'); sample: {sample}"
-    )
-
-
-def _typed(rows: DataFrame, schema: StructType) -> DataFrame:
-    return rows.select(
-        *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
-
-
 def read_staging_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    drop_malformed: bool = False,
-    on_error: str | None = None,
-) -> DataFrame:
-    """Read a staging CSV with COPY INTO semantics, as a lazy view that
-    re-parses the file on every action.
-
-    on_error: 'abort' (default; type errors fail the load, like
-    Snowflake's ABORT_STATEMENT), 'continue' (skip bad rows, like
-    ON_ERROR='CONTINUE'), or 'permissive' (keep rows, null bad fields).
-    ``drop_malformed=True`` is shorthand for 'continue'.
-    """
-    if on_error is None:
-        on_error = "continue" if drop_malformed else "abort"
-    if on_error not in ("abort", "continue", "permissive"):
-        raise ValueError(f"on_error must be abort|continue|permissive: {on_error}")
-
-    raw, bad = _raw_read(spark, path, schema)
-    if on_error == "abort":
-        n_bad = raw.where(bad).count()
-        if n_bad:
-            raise _malformed(raw, bad, n_bad, path)
-    elif on_error == "continue":
-        raw = raw.where(~bad)
-    return _typed(raw, schema)
-
-
-def cache_staging_csv(
     spark: SparkSession, path: str, schema: StructType, drop_malformed: bool = False
 ) -> DataFrame:
-    """COPY INTO a physical staging table, under 'abort' or, with
-    ``drop_malformed=True``, 'continue' (see ``read_staging_csv``). One
-    job parses the CSV and caches the typed rows in memory; under
-    'abort' an ``Observation`` on that same scan counts the bad rows.
-    Later queries read the cached rows, not the file. The caller frees
-    them with ``unpersist()`` or by dropping a temp view made from the
-    frame; on failure they are freed here."""
+    """COPY INTO a physical staging table. By default a bad row fails
+    the load (ABORT_STATEMENT); ``drop_malformed=True`` skips bad rows
+    instead (ON_ERROR='CONTINUE'). One job parses the CSV and caches
+    the typed rows in memory; when aborting, an ``Observation`` on that
+    same scan counts the bad rows. Later queries read the cached rows,
+    not the file. The caller frees them with ``unpersist()`` or by
+    dropping a temp view made from the frame; on failure they are freed
+    here."""
     raw, bad = _raw_read(spark, path, schema)
     seen = Observation()
     if drop_malformed:
         rows = raw.where(~bad)
     else:
         rows = raw.observe(seen, F.count_if(bad).alias("n_bad"))
-    staged = _typed(rows, schema).cache()
+    staged = rows.select(
+        *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in schema.fields]
+    ).cache()
     try:
         staged.write.format("noop").mode("overwrite").save()
         n_bad = 0 if drop_malformed else seen.get["n_bad"]
         if n_bad:
-            raise _malformed(raw, bad, n_bad, path)
+            sample = [r.asDict() for r in raw.where(bad).head(3)]
+            raise MalformedRowsError(
+                f"{n_bad} row(s) in {path} fail typed or structural "
+                f"parsing (ABORT_STATEMENT); sample: {sample}"
+            )
     except BaseException:
         staged.unpersist()
         raise

@@ -8,9 +8,15 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from _imdb_etl_spark.etl.star import (  # noqa: E402
+    STAR_TABLES,
+    drop_staging,
+    materialize_pipeline,
+)
 from _imdb_etl_spark.session import get_spark  # noqa: E402
 from _imdb_etl_spark.sources.catalog import DRIVER_TABLES  # noqa: E402
-from tests import fixtures  # noqa: E402
+from _imdb_etl_spark.sources.sinks import drop_table  # noqa: E402
+from tests import fixtures, oracle_imdb  # noqa: E402
 
 
 @pytest.fixture(scope="session")
@@ -26,6 +32,28 @@ def imdb_stage(tmp_path_factory) -> str:
     d = tmp_path_factory.mktemp("imdb_stage")
     fixtures.generate(str(d), n=200, seed=42)
     return str(d)
+
+
+@pytest.fixture(scope="module")
+def tables(spark, imdb_stage):
+    """The star ETL over ``imdb_stage``, as perfbench's ``imdb_etl``
+    runs it: six cached staging tables plus the four star tables written
+    to the catalog. Staging and star tables are dropped when the module
+    ends. A test that rewrites or drops them belongs in a module that
+    does not use this fixture (test_etl_materialize.py)."""
+    yield materialize_pipeline(spark, imdb_stage)
+    drop_staging(spark)
+    for name in STAR_TABLES:
+        drop_table(spark, name)
+
+
+@pytest.fixture(scope="module")
+def oracle(imdb_stage):
+    """DuckDB holding ``imdb_stage``'s staging and star tables, built by
+    the reference SQL."""
+    con = oracle_imdb.build(imdb_stage)
+    yield con
+    con.close()
 
 
 @pytest.fixture(scope="session")

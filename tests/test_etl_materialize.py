@@ -1,0 +1,203 @@
+"""Tests that run the star ETL themselves: each one writes, rewrites or
+drops the star tables and the cached staging, so none of them uses the
+shared ``tables`` fixture, whose frames read those same tables. The
+persisted-RDD counts here are exact because no other staging is live.
+"""
+
+from __future__ import annotations
+
+import ast
+import collections
+import importlib
+import os
+import sys
+
+import duckdb
+import pytest
+
+from _imdb_etl_spark.etl.star import STAR_TABLES, drop_staging, materialize_pipeline
+from _imdb_etl_spark.schemas import STAGING_LOADS
+from _imdb_etl_spark.sources.sinks import drop_table
+from _imdb_etl_spark.testing import canon_rows
+from tests import fixtures
+from tests.test_etl_star import assert_matches
+
+_PERFBENCH_RUN = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "run.py"
+)
+
+
+def _drop_etl_tables(spark):
+    drop_staging(spark)
+    for name in STAR_TABLES:
+        drop_table(spark, name)
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_materialize_survives_stage_deletion(spark, tmp_path):
+    """CTAS semantics (S7): materialized dims outlive the stage files,
+    exactly like the reference's physical tables outlive DROP-ped
+    staging."""
+    import shutil
+
+    stage = str(tmp_path / "stage")
+    fixtures.generate(stage, n=50, seed=3)
+    try:
+        t = materialize_pipeline(spark, stage)
+        n_dims = t["dim_movies"].count()
+        drop_staging(spark)
+        shutil.rmtree(stage)
+        assert spark.table("fact_movies").count() > 0
+        assert spark.table("dim_movies").count() == n_dims == 50
+    finally:
+        _drop_etl_tables(spark)
+
+
+def test_materialize_abort_writes_nothing(spark, tmp_path):
+    """COPY INTO's ABORT_STATEMENT: one bad ratings value fails the
+    load before any star table is written, and the staging loads that
+    did succeed are freed again."""
+    from _imdb_etl_spark.sources.csv_source import MalformedRowsError
+
+    stage = tmp_path / "stage"
+    fixtures.generate(str(stage), n=50, seed=5)
+    ratings = stage / "ratings.csv"
+    header, first, *rest = ratings.read_text().splitlines()
+    cols = first.split(",")
+    cols[1] = "high"  # avg_rating is DECIMAL(3,1)
+    ratings.write_text("\n".join([header, ",".join(cols), *rest]) + "\n")
+
+    _drop_etl_tables(spark)
+    before = _persistent_rdds(spark)
+    with pytest.raises(MalformedRowsError, match="ratings.csv"):
+        materialize_pipeline(spark, str(stage))
+    for name in (*STAR_TABLES, *STAGING_LOADS):
+        assert not spark.catalog.tableExists(name), name
+    assert _persistent_rdds(spark) == before
+
+
+def test_materialize_cycles_free_staging(spark, imdb_stage, oracle):
+    """Staging lives in memory from materialize_pipeline to
+    drop_staging and no longer: repeated cycles in one session leave
+    the persisted-RDD count where it started. The tables each cycle
+    returns equal the oracle's."""
+    start = _persistent_rdds(spark)
+    try:
+        for _ in range(3):
+            t = materialize_pipeline(spark, imdb_stage)
+            assert _persistent_rdds(spark) == start + len(STAGING_LOADS)
+            for name in (*STAR_TABLES, *STAGING_LOADS):
+                assert_matches(t[name], oracle.sql(f"SELECT * FROM {name}"), name)
+            drop_staging(spark)
+            assert _persistent_rdds(spark) == start
+    finally:
+        _drop_etl_tables(spark)
+
+
+def test_materialize_jobs_carry_caller_job_group(spark, tmp_path):
+    """The concurrent loads and CTAS run on worker threads; every job
+    they launch must still belong to the caller's job group."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([0], 1).count()
+        deadline = time.monotonic() + 30
+        while not (ids := tracker.getJobIdsForGroup(group)):
+            assert time.monotonic() < deadline, f"job of {group} never reported"
+            time.sleep(0.05)
+        return ids[0]
+
+    stage = str(tmp_path / "stage")
+    fixtures.generate(stage, n=50, seed=6)
+    try:
+        first = marker_job("etl-before")
+        sc.setJobGroup("etl-caller", "materialize under a caller's group")
+        materialize_pipeline(spark, stage)
+        last = marker_job("etl-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        _drop_etl_tables(spark)
+    launched = set(range(first + 1, last))
+    assert launched
+    assert launched == set(tracker.getJobIdsForGroup("etl-caller"))
+
+
+def _traced_names() -> list[tuple[str, str]]:
+    """The (module, attr) pairs perfbench's tracer wraps, read from the
+    ``tracer.wrap(...)`` calls in perfbench/run.py."""
+    with open(_PERFBENCH_RUN, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    return [
+        (node.args[0].value, node.args[1].value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "wrap"
+    ]
+
+
+def test_traced_names_are_on_the_etl_path(spark, tmp_path, monkeypatch):
+    """Every name perfbench traces still resolves, and the loader and
+    CTAS it traces are the ones the benchmarked star ETL calls: one
+    load per staging table, one CTAS per star table. Each name is
+    counted wherever the program binds it, as the tracer wraps it."""
+    pairs = _traced_names()
+    assert ("_imdb_etl_spark.sources.catalog", "table") in pairs
+    calls: collections.Counter = collections.Counter()
+    for module, attr in pairs:
+        orig = getattr(importlib.import_module(module), attr)
+
+        def counted(*args, _orig=orig, _attr=attr, **kwargs):
+            calls[_attr] += 1
+            return _orig(*args, **kwargs)
+
+        for mod in list(sys.modules.values()):
+            if mod is None or not mod.__name__.startswith("_imdb_etl_spark"):
+                continue
+            for name, value in list(vars(mod).items()):
+                if value is orig:
+                    monkeypatch.setattr(mod, name, counted)
+
+    stage = str(tmp_path / "stage")
+    fixtures.generate(stage, n=50, seed=7)
+    try:
+        materialize_pipeline(spark, stage)
+    finally:
+        _drop_etl_tables(spark)
+    assert calls["read_staging_csv"] == len(STAGING_LOADS) == 6
+    assert calls["save_as_table"] == len(STAR_TABLES) == 4
+
+
+def test_reference_parity_face_matches_duckdb(spark, imdb_stage, monkeypatch):
+    """The registered ``imdb_reference_parity`` face, pointed at a
+    fixture stage, equals its own oracle SQL run by DuckDB over the same
+    CSVs, and leaves no star table, staging view or cached staging
+    behind in the session."""
+    from _imdb_etl_spark.plans import REGISTRY, parity
+
+    sql = parity._PARITY_SQL.replace(parity.REF_DATA, imdb_stage)
+    monkeypatch.setattr(parity, "REF_DATA", imdb_stage)
+    _drop_etl_tables(spark)
+    before = _persistent_rdds(spark)
+
+    df = REGISTRY["imdb_reference_parity"].spark(spark, "")
+    rows = [tuple(r) for r in df.collect()]
+    con = duckdb.connect()
+    try:
+        rel = con.sql(sql)
+        want = canon_rows(rel.columns, rel.fetchall())
+    finally:
+        con.close()
+    assert rows  # guard against a vacuous parity pass
+    assert canon_rows(df.columns, rows)[1] == want[1]
+    for name in (*STAR_TABLES, *STAGING_LOADS):
+        assert not spark.catalog.tableExists(name), name
+    assert _persistent_rdds(spark) == before

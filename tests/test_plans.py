@@ -12,7 +12,6 @@ import re
 import pytest
 
 from _imdb_etl_spark.etl import grafs as g
-from _imdb_etl_spark.etl.star import run_pipeline
 from _imdb_etl_spark.plans import REGISTRY
 from _imdb_etl_spark.testing import canon_rows
 
@@ -159,14 +158,9 @@ def test_join_hints_control_strategy(spark, sf_dir):
     assert "BroadcastHashJoin" in _plan(bhj)
 
 
-@pytest.fixture(scope="module")
-def tables(spark, imdb_stage):
-    return run_pipeline(spark, imdb_stage)
-
-
 def test_reference_sql_text_equals_dataframe_builders(spark, tables):
     """Run the reference's own dashboard SQL (tiebreakers added) through
-    spark.sql over the materialized views and compare with the
+    spark.sql over the materialized tables and compare with the
     DataFrame-built Grafs — both front-ends, one semantics."""
     cases = {
         "graf1": (

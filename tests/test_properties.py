@@ -55,10 +55,12 @@ def test_csv_dialect_parity_with_duckdb(spark, tmp_path_factory, rows):
     schema = StructType(
         [StructField("a", IntegerType()), StructField("b", StringType())]
     )
-    got = sorted(
-        ((r.a, r.b) for r in read_staging_csv(spark, path, schema).collect()),
-        key=repr,
-    )
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    df = read_staging_csv(spark, path, schema)
+    got = sorted(((r.a, r.b) for r in df.collect()), key=repr)
+    df.unpersist()
+    assert persistent().size() == before
     con = duckdb.connect()
     want = sorted(
         con.sql(

@@ -10,11 +10,9 @@ import os
 import pytest
 
 from _imdb_etl_spark.etl import grafs as g
-from _imdb_etl_spark.etl.star import run_pipeline
+from _imdb_etl_spark.plans.parity import REF_DATA
 from tests import oracle_imdb
 from tests.test_etl_star import assert_matches
-
-REF_DATA = "/root/reference/imdb_db"
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(REF_DATA), reason="reference data not present"
@@ -22,48 +20,43 @@ pytestmark = pytest.mark.skipif(
 
 
 @pytest.fixture(scope="module")
-def ref_tables(spark):
-    return run_pipeline(spark, REF_DATA)
-
-
-@pytest.fixture(scope="module")
-def ref_oracle():
-    con = oracle_imdb.build(REF_DATA)
-    yield con
-    con.close()
+def imdb_stage():
+    """The reference's own CSVs stand in for the fixture stage, so the
+    shared ``tables`` and ``oracle`` fixtures run over them."""
+    return REF_DATA
 
 
 @pytest.mark.parametrize(
     "name",
     ["dim_movies", "dim_genres", "dim_people", "fact_movies"],
 )
-def test_reference_etl_tables(ref_tables, ref_oracle, name):
-    assert_matches(ref_tables[name], ref_oracle.sql(f"SELECT * FROM {name}"), name)
+def test_reference_etl_tables(tables, oracle, name):
+    assert_matches(tables[name], oracle.sql(f"SELECT * FROM {name}"), name)
 
 
-def test_reference_grafs(ref_tables, ref_oracle):
+def test_reference_grafs(tables, oracle):
     outs = {
-        "graf1": g.graf1_usa_india_2019(ref_tables["dim_movies"]),
+        "graf1": g.graf1_usa_india_2019(tables["dim_movies"]),
         "graf2": g.graf2_avg_duration_by_genre(
-            ref_tables["dim_genres"], ref_tables["fact_movies"]
+            tables["dim_genres"], tables["fact_movies"]
         ),
         "graf3": g.graf3_top10_directors(
-            ref_tables["fact_movies"], ref_tables["dim_people"]
+            tables["fact_movies"], tables["dim_people"]
         ),
         "graf4": g.graf4_top3_directors_top3_genres(
-            ref_tables["fact_movies"],
-            ref_tables["dim_people"],
-            ref_tables["dim_genres"],
-            ref_tables["ratings_staging"],
+            tables["fact_movies"],
+            tables["dim_people"],
+            tables["dim_genres"],
+            tables["ratings_staging"],
         ),
         "graf5": g.graf5_top10_actors_by_roles(
-            ref_tables["role_mapping_staging"], ref_tables["dim_people"]
+            tables["role_mapping_staging"], tables["dim_people"]
         ),
-        "graf6": g.graf6_movies_by_country(ref_tables["dim_movies"]),
+        "graf6": g.graf6_movies_by_country(tables["dim_movies"]),
     }
     nonempty = 0
     for name, df in outs.items():
         rows = df.count()
         nonempty += rows > 0
-        assert_matches(df, ref_oracle.sql(oracle_imdb.GRAF_SQL[name]), name)
+        assert_matches(df, oracle.sql(oracle_imdb.GRAF_SQL[name]), name)
     assert nonempty >= 4  # the real data must actually exercise the queries

@@ -12,30 +12,45 @@ from _imdb_etl_spark.schemas import MOVIES_STAGING, NAME_STAGING
 from _imdb_etl_spark.sources.csv_source import read_staging_csv
 
 
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
 def test_null_literal_becomes_sql_null(spark, imdb_stage):
     df = read_staging_csv(spark, os.path.join(imdb_stage, "movie.csv"), MOVIES_STAGING)
-    # fixture writes literal "NULL" strings into gross income
-    assert df.where(F.col("worlwide_gross_income").isNull()).count() > 0
-    assert df.where(F.col("worlwide_gross_income") == "NULL").count() == 0
+    try:
+        # fixture writes literal "NULL" strings into gross income
+        assert df.where(F.col("worlwide_gross_income").isNull()).count() > 0
+        assert df.where(F.col("worlwide_gross_income") == "NULL").count() == 0
+    finally:
+        df.unpersist()
 
 
 def test_quoted_fields_with_commas_and_quotes(spark, imdb_stage):
     df = read_staging_csv(spark, os.path.join(imdb_stage, "movie.csv"), MOVIES_STAGING)
-    # titles contain commas and embedded double quotes; the row must not split
-    assert df.where(F.col("title").contains(',') & F.col("title").contains('"')).count() > 0
-    # and no column bleed: year is always a plausible int
-    assert df.where(~F.col("year").isin(2017, 2018, 2019)).count() == 0
+    try:
+        # titles contain commas and embedded double quotes; the row must not split
+        assert df.where(F.col("title").contains(',') & F.col("title").contains('"')).count() > 0
+        # and no column bleed: year is always a plausible int
+        assert df.where(~F.col("year").isin(2017, 2018, 2019)).count() == 0
+    finally:
+        df.unpersist()
 
 
-def test_drop_malformed_mirrors_on_error_continue(spark, imdb_stage):
+def test_drop_malformed_mirrors_continue_load(spark, imdb_stage):
+    # ON_ERROR='CONTINUE' (the names load): every data line is kept
+    # except the fixture's 2 injected bad-date rows
     path = os.path.join(imdb_stage, "names.csv")
-    permissive = read_staging_csv(spark, path, NAME_STAGING, on_error="permissive")
+    with open(path, encoding="utf-8") as f:
+        data_lines = sum(1 for _ in f) - 1  # minus the header
     dropped = read_staging_csv(spark, path, NAME_STAGING, drop_malformed=True)
-    # the injected bad-date rows survive permissive (nulled) but not continue
-    assert permissive.count() == dropped.count() + 2
+    try:
+        assert dropped.count() == data_lines - 2
+    finally:
+        dropped.unpersist()
 
 
-def test_on_error_abort_fails_loudly(spark, imdb_stage):
+def test_default_load_aborts_loudly(spark, imdb_stage):
     # Snowflake COPY INTO default: a type error aborts the load
     import pytest
 
@@ -43,7 +58,17 @@ def test_on_error_abort_fails_loudly(spark, imdb_stage):
 
     path = os.path.join(imdb_stage, "names.csv")
     with pytest.raises(MalformedRowsError, match="fail typed or structural"):
-        read_staging_csv(spark, path, NAME_STAGING, on_error="abort").count()
+        read_staging_csv(spark, path, NAME_STAGING)
+
+
+_STRUCT_SCHEMA = StructType([StructField(c, StringType()) for c in ("a", "b", "c")])
+
+
+def _struct_csv(tmp_path):
+    # rows 2 and 3 have too few and too many fields; row 4 quotes a comma
+    p = tmp_path / "struct.csv"
+    p.write_text('a,b,c\n1,x,2\n2,y\n3,z,4,9\n4,"q,uoted",5\n')
+    return p
 
 
 def test_structural_malformation_detected(spark, tmp_path):
@@ -55,45 +80,36 @@ def test_structural_malformation_detected(spark, tmp_path):
 
     from _imdb_etl_spark.sources.csv_source import MalformedRowsError
 
-    p = tmp_path / "struct.csv"
-    p.write_text('a,b,c\n1,x,2\n2,y\n3,z,4,9\n4,"q,uoted",5\n')
-    schema = StructType(
-        [StructField(c, StringType()) for c in ("a", "b", "c")]
-    )
+    p = _struct_csv(tmp_path)
     with pytest.raises(MalformedRowsError, match="fail typed or structural"):
-        read_staging_csv(spark, str(p), schema, on_error="abort").count()
+        read_staging_csv(spark, str(p), _STRUCT_SCHEMA)
 
-    kept = read_staging_csv(spark, str(p), schema, on_error="continue")
-    assert {r["a"] for r in kept.collect()} == {"1", "4"}
-
-    padded = read_staging_csv(spark, str(p), schema, on_error="permissive")
-    assert padded.count() == 4
+    kept = read_staging_csv(spark, str(p), _STRUCT_SCHEMA, drop_malformed=True)
+    try:
+        assert {r["a"] for r in kept.collect()} == {"1", "4"}
+    finally:
+        kept.unpersist()
 
 
 def test_cached_staging_keeps_copy_into_semantics(spark, tmp_path):
-    """The once-parsed staging load flags the same structural rows as
-    the lazy read: abort raises and frees its cache, continue keeps the
-    well-formed rows in memory so they outlive the file."""
+    """The once-parsed staging load counts the bad rows, and abort raises
+    and frees its cache; drop_malformed keeps the well-formed rows in
+    memory, so they outlive the file."""
     import pytest
 
-    from _imdb_etl_spark.sources.csv_source import MalformedRowsError, cache_staging_csv
+    from _imdb_etl_spark.sources.csv_source import MalformedRowsError
 
-    p = tmp_path / "struct.csv"
-    p.write_text('a,b,c\n1,x,2\n2,y\n3,z,4,9\n4,"q,uoted",5\n')
-    schema = StructType(
-        [StructField(c, StringType()) for c in ("a", "b", "c")]
-    )
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
+    p = _struct_csv(tmp_path)
+    before = _persistent_rdds(spark)
     with pytest.raises(MalformedRowsError, match="2 row\\(s\\)"):
-        cache_staging_csv(spark, str(p), schema)
-    assert jsc.getPersistentRDDs().size() == before
+        read_staging_csv(spark, str(p), _STRUCT_SCHEMA)
+    assert _persistent_rdds(spark) == before
 
-    kept = cache_staging_csv(spark, str(p), schema, drop_malformed=True)
+    kept = read_staging_csv(spark, str(p), _STRUCT_SCHEMA, drop_malformed=True)
     p.unlink()
     assert {r["a"] for r in kept.collect()} == {"1", "4"}
     kept.unpersist()
-    assert jsc.getPersistentRDDs().size() == before
+    assert _persistent_rdds(spark) == before
 
 
 def test_explicit_schema_no_inference(spark, tmp_path):
@@ -104,6 +120,7 @@ def test_explicit_schema_no_inference(spark, tmp_path):
     )
     df = read_staging_csv(spark, str(p), schema)
     rows = {tuple(r) for r in df.collect()}
+    df.unpersist()
     assert rows == {(1, "x"), (None, "y")}
 
 

@@ -977,14 +977,20 @@ def tokenizer_bpe_train_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def bpe_train_rounds(
-    spark: SparkSession, docs: DataFrame, n_rounds: int
+    spark: SparkSession,
+    docs: DataFrame,
+    n_rounds: int,
+    k: int = 1,
+    cand: int = 1,
 ) -> DataFrame:
-    """Run the count -> merge -> re-segment BPE loop for ``n_rounds``
-    over ``docs.text`` and return the merge table. Split out from the
-    registered face so pytest can pin the loop against an independent
-    pure-Python BPE on arbitrary corpora (a third implementation guards
-    against a bug shared by the Spark and DuckDB twins)."""
-    merge_table, final_stream = _bpe_train(spark, docs, n_rounds)
+    """Run ``n_rounds`` rounds of the BPE loop over ``docs.text`` and
+    return the merge table. The defaults are strict greedy BPE
+    (tokenizer_bpe_train_n); ``k`` and ``cand`` give the batched face.
+    Split out from the registered faces so pytest can pin the loop
+    against an independent pure-Python BPE on arbitrary corpora (a
+    third implementation guards against a bug shared by the Spark and
+    DuckDB twins)."""
+    merge_table, final_stream = _bpe_train(spark, docs, n_rounds, k, cand)
     final_stream.unpersist()
     return spark.createDataFrame(
         merge_table,
@@ -1017,12 +1023,39 @@ def _bpe_ckpt_stream(
 
 
 def _bpe_train(
-    spark: SparkSession, docs: DataFrame, n_rounds: int
+    spark: SparkSession,
+    docs: DataFrame,
+    n_rounds: int,
+    k: int = 1,
+    cand: int = 1,
 ) -> tuple[list, DataFrame]:
-    """The training loop proper: returns (merge_table rows, the
+    """The one BPE training loop: returns (merge_table rows, the
     PERSISTED post-merge symbol stream) so the encoder face can
     tokenize with the learned vocabulary without re-deriving the
-    rounds. Caller owns unpersisting the returned stream."""
+    rounds. Caller owns unpersisting the returned stream.
+
+    Each round ranks the pair counts once by (count DESC, pair ASC),
+    keeps the top ``cand`` as a candidate window, and greedily selects
+    up to ``k`` pairwise SYMBOL-DISJOINT merges from it (a pair is
+    skipped if either symbol is in an already-selected pair of this
+    round), then applies them in selection order in one narrow-map
+    projection. Selection reads only round-start counts and both
+    engines apply the replaces in the same order, so the result is
+    exactly deterministic; the bounded window makes it engine-identical.
+    k=1 with cand=1 is strict greedy BPE: one merge per round, a 2-row
+    readback. Larger k trades stale within-round counts for fewer
+    shuffle+readback barriers, which dominate at production vocab
+    sizes.
+
+    Driver-side state is the learned merge table (the same bounded
+    model-state pattern as pyspark.ml's iterative trainers). Each round
+    runs ONE shuffle and readback: a single hash agg over the union of
+    the pair fan-out and a per-row symbol-total marker, whose
+    1 + ``cand`` row TakeOrdered readback yields the round's candidate
+    window AND the previous round's post-merge symbol total (the total
+    of the CURRENT stream). Executing it also populates the round's
+    stream cache, so the next round reads cached partitions; a final
+    scalar agg closes out the last round's total."""
     sep = _BPE_SEP
     ss = sep + sep  # doubled boundary separator (see module comment)
     # distinct-word x frequency formulation (see module comment): the
@@ -1054,24 +1087,15 @@ def _bpe_train(
         "element_at(syms, i + 1))) "
         "ELSE array() END"
     )
-
-    # Driver-side state is the learned merge table — N 2-row readbacks,
-    # bounded by construction (the same model-state pattern as
-    # pyspark.ml's iterative trainers). Each round runs exactly ONE
-    # distributed job: a single hash agg over the union of the pair
-    # fan-out and a per-row symbol-total marker, whose 2-row
-    # TakeOrdered readback yields round k's top rule AND round k-1's
-    # post-merge symbol total together (the total of the CURRENT
-    # stream is the previous round's symbols_after). Executing it also
-    # populates the round's stream cache, so round k+1 reads cached
-    # partitions instead of re-deriving rounds 1..k; a final scalar
-    # agg closes out the last round's total.
-    merge_table = []
+    merge_table: list[tuple] = []
     run_dir = scratch_run("bpe_ckpt")  # private checkpoint namespace
+    merges_applied = 0  # checkpoint keys on MERGES, not rounds: each
+    last_ckpt = 0  # round nests up to k replaces, so a round-keyed
+    # interval would carry 16*k chained replaces (round-7 advisory)
     prev = stream.persist()
     old = None  # previous generation, kept cached until its child runs
-    pending = None  # (k, sym_a, sym_b, pair_cnt) awaiting symbols_after
-    for k in range(1, n_rounds + 1):
+    pending: list[tuple] = []  # round's merges awaiting symbols_after
+    for r in range(1, n_rounds + 1):
         per = prev.select(F.split("s", ss).alias("syms"), "freq")
         pairs = per.select(
             F.lit(False).alias("is_total"),
@@ -1083,78 +1107,77 @@ def _bpe_train(
             F.lit("").alias("k"),
             ((F.size("syms") - 2).cast("long") * F.col("freq")).alias("wt"),
         )
+        # ONE shuffle + readback per round: fused (total + candidate
+        # window) readback, 1 + cand rows, bounded by construction
         rows = (
             pairs.unionByName(tot)
             .groupBy("is_total", "k")
             .agg(F.sum("wt").alias("c"))
             .orderBy(F.desc("is_total"), F.desc("c"), F.asc("k"))
-            .limit(2)
+            .limit(1 + cand)
             .collect()
         )
         if old is not None:  # prev is materialized now; parent can go
             old.unpersist()
             old = None
-        if pending is not None:
-            merge_table.append((*pending, rows[0]["c"]))
-            pending = None
-        if len(rows) < 2:  # corpus fully merged / no adjacent pairs left
+        if pending:
+            merge_table.extend((*m, rows[0]["c"]) for m in pending)
+            pending = []
+        # greedy symbol-disjoint selection inside the shared window —
+        # the exact scan the oracle's s{r}_{j} CTE chain performs
+        used: set[str] = set()
+        sel: list[tuple[int, str, str, int]] = []
+        for row in rows[1:]:
+            if len(sel) >= k:
+                break
+            sym_a, sym_b = row["k"].split(sep)
+            if sym_a in used or sym_b in used:
+                continue
+            sel.append((len(sel) + 1, sym_a, sym_b, row["c"]))
+            used.update((sym_a, sym_b))
+        if not sel:  # corpus fully merged / no adjacent pairs left
             break
-        sym_pair, pair_cnt = rows[1]["k"], rows[1]["c"]
-        sym_a, sym_b = sym_pair.split(sep)
-        nxt = prev.select(
-            F.replace(
-                F.col("s"),
+        col = F.col("s")
+        for _, sym_a, sym_b, _cnt in sel:  # selection order, both twins
+            col = F.replace(
+                col,
                 # one sep from each flanking double boundary joins the
                 # match, so adjacent occurrences both match; the
                 # replacement restores each boundary to two seps
                 F.lit(sep + sym_a + ss + sym_b + sep),
                 F.lit(sep + sym_a + sym_b + sep),
-            ).alias("s"),
-            "freq",
-        )
-        if k % _BPE_CKPT_EVERY == 0:  # bound Catalyst plan depth
-            nxt = _bpe_ckpt_stream(spark, nxt, k, run_dir)
+            )
+        nxt = prev.select(col.alias("s"), "freq")
+        merges_applied += len(sel)
+        if merges_applied - last_ckpt >= _BPE_CKPT_EVERY:
+            # bound Catalyst plan depth at _BPE_CKPT_EVERY chained
+            # replaces regardless of k
+            nxt = _bpe_ckpt_stream(spark, nxt, merges_applied, run_dir)
+            last_ckpt = merges_applied
         nxt = nxt.persist()
         old, prev = prev, nxt
-        pending = (k, sym_a, sym_b, pair_cnt)
-    if pending is not None:  # the last round's total never piggybacked
+        pending = [
+            ((r - 1) * k + j, sym_a, sym_b, cnt)
+            for j, sym_a, sym_b, cnt in sel
+        ]
+    if pending:  # the last round's total never piggybacked
         after = prev.agg(
             F.sum(
                 (F.size(F.split("s", ss)) - 2).cast("long") * F.col("freq")
             ).alias("a")
         ).collect()[0][0]
-        if old is not None:
-            old.unpersist()
-        merge_table.append((*pending, after))
+        merge_table.extend((*m, after) for m in pending)
+    if old is not None:
+        old.unpersist()
     return merge_table, prev
 
 
-# --- batched-merge BPE trainer: K merges per driver round -----------------
+# --- the batched-merge BPE face: K merges per driver round --------------
 #
-# tokenizer_bpe_train_n is the canonical distributed-BPE shape, but its
-# driver loop pays one full pair-count shuffle + readback barrier PER
-# MERGE. At production vocab sizes (tens of thousands of merges) the
-# per-round barrier, not the per-round compute, is the wall-clock
-# bottleneck — the round-6 verdict named batching non-overlapping
-# merges per round as this trainer's one remaining lever. This face
-# implements it: each round ranks the pair counts once, greedily
-# selects up to K merges that are pairwise SYMBOL-DISJOINT (a pair is
-# skipped if either symbol appears in an already-selected pair of this
-# round — stale-count drift is then bounded to second-order effects),
-# and applies all K re-segmentations in one narrow-map projection. The
-# learned table differs from strict greedy BPE (counts are not
-# refreshed between the K merges of a round) — the standard accuracy/
-# barrier trade every batched distributed trainer makes — but the
-# algorithm itself is exactly deterministic: selection reads only
-# round-start counts, and both engines apply the K replaces in
-# selection order, so simultaneity never needs to be defined.
-#
-# Engine-identity of the selection is forced by a BOUNDED candidate
-# window: both twins rank (count DESC, pair ASC), keep the top
-# _BPE_BATCH_CAND candidates, and run the same greedy scan inside that
-# window. The driver readback is 1 + _BPE_BATCH_CAND rows per round
-# (the fused symbol-total row plus the window), bounded by
-# construction, never corpus-scaled.
+# tokenizer_bpe_train_n pays one pair-count shuffle + readback barrier
+# PER MERGE; this face runs the same _bpe_train loop with up to
+# _BPE_BATCH_K symbol-disjoint merges per round from a shared
+# top-_BPE_BATCH_CAND candidate window.
 
 _BPE_BATCH_ROUNDS = 2
 _BPE_BATCH_K = 4  # merges per round: 2x4 = the 8 merges train_n learns
@@ -1244,127 +1267,6 @@ a{r} AS (
     )
 
 
-def bpe_train_batched_rounds(
-    spark: SparkSession,
-    docs: DataFrame,
-    n_rounds: int,
-    k: int = _BPE_BATCH_K,
-    cand: int = _BPE_BATCH_CAND,
-) -> DataFrame:
-    """Batched BPE training loop: ``n_rounds`` rounds of up to ``k``
-    symbol-disjoint merges greedily selected from the top-``cand``
-    candidate window. Split out from the registered face so pytest can
-    pin it against an independent pure-Python replay and against the
-    strict-greedy trainer at k=1 (where the two algorithms provably
-    coincide)."""
-    sep = _BPE_SEP
-    ss = sep + sep
-    wc = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
-        .where(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    stream = wc.select(
-        F.concat(
-            F.lit(ss), F.regexp_replace("w", "(?s)(.)", "$1" + ss)
-        ).alias("s"),
-        "freq",
-    )
-    pair_expr = (
-        "CASE WHEN size(syms) >= 4 THEN "
-        "transform(sequence(2, size(syms) - 2), "
-        f"i -> concat(element_at(syms, i), '{sep}', "
-        "element_at(syms, i + 1))) "
-        "ELSE array() END"
-    )
-    out_rows: list[tuple] = []
-    run_dir = scratch_run("bpe_ckpt")  # private checkpoint namespace
-    merges_applied = 0  # checkpoint keys on MERGES, not rounds: each
-    last_ckpt = 0  # round nests up to k replaces, so a round-keyed
-    # interval would carry 16*k chained replaces (round-7 advisory)
-    prev = stream.persist()
-    old = None
-    pending: list[tuple] = []  # round's merges awaiting symbols_after
-    for r in range(1, n_rounds + 1):
-        per = prev.select(F.split("s", ss).alias("syms"), "freq")
-        pairs = per.select(
-            F.lit(False).alias("is_total"),
-            F.explode(F.expr(pair_expr)).alias("k"),
-            F.col("freq").alias("wt"),
-        )
-        tot = per.select(
-            F.lit(True).alias("is_total"),
-            F.lit("").alias("k"),
-            ((F.size("syms") - 2).cast("long") * F.col("freq")).alias("wt"),
-        )
-        # ONE distributed job per round: fused (total + candidate
-        # window) readback, 1 + cand rows, bounded by construction
-        rows = (
-            pairs.unionByName(tot)
-            .groupBy("is_total", "k")
-            .agg(F.sum("wt").alias("c"))
-            .orderBy(F.desc("is_total"), F.desc("c"), F.asc("k"))
-            .limit(1 + cand)
-            .collect()
-        )
-        if old is not None:
-            old.unpersist()
-            old = None
-        if pending:
-            out_rows.extend((*m, rows[0]["c"]) for m in pending)
-            pending = []
-        # greedy symbol-disjoint selection inside the shared window —
-        # the exact scan the oracle's s{r}_{j} CTE chain performs
-        used: set[str] = set()
-        sel: list[tuple[int, str, str, int]] = []
-        for row in rows[1:]:
-            if len(sel) >= k:
-                break
-            sym_a, sym_b = row["k"].split(sep)
-            if sym_a in used or sym_b in used:
-                continue
-            sel.append((len(sel) + 1, sym_a, sym_b, row["c"]))
-            used.update((sym_a, sym_b))
-        if not sel:
-            break
-        col = F.col("s")
-        for _, sym_a, sym_b, _cnt in sel:  # selection order, both twins
-            col = F.replace(
-                col,
-                F.lit(sep + sym_a + ss + sym_b + sep),
-                F.lit(sep + sym_a + sym_b + sep),
-            )
-        nxt = prev.select(col.alias("s"), "freq")
-        merges_applied += len(sel)
-        if merges_applied - last_ckpt >= _BPE_CKPT_EVERY:
-            # bound Catalyst plan depth at _BPE_CKPT_EVERY chained
-            # replaces regardless of k
-            nxt = _bpe_ckpt_stream(spark, nxt, merges_applied, run_dir)
-            last_ckpt = merges_applied
-        nxt = nxt.persist()
-        old, prev = prev, nxt
-        pending = [
-            ((r - 1) * k + j, sym_a, sym_b, cnt)
-            for j, sym_a, sym_b, cnt in sel
-        ]
-    if pending:  # the last round's total never piggybacked
-        after = prev.agg(
-            F.sum(
-                (F.size(F.split("s", ss)) - 2).cast("long") * F.col("freq")
-            ).alias("a")
-        ).collect()[0][0]
-        out_rows.extend((*m, after) for m in pending)
-    if old is not None:
-        old.unpersist()
-    prev.unpersist()
-    return spark.createDataFrame(
-        out_rows,
-        "merge_rank int, sym_a string, sym_b string, "
-        "pair_cnt long, symbols_after long",
-    ).orderBy("merge_rank")
-
-
 @register(
     "tokenizer_bpe_train_batched",
     _bpe_batched_sql(_BPE_BATCH_ROUNDS, _BPE_BATCH_K, _BPE_BATCH_CAND),
@@ -1380,8 +1282,8 @@ def bpe_train_batched_rounds(
     "apply the round's merges sequentially in selection order, so the "
     "result is exactly deterministic even though counts go stale "
     "within a round (the accuracy/barrier trade every batched "
-    "distributed trainer makes vs strict greedy; at k=1 the two "
-    "coincide, pinned in pytest). Readback is 1+"
+    "distributed trainer makes vs strict greedy; tokenizer_bpe_train_n "
+    "is the same loop at k=1). Readback is 1+"
     f"{_BPE_BATCH_CAND} rows per round, bounded by construction. "
     "symbols_after is the post-ROUND corpus symbol total, attached to "
     "each of the round's merges.",
@@ -1390,7 +1292,9 @@ def tokenizer_bpe_train_batched(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
-    return bpe_train_batched_rounds(spark, docs, _BPE_BATCH_ROUNDS)
+    return bpe_train_rounds(
+        spark, docs, _BPE_BATCH_ROUNDS, _BPE_BATCH_K, _BPE_BATCH_CAND
+    )
 
 
 _BPE_VOCAB_TOP = 20

@@ -864,9 +864,11 @@ ORDER BY doc_id
 """
 
 
-def connected_components(
-    edges: DataFrame, max_rounds: int = 32, probe_every: int = 2
-) -> tuple[DataFrame, int]:
+_CC_MAX_ROUNDS = 32
+_CC_PROBE_EVERY = 2  # rounds between convergence probes
+
+
+def connected_components(edges: DataFrame) -> tuple[DataFrame, int]:
     """Connected components over a symmetric edge list (columns a, b):
     returns (labels, rounds_used) where labels has (doc_id, cluster_id)
     = the component's minimum node id.
@@ -898,7 +900,8 @@ def connected_components(
     directory is never overwritten mid-plan. The other graph faces
     (pagerank, k-core, semantic clusters) stage their pair and frontier
     tables the same way. The scalar convergence probe runs every
-    ``probe_every`` rounds to halve driver-side actions.
+    _CC_PROBE_EVERY rounds to halve driver-side actions; _CC_MAX_ROUNDS
+    caps the loop.
     """
     run_dir = scratch_run("cc")
     # init: every node labels itself with the smallest neighbor (or self)
@@ -909,7 +912,7 @@ def connected_components(
         f"{run_dir}/r0",
     )
     rounds = 0
-    for r in range(1, max_rounds + 1):
+    for r in range(1, _CC_MAX_ROUNDS + 1):
         rounds = r
         nbr = (
             edges.join(labels, edges["b"] == labels["doc_id"])
@@ -936,7 +939,7 @@ def connected_components(
             f"{run_dir}/r{r}",
         )
         converged = False
-        if r % probe_every == 0 or r == max_rounds:
+        if r % _CC_PROBE_EVERY == 0 or r == _CC_MAX_ROUNDS:
             converged = (
                 new_labels.join(
                     labels.withColumnRenamed("cluster_id", "old"), "doc_id"

@@ -399,7 +399,15 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     normed = emb.select(
         "vec_id", "embedding", F.sqrt(_dot("embedding", "embedding")).alias("nrm")
     )
-    cents = (
+    cents = _ivf_centroids(normed)
+    return _ivf_search(normed, cents)
+
+
+def _ivf_centroids(normed: DataFrame) -> DataFrame:
+    """The IVF centroid policy every IVF face shares: the first
+    _N_CENTROIDS vectors passing _CENTROID_FILTER by vec_id, as
+    (centroid_id, ce, cnrm)."""
+    return (
         normed.where(F.expr(_CENTROID_FILTER))
         .orderBy("vec_id")
         .limit(_N_CENTROIDS)
@@ -409,7 +417,6 @@ def sim_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nrm").alias("cnrm"),
         )
     )
-    return _ivf_search(normed, cents)
 
 
 def _ivf_assign(normed: DataFrame, cents: DataFrame) -> DataFrame:
@@ -1199,23 +1206,14 @@ def sim_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = scratch_dir("ivf_index")
 
     # -- build phase (the offline indexing job): sim_knn_ivf's centroid
-    # selection and assignment stages, shared via _ivf_assign so a
-    # policy change can never unpair this builder from the oracle both
-    # queries share
+    # selection and assignment stages, shared via _ivf_centroids and
+    # _ivf_assign so a policy change can never unpair this builder from
+    # the oracle both queries share
     (emb,) = load_tables(spark, sf_dir, "embeddings")
     normed = emb.select(
         "vec_id", "embedding", F.sqrt(_dot("embedding", "embedding")).alias("nrm")
     )
-    cents = (
-        normed.where(F.expr(_CENTROID_FILTER))
-        .orderBy("vec_id")
-        .limit(_N_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cnrm"),
-        )
-    )
+    cents = _ivf_centroids(normed)
     lists = (
         _ivf_assign(normed, cents)
         .where(F.col("arnk") == 1)
@@ -1790,16 +1788,7 @@ def embedding_silhouette_simplified(
         "embedding",
         F.sqrt(_dot("embedding", "embedding")).alias("nrm"),
     )
-    cents = (
-        normed.where(F.expr(_CENTROID_FILTER))
-        .orderBy("vec_id")
-        .limit(_N_CENTROIDS)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("embedding").alias("ce"),
-            F.col("nrm").alias("cnrm"),
-        )
-    )
+    cents = _ivf_centroids(normed)
     ranked = _ivf_assign(normed, cents)
     pv = (
         ranked.where(F.col("arnk") <= 2)

@@ -338,6 +338,22 @@ ORDER BY s.event_type, hour_bucket
 """
 
 
+def _hour_spine(hourly: DataFrame) -> DataFrame:
+    """Every (event_type, hr) hour between each type's first and last
+    observed ``hr`` — the dense spine the gap-filling faces left-join
+    their sparse hourly rows onto."""
+    return (
+        hourly.groupBy("event_type")
+        .agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
+        .select(
+            "event_type",
+            F.explode(
+                F.sequence("lo", "hi", F.expr("interval 1 hour"))
+            ).alias("hr"),
+        )
+    )
+
+
 @register(
     "events_gapfill_hourly",
     _GAPFILL_SQL,
@@ -363,16 +379,7 @@ def events_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         dsum(dec("value"), "total_value"),
     )
-    spine = (
-        hourly.groupBy("event_type")
-        .agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 hour"))
-            ).alias("hr"),
-        )
-    )
+    spine = _hour_spine(hourly)
     w = (
         Window.partitionBy("event_type")
         .orderBy("hr")
@@ -2074,16 +2081,7 @@ def events_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("avg_v")
         )
     )
-    spine = (
-        hourly.groupBy("event_type")
-        .agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 hour"))
-            ).alias("hr"),
-        )
-    )
+    spine = _hour_spine(hourly)
     w_prev = (
         Window.partitionBy("event_type")
         .orderBy("hr")
@@ -3895,16 +3893,7 @@ def events_ewma_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
     ).agg(F.count(F.lit(1)).alias("n"))
-    spine = (
-        hourly.groupBy("event_type")
-        .agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 hour"))
-            ).alias("hr"),
-        )
-    )
+    spine = _hour_spine(hourly)
     w = Window.partitionBy("event_type").orderBy("hr")
     dense = spine.join(hourly, ["event_type", "hr"], "left").select(
         "event_type",
@@ -4533,16 +4522,7 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
     ).agg(F.count(F.lit(1)).alias("n"))
-    spine = (
-        hourly.groupBy("event_type")
-        .agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 hour"))
-            ).alias("hr"),
-        )
-    )
+    spine = _hour_spine(hourly)
     w = Window.partitionBy("event_type").orderBy("hr")
     dense = spine.join(hourly, ["event_type", "hr"], "left").select(
         "event_type",

@@ -211,8 +211,6 @@ GROUP BY bucket
 ORDER BY bucket
 """
 
-_stream_counter = 0
-
 
 @register(
     "streaming_pysource_bucket_counts",
@@ -223,40 +221,21 @@ _stream_counter = 0
     "completion (3 micro-batches) into a complete-mode memory sink. "
     "The deterministic payload gives the full value-hash oracle — the "
     "whole custom-streaming-connector path is verified, not stubbed. "
-    "availableNow falls back to single-batch for Python sources, so "
-    "the drain uses processAllAvailable on the finite offset range.",
+    "It drains through the shared memory-sink runner "
+    "(processAllAvailable on the finite offset range; availableNow "
+    "would run Python sources as a single 700-row batch).",
 )
 def streaming_pysource_bucket_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import uuid
+    from _imdb_etl_spark.streaming.events import _run_to_memory
 
-    global _stream_counter
-    _stream_counter += 1
-    name = f"pysource_stream_{_stream_counter}"
     stream = read_synthetic_docs_stream(spark, rows=2000, batch=700)
     agg = stream.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("doc_id").cast("long").alias("sum_id"),
     )
-    writer = (
-        agg.writeStream.format("memory").queryName(name).outputMode("complete")
-    )
-    ckpt = None
-    if os.path.isdir("/dev/shm"):
-        ckpt = f"/dev/shm/ckpt_{name}_{uuid.uuid4().hex}"
-        writer = writer.option("checkpointLocation", ckpt)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        if ckpt is not None:
-            shutil.rmtree(ckpt, ignore_errors=True)
-    out = spark.table(name)
-    spark.catalog.dropTempView(name)  # as streaming.events._run_to_memory
+    out = _run_to_memory(agg)
     return out.orderBy("bucket")
 
 

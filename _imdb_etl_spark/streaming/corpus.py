@@ -71,7 +71,7 @@ ORDER BY lang
     "surviving duplicate flips the oracle hash.",
 )
 def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.streaming.events import _counter, _run_to_memory
+    from _imdb_etl_spark.streaming.events import _run_to_memory
 
     first = read_docs_stream(spark, sf_dir)
     replay = read_docs_stream(spark, sf_dir)
@@ -86,6 +86,5 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = deduped.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_unique_quality_docs")
     )
-    name = f"stream_ingest_{next(_counter)}"
-    out = _run_to_memory(agg, name, output_mode="complete")
+    out = _run_to_memory(agg)
     return out.orderBy("lang")

@@ -6,12 +6,13 @@ API: file source -> watermarked event-time windows / session windows ->
 sink. In production the source line is the only thing that changes
 (kafka instead of parquet-dir).
 
-Driver/oracle integration: the registered queries run the stream to a
-bounded completion over the parquet input (availableNow trigger, memory
-sink) and return the materialized batch result. On bounded input the
-windowed aggregates must equal their batch twins in plans/events.py, so
-the same DuckDB oracle SQL applies — the driver checks the streaming
-path end-to-end, not a stub.
+Driver/oracle integration: the registered queries drain the stream to
+a bounded completion over the parquet input through the one memory-sink
+runner, `_run_to_memory` (processAllAvailable, checkpoint under the
+scratch root), and return the materialized batch result. On bounded
+input the windowed aggregates must equal their batch twins in
+plans/events.py, so the same DuckDB oracle SQL applies — the driver
+checks the streaming path end-to-end, not a stub.
 
 Watermarks: 1 hour on event time. On an unbounded stream this bounds
 state (late rows beyond the watermark are dropped and hour/session
@@ -21,7 +22,6 @@ with batch holds exactly.
 
 from __future__ import annotations
 
-import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,8 +30,6 @@ from pyspark.sql import functions as F
 from _imdb_etl_spark.functions import dec, dsum
 from _imdb_etl_spark.plans.events import _SESSION_SQL
 from _imdb_etl_spark.plans.registry import register
-
-_counter = itertools.count()
 
 
 def read_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -84,32 +82,33 @@ def streaming_sessionize(events: DataFrame) -> DataFrame:
     )
 
 
-def _run_to_memory(df: DataFrame, name: str, output_mode: str = "complete") -> DataFrame:
+def _run_to_memory(df: DataFrame, output_mode: str = "complete") -> DataFrame:
+    """Drain a bounded stream into a memory sink and return its rows:
+    the one runner of every memory-sink face. The query names itself,
+    runs on the default trigger until processAllAvailable() returns
+    (availableNow runs Python sources as one micro-batch, so it cannot
+    be the shared drain), and checkpoints under the scratch owner's
+    ``stream_ckpt`` directory, which is removed when the run ends."""
+    import shutil
+    import uuid
+
+    from _imdb_etl_spark.sources.catalog import scratch_dir
+
     spark = df.sparkSession
-    writer = (
+    name = f"stream_{uuid.uuid4().hex}"
+    ckpt = os.path.join(scratch_dir("stream_ckpt"), name)
+    q = (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
+        .option("checkpointLocation", ckpt)
+        .start()
     )
-    # bounded replay to a memory sink: the checkpoint is throwaway, so
-    # point it at tmpfs when available instead of paying disk fsyncs
-    ckpt = None
-    shm = "/dev/shm"
-    if os.path.isdir(shm):
-        import uuid
-
-        ckpt = os.path.join(shm, f"ckpt_{name}_{uuid.uuid4().hex}")
-        writer = writer.option("checkpointLocation", ckpt)
-    q = writer.start()
     try:
-        q.awaitTermination()
+        q.processAllAvailable()
     finally:
         q.stop()
-        if ckpt is not None:
-            import shutil
-
-            shutil.rmtree(ckpt, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     # the resolved plan holds the memory sink's rows; dropping the view
     # keeps a long-lived session from gaining one catalog table per call
     out = spark.table(name)
@@ -133,7 +132,7 @@ ORDER BY hour_bucket, event_type
     "streaming_hourly_rollup",
     _STREAM_HOURLY_SQL,
     doc="End-to-end Structured Streaming run (file source -> watermarked "
-    "1h windows -> availableNow -> memory sink), materialized and "
+    "1h windows -> processAllAvailable -> memory sink), materialized and "
     "compared to the batch oracle. Exact distinct users is omitted: "
     "streams only support approx_count_distinct (see "
     "streaming_hourly_rollup builder for the unbounded form).",
@@ -148,8 +147,7 @@ def streaming_hourly_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(dec("value"), "total_value"),
         )
     )
-    name = f"stream_hourly_{next(_counter)}"
-    out = _run_to_memory(agg, name)
+    out = _run_to_memory(agg)
     return out.select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH:00:00").alias(
             "hour_bucket"
@@ -170,8 +168,7 @@ def streaming_hourly_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, sf_dir)
     sessions = streaming_sessionize(events)
-    name = f"stream_sessions_{next(_counter)}"
-    out = _run_to_memory(sessions, name)
+    out = _run_to_memory(sessions)
     return (
         out.groupBy("user_id")
         .agg(
@@ -215,8 +212,7 @@ def streaming_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    name = f"stream_dedup_{next(_counter)}"
-    out = _run_to_memory(deduped, name, output_mode="append")
+    out = _run_to_memory(deduped, output_mode="append")
     return (
         out.groupBy("event_type")
         .agg(
@@ -282,8 +278,7 @@ def streaming_ss_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             "v_ts BETWEEN p_ts - INTERVAL 30 MINUTES AND p_ts"
         ),
     )
-    name = f"stream_ssjoin_{next(_counter)}"
-    out = _run_to_memory(joined, name, output_mode="append")
+    out = _run_to_memory(joined, output_mode="append")
     return out.select(
         F.col("p_user").alias("user_id"),
         "p_event_id",
@@ -332,8 +327,7 @@ def streaming_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(dec("value"), "total_value"),
         )
     )
-    name = f"stream_enrich_{next(_counter)}"
-    out = _run_to_memory(agg, name, output_mode="complete")
+    out = _run_to_memory(agg)
     return out.orderBy("nation")
 
 

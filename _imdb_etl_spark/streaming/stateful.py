@@ -92,18 +92,13 @@ ORDER BY user_id
     "against the declarative oracle on the bounded input.",
 )
 def streaming_stateful_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.streaming.events import (
-        _counter,
-        _run_to_memory,
-        read_events_stream,
-    )
+    from _imdb_etl_spark.streaming.events import _run_to_memory, read_events_stream
 
     events = read_events_stream(spark, sf_dir)
     totals = running_user_totals(events)
-    name = f"stream_totals_{next(_counter)}"
     # update-mode memory sink appends one row per (batch, user); keep the
     # final state per user (max n_events is the latest)
-    out = _run_to_memory(totals, name, output_mode="update")
+    out = _run_to_memory(totals, output_mode="update")
     return (
         out.groupBy("user_id")
         .agg(
@@ -234,16 +229,11 @@ _TWS_DOC = (
 
 @_register_tws
 def streaming_tws_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.streaming.events import (
-        _counter,
-        _run_to_memory,
-        read_events_stream,
-    )
+    from _imdb_etl_spark.streaming.events import _run_to_memory, read_events_stream
 
     events = read_events_stream(spark, sf_dir)
     extremes = running_user_extremes(events)
-    name = f"stream_tws_{next(_counter)}"
-    out = _run_to_memory(extremes, name, output_mode="update")
+    out = _run_to_memory(extremes, output_mode="update")
     return (
         out.groupBy("user_id")
         .agg(

@@ -1489,11 +1489,12 @@ def test_bpe_checkpoint_namespace_isolated_across_invocations(
 
 
 def test_bpe_checkpoint_path_matches_unpatched_faces(spark, sf_dir, monkeypatch):
-    """With a checkpoint every 2 merges, both trainers (the strict one
-    behind tokenizer_bpe_train_n / tokenizer_bpe_encode and the
-    batched one) go through _bpe_ckpt_stream and return exactly the
-    unpatched merge tables and encoded output; the shared scratch
-    retention leaves at most _STAGE_RETAIN checkpoint runs."""
+    """With a checkpoint every 2 merges, the training loop in both of
+    its configurations (strict k=1 behind tokenizer_bpe_train_n /
+    tokenizer_bpe_encode, batched behind tokenizer_bpe_train_batched)
+    goes through _bpe_ckpt_stream and returns exactly the unpatched
+    merge tables and encoded output; the shared scratch retention
+    leaves at most _STAGE_RETAIN checkpoint runs."""
     import glob
 
     from _imdb_etl_spark.operators import corpus
@@ -1914,8 +1915,9 @@ def test_bpe_batched_conflict_skip_and_exhaustion(spark):
     import duckdb
 
     from _imdb_etl_spark.operators.corpus import (
+        _BPE_BATCH_CAND,
         _bpe_batched_sql,
-        bpe_train_batched_rounds,
+        bpe_train_rounds,
     )
 
     # (1) conflict skip: x y appears 5x, y z 4x, p q 3x
@@ -1925,7 +1927,9 @@ def test_bpe_batched_conflict_skip_and_exhaustion(spark):
     )
     rows = [
         (r.merge_rank, r.sym_a, r.sym_b, r.pair_cnt)
-        for r in bpe_train_batched_rounds(spark, docs, 1, k=2).collect()
+        for r in bpe_train_rounds(
+            spark, docs, 1, k=2, cand=_BPE_BATCH_CAND
+        ).collect()
     ]
     assert rows == [(1, "x", "y", 5), (2, "p", "q", 3)]
 
@@ -1935,7 +1939,9 @@ def test_bpe_batched_conflict_skip_and_exhaustion(spark):
     )
     got = [
         (r.merge_rank, r.sym_a, r.sym_b, r.pair_cnt, r.symbols_after)
-        for r in bpe_train_batched_rounds(spark, docs2, 2, k=2).collect()
+        for r in bpe_train_rounds(
+            spark, docs2, 2, k=2, cand=_BPE_BATCH_CAND
+        ).collect()
     ]
     assert got == [(1, "a", "b", 2, 2)]
     con = duckdb.connect()

@@ -454,14 +454,14 @@ def _py_bpe_batched_reference(
 )
 @given(data=st.data())
 def test_bpe_train_batched_matches_pure_python(spark, data):
-    """The batched-merge trainer must equal the symbol-list reference
-    for any corpus and any k: same greedy symbol-disjoint selection
-    from the shared candidate window, same sequential application
-    order, same round-start counts and post-round totals. At k=1 the
-    batched algorithm coincides with strict greedy BPE — asserted
-    against the strict reference, pinning the claim in the
-    registration docstring."""
-    from _imdb_etl_spark.operators.corpus import bpe_train_batched_rounds
+    """The training loop must equal the symbol-list batched reference
+    for any corpus, any k and any candidate window (cand=1 and 2 make
+    windows smaller than k): same greedy symbol-disjoint selection
+    from the shared window, same sequential application order, same
+    round-start counts and post-round totals. At k=1 (any window;
+    k=1, cand=1 is the strict faces' configuration) it is also
+    asserted against the strict greedy reference."""
+    from _imdb_etl_spark.operators.corpus import bpe_train_rounds
 
     texts = data.draw(
         st.lists(
@@ -472,14 +472,15 @@ def test_bpe_train_batched_matches_pure_python(spark, data):
     )
     n_rounds = data.draw(st.integers(min_value=1, max_value=2))
     k = data.draw(st.integers(min_value=1, max_value=3))
-    expected = _py_bpe_batched_reference(texts, n_rounds, k)
+    cand = data.draw(st.sampled_from([1, 2, 64]))
+    expected = _py_bpe_batched_reference(texts, n_rounds, k, cand)
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     got = [
         (r.merge_rank, r.sym_a, r.sym_b, r.pair_cnt, r.symbols_after)
-        for r in bpe_train_batched_rounds(
-            spark, docs, n_rounds, k=k
+        for r in bpe_train_rounds(
+            spark, docs, n_rounds, k=k, cand=cand
         ).collect()
     ]
     assert got == expected
@@ -491,8 +492,9 @@ def test_bpe_lineage_checkpoint_is_lossless(spark, monkeypatch):
     """The periodic parquet lineage checkpoint (which bounds Catalyst
     plan depth — without it a 64-round training run OOMs the driver
     JVM on plan-tree growth) must be invisible to the result: with the
-    interval forced to 2, both trainers' outputs through several
-    checkpoint crossings equal the pure-Python references."""
+    interval forced to 2, the training loop's output through several
+    checkpoint crossings equals the pure-Python references, both in
+    the strict configuration (k=1, cand=1) and in a batched one (k=2)."""
     from _imdb_etl_spark.operators import corpus as corpus_mod
 
     monkeypatch.setattr(corpus_mod, "_BPE_CKPT_EVERY", 2)
@@ -508,8 +510,8 @@ def test_bpe_lineage_checkpoint_is_lossless(spark, monkeypatch):
     assert got == _py_bpe_reference([t.strip() for t in texts], 6)
     got_b = [
         (r.merge_rank, r.sym_a, r.sym_b, r.pair_cnt, r.symbols_after)
-        for r in corpus_mod.bpe_train_batched_rounds(
-            spark, docs, 4, k=2
+        for r in corpus_mod.bpe_train_rounds(
+            spark, docs, 4, k=2, cand=corpus_mod._BPE_BATCH_CAND
         ).collect()
     ]
     assert got_b == _py_bpe_batched_reference(
@@ -553,8 +555,8 @@ def test_bpe_batched_plan_depth_bounded_at_production_k(spark, monkeypatch):
     )
     got = [
         (r.merge_rank, r.sym_a, r.sym_b, r.pair_cnt, r.symbols_after)
-        for r in corpus_mod.bpe_train_batched_rounds(
-            spark, docs, 3, k=k
+        for r in corpus_mod.bpe_train_rounds(
+            spark, docs, 3, k=k, cand=corpus_mod._BPE_BATCH_CAND
         ).collect()
     ]
     assert got == _py_bpe_batched_reference(texts, 3, k)

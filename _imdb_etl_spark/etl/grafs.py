@@ -87,13 +87,11 @@ def graf4_top3_directors_top3_genres(
         .limit(3)
         .select("genre")
     )
+    # no broadcast hint needed: the planner sizes a limit(3) at three rows
+    # at any scale and broadcasts it
     per_director = (
         rated.join(dp, F.col("fm.director_id") == F.col("dp.person_id"))
-        .join(
-            F.broadcast(top3_genre),
-            F.col("dg.genre_name") == F.col("genre"),
-            "left_semi",
-        )
+        .join(top3_genre, F.col("dg.genre_name") == F.col("genre"), "left_semi")
         .groupBy(F.col("dp.name").alias("director_name"), F.col("dg.genre_name"))
         .agg(F.count("fm.movie_id").alias("movie_count"))
     )

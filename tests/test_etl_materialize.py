@@ -15,16 +15,19 @@ import sys
 import duckdb
 import pytest
 
+from _imdb_etl_spark.etl import grafs
 from _imdb_etl_spark.etl.star import STAR_TABLES, drop_staging, materialize_pipeline
 from _imdb_etl_spark.schemas import STAGING_LOADS
+from _imdb_etl_spark.session import codegen_compiles
 from _imdb_etl_spark.sources.sinks import drop_table
 from _imdb_etl_spark.testing import canon_rows
 from tests import fixtures
 from tests.test_etl_star import assert_matches
 
-_PERFBENCH_RUN = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "run.py"
+_PERFBENCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"
 )
+_PERFBENCH_RUN = os.path.join(_PERFBENCH, "run.py")
 
 
 def _drop_etl_tables(spark):
@@ -201,3 +204,54 @@ def test_reference_parity_face_matches_duckdb(spark, imdb_stage, monkeypatch):
     for name in (*STAR_TABLES, *STAGING_LOADS):
         assert not spark.catalog.tableExists(name), name
     assert _persistent_rdds(spark) == before
+
+
+def _dashboard_queries() -> tuple[str, ...]:
+    """perfbench's ``DASHBOARD_QUERIES``, read from perfbench/workloads.py."""
+    with open(os.path.join(_PERFBENCH, "workloads.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    for node in tree.body:
+        target = getattr(node, "targets", [None])[0]
+        if getattr(target, "id", None) == "DASHBOARD_QUERIES":
+            return ast.literal_eval(node.value)
+    raise AssertionError("DASHBOARD_QUERIES not found")
+
+
+def test_second_round_compiles_no_code(spark, imdb_stage, sf_dir):
+    """The codegen cache (session.CODEGEN_CACHE_ENTRIES) holds the
+    benchmarked working set: after one round of perfbench's work, an
+    ``imdb_etl`` pass (star ETL, the six grafs, drop) and each dashboard
+    query once, a second identical round compiles no class. With Spark's
+    default cap of 100 every round compiles its code again."""
+    from _imdb_etl_spark.plans import REGISTRY
+
+    queries = _dashboard_queries()
+    assert len(queries) == 7
+
+    def one_round():
+        t = materialize_pipeline(spark, imdb_stage)
+        try:
+            for df in (
+                grafs.graf1_usa_india_2019(t["dim_movies"]),
+                grafs.graf2_avg_duration_by_genre(t["dim_genres"], t["fact_movies"]),
+                grafs.graf3_top10_directors(t["fact_movies"], t["dim_people"]),
+                grafs.graf4_top3_directors_top3_genres(
+                    t["fact_movies"], t["dim_people"], t["dim_genres"], t["ratings_staging"]
+                ),
+                grafs.graf5_top10_actors_by_roles(
+                    t["role_mapping_staging"], t["dim_people"]
+                ),
+                grafs.graf6_movies_by_country(t["dim_movies"]),
+            ):
+                df.collect()
+        finally:
+            _drop_etl_tables(spark)
+        for q in queries:
+            REGISTRY[q].spark(spark, sf_dir).collect()
+
+    one_round()
+    compiled, _ = codegen_compiles(spark)
+    assert compiled > 0
+    one_round()
+    again = codegen_compiles(spark)[0] - compiled
+    assert again == 0, f"the second round compiled {again} classes again"

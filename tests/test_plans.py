@@ -92,8 +92,16 @@ def test_gate_window_fits_driver_cut():
     assert list(REGISTRY)[: len(GATE_WINDOW)] == GATE_WINDOW
 
 
-def test_no_cartesian_in_registry_except_intended(spark, sf_dir):
-    # cross products are only ever legitimate against a broadcast side
+def test_no_cartesian_in_registry_except_intended(spark, sf_dir, imdb_stage, monkeypatch):
+    """Cross products are only ever legitimate against a broadcast side.
+    ``imdb_reference_parity`` reads a fixture stage in place of the
+    reference CSVs. It writes and drops the star tables, so this test
+    runs before the module's ``tables`` fixture is first set up."""
+    from _imdb_etl_spark.etl.star import STAR_TABLES
+    from _imdb_etl_spark.plans import parity
+
+    assert not any(spark.catalog.tableExists(t) for t in STAR_TABLES)
+    monkeypatch.setattr(parity, "REF_DATA", imdb_stage)
     for name, spec in REGISTRY.items():
         if name in ("dedup_simhash",):  # UDF plans checked elsewhere
             continue

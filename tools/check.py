@@ -29,7 +29,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
-    from _imdb_etl_spark.session import get_spark
+    from _imdb_etl_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(app_name="check")
     con = duckdb.connect()
@@ -98,6 +98,9 @@ def main() -> int:
             print(f"PASS  {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
 
     print(f"\n{ran - len(failures)}/{ran} passed ({len(qs)} registered)")
+    # the run's codegen working set, to hold against session.CODEGEN_CACHE_ENTRIES
+    compiled, compile_s = codegen_compiles(spark)
+    print(f"codegen: {compiled} classes compiled in {compile_s:.1f} s")
     return 1 if failures else 0
 
 

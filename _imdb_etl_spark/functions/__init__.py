@@ -279,3 +279,32 @@ def doc_permille_bucket(col: str | Column = "doc_id") -> Column:
     sampling rate, domain cap, and upsampling decision derives from."""
     c = F.col(col) if isinstance(col, str) else col
     return hex_prefix_int(F.md5(c.cast("string"))) % 1000
+
+
+def rank_centroids_desc(raw):
+    """Per-row descending centroid ranking of a (rows x centroids) sim
+    matrix, the kernel half of the engine-shared rank key (round-11
+    hardening, ADVICE r9/r10): rounded sim DESC, then RAW sim DESC,
+    then centroid id ASC (the stable-lexsort index order). The raw
+    tie-break neutralizes the rounding-boundary flip: when one engine
+    rounds a boundary-straddling raw up and the other down, the engine
+    that sees a rounded TIE falls back to the raw ordering — which is
+    the order the other engine's rounded key already produced. A
+    residual flip needs two distinct centroids with raw sims within
+    summation-order noise (~1e-15) of EACH OTHER, i.e. duplicate
+    centroids. Every oracle assign CTE ranks by the identical
+    (ROUND(sim_raw, 6) DESC, sim_raw DESC, cid) key; pinned by
+    test_centroid_rank_raw_tiebreak_straddles_boundary. The rounded
+    key uses the half-away-from-zero mechanism (floor(|x|*1e6 + .5),
+    sign restored) matching Spark F.round / DuckDB ROUND — not
+    np.round's half-even (ADVICE r11).
+
+    The IVF assignment closures (similarity.ivf_inverted_lists,
+    semantic._ivf_assign_gemm) call it on the workers. It lives here
+    because this module imports only pyspark: a closure referencing an
+    operators module would make the worker import that module on its
+    own, and the import cycles through plans/__init__."""
+    import numpy as np
+
+    key = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5), raw) / 1e6
+    return np.lexsort((-raw, -key), axis=-1)

@@ -330,7 +330,7 @@ ORDER BY split_lo, split_hi
 
 @register(
     "split_leakage_audit",
-    None,  # oracle installed below (needs the dedup module's shingle SQL)
+    _leakage_sql(),
     doc="Train/val/test leakage audit: the near-dup pair set (3-gram "
     "Jaccard >= 0.6) joined against the content-stable split "
     "assignment; off-diagonal (split, split) cells are eval "
@@ -384,16 +384,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("split_lo", "split_hi")
     )
-
-
-from _imdb_etl_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["split_leakage_audit"] = _REG["split_leakage_audit"].__class__(
-    name="split_leakage_audit",
-    spark=_REG["split_leakage_audit"].spark,
-    oracle=_leakage_sql(),
-    doc=_REG["split_leakage_audit"].doc,
-)
 
 
 # --- per-source curation profile -------------------------------------

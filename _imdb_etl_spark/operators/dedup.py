@@ -27,6 +27,7 @@ import pandas as pd  # module-level: pandas_udf resolves postponed hints here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import hex_prefix_int, md5_prefix_int_sql
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import (
     load_tables,
@@ -1222,13 +1223,6 @@ _BLOOM_SEEDS = 3
 _BLOOM_MIN_HITS = 3  # same >= 3-shared rule as decontaminate_vs_eval
 
 
-def _pos4_sql(expr: str) -> str:
-    """Value of the first 4 md5 hex chars (0..65535) — the bit position."""
-    from _imdb_etl_spark.functions import md5_prefix_int_sql
-
-    return f"({md5_prefix_int_sql(expr, 4)})"
-
-
 _BLOOM_SQL = f"""
 WITH sh AS (
   SELECT doc_id, unnest({_SHINGLE_SQL}) AS sh FROM documents
@@ -1236,7 +1230,7 @@ WITH sh AS (
 ev AS (SELECT DISTINCT sh FROM sh WHERE doc_id < {_N_EVAL_DOCS}),
 seeds AS (SELECT unnest(range(0, {_BLOOM_SEEDS})) AS k),
 bits AS (
-  SELECT DISTINCT {_pos4_sql("CAST(k AS VARCHAR) || ':' || sh")} AS pos
+  SELECT DISTINCT {md5_prefix_int_sql("CAST(k AS VARCHAR) || ':' || sh")} AS pos
   FROM ev CROSS JOIN seeds
 ),
 probe AS (
@@ -1244,7 +1238,7 @@ probe AS (
          SUM(CASE WHEN b.pos IS NOT NULL THEN 1 ELSE 0 END) AS n_set
   FROM (SELECT doc_id, sh FROM sh WHERE doc_id >= {_N_EVAL_DOCS}) s
   CROSS JOIN seeds
-  LEFT JOIN bits b ON b.pos = {_pos4_sql("CAST(seeds.k AS VARCHAR) || ':' || s.sh")}
+  LEFT JOIN bits b ON b.pos = {md5_prefix_int_sql("CAST(seeds.k AS VARCHAR) || ':' || s.sh")}
   GROUP BY s.doc_id, s.sh
 ),
 hits AS (
@@ -1291,9 +1285,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).alias("k")
 
     def pos4(prefix, shc):
-        return F.conv(
-            F.substring(F.md5(F.concat(prefix, F.lit(":"), shc)), 1, 4), 16, 10
-        ).cast("long")
+        return hex_prefix_int(F.md5(F.concat(prefix, F.lit(":"), shc)))
 
     bits = (
         ev.select("sh", seeds)

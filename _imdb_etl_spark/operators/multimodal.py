@@ -1,11 +1,11 @@
 """Multimodal column plumbing: images/audio/video as opaque ``binary``
 payloads with typed metadata, processed by Arrow-batched mapInPandas.
 
-The container has no image/audio codecs, so the *decode* step is stubbed
-(deterministic fake behind an import-try — see ``decode_image_batch``),
-but everything Spark-side is real and tested: the asset schema, the
-binary payloads, the mapInPandas batch iteration, the output schema
-contract, and the fan-out shape for frame sampling.
+Decoding needs no codec library: PNG payloads go through the
+pure-stdlib codec in operators/png_codec.py and WAV through ``wave``.
+Everything Spark-side is real and tested: the asset schema, the binary
+payloads, the mapInPandas batch iteration, the output schema contract,
+and the fan-out shape for frame sampling.
 
 Scale notes: payload bytes ride Arrow buffers into pandas with no
 per-row pickling; mapInPandas streams batches so a 100 TB asset table
@@ -34,13 +34,6 @@ from pyspark.sql.types import (
 
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables, stage_sorted, stage_to_parquet
-
-try:  # codec libs are absent in this container; decode is stubbed
-    from PIL import Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    _HAVE_PIL = False
 
 _MODALITIES = ["image", "audio", "video"]
 
@@ -181,52 +174,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
     return stage_sorted(
         sample_frames(make_assets(docs)), "mm_frames", "asset_id", "frame_no"
-    )
-
-
-def decode_image_batch(payloads: pd.Series, use_real_codec: bool = False) -> pd.DataFrame:
-    """Decode image payloads to (width, height, mode).
-
-    ``use_real_codec=True`` parses real image bytes: PIL when
-    installed (any format it knows), else the pure-stdlib PNG codec in
-    operators/png_codec.py (signature, chunk CRCs, zlib IDAT,
-    scanline unfiltering) — so the real-decode path works in
-    codec-less containers too. The default path remains a
-    clearly-marked deterministic fake deriving dimensions from the
-    content hash, for plumbing tests over non-image payloads.
-    """
-    if use_real_codec:
-        if _HAVE_PIL:
-            import io
-
-            def dims(b: bytes) -> tuple[int, int, str]:
-                with Image.open(io.BytesIO(bytes(b))) as im:
-                    return im.width, im.height, im.mode
-
-        else:
-            from _imdb_etl_spark.operators.png_codec import decode_png
-
-            def dims(b: bytes) -> tuple[int, int, str]:
-                w, h, mode, _ = decode_png(bytes(b))
-                return w, h, mode
-
-        decoded = [dims(b) for b in payloads]
-        return pd.DataFrame(
-            {
-                "width": pd.Series([d[0] for d in decoded], dtype="int32"),
-                "height": pd.Series([d[1] for d in decoded], dtype="int32"),
-                "mode": [d[2] for d in decoded],
-            }
-        )
-    dims_ = payloads.map(
-        lambda b: int.from_bytes(hashlib.md5(bytes(b)).digest()[:2], "big")
-    )
-    return pd.DataFrame(
-        {
-            "width": (dims_ % 640 + 16).astype("int32"),
-            "height": (dims_ // 640 % 480 + 16).astype("int32"),
-            "mode": "FAKE-RGB",
-        }
     )
 
 

@@ -233,7 +233,7 @@ ORDER BY r.lang
 
 @register(
     "pipeline_pretrain_mix",
-    None,  # oracle installed below (needs the dedup module's shingle SQL)
+    _mix_sql(),
     doc="The full pretrain corpus-mix DAG as one declarative plan: "
     "quality gate (narrow map) -> normalized exact dedup (one "
     "hash-agg shuffle + flag join) -> eval decontamination (shingle "
@@ -343,15 +343,3 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
-
-
-# install the oracle lazily (avoids an import cycle with the dedup
-# module at registration time)
-from _imdb_etl_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["pipeline_pretrain_mix"] = _REG["pipeline_pretrain_mix"].__class__(
-    name="pipeline_pretrain_mix",
-    spark=_REG["pipeline_pretrain_mix"].spark,
-    oracle=_mix_sql(),
-    doc=_REG["pipeline_pretrain_mix"].doc,
-)

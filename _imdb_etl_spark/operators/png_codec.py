@@ -8,9 +8,9 @@ implements the public PNG format (RFC 2083 / W3C PNG spec) for 8-bit
 greyscale / RGB / RGBA, non-interlaced — the subset every real-world
 thumbnail pipeline hits first.
 
-``decode_image_batch(use_real_codec=True)`` in operators/multimodal.py
-prefers PIL when installed and falls back to this codec for PNG
-payloads, so the real-decode path is testable in any environment.
+The registered ``multimodal_decode_png`` face in operators/multimodal.py
+decodes its payloads with this codec, so the real-decode path runs in
+any environment.
 
 Scale note: the codec is called from Arrow-batched mapInPandas only —
 per-asset CPU work on executors, no driver involvement, payload bytes

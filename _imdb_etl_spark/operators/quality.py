@@ -141,29 +141,6 @@ def dq_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def observe_profile(df: DataFrame, name: str, *cols: str):
-    """Piggyback data-quality telemetry on an action with ``observe`` —
-    zero extra scans. At 100 TB a separate profiling pass costs as much
-    as the job itself; Observation accumulates metrics inside the very
-    task set that produces the output.
-
-    Returns (instrumented_df, observation). After the FIRST action on
-    the instrumented frame, ``observation.get`` holds row count plus
-    per-column null counts and min/max.
-    """
-    from pyspark.sql import Observation
-
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        metrics.append(
-            F.sum(F.col(c).isNull().cast("long")).alias(f"{c}_nulls")
-        )
-        metrics.append(F.min(c).alias(f"{c}_min"))
-        metrics.append(F.max(c).alias(f"{c}_max"))
-    obs = Observation(name)
-    return df.observe(obs, *metrics), obs
-
-
 # --- piggybacked DQ metrics via df.observe ------------------------------
 #
 # dq_null_profile and dq_constraint_checks each COST a pass over the

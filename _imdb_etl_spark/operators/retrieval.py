@@ -33,6 +33,7 @@ import pandas as pd  # resolves postponed type hints here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import doc_permille_bucket, md5_prefix_int_sql
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables, stage_sorted, stage_to_parquet
 
@@ -485,16 +486,9 @@ def corpus_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EMBED_DIM = 8
 
 
-def _hex4_int_sql(expr: str) -> str:
-    """DuckDB integer value of the first 4 md5 hex chars of ``expr``."""
-    from _imdb_etl_spark.functions import md5_prefix_int_sql
-
-    return md5_prefix_int_sql(expr, 4)
-
-
 def _embed_component_sql(j: int) -> str:
     salted = f"text || '_{j}'"
-    return f"(CAST({_hex4_int_sql(salted)} AS DOUBLE) / 65535 - 0.5)"
+    return f"(CAST({md5_prefix_int_sql(salted)} AS DOUBLE) / 65535 - 0.5)"
 
 
 _EMBED_SQL = f"""
@@ -771,10 +765,8 @@ ORDER BY p.doc_id
     "quality-filter shape next to the in-corpus text_bigram_lm_score.",
 )
 def text_lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.functions import hex_prefix_int
-
     (docs,) = load_tables(spark, sf_dir, "documents")
-    bucket = hex_prefix_int(F.md5(F.col("doc_id").cast("string"))) % 1000
+    bucket = doc_permille_bucket("doc_id")
     # eager parquet staging: the token stream feeds c1/v AND the pair
     # stream, and the pair stream feeds c2 AND the scored side — four
     # consumers that would otherwise re-run the corpus tokenization

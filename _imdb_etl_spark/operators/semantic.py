@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import rank_centroids_desc
 from _imdb_etl_spark.operators.similarity import _cos_sql, _dot
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables, spread
@@ -278,28 +279,27 @@ def _pq_encode_lut(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     encoded: (vec_id, s, code_id) — every vector's nearest code per
     subspace. lut: (query_id, s, code_id, part) — each query's dot
-    product against every codebook entry. Used verbatim by sim_knn_pq
-    and sim_knn_ivfpq so their quantization semantics can never drift
-    apart (the SQL side shares the same block for the same reason).
+    product against every codebook entry. Read by sim_knn_ivfpq;
+    sim_knn_pq's fused kernel (_pq_adc_topk_gemm) uses the same
+    codebook, rank key and LUT rounding.
 
     Round 11: the corpus-side encode is GEMM-batched
-    (_pq_encode_gemm) — the previous expression route fanned every
-    vector out to N x _N_SUB x _N_CODES (N x 1024) rows and ranked
-    them in a window keyed (vec_id, s), which was the PQ family's
-    dominant stage at 1000x (~30x the data bytes shuffled twice). The
-    expression route survives as _pq_encode_expression, pinned
-    output-equal by test_pq_encode_gemm_matches_expression_route.
-    The LUT side
-    stays expression-based: it touches only the _N_QUERIES query
-    vectors x the broadcast codebook (a few thousand rows)."""
+    (_pq_encode_gemm) — an expression route fanned every vector out
+    to N x _N_SUB x _N_CODES (N x 1024) rows and ranked them in a
+    window keyed (vec_id, s), which was the PQ family's dominant
+    stage at 1000x (~30x the data bytes shuffled twice). The GEMM
+    encode is pinned equal to the oracle's `encoded` CTE by
+    test_pq_encode_gemm_matches_expression_route. The LUT side stays
+    expression-based: it touches only the _N_QUERIES query vectors x
+    the broadcast codebook (a few thousand rows)."""
     encoded = _pq_encode_gemm(emb)
     lut = _pq_query_lut(emb)
     return encoded, lut
 
 
 def _pq_codebook(emb: DataFrame) -> DataFrame:
-    """The deterministic-seed PQ codebook: (s, code_id, cs) — shared
-    by the LUT builder and the expression-route encode twin."""
+    """The deterministic-seed PQ codebook: (s, code_id, cs), read by
+    the LUT builder."""
     # subspace fan-out via explode of a literal index array — a narrow
     # map-side op, NOT a join: no nested-loop node ever enters the plan
     subs = F.explode(F.array(*[F.lit(s) for s in range(_N_SUB)])).alias("s")
@@ -324,7 +324,7 @@ def _pq_sub_slice(v):
 
 def _pq_vec_subs(emb: DataFrame) -> DataFrame:
     """Per-vector subspace slices (vec_id, s, vs) — the fan-out side
-    of the expression-route encode and the (query-only) LUT build."""
+    of the (query-only) LUT build."""
     subs = F.explode(F.array(*[F.lit(s) for s in range(_N_SUB)])).alias("s")
     return emb.select("vec_id", "embedding", subs).select(
         "vec_id", "s", _pq_sub_slice(F.col("embedding")).alias("vs")
@@ -348,40 +348,6 @@ def _pq_query_lut(emb: DataFrame) -> DataFrame:
             "code_id",
             F.round(_dot(F.col("vs"), F.col("cs")), 6).alias("part"),
         )
-    )
-
-
-def _pq_encode_expression(emb: DataFrame) -> DataFrame:
-    """The expression-route PQ encode — fan every vector out to
-    N x _N_SUB subspace rows, join the broadcast codebook
-    (x _N_CODES), rank the L2 distances in a window keyed (vec_id,
-    s). This is the bitwise-parity REFERENCE for the registered GEMM
-    encode (_pq_encode_gemm), pinned output-equal by
-    test_pq_encode_gemm_matches_expression_route — NOT the volume
-    path: the N x 1024 intermediate made it the PQ family's dominant
-    stage at 1000x. Rank key (rounded L2, RAW L2, code_id) matches
-    the oracle's encoded CTE and the GEMM kernel's lexsort."""
-    codebook = _pq_codebook(emb)
-    l2 = F.aggregate(
-        F.zip_with(
-            F.col("vs"),
-            F.col("cs"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    enc_w = Window.partitionBy("vec_id", "s").orderBy("d", "d_raw", "code_id")
-    return (
-        _pq_vec_subs(emb)
-        .join(F.broadcast(codebook), "s")
-        .select(
-            "vec_id", "s", "code_id", l2.alias("d_raw"), F.round(l2, 6).alias("d")
-        )
-        .withColumn("rnk", F.row_number().over(enc_w))
-        .where(F.col("rnk") == 1)
-        .select("vec_id", "s", "code_id")
     )
 
 
@@ -478,7 +444,6 @@ def _pq_encode_gemm(emb: DataFrame) -> DataFrame:
     return emb.select("vec_id", "embedding").mapInPandas(encode, out_schema)
 
 
-
 @register(
     "sim_knn_pq",
     _pq_sql(),
@@ -491,13 +456,12 @@ def _pq_encode_gemm(emb: DataFrame) -> DataFrame:
     "0.38). "
     "Queries precompute a dot-product lookup table against the "
     "codebook (queries x subspaces x codes rows — broadcastable by "
-    "construction), scoring is a broadcast-LUT join + per-(query, "
-    "vector) partial-agg sum, never touching raw corpus floats. The "
-    "corpus-side encode argmin is one Arrow-batched mapInPandas GEMM "
-    "pass against the broadcast codebook tensor (zero shuffled rows); "
-    "the windowed-rank expression route survives as the bitwise-"
-    "parity twin, pinned output-equal in pytest alongside the "
-    "recall-vs-exact floor.",
+    "construction). One Arrow-batched mapInPandas pass encodes each "
+    "corpus chunk against the broadcast codebook tensor, sums the "
+    "LUT parts per (query, vector) and keeps each chunk's top-k "
+    "(zero shuffled rows, raw corpus floats never scored); it is "
+    "pinned equal to the oracle's encode and join-route scoring in "
+    "pytest alongside the recall-vs-exact floor.",
 )
 def sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emb,) = load_tables(spark, sf_dir, "embeddings")
@@ -509,23 +473,6 @@ def sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("neighbor_rank", F.row_number().over(rank_w))
         .where(F.col("neighbor_rank") <= _PQ_TOP_K)
         .orderBy("query_id", "neighbor_rank")
-    )
-
-
-def _pq_scored_join_route(emb: DataFrame) -> DataFrame:
-    """The join-route ADC scoring twin — encode rows joined to the
-    broadcast LUT, summed per (query, neighbor). This is the parity
-    REFERENCE for the fused kernel (_pq_adc_topk_gemm), pinned
-    output-equal by test_pq_adc_gemm_matches_join_route — NOT the
-    volume path: the LUT join fans the corpus out to
-    N x _N_SUB x _N_QUERIES rows before the partial agg, which was
-    sim_knn_pq's dominant stage once the encode went GEMM."""
-    encoded, lut = _pq_encode_lut(emb)
-    return (
-        encoded.join(F.broadcast(lut), ["s", "code_id"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.round(F.sum("part"), 6).alias("approx_dot"))
     )
 
 
@@ -717,7 +664,7 @@ _DOT_SQL_FULL = (
 
 @register(
     "sim_knn_ivfpq",
-    None,  # oracle installed below (_ivfpq_sql imports from similarity)
+    _ivfpq_sql(),
     doc="IVF+PQ composed index — the FAISS-style production ANN shape: "
     "IVF inverted lists prune the candidate set to the probed lists "
     "(pair work corpus/centroids per probe), then PQ asymmetric "
@@ -798,7 +745,7 @@ def _ivf_assign_gemm(normed: DataFrame) -> DataFrame:
     similarity.ivf_inverted_lists: cosine dots as one chunked numpy
     matmul against the broadcast (k x dim) centroid matrix; rank key
     (rounded sim DESC, RAW sim DESC, centroid id ASC) via
-    similarity._rank_centroids_desc, mirrored exactly by the oracle's
+    functions.rank_centroids_desc, mirrored exactly by the oracle's
     assign CTE; zero-norm vectors/centroids rejected loudly (NaN sims
     rank differently across engines)."""
     import numpy as np
@@ -856,15 +803,7 @@ def _ivf_assign_gemm(normed: DataFrame) -> DataFrame:
                         "the corpus"
                     )
                 raw = (m @ cm.T) / (nr[:, None] * cn[None, :])
-                # inlined similarity._rank_centroids_desc (the pinned
-                # rank-key contract): referencing the module function
-                # from this closure would make the worker unpickle
-                # import similarity standalone, which cycles through
-                # plans/__init__ back into a partially-initialized
-                # module. test_centroid_rank_raw_tiebreak pins the two
-                # copies identical.
-                key = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5), raw) / 1e6
-                order = np.lexsort((-raw, -key), axis=-1)
+                order = rank_centroids_desc(raw)
                 vids = sub["vec_id"].to_numpy(dtype=np.int64)
                 is_q = vids < n_queries
                 p_eff = min(n_probe, order.shape[1])
@@ -893,16 +832,6 @@ def _ivf_assign_gemm(normed: DataFrame) -> DataFrame:
                 yield pd.concat(parts, ignore_index=True)
 
     return normed.mapInPandas(assign, out_schema)
-
-
-from _imdb_etl_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["sim_knn_ivfpq"] = _REG["sim_knn_ivfpq"].__class__(
-    name="sim_knn_ivfpq",
-    spark=_REG["sim_knn_ivfpq"].spark,
-    oracle=_ivfpq_sql(),
-    doc=_REG["sim_knn_ivfpq"].doc,
-)
 
 
 # --- IVF+PQ with exact re-rank: the two-stage serving pattern ---------
@@ -940,7 +869,7 @@ ORDER BY query_id, neighbor_rank
 
 @register(
     "sim_knn_ivfpq_refined",
-    None,  # oracle installed below (composes the shared scored CTEs)
+    _ivfpq_refined_sql(),
     doc=f"Two-stage ANN serving (coarse-then-refine, the production "
     "retrieval pattern FAISS calls refine/RFlat): the IVF+PQ ADC "
     f"stage shortlists the top-{_REFINE_R} candidates per query from "
@@ -992,14 +921,6 @@ def sim_knn_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("neighbor_rank") <= _IVFPQ_TOP_K)
         .orderBy("query_id", "neighbor_rank")
     )
-
-
-_REG["sim_knn_ivfpq_refined"] = _REG["sim_knn_ivfpq_refined"].__class__(
-    name="sim_knn_ivfpq_refined",
-    spark=_REG["sim_knn_ivfpq_refined"].spark,
-    oracle=_ivfpq_refined_sql(),
-    doc=_REG["sim_knn_ivfpq_refined"].doc,
-)
 
 
 # --- top principal component: distributed covariance + local solve ---

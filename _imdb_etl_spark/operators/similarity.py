@@ -25,6 +25,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import rank_centroids_desc
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import (
     load_tables,
@@ -754,29 +755,6 @@ ORDER BY vec_a, vec_b
 """
 
 
-def _rank_centroids_desc(raw):
-    """Per-row descending centroid ranking, the kernel half of the
-    engine-shared rank key (round-11 hardening, ADVICE r9/r10):
-    rounded sim DESC, then RAW sim DESC, then centroid id ASC (the
-    stable-lexsort index order). The raw tie-break neutralizes the
-    rounding-boundary flip: when one engine rounds a
-    boundary-straddling raw up and the other down, the engine that
-    sees a rounded TIE falls back to the raw ordering — which is the
-    order the other engine's rounded key already produced. A residual
-    flip now needs two distinct centroids with raw sims within
-    summation-order noise (~1e-15) of EACH OTHER, i.e. duplicate
-    centroids. Every oracle assign CTE ranks by the identical
-    (ROUND(sim_raw, 6) DESC, sim_raw DESC, cid) key; pinned by
-    test_centroid_rank_raw_tiebreak_straddles_boundary. The rounded
-    key uses the half-away-from-zero mechanism (floor(|x|*1e6 + .5),
-    sign restored) matching Spark F.round / DuckDB ROUND — not
-    np.round's half-even (ADVICE r11)."""
-    import numpy as np
-
-    key = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5), raw) / 1e6
-    return np.lexsort((-raw, -key), axis=-1)
-
-
 def ivf_inverted_lists(emb: DataFrame) -> DataFrame:
     """The shared IVF coarse-quantization stage of the embedding-dedup
     scale faces: assign every vector to its _DEDUP_PROBE nearest
@@ -880,14 +858,7 @@ def ivf_inverted_lists(emb: DataFrame) -> DataFrame:
                         "the corpus"
                     )
                 raw = (m @ cm.T) / (nr[:, None] * cn[None, :])
-                # inlined _rank_centroids_desc (the pinned rank-key
-                # contract — rounded DESC, raw DESC, cid ASC):
-                # referencing the module function from this closure
-                # would make the worker unpickle re-import this module
-                # standalone, which cycles through plans/__init__.
-                # test_centroid_rank_raw_tiebreak pins the copies.
-                key = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5), raw) / 1e6
-                top = np.lexsort((-raw, -key), axis=-1)[:, :probe]
+                top = rank_centroids_desc(raw)[:, :probe]
                 p_eff = top.shape[1]
                 yield pd.DataFrame(
                     {

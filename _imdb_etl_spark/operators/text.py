@@ -1165,7 +1165,7 @@ _WIN_DF_PERMILLE = 1
 # boilerplate rule with an ABSOLUTE ceiling (round 12, the r11
 # verdict's re-baseline remedy for the face's 1000x single-box wall).
 # The ceiling is calibrated against the measured true-cluster df
-# distribution of the salted scale corpus (tools/probe_winnow_struct):
+# distribution of the salted scale corpus:
 # true duplicate clusters are intra-replica by construction, their df
 # equals their cluster size, and the signal measured at df 10-100 at
 # EVERY probed scale (cluster sizes replicate; they do not grow with
@@ -1236,62 +1236,13 @@ ORDER BY p.doc_a, p.doc_b
 """
 
 
-# NOT registered (round 10, the r6/r8/r9 demotion precedent for exact
-# faces whose scale sibling is pinned output-equal): the winnow PAIR
-# face was the registry's last documented output-quadratic face — on a
-# cluster-heavy corpus the pair OUTPUT is quadratic in cluster size by
-# definition (29.1M true pairs at the 100x probe), and its own
-# docstring routed all volume work to the bounded sibling
-# dedup_winnow_clusters (registered, linear (cluster, size) output
-# through the shared rare-postings helper, sf10 175.7 s). A driver row
-# should not certify a face whose docstring routes volume elsewhere.
-# The driver's oracle pairing moves to pytest: _WINNOW_PAIRS_SQL
-# replays via DuckDB bitwise (test_winnow_pairs_matches_duckdb_oracle),
-# a pure-Python fingerprint replay pins every pair + completeness +
-# 0.9-Jaccard recall (test_winnow_pairs_replay_and_recall), and the
-# registered cluster face is reconciled as exactly the connected
-# components of this edge set
-# (test_winnow_clusters_reconcile_with_pair_face) — the same structure
-# as fuzzy_part_match behind fuzzy_part_name_groups (r9).
-def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing pair matching (the MOSS match step): documents
-    sharing >= _WIN_MIN_SHARED winnowed fingerprint values — each
-    shared value certifies a common substring of length >=
-    _WIN_W + _WIN_K - 1 — with overlap scored against the smaller
-    fingerprint set. Library/pytest verifier face behind the
-    registered bounded sibling dedup_winnow_clusters (see the
-    demotion note above). Scale safety of the CANDIDATE stage is
-    MOSS's boilerplate rule with a capped corpus-relative bound,
-    max(_WIN_DF_FLOOR, min(_WIN_DF_CEIL, _WIN_DF_PERMILLE permille
-    of docs)) — see the _WIN_DF_CEIL calibration note; the
-    OUTPUT is what is quadratic, which no candidate algorithm can
-    shrink."""
-    fp, pairs = _winnow_match_edges(spark, sf_dir)
-    sizes = fp.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nf"))
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("nf").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("nf").alias("nb"))
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("n_shared").cast("long").alias("n_shared"),
-            F.expr("(1000 * n_shared) div least(na, nb)")
-            .cast("long")
-            .alias("overlap_permille"),
-        )
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 def _winnow_rare_postings(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(fp, rp): the materialized (doc_id, fingerprint-value) posting
-    table (it feeds the rarity filter, both pair-join sides, and the
-    pair face's size table — lazy, each consumer would re-run the
-    O(chars x w) lambda extraction) and its rare-filtered subset
+    table (it feeds both the rarity filter and the rare-subset join —
+    lazy, each consumer would re-run the O(chars x w) lambda
+    extraction) and its rare-filtered subset
     (values at or under the corpus-relative boilerplate cap).
 
     The posting table materializes to PARQUET, not a heap cache: it is
@@ -1350,24 +1301,6 @@ def _winnow_rare_postings(
     return fp, fp.join(rare, "v")
 
 
-def _winnow_match_edges(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(fp, pairs): the ONE definition of the winnow match relation —
-    ``pairs`` is (doc_a, doc_b, n_shared) for pairs sharing >=
-    _WIN_MIN_SHARED rare fingerprint values."""
-    fp, rp = _winnow_rare_postings(spark, sf_dir)
-    a = rp.select(F.col("doc_id").alias("doc_a"), "v")
-    b = fp.select(F.col("doc_id").alias("doc_b"), F.col("v").alias("vb"))
-    pairs = (
-        a.join(b, (F.col("v") == F.col("vb")) & (F.col("doc_a") < F.col("doc_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= _WIN_MIN_SHARED)
-    )
-    return fp, pairs
-
-
 _WINNOW_CLUSTERS_SQL = f"""
 WITH RECURSIVE pairs AS MATERIALIZED (
   SELECT doc_a, doc_b FROM ({_WINNOW_PAIRS_SQL.strip().rstrip()})
@@ -1395,22 +1328,19 @@ ORDER BY cluster_id
 @register(
     "dedup_winnow_clusters",
     _WINNOW_CLUSTERS_SQL,
-    doc="The cluster-level production face of winnowing dedup — the "
-    "variant dedup_winnow_pairs's docstring names: connected "
+    doc="The cluster-level production face of winnowing dedup: connected "
     "components (min-label propagation + pointer jumping, the shared "
     "O(log diameter) machinery of dedup_clusters) consume the winnow "
     "match edges and emit ONE row per duplicate cluster "
     "(cluster_id = min doc_id, cluster_size), never the pair "
-    "expansion. On a cluster-heavy corpus the pair face's OUTPUT is "
+    "expansion. On a cluster-heavy corpus the pair list's OUTPUT is "
     "quadratic in cluster size (measured 29.1M rows / 231 s at the "
     "100x probe); this face's output is linear in the number of "
     "clusters (singleton docs — no match edge — are not emitted, so "
-    "rows = duplicate clusters only). The edge derivation is the "
-    "identical shared posting helper (_winnow_rare_postings) so the "
-    "two faces cannot drift; the oracle states the same fixpoint as a "
-    "recursive CTE over the pair face's own SQL. Cluster sizes are "
-    "reconciled against a pure-Python union-find over the pair face's "
-    "output in pytest (third implementation). Scale lever (found when "
+    "rows = duplicate clusters only). The oracle states the same "
+    "fixpoint as a recursive CTE over the winnow pair SQL; cluster "
+    "sizes are reconciled against a pure-Python union-find over that "
+    "SQL's pairs in pytest (third implementation). Scale lever (found when "
     "the naive pair-graph CC thrashed the JVM at the 100x probe): "
     "n_shared depends ONLY on the two docs' rare-fingerprint-set "
     "intersection, so docs with IDENTICAL rare sets are "

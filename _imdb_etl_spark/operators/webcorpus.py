@@ -31,7 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import doc_permille_bucket
+from _imdb_etl_spark.functions import (
+    doc_permille_bucket,
+    hex_prefix_int,
+    md5_prefix_int_sql,
+)
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables, scratch_dir, spread, stage_to_parquet
 
@@ -271,14 +275,7 @@ def dedup_corpus_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 0, so buckets 0-535 are marginally likelier (1/65536 each) — an
 # acceptable, documented bias for mix control; both engines compute
 # the identical membership so the oracle is exact.
-_BUCKET_SQL = (
-    "(("
-    + " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), {k + 1}, 1)) - 1) * {16 ** (3 - k)}"
-        for k in range(4)
-    )
-    + ") % 1000)"
-)
+_BUCKET_SQL = f"({md5_prefix_int_sql('CAST(doc_id AS VARCHAR)')} % 1000)"
 
 _BALANCED_SQL = f"""
 WITH counts AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang),
@@ -797,11 +794,9 @@ ORDER BY s.lang
     "writer-side companion of corpus_token_budget_plan's pure plan.",
 )
 def corpus_upsample_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.functions import hex_prefix_int
-
     (docs,) = load_tables(spark, sf_dir, "documents")
     plan = _epoch_plan_df(docs, 1000).select("lang", "ep")
-    bucket = hex_prefix_int(F.md5(F.col("doc_id").cast("string"))) % 1000
+    bucket = doc_permille_bucket("doc_id")
     c = (
         docs.select(
             "lang",
@@ -880,20 +875,14 @@ _N_SHARDS = 16
 _CKSUM_MOD = 1_000_000_007
 
 
-def _hex4_sql(expr: str) -> str:
-    from _imdb_etl_spark.functions import md5_prefix_int_sql
-
-    return md5_prefix_int_sql(expr, 4)
-
-
 _EPOCH_SHUFFLE_SQL = f"""
 WITH keyed AS (
   SELECT doc_id,
          len(string_split(text, ' ')) AS n_toks,
          md5('{_SHUFFLE_SEED}:' || CAST(doc_id AS VARCHAR)) AS okey,
-         ({_hex4_sql("'" + _SHUFFLE_SEED + ":' || CAST(doc_id AS VARCHAR)")}
+         ({md5_prefix_int_sql("'" + _SHUFFLE_SEED + ":' || CAST(doc_id AS VARCHAR)")}
           % {_N_SHARDS}) AS shard,
-         {_hex4_sql("CAST(doc_id AS VARCHAR)")} AS idh
+         {md5_prefix_int_sql("CAST(doc_id AS VARCHAR)")} AS idh
   FROM documents
 ),
 pos AS (
@@ -926,8 +915,6 @@ ORDER BY shard
     "shuffle is the shard hash partition.",
 )
 def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.functions import hex_prefix_int
-
     (docs,) = load_tables(spark, sf_dir, "documents")
     okey = F.md5(
         F.concat(F.lit(f"{_SHUFFLE_SEED}:"), F.col("doc_id").cast("string"))
@@ -1008,7 +995,7 @@ ORDER BY f.lang
 
 @register(
     "dedup_incremental_minhash",
-    None,  # oracle installed below (composes dedup's banding CTE)
+    _incremental_minhash_sql(),
     doc="Incremental NEAR-dup ingest: the crawl increment (same "
     "deterministic 20% slice as dedup_incremental_batch) is checked "
     "against the accumulated corpus for 3-gram-Jaccard >= 0.6 "
@@ -1073,16 +1060,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from _imdb_etl_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-
-_REG["dedup_incremental_minhash"] = _REG["dedup_incremental_minhash"].__class__(
-    name="dedup_incremental_minhash",
-    spark=_REG["dedup_incremental_minhash"].spark,
-    oracle=_incremental_minhash_sql(),
-    doc=_REG["dedup_incremental_minhash"].doc,
-)
-
-
 # --- weighted reservoir sampling per source (Efraimidis-Spirakis) ------
 #
 # Sample k docs per source WITHOUT replacement with inclusion
@@ -1103,10 +1080,8 @@ _WRES_DENOM = float(16**8 + 1)
 
 
 def _wres_sql() -> str:
-    u = (
-        f"(({_hex4_sql_n8('CAST(doc_id AS VARCHAR)', _WRES_SEED)}) + 1.0)"
-        f" / {_WRES_DENOM}"
-    )
+    h = md5_prefix_int_sql(f"'{_WRES_SEED}:' || CAST(doc_id AS VARCHAR)", 8)
+    u = f"(({h}) + 1.0) / {_WRES_DENOM}"
     return f"""
 WITH keyed AS (
   -- round BEFORE ranking (round-7 advisory fix): ln() is not required
@@ -1131,12 +1106,6 @@ ORDER BY source, rnk
 """
 
 
-def _hex4_sql_n8(expr: str, seed: str) -> str:
-    from _imdb_etl_spark.functions import md5_prefix_int_sql
-
-    return md5_prefix_int_sql(f"'{seed}:' || {expr}", 8)
-
-
 @register(
     "corpus_weighted_reservoir",
     _wres_sql(),
@@ -1150,8 +1119,6 @@ def _hex4_sql_n8(expr: str, seed: str) -> str:
     "uniform row sampling cannot express.",
 )
 def corpus_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.functions import hex_prefix_int
-
     (docs,) = load_tables(spark, sf_dir, "documents")
     h = hex_prefix_int(
         F.md5(F.concat(F.lit(f"{_WRES_SEED}:"), F.col("doc_id").cast("string"))),
@@ -1526,7 +1493,7 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_minhash_index_persisted",
-    None,  # oracle installed below (same rollup as the in-plan probe)
+    _incremental_minhash_sql(),  # the same rollup as the in-plan probe
     doc="Persisted MinHash band index: the corpus slice is signed "
     "ONCE and written as two parquet tables (banding partitioned by "
     "band_id + signature/shingle sets), then the day's increment is "
@@ -1617,13 +1584,3 @@ def dedup_minhash_index_persisted(
         )
         .orderBy("lang")
     )
-
-
-_REG["dedup_minhash_index_persisted"] = _REG[
-    "dedup_minhash_index_persisted"
-].__class__(
-    name="dedup_minhash_index_persisted",
-    spark=_REG["dedup_minhash_index_persisted"].spark,
-    oracle=_incremental_minhash_sql(),
-    doc=_REG["dedup_minhash_index_persisted"].doc,
-)

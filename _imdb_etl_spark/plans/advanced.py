@@ -241,9 +241,8 @@ def _fuzzy_name_pairs(part: DataFrame) -> DataFrame:
     the signature self-join generates candidates linear in distinct
     names, verified by the same-first-token block and Levenshtein <= 1.
     Emits unordered name pairs (nm_a <= nm_b; the diagonal is kept for
-    ED=0 duplicate groups). Shared by the expansion face
-    (fuzzy_part_name_match) and the bounded group face
-    (fuzzy_part_name_groups) so the two can never drift."""
+    ED=0 duplicate groups). The candidate stage of the bounded group
+    face (fuzzy_part_name_groups)."""
     block = F.split(F.col("p_name"), " ").getItem(0)
     names = part.select("p_name").distinct().select(
         F.col("p_name").alias("nm"), block.alias("blk")
@@ -276,6 +275,9 @@ def _fuzzy_name_pairs(part: DataFrame) -> DataFrame:
     )
 
 
+# The part-pair expansion that fuzzy_part_name_groups stops short of:
+# quadratic in duplicate-group size by definition, so it is no face,
+# only the DuckDB statement pytest counts n_pairs against.
 _FUZZY_SQL = """
 SELECT a.p_partkey AS part_a, b.p_partkey AS part_b,
        a.p_name AS name_a, b.p_name AS name_b,
@@ -287,83 +289,6 @@ JOIN part b
 WHERE levenshtein(a.p_name, b.p_name) <= 1
 ORDER BY part_a, part_b
 """
-
-
-# NOT registered (round 9, the r6/r8 demotion precedent for exact
-# faces whose scale sibling is pinned output-equal): the part-pair
-# EXPANSION face was the registry's last sf1 watchdog cap-out and OOMs
-# the JVM at sf10 generating its ~billions-row output — quadratic in
-# duplicate-group size BY DEFINITION (compute is FastSS-linear; the
-# output is the cost). A driver row should not certify a face whose
-# own docstring routes all volume work elsewhere. Demoted to the
-# pytest verifier behind the registered bounded face
-# fuzzy_part_name_groups: both share the _fuzzy_name_pairs candidate
-# stage so they cannot drift, pytest reconciles the group face's
-# n_pairs against this face's actual expansion counts
-# (test_fuzzy_groups_n_pairs_equals_expansion_counts) and replays
-# _FUZZY_SQL via DuckDB against this face bitwise
-# (test_fuzzy_expansion_matches_duckdb_oracle) at test scale.
-_FUZZY_MATCH_DOC = (
-    "Fuzzy matching restructured around the data's true shape "
-    "(round 6, after the 10x audit): the corpus has ~64 DISTINCT "
-    "names over 20k+ parts, so pair work belongs at the distinct-name "
-    "level — deletion-neighborhood signatures (FastSS: a name plus "
-    "its single-char deletions; strings within edit distance 1 always "
-    "share one) generate name-pair candidates, Levenshtein <= 1 plus "
-    "the same-first-token rule verifies, and only then are name pairs "
-    "expanded to part pairs. Compute is linear in distinct names; the "
-    "remaining cost is the OUTPUT expansion join, which no algorithm "
-    "can shrink because the all-duplicate-pairs answer is itself "
-    "quadratic in group size — the scalable production variant stops "
-    "at (name_a, name_b, group sizes) before the expansion. The "
-    "first-token-blocked self-join this replaces measured past a "
-    "150 s cap at 10x (block key cardinality ~92 does not grow with "
-    "the corpus)."
-)
-
-
-def fuzzy_part_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The part-pair expansion parity face (see _FUZZY_MATCH_DOC and
-    the demotion note above): library/pytest verifier behind the
-    registered bounded face fuzzy_part_name_groups."""
-    (part,) = load_tables(spark, sf_dir, "part")
-    name_pairs = _fuzzy_name_pairs(part)
-    pa = part.select(F.col("p_partkey").alias("key_a"), F.col("p_name").alias("pn_a"))
-    pb = part.select(F.col("p_partkey").alias("key_b"), F.col("p_name").alias("pn_b"))
-    # diagonal (identical names): ordered pairs within the duplicate
-    # group; off-diagonal: normalize so part_a is the smaller key and
-    # name columns follow their part
-    diag = (
-        name_pairs.where(F.col("nm_a") == F.col("nm_b"))
-        .join(pa, F.col("pn_a") == F.col("nm_a"))
-        .join(pb, (F.col("pn_b") == F.col("nm_b")) & (F.col("key_a") < F.col("key_b")))
-        .select(
-            F.col("key_a").alias("part_a"),
-            F.col("key_b").alias("part_b"),
-            F.col("pn_a").alias("name_a"),
-            F.col("pn_b").alias("name_b"),
-        )
-    )
-    off = (
-        name_pairs.where(F.col("nm_a") < F.col("nm_b"))
-        .join(pa, F.col("pn_a") == F.col("nm_a"))
-        .join(pb, F.col("pn_b") == F.col("nm_b"))
-        .select(
-            F.least("key_a", "key_b").alias("part_a"),
-            F.greatest("key_a", "key_b").alias("part_b"),
-            F.when(F.col("key_a") < F.col("key_b"), F.col("pn_a"))
-            .otherwise(F.col("pn_b"))
-            .alias("name_a"),
-            F.when(F.col("key_a") < F.col("key_b"), F.col("pn_b"))
-            .otherwise(F.col("pn_a"))
-            .alias("name_b"),
-        )
-    )
-    return (
-        diag.unionByName(off)
-        .withColumn("edit_distance", F.levenshtein("name_a", "name_b"))
-        .orderBy("part_a", "part_b")
-    )
 
 
 _FUZZY_GROUPS_SQL = """
@@ -389,8 +314,8 @@ ORDER BY name_a, name_b
 @register(
     "fuzzy_part_name_groups",
     _FUZZY_GROUPS_SQL,
-    doc="The production-scale face fuzzy_part_name_match's docstring "
-    "names: stop BEFORE the part-pair output expansion. The answer to "
+    doc="Fuzzy part-name matching that stops BEFORE the part-pair "
+    "output expansion. The answer to "
     "'which names fuzzily collide, and how big is the blast radius' "
     "is (name_a, name_b, group sizes, pair count) — bounded by "
     "distinct-name pairs, while the expanded pair list is quadratic "
@@ -400,7 +325,7 @@ ORDER BY name_a, name_b
     "generation + verify is the shared FastSS deletion-neighborhood "
     "stage (_fuzzy_name_pairs); n_pairs is n*(n-1)/2 on the diagonal "
     "(unordered within-group pairs) and na*nb off it, exactly the row "
-    "counts the expansion face would produce. Downstream consumers "
+    "counts the expansion would produce. Downstream consumers "
     "expand only the groups they act on.",
 )
 def fuzzy_part_name_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1632,7 +1557,7 @@ ORDER BY set_name
 
 @register(
     "sketch_distinct_kmv_setops",
-    None,  # installed below (composes md5_prefix_int_sql at import)
+    _kmv_sql(),
     doc="Mergeable KMV (bottom-k) distinct sketch with set operations "
     "— the sketch family HLL can't do: per-event-type sketches keep "
     f"the {_KMV_K} smallest 48-bit md5 hashes of the user set; the "
@@ -1733,18 +1658,6 @@ def sketch_distinct_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return typed.unionByName(urow).unionByName(irow).orderBy("set_name")
-
-
-from _imdb_etl_spark.plans.registry import REGISTRY as _REG_KMV  # noqa: E402
-
-_REG_KMV["sketch_distinct_kmv_setops"] = _REG_KMV[
-    "sketch_distinct_kmv_setops"
-].__class__(
-    name="sketch_distinct_kmv_setops",
-    spark=_REG_KMV["sketch_distinct_kmv_setops"].spark,
-    oracle=_kmv_sql(),
-    doc=_REG_KMV["sketch_distinct_kmv_setops"].doc,
-)
 
 
 # --- exact distinct via mergeable bitmap blocks ------------------------

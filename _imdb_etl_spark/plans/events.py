@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, dsum
+from _imdb_etl_spark.functions import dec, dsum, hex_prefix_int, md5_prefix_int_sql
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables
 
@@ -2494,13 +2494,12 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct-user aggregate; everything is integer until the chi-square
 # terms.
 
-_SRM_SQL = """
+_SRM_SQL = f"""
 WITH users AS (
   SELECT DISTINCT user_id FROM events
 ),
 assigned AS (
-  SELECT CASE WHEN (strpos('0123456789abcdef',
-                    substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) - 1) % 2 = 0
+  SELECT CASE WHEN {md5_prefix_int_sql("CAST(user_id AS VARCHAR)", 1)} % 2 = 0
               THEN 'A' ELSE 'B' END AS variant
   FROM users
 ),
@@ -2534,8 +2533,6 @@ ORDER BY variant
     "agreeing on the full decision path is what the hash checks.",
 )
 def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.functions import hex_prefix_int
-
     (events,) = load_tables(spark, sf_dir, "events")
     users = events.select("user_id").distinct()
     variant = F.when(
@@ -2984,8 +2981,6 @@ _DP_SEED = "dp0"
 
 
 def _dp_u_sql() -> str:
-    from _imdb_etl_spark.functions import md5_prefix_int_sql
-
     h = md5_prefix_int_sql(f"'{_DP_SEED}:' || event_type", 8)
     return f"(({h}) + 1.0) / {float(16**8 + 1)}"
 
@@ -3026,8 +3021,6 @@ ORDER BY event_type
     "claim. Map-side per group; one type-cardinality aggregate.",
 )
 def privacy_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.functions import hex_prefix_int
-
     (events,) = load_tables(spark, sf_dir, "events")
     c = events.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("true_count")
@@ -3696,7 +3689,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Counts are exact integers; the closed form is one float step,
 # rounded and -0.0-collapsed.
 
-_PZ_SQL = """
+_PZ_SQL = f"""
 WITH users AS (
   -- conversion = HIGH-VALUE user (>= 3 purchases): nearly every user
   -- has one purchase in this synthetic stream, which would make the
@@ -3708,8 +3701,7 @@ WITH users AS (
   FROM events GROUP BY user_id
 ),
 assigned AS (
-  SELECT CASE WHEN (strpos('0123456789abcdef',
-                    substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) - 1) % 2 = 0
+  SELECT CASE WHEN {md5_prefix_int_sql("CAST(user_id AS VARCHAR)", 1)} % 2 = 0
               THEN 'A' ELSE 'B' END AS variant,
          converted
   FROM users
@@ -3756,8 +3748,6 @@ FROM s
     "decision path is what the hash checks.",
 )
 def events_ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.functions import hex_prefix_int
-
     (events,) = load_tables(spark, sf_dir, "events")
     users = events.groupBy("user_id").agg(
         (

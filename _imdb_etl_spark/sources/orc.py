@@ -22,19 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import hex_prefix_int, md5_prefix_int_sql
 from _imdb_etl_spark.plans.registry import register
 from _imdb_etl_spark.sources import load_tables, scratch_dir
 
 _DOC_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
-
-
-def _md5_prefix_int_sql(expr: str, n: int = 8) -> str:
-    """Integer value of the first ``n`` md5 hex chars (shared helper)."""
-    from _imdb_etl_spark.functions import md5_prefix_int_sql
-
-    return md5_prefix_int_sql(expr, n)
 
 
 _ORC_SQL = f"""
@@ -44,7 +38,7 @@ SELECT lang,
        MIN(doc_id) AS min_doc,
        MAX(doc_id) AS max_doc,
        bit_xor(CAST((doc_id % 2097152) * 4294967296 +
-                    {_md5_prefix_int_sql("text")} AS BIGINT)) AS content_sig
+                    {md5_prefix_int_sql("text", 8)} AS BIGINT)) AS content_sig
 FROM documents
 GROUP BY lang
 ORDER BY lang
@@ -72,7 +66,7 @@ def orc_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = F.bit_xor(
         (
             (F.col("doc_id") % F.lit(2097152)) * F.lit(4294967296)
-            + F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("long")
+            + hex_prefix_int(F.md5("text"), 8)
         ).cast("long")
     ).alias("content_sig")
     return (

@@ -39,6 +39,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from _imdb_etl_spark.functions import md5_prefix_int_sql
 from _imdb_etl_spark.plans.registry import register
 
 
@@ -101,12 +102,11 @@ def read_synthetic_docs(
 # DuckDB twin: same md5-derived rows from range(); the bucket is the
 # first two hex digits decoded via positional lookup (cross-engine, no
 # hex-cast builtin needed).
-_PYSRC_SQL = """
+_PYSRC_SQL = f"""
 WITH src AS (
   SELECT i AS doc_id,
          md5(CAST(i AS VARCHAR)) AS sig,
-         (strpos('0123456789abcdef', substr(md5(CAST(i AS VARCHAR)), 1, 1)) - 1) * 16
-         + strpos('0123456789abcdef', substr(md5(CAST(i AS VARCHAR)), 2, 1)) - 1 AS bucket
+         {md5_prefix_int_sql("CAST(i AS VARCHAR)", 2)} AS bucket
   FROM range(0, 2000) t(i)
 )
 SELECT bucket,
@@ -196,11 +196,10 @@ def read_synthetic_docs_stream(
     )
 
 
-_STREAM_PYSRC_SQL = """
+_STREAM_PYSRC_SQL = f"""
 WITH src AS (
   SELECT i AS doc_id,
-         (strpos('0123456789abcdef', substr(md5(CAST(i AS VARCHAR)), 1, 1)) - 1) * 16
-         + strpos('0123456789abcdef', substr(md5(CAST(i AS VARCHAR)), 2, 1)) - 1 AS bucket
+         {md5_prefix_int_sql("CAST(i AS VARCHAR)", 2)} AS bucket
   FROM range(0, 2000) t(i)
 )
 SELECT bucket,
@@ -484,8 +483,7 @@ _PUSHDOWN_SQL = f"""
 WITH src AS (
   SELECT i AS doc_id,
          md5(CAST(i AS VARCHAR)) AS sig,
-         (strpos('0123456789abcdef', substr(md5(CAST(i AS VARCHAR)), 1, 1)) - 1) * 16
-         + strpos('0123456789abcdef', substr(md5(CAST(i AS VARCHAR)), 2, 1)) - 1 AS bucket
+         {md5_prefix_int_sql("CAST(i AS VARCHAR)", 2)} AS bucket
   FROM range({_PUSHDOWN_LO}, {_PUSHDOWN_HI}) t(i)
 )
 SELECT bucket,

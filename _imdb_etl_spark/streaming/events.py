@@ -58,20 +58,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(read_table_stream(spark, sf_dir, "events"))
 
 
-def streaming_hourly_rollup(events: DataFrame) -> DataFrame:
-    """Tumbling 1h event-time windows with a 1h watermark — the
-    streaming twin of plans/events.events_hourly."""
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            dsum(dec("value"), "total_value"),
-            F.approx_count_distinct("user_id").alias("approx_users"),
-        )
-    )
-
-
 def streaming_sessionize(events: DataFrame) -> DataFrame:
     """Session windows with a 30-minute gap — the streaming twin of the
     lag-based batch sessionization."""
@@ -134,8 +120,7 @@ ORDER BY hour_bucket, event_type
     doc="End-to-end Structured Streaming run (file source -> watermarked "
     "1h windows -> processAllAvailable -> memory sink), materialized and "
     "compared to the batch oracle. Exact distinct users is omitted: "
-    "streams only support approx_count_distinct (see "
-    "streaming_hourly_rollup builder for the unbounded form).",
+    "streams only support approx_count_distinct.",
 )
 def streaming_hourly_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, sf_dir)

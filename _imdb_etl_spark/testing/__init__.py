@@ -1,3 +1,3 @@
-from _imdb_etl_spark.testing.compare import canon_rows, canon_value, diff_samples
+from _imdb_etl_spark.testing.compare import canon_rows, canon_value
 
-__all__ = ["canon_rows", "canon_value", "diff_samples"]
+__all__ = ["canon_rows", "canon_value"]

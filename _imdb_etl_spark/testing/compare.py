@@ -37,10 +37,3 @@ def canon_rows(cols: list[str], rows: list[tuple]) -> tuple[list[str], str]:
     canon = sorted("␟".join(canon_value(r[i]) for i in order) for r in rows)
     h = hashlib.sha256("\n".join(canon).encode()).hexdigest()[:16]
     return canon, h
-
-
-def diff_samples(a: list[str], b: list[str], k: int = 3) -> str:
-    sa, sb = set(a), set(b)
-    lines = [f"  left-only:  {r!r}" for r in list(sa - sb)[:k]]
-    lines += [f"  right-only: {r!r}" for r in list(sb - sa)[:k]]
-    return "\n".join(lines)

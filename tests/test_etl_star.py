@@ -12,8 +12,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.etl import grafs as g
-from _imdb_etl_spark.testing import canon_rows, diff_samples
+from _imdb_etl_spark.testing import canon_rows
 from tests import oracle_imdb
+
+
+def diff_samples(a: list[str], b: list[str], k: int = 3) -> str:
+    sa, sb = set(a), set(b)
+    lines = [f"  left-only:  {r!r}" for r in list(sa - sb)[:k]]
+    lines += [f"  right-only: {r!r}" for r in list(sb - sa)[:k]]
+    return "\n".join(lines)
 
 
 def assert_matches(sdf, rel, label=""):

@@ -1,5 +1,5 @@
 """Property tests for the non-oracle operators (SimHash, LSH recall,
-multimodal stubs) plus streaming-builder sanity. The oracle-checked
+multimodal codecs) plus streaming-builder sanity. The oracle-checked
 operators are covered by tools/check.py and the driver gate."""
 
 from __future__ import annotations
@@ -8,10 +8,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.operators import multimodal
 from _imdb_etl_spark.plans import REGISTRY
 from _imdb_etl_spark.sources import load_tables, scratch_dir
-from _imdb_etl_spark.streaming import read_events_stream, streaming_hourly_rollup
+from _imdb_etl_spark.streaming import read_events_stream, streaming_sessionize
 from _imdb_etl_spark.testing import canon_rows, canon_value
 
 
@@ -519,29 +518,10 @@ def test_png_codec_rejects_corruption():
         decode_png(bytes(corrupt))
 
 
-def test_decode_image_batch_real_codec():
-    import pandas as pd
-
-    from _imdb_etl_spark.operators.png_codec import encode_png
-
-    payloads = pd.Series(
-        [
-            encode_png(_sample_pixels(8 * 2 * 3), 8, 2, 3),
-            encode_png(_sample_pixels(5 * 7 * 1), 5, 7, 1),
-            encode_png(_sample_pixels(6 * 3 * 4), 6, 3, 4, filter_type=4),
-        ]
-    )
-    out = multimodal.decode_image_batch(payloads, use_real_codec=True)
-    assert list(out["width"]) == [8, 5, 6]
-    assert list(out["height"]) == [2, 7, 3]
-    assert list(out["mode"]) == ["RGB", "L", "RGBA"]
-
-
-@pytest.mark.skipif(not multimodal._HAVE_PIL, reason="PIL not installed")
 def test_png_codec_cross_checks_pil():
     import io
 
-    from PIL import Image
+    Image = pytest.importorskip("PIL.Image")
 
     from _imdb_etl_spark.operators.png_codec import decode_png, encode_png
 
@@ -574,16 +554,6 @@ def test_wav_roundtrip_geometry():
         ch, nf = _wav_geom(int(r.asset_id))
         assert (r.n_channels, r.n_frames) == (ch, nf)
         assert r.sample_rate == 8000 and r.sample_width == 2
-
-
-def test_decode_image_stub_deterministic():
-    import pandas as pd
-
-    payloads = pd.Series([b"abc", b"xyz", b"abc"])
-    out = multimodal.decode_image_batch(payloads)
-    assert list(out.columns) == ["width", "height", "mode"]
-    assert out.loc[0, "width"] == out.loc[2, "width"]
-    assert (out["width"] >= 16).all() and (out["height"] >= 16).all()
 
 
 def test_decimal_sums_partition_invariant(spark, sf_dir):
@@ -623,48 +593,11 @@ def test_approx_distinct_within_bound(spark, sf_dir):
         assert abs(approx[r.event_type] - n) / n < 0.1, (r.event_type, n)
 
 
-def test_rate_source_drives_streaming_topology(spark):
-    """The rate source plugs into the same windowed-agg graph as the
-    events file source — the source line is the only seam."""
-    from pyspark.sql import functions as FF
-
-    from _imdb_etl_spark.streaming.sources import StreamSource, read_stream
-
-    rate = read_stream(spark, StreamSource("rate", {"rowsPerSecond": "100"}))
-    agg = (
-        rate.withWatermark("timestamp", "1 second")
-        .groupBy(FF.window("timestamp", "1 second"))
-        .agg(FF.count(FF.lit(1)).alias("n"))
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("rate_smoke")
-        .outputMode("update")
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        import time
-
-        # Generous deadline: the loop exits on the first emitted row, so
-        # this only costs time when the box is under external load
-        # (co-tenant CPU spikes) — 15 s flaked there.
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.sql("SELECT sum(n) FROM rate_smoke").collect()[0][0]:
-                break
-            time.sleep(0.5)
-        total = spark.sql("SELECT sum(n) FROM rate_smoke").collect()[0][0]
-    finally:
-        q.stop()
-    assert total and total > 0
-
-
 def test_streaming_builder_is_streaming(spark, sf_dir):
     events = read_events_stream(spark, sf_dir)
-    agg = streaming_hourly_rollup(events)
+    agg = streaming_sessionize(events)
     assert events.isStreaming and agg.isStreaming
-    assert "approx_users" in agg.columns
+    assert "session_window" in agg.columns
 
 
 def test_repetition_scores_invariants(spark, sf_dir):
@@ -858,28 +791,6 @@ def test_unigram_logprob_is_negative_and_bounded(spark, sf_dir):
         # and no rarer than 1 occurrence out of the corpus total
         assert r.avg_logprob < 0
         assert r.avg_logprob > -25
-
-
-def test_observe_profile_matches_direct_agg(spark, sf_dir):
-    from _imdb_etl_spark.operators.quality import observe_profile
-
-    (orders,) = load_tables(spark, sf_dir, "orders")
-    inst, obs = observe_profile(orders, "orders_dq", "o_totalprice")
-    # the observation rides the SAME action; no second scan happens
-    n_out = inst.where(F.col("o_orderpriority") == "1-URGENT").count()
-    got = obs.get
-    direct = orders.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").isNull().cast("long")).alias("z"),
-        F.min("o_totalprice").alias("mn"),
-        F.max("o_totalprice").alias("mx"),
-    ).collect()[0]
-    # observe sees pre-filter rows: metrics cover the full scan even
-    # though the action counted only a filtered subset
-    assert n_out < got["n_rows"] == direct.n
-    assert got["o_totalprice_nulls"] == direct.z
-    assert got["o_totalprice_min"] == direct.mn
-    assert got["o_totalprice_max"] == direct.mx
 
 
 def test_domain_cap_bounds_and_windowgrouplimit(spark, sf_dir):
@@ -3687,10 +3598,12 @@ def test_winnowing_guarantee_and_replay(spark, sf_dir):
 
 
 def test_winnow_pairs_replay_and_recall(spark, duck, sf_dir):
-    """dedup_winnow_pairs pins: (a) a pure-Python recomputation of
-    shared rare-fingerprint counts confirms every emitted pair and its
-    overlap score; (b) strong near-duplicates (exact Jaccard >= 0.9)
-    are recovered — the local-match guarantee at work."""
+    """The winnow pair relation (_WINNOW_PAIRS_SQL, the edge set under
+    dedup_winnow_clusters' oracle) pins: (a) a pure-Python
+    recomputation of shared rare-fingerprint counts confirms every
+    emitted pair and its overlap score; (b) strong near-duplicates
+    (exact Jaccard >= 0.9) are recovered — the local-match guarantee
+    at work."""
     import hashlib
 
     from _imdb_etl_spark.operators.dedup import _JACCARD_SQL
@@ -3700,7 +3613,7 @@ def test_winnow_pairs_replay_and_recall(spark, duck, sf_dir):
         _WIN_K,
         _WIN_MIN_SHARED,
         _WIN_W,
-        dedup_winnow_pairs,
+        _WINNOW_PAIRS_SQL,
     )
 
     def fps(text):
@@ -3730,14 +3643,14 @@ def test_winnow_pairs_replay_and_recall(spark, duck, sf_dir):
     cap = max(_WIN_DF_FLOOR, -(-_WIN_DF_PERMILLE * len(texts) // 1000))
     rare = {v for v, c in df_cnt.items() if c <= cap}
     got = {
-        (r.doc_a, r.doc_b): r
-        for r in dedup_winnow_pairs(spark, sf_dir).collect()
+        (a, b): (n_shared, permille)
+        for a, b, n_shared, permille in duck(sf_dir, _WINNOW_PAIRS_SQL)[1]
     }
     # (a) exact replay of every emitted pair
-    for (a, b), r in got.items():
+    for (a, b), (n_shared, permille) in got.items():
         shared = len(sets[a] & sets[b] & rare)
-        assert shared == r.n_shared and shared >= _WIN_MIN_SHARED
-        assert r.overlap_permille == (1000 * shared) // min(
+        assert shared == n_shared and shared >= _WIN_MIN_SHARED
+        assert permille == (1000 * shared) // min(
             len(sets[a]), len(sets[b])
         )
     # completeness of the replay: no qualifying pair missed
@@ -3754,51 +3667,17 @@ def test_winnow_pairs_replay_and_recall(spark, duck, sf_dir):
     assert hit / len(strong) >= 0.8, f"winnow recall {hit}/{len(strong)}"
 
 
-def test_winnow_pairs_matches_duckdb_oracle(spark, sf_dir):
-    """Demotion verifier (round 10): dedup_winnow_pairs left the
-    registry — its pair OUTPUT is quadratic in duplicate-cluster size
-    by definition (29.1M true pairs at the 100x probe) and its own
-    docstring routed volume work to the registered bounded sibling
-    dedup_winnow_clusters — so the driver's oracle pairing moves
-    here: replay _WINNOW_PAIRS_SQL via DuckDB on the same parquet and
-    compare the full row set exactly, at the bounded test scale where
-    the pair expansion is small."""
-    import duckdb
-
-    from _imdb_etl_spark.operators.text import (
-        _WINNOW_PAIRS_SQL,
-        dedup_winnow_pairs,
-    )
-
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS "
-        f"SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
-    )
-    want = con.sql(_WINNOW_PAIRS_SQL).fetchall()
-    con.close()
-    got = [
-        (r.doc_a, r.doc_b, r.n_shared, r.overlap_permille)
-        for r in dedup_winnow_pairs(spark, sf_dir).collect()
-    ]
-    assert got == [tuple(w) for w in want]
-    assert len(got) > 0
-
-
-def test_winnow_clusters_reconcile_with_pair_face(spark, sf_dir):
+def test_winnow_clusters_reconcile_with_pair_face(spark, duck, sf_dir):
     """dedup_winnow_clusters (the linear-output production face) must
-    state exactly the connected components of dedup_winnow_pairs's
-    edge set: a pure-Python union-find over the pair face's output —
+    state exactly the connected components of the winnow pair edge set
+    (_WINNOW_PAIRS_SQL): a pure-Python union-find over those pairs —
     a third implementation beside the Spark pointer-jumping CC and
     the DuckDB recursive CTE — reproduces every (cluster_id,
     cluster_size) row, with cluster_id = the component's min doc_id
     and no singleton rows."""
-    from _imdb_etl_spark.operators.text import dedup_winnow_pairs
+    from _imdb_etl_spark.operators.text import _WINNOW_PAIRS_SQL
 
-    pairs = [
-        (r.doc_a, r.doc_b)
-        for r in dedup_winnow_pairs(spark, sf_dir).collect()
-    ]
+    pairs = [(a, b) for a, b, _n, _p in duck(sf_dir, _WINNOW_PAIRS_SQL)[1]]
     assert pairs
     parent: dict = {}
 
@@ -3991,23 +3870,19 @@ def test_datasheet_consistency_with_constituents(spark, sf_dir):
         assert r.pii_permille == (1000 * pii) // n
 
 
-def test_pq_encode_gemm_matches_expression_route(spark, sf_dir):
-    """The registered GEMM PQ encode and the windowed-rank expression
-    encode share the codebook, distance, rounding, and rank key, so
-    their (vec_id, s) -> code_id maps must be identical. (Round 11:
-    the expression route is demoted to this library verifier — its
-    N x _N_SUB x _N_CODES window stage dominated the PQ family at
-    1000x — so this pin IS its correctness evidence now.)"""
-    from _imdb_etl_spark.operators.semantic import (
-        _pq_encode_expression,
-        _pq_encode_gemm,
-    )
-    from _imdb_etl_spark.sources import load_tables
+def test_pq_encode_gemm_matches_expression_route(spark, duck, sf_dir):
+    """The registered GEMM PQ encode and the oracle's windowed-rank
+    expression route (the `encoded` CTE of _PQ_CTES) share the
+    codebook, distance, rounding, and rank key, so their (vec_id, s)
+    -> code_id maps must be identical. (Round 11: the expression route
+    left the Spark side — its N x _N_SUB x _N_CODES window stage
+    dominated the PQ family at 1000x — so this pin IS the encode's
+    correctness evidence.)"""
+    from _imdb_etl_spark.operators.semantic import _PQ_CTES, _pq_encode_gemm
 
     (emb,) = load_tables(spark, sf_dir, "embeddings")
-    expr_codes = {
-        (r.vec_id, r.s): r.code_id for r in _pq_encode_expression(emb).collect()
-    }
+    _, rows = duck(sf_dir, f"WITH {_PQ_CTES} SELECT vec_id, s, code_id FROM encoded")
+    expr_codes = {(v, sub): c for v, sub, c in rows}
     gemm_codes = {
         (r.vec_id, r.s): r.code_id for r in _pq_encode_gemm(emb).collect()
     }
@@ -4024,7 +3899,7 @@ def test_centroid_rank_raw_tiebreak_straddles_boundary():
     in both engines."""
     import numpy as np
 
-    from _imdb_etl_spark.operators.similarity import _rank_centroids_desc
+    from _imdb_etl_spark.functions import rank_centroids_desc
 
     # centroid 0 sits a hair below the .5e-6 boundary in engine A and
     # a hair above it in engine B; centroid 1 is exactly the value
@@ -4040,18 +3915,12 @@ def test_centroid_rank_raw_tiebreak_straddles_boundary():
         return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5), x) / 1e6
 
     assert r6(raw_a)[0, 0] != r6(raw_b)[0, 0]
-    order_a = _rank_centroids_desc(raw_a)
-    order_b = _rank_centroids_desc(raw_b)
+    order_a = rank_centroids_desc(raw_a)
+    order_b = rank_centroids_desc(raw_b)
     assert order_a.tolist() == order_b.tolist() == [[2, 1, 0]]
     # exact rounded-and-raw ties still break by ascending centroid id
     ties = np.array([[0.25, 0.25, 0.125]])
-    assert _rank_centroids_desc(ties).tolist() == [[0, 1, 2]]
-    # the inlined closure copies (similarity.ivf_inverted_lists,
-    # semantic._ivf_assign_gemm) must stay identical to the helper
-    rng = np.random.default_rng(7)
-    raw = rng.random((32, 16))
-    inline = np.lexsort((-raw, -r6(raw)), axis=-1)
-    assert (_rank_centroids_desc(raw) == inline).all()
+    assert rank_centroids_desc(ties).tolist() == [[0, 1, 2]]
 
 
 def test_try_suite_add_val_domain_holds(spark, sf_dir):
@@ -4074,37 +3943,35 @@ def test_try_suite_add_val_domain_holds(spark, sf_dir):
     assert min_pk >= 0, f"add_val domain pin violated: min p_partkey {min_pk}"
 
 
-def test_pq_adc_gemm_matches_join_route(spark, sf_dir):
-    """The fused encode+ADC+prune kernel and the broadcast-LUT join
-    route share the codebook, LUT rounding, and exclusion rule, so
-    the top-k they feed the ranking window must be identical. (Round
-    11: the join route is demoted to this library verifier — its
-    N x _N_SUB x _N_QUERIES pre-agg fan-out was sim_knn_pq's dominant
-    stage once the encode went GEMM.)"""
+def test_pq_adc_gemm_matches_join_route(spark, duck, sf_dir):
+    """The fused encode+ADC+prune kernel and the oracle's broadcast-LUT
+    join route (_pq_sql: encoded JOIN lut, summed per query and
+    neighbor) share the codebook, LUT rounding, and exclusion rule, so
+    the top-k they rank must be identical. (Round 11: the join route
+    left the Spark side — its N x _N_SUB x _N_QUERIES pre-agg fan-out
+    was sim_knn_pq's dominant stage once the encode went GEMM.)"""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from _imdb_etl_spark.operators.semantic import (
         _PQ_TOP_K,
         _pq_adc_topk_gemm,
-        _pq_scored_join_route,
+        _pq_sql,
     )
-    from _imdb_etl_spark.sources import load_tables
 
     (emb,) = load_tables(spark, sf_dir, "embeddings")
     rank_w = Window.partitionBy("query_id").orderBy(
         F.desc("approx_dot"), F.asc("neighbor_id")
     )
-
-    def topk(scored):
-        return {
-            (r.query_id, r.neighbor_id, r.approx_dot, r.rnk)
-            for r in scored.withColumn("rnk", F.row_number().over(rank_w))
-            .where(F.col("rnk") <= _PQ_TOP_K)
-            .collect()
-        }
-
-    assert topk(_pq_adc_topk_gemm(emb)) == topk(_pq_scored_join_route(emb))
+    got = {
+        (r.query_id, r.neighbor_id, r.approx_dot, r.rnk)
+        for r in _pq_adc_topk_gemm(emb)
+        .withColumn("rnk", F.row_number().over(rank_w))
+        .where(F.col("rnk") <= _PQ_TOP_K)
+        .collect()
+    }
+    _, rows = duck(sf_dir, _pq_sql())
+    assert got == {tuple(r) for r in rows}
+    assert got
 
 
 def test_crossmodal_lsh_pairs_subset_of_exact(spark, duck, sf_dir):

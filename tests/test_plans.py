@@ -425,6 +425,65 @@ def test_registry_hygiene_docs_and_gate_rest():
     assert not overlap, f"names in both window and rest: {overlap}"
 
 
+def test_every_package_def_has_a_caller():
+    """Every module-level function or class in _imdb_etl_spark/ is
+    reached: decorated by a package decorator (the registry's
+    ``register`` holds each builder by name), or referenced by module-
+    level package code, another reached package def, a tools/ script,
+    perfbench/ or __spark_entry__.py. A def's own body, an import (the
+    __init__.py re-exports) and tests/ do not count, so a helper only
+    a test calls fails here until it is deleted."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+
+    def names(*nodes) -> set[str]:
+        out = set()
+        for node in nodes:
+            for x in ast.walk(node):
+                if isinstance(x, ast.Name):
+                    out.add(x.id)
+                elif isinstance(x, ast.Attribute):
+                    out.add(x.attr)
+        return out
+
+    defs = {}  # (path, name) -> def node
+    roots = set()  # names module-level package code references
+    for path in sorted((repo / "_imdb_etl_spark").rglob("*.py")):
+        rel = str(path.relative_to(repo))
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[(rel, node.name)] = node
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)) and not (
+                isinstance(node, ast.Assign) and "__all__" in names(*node.targets)
+            ):
+                roots |= names(node)
+    for path in [
+        repo / "__spark_entry__.py",
+        *(repo / "tools").glob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+    ]:
+        roots |= names(ast.parse(path.read_text()))
+
+    pkg_names = {name for _, name in defs}
+    body_names = {key: names(node) - {key[1]} for key, node in defs.items()}
+    live = {k for k, n in defs.items() if names(*n.decorator_list) & pkg_names}
+    while True:
+        reached = roots.union(*(body_names[k] for k in live))
+        grown = live | {k for k in defs if k[1] in reached}
+        if grown == live:
+            break
+        live = grown
+    dead = sorted(
+        f"{rel}:{defs[(rel, name)].lineno} {name}"
+        for rel, name in set(defs) - live
+    )
+    assert not dead, "package defs nothing outside tests/ reaches:\n" + "\n".join(
+        dead
+    )
+
+
 def test_parameterized_sql_still_pushes_down(spark, sf_dir):
     """The named-parameter cutoff must reach the parquet scan as a
     data filter (parameter binding is not string templating, but it
@@ -525,62 +584,25 @@ def test_identifier_binding_pushes_resolution_not_strings(spark, sf_dir):
     assert n == orders.count()
 
 
-def test_fuzzy_groups_n_pairs_equals_expansion_counts(spark, sf_dir):
+def test_fuzzy_groups_n_pairs_equals_expansion_counts(spark, duck, sf_dir):
     """The bounded group face's n_pairs column must be exactly the row
-    count the expansion face emits for that name pair — the contract
-    that lets a consumer trust the group-level blast radius without
-    ever materializing the quadratic part-pair list. Keys normalize to
-    (least, greatest) name because the expansion face orders names by
-    part key, not lexicographically."""
-    from pyspark.sql import functions as F
+    count the part-pair expansion (_FUZZY_SQL, run by DuckDB) emits for
+    that name pair — the contract that lets a consumer trust the
+    group-level blast radius without ever materializing the quadratic
+    part-pair list. Keys normalize to (least, greatest) name because
+    the expansion orders names by part key, not lexicographically."""
+    from collections import Counter
 
-    from _imdb_etl_spark.plans.advanced import (
-        fuzzy_part_match,
-        fuzzy_part_name_groups,
-    )
+    from _imdb_etl_spark.plans.advanced import _FUZZY_SQL, fuzzy_part_name_groups
 
     groups = {
         (r.name_a, r.name_b): r.n_pairs
         for r in fuzzy_part_name_groups(spark, sf_dir).collect()
     }
-    expanded = fuzzy_part_match(spark, sf_dir).select(
-        F.least("name_a", "name_b").alias("na"),
-        F.greatest("name_a", "name_b").alias("nb"),
-    )
-    counts = {
-        (r.na, r.nb): r.c
-        for r in expanded.groupBy("na", "nb")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    assert groups == counts
+    _, rows = duck(sf_dir, _FUZZY_SQL)
+    counts = Counter((min(na, nb), max(na, nb)) for _a, _b, na, nb, _ed in rows)
+    assert groups == dict(counts)
     assert all(v > 0 for v in groups.values())
-
-
-def test_fuzzy_expansion_matches_duckdb_oracle(spark, sf_dir):
-    """Demotion verifier (round 9): fuzzy_part_name_match left the
-    registry — its output is quadratic in duplicate-group size by
-    definition (the registry's last sf1 watchdog cap-out, OOM at sf10)
-    — so the driver's oracle pairing moves here: replay _FUZZY_SQL via
-    DuckDB on the same parquet and compare the full row set exactly,
-    at the bounded test scale where the expansion is small."""
-    import duckdb
-
-    from _imdb_etl_spark.plans.advanced import _FUZZY_SQL, fuzzy_part_match
-
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW part AS "
-        f"SELECT * FROM read_parquet('{sf_dir}/part.parquet')"
-    )
-    want = con.sql(_FUZZY_SQL).fetchall()
-    con.close()
-    got = [
-        (r.part_a, r.part_b, r.name_a, r.name_b, r.edit_distance)
-        for r in fuzzy_part_match(spark, sf_dir).collect()
-    ]
-    assert got == [tuple(w) for w in want]
-    assert len(got) > 0
 
 
 def test_broadcast_gate_rows_and_bytes(spark, sf_dir):

@@ -1,5 +1,7 @@
-"""Sink round-trips: partitioned parquet, reference-dialect CSV, and
-catalog-managed (CTAS/DROP) tables incl. bucketing."""
+"""Catalog-managed (CTAS/DROP) tables incl. bucketing, and the
+file-layout properties the engine relies on: partition pruning and
+dynamic pruning on partitioned parquet, ORC pruning and pushdown,
+z-ordered file stats."""
 
 from __future__ import annotations
 
@@ -11,11 +13,9 @@ from _imdb_etl_spark.sources import load_tables, sinks
 def test_partitioned_parquet_roundtrip(spark, sf_dir, tmp_path):
     (orders,) = load_tables(spark, sf_dir, "orders")
     out = str(tmp_path / "orders_part")
-    sinks.write_parquet(
-        orders.withColumn("order_year", F.year("o_orderdate")),
-        out,
-        partition_by=["order_year"],
-    )
+    orders.withColumn("order_year", F.year("o_orderdate")).write.partitionBy(
+        "order_year"
+    ).parquet(out)
     back = spark.read.parquet(out)
     assert back.count() == orders.count()
     # partition pruning: a year filter must prune input files
@@ -30,11 +30,9 @@ def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
     dynamic pruning subquery on the partition column."""
     orders, customer = load_tables(spark, sf_dir, "orders", "customer")
     out = str(tmp_path / "orders_by_year")
-    sinks.write_parquet(
-        orders.withColumn("order_year", F.year("o_orderdate")),
-        out,
-        partition_by=["order_year"],
-    )
+    orders.withColumn("order_year", F.year("o_orderdate")).write.partitionBy(
+        "order_year"
+    ).parquet(out)
     fact = spark.read.parquet(out)
     # DPP requires the join key to be the partition column
     dim = (
@@ -46,38 +44,6 @@ def test_dynamic_partition_pruning(spark, sf_dir, tmp_path):
     joined = fact.join(dim.hint("broadcast"), "order_year")
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruningexpression" in plan.lower()
-
-
-def test_csv_reference_dialect_roundtrip(spark, sf_dir, tmp_path):
-    (customer,) = load_tables(spark, sf_dir, "customer")
-    out = str(tmp_path / "cust_csv")
-    with_null = customer.withColumn(
-        "c_mktsegment",
-        F.when(F.col("c_custkey") % 7 == 0, None).otherwise(F.col("c_mktsegment")),
-    )
-    sinks.write_csv(with_null, out)
-    back = spark.read.csv(
-        out, header=True, quote='"', escape='"', nullValue="NULL",
-        schema=with_null.schema,
-    )
-    assert back.count() == customer.count()
-    assert (
-        back.where(F.col("c_mktsegment").isNull()).count()
-        == with_null.where(F.col("c_mktsegment").isNull()).count()
-    )
-
-
-def test_json_roundtrip_with_schema(spark, sf_dir, tmp_path):
-    (events,) = load_tables(spark, sf_dir, "events")
-    out = str(tmp_path / "events_json")
-    sinks.write_json(events, out)
-    back = sinks.read_json(spark, out, events.schema)
-    assert back.count() == events.count()
-    assert back.schema == events.schema
-    # values survive the round-trip (timestamps incl. microseconds)
-    a = {r.event_id: (r.ts, r.value) for r in events.collect()}
-    b = {r.event_id: (r.ts, r.value) for r in back.collect()}
-    assert a == b
 
 
 def test_ctas_bucketed_table_and_drop(spark, sf_dir):
@@ -125,12 +91,10 @@ def test_bucketed_fact_star_join_skips_both_exchanges(spark, sf_dir):
 
 
 def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    from _imdb_etl_spark.sources import load_tables
-
     (orders,) = load_tables(spark, sf_dir, "orders")
     out = str(tmp_path / "orders_orc")
-    sinks.write_orc(orders, out, partition_by=["o_orderpriority"])
-    back = sinks.read_orc(spark, out)
+    orders.write.partitionBy("o_orderpriority").orc(out)
+    back = spark.read.orc(out)
     assert back.count() == orders.count()
     # partition pruning reaches the ORC scan
     pruned = back.where(F.col("o_orderpriority") == "1-URGENT")
@@ -144,69 +108,6 @@ def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
     sel = back.where(F.col("o_totalprice") > 300000.0)
     plan2 = sel._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan2 and "o_totalprice" in plan2
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from _imdb_etl_spark.sources.sinks import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    # simulate streaming debris: 64 tiny files
-    spark.range(0, 6400).withColumn("v", F.col("id") * 2).repartition(
-        64
-    ).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 64
-    parts = compact_parquet(spark, src, dst, target_rows_per_file=2000)
-    files = glob.glob(f"{dst}/part-*.parquet")
-    assert parts == 4 and 1 <= len(files) <= 4
-    # lossless: same rows, and footer row counts respect the cap
-    assert spark.read.parquet(dst).count() == 6400
-    import pyarrow.parquet as pq
-
-    for f in files:
-        assert pq.ParquetFile(f).metadata.num_rows <= 2000
-
-
-def test_compact_parquet_sorted_keeps_rowgroup_stats_tight(spark, tmp_path):
-    from _imdb_etl_spark.sources.sinks import compact_parquet
-
-    src = str(tmp_path / "frag2")
-    dst = str(tmp_path / "comp2")
-    spark.range(0, 4000).repartition(16).write.parquet(src)
-    compact_parquet(spark, src, dst, 1000, sort_cols=["id"])
-    import glob
-
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in glob.glob(f"{dst}/part-*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        st = md.row_group(0).column(0).statistics
-        spans.append((st.min, st.max))
-    spans.sort()
-    # range partitioning makes file key-ranges disjoint -> min/max
-    # footer stats can prune whole files on point/range predicates
-    for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
-        assert hi1 < lo2
-
-
-def test_partitioned_overwrite_is_dynamic(spark, tmp_path):
-    """An overwrite carrying only one partition must not wipe siblings —
-    the incremental-backfill safety property."""
-    from _imdb_etl_spark.sources import sinks
-
-    out = str(tmp_path / "dyn")
-    full = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, part string"
-    )
-    sinks.write_parquet(full, out, partition_by=["part"])
-    one = spark.createDataFrame([(9, "a")], "id long, part string")
-    sinks.write_parquet(one, out, partition_by=["part"])
-    got = sorted(tuple(r) for r in spark.read.parquet(out).collect())
-    # partition a replaced, partition b intact
-    assert got == [(2, "b"), (9, "a")]
 
 
 def test_zorder_layout_tightens_file_stats(spark, sf_dir, tmp_path):

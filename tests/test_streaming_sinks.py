@@ -1,34 +1,10 @@
-"""foreachBatch idempotent parquet sink: completeness on first run,
-no duplication on checkpointed re-run."""
+"""Streaming sinks: a file sink's checkpoint survives a restart, and
+every memory-sink face matches its batch oracle and leaves no table or
+checkpoint behind."""
 
 from __future__ import annotations
 
 from _imdb_etl_spark.sources import load_tables
-from _imdb_etl_spark.streaming import read_events_stream
-from _imdb_etl_spark.streaming.sinks import idempotent_parquet_sink
-
-
-def _run(spark, sf_dir, out, ckpt):
-    stream = read_events_stream(spark, sf_dir).select("event_id", "user_id", "value")
-    q = idempotent_parquet_sink(stream, out, ckpt).start()
-    q.awaitTermination()
-    q.stop()
-
-
-def test_foreachbatch_sink_exactly_once_effect(spark, sf_dir, tmp_path):
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    (events,) = load_tables(spark, sf_dir, "events")
-
-    _run(spark, sf_dir, out, ckpt)
-    first = spark.read.parquet(out)
-    assert first.count() == events.count()
-    assert first.select("event_id").distinct().count() == events.count()
-
-    # replay with the same checkpoint: source fully consumed -> no new
-    # batches, no duplicated rows
-    _run(spark, sf_dir, out, ckpt)
-    again = spark.read.parquet(out)
-    assert again.count() == events.count()
 
 
 def test_checkpoint_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
@@ -50,8 +26,15 @@ def test_checkpoint_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
 
     def run_once():
         schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = idempotent_parquet_sink(stream, out, ckpt).start()
+        q = (
+            spark.readStream.schema(schema)
+            .parquet(src)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination()
         q.stop()
 
@@ -65,6 +48,10 @@ def test_checkpoint_restart_consumes_only_new_files(spark, sf_dir, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == events.count()
     assert got.select("event_id").distinct().count() == events.count()
+
+    # a replay with nothing new adds no batch and duplicates no row
+    run_once()
+    assert spark.read.parquet(out).count() == events.count()
 
 
 _MEMORY_SINK_FACES = (

@@ -44,6 +44,8 @@ smoke:
 	s = get_spark('smoke'); df = e.entry(s); \
 	assert len(df.collect()) > 0; \
 	assert set(e.oracle_sql()) <= set(e.queries()); \
+	from _imdb_etl_spark.plans import GATE_WINDOW; \
+	assert list(e.queries())[:len(GATE_WINDOW)] == GATE_WINDOW; \
 	print('entry ok:', df.columns)"
 
 lint:

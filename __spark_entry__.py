@@ -1,9 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-Thin shim over `_imdb_etl_spark.plans.REGISTRY`: every implemented
-operator from SURVEY.md §2 is registered there as a (DataFrame builder,
-DuckDB oracle SQL) pair; this module just exposes the mapping in the
-driver's shape.
+Exposes `_imdb_etl_spark.registry.REGISTRY` in the driver's shape.
+Importing `_imdb_etl_spark.plans` registers every implemented operator
+from SURVEY.md §2 as a (DataFrame builder, DuckDB oracle SQL) pair and
+puts the registry in gate order.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from _imdb_etl_spark.plans import REGISTRY, apply_gate_order
+from _imdb_etl_spark.plans import REGISTRY
 
 FLAGSHIP = "graf3_top10_customers"
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
@@ -25,9 +25,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # the driver records only the first N entries: re-assert gate order
-    # so it holds regardless of what was imported before this module
-    apply_gate_order()
     return {name: spec.spark for name, spec in REGISTRY.items()}
 
 

@@ -7,6 +7,7 @@ Layout:
   schemas    - explicit StructTypes for the IMDB staging tables + driver tables
   sources    - CSV (reference COPY INTO semantics) + Parquet catalog loaders
   etl        - the reference star-schema transforms (dim_*/fact_movies)
+  registry   - REGISTRY of (builder, oracle SQL) pairs; imports only pyspark
   plans      - query library: reference Grafs, TPC-H-style analytics,
                operator-coverage queries over the driver's synthetic tables
   operators  - scale extensions: dedup, similarity search, text analysis,

@@ -300,10 +300,7 @@ def rank_centroids_desc(raw):
     np.round's half-even (ADVICE r11).
 
     The IVF assignment closures (similarity.ivf_inverted_lists,
-    semantic._ivf_assign_gemm) call it on the workers. It lives here
-    because this module imports only pyspark: a closure referencing an
-    operators module would make the worker import that module on its
-    own, and the import cycles through plans/__init__."""
+    semantic._ivf_assign_gemm) call it on the workers."""
     import numpy as np
 
     key = np.copysign(np.floor(np.abs(raw) * 1e6 + 0.5), raw) / 1e6

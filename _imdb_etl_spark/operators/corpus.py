@@ -37,7 +37,18 @@ from _imdb_etl_spark.functions import (
     hex_prefix_int,
     md5_prefix_int_sql,
 )
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.operators.dedup import (
+    _JACCARD_SQL,
+    _prefix_doc_sets,
+    _prefix_pairs,
+)
+from _imdb_etl_spark.operators.text import (
+    _STOPWORDS,
+    QUALITY_GATE_SQL,
+    quality_gate_col,
+)
+from _imdb_etl_spark.operators.webcorpus import _BUCKET_SQL
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, scratch_run, spread, write_read_back
 
 _EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
@@ -297,8 +308,6 @@ def _leakage_sql() -> str:
     # verbatim as a subquery (the neardup_pagerank convention) — one
     # definition of the 0.6-threshold shingle-join semantics, never a
     # hand-copied drift-prone duplicate
-    from _imdb_etl_spark.operators.dedup import _JACCARD_SQL
-
     pair_subq = _JACCARD_SQL.replace("ORDER BY doc_a, doc_b", "")
     return f"""
 WITH pairs AS (
@@ -340,11 +349,6 @@ ORDER BY split_lo, split_hi
     "self-join here; LSH candidates at scale).",
 )
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.operators.dedup import (
-        _prefix_doc_sets,
-        _prefix_pairs,
-    )
-
     (docs,) = load_tables(spark, sf_dir, "documents")
     # Pair stage = the PPJoin prefix-filtered exact join (round 13, the
     # neardup_pagerank swap): provably the SAME pair set as the
@@ -387,11 +391,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- per-source curation profile -------------------------------------
-
-from _imdb_etl_spark.operators.text import (  # noqa: E402
-    QUALITY_GATE_SQL,
-    quality_gate_col,
-)
 
 _SOURCE_PROFILE_SQL = f"""
 WITH flags AS (
@@ -633,8 +632,6 @@ def tokenizer_bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sim_knn_ivf_trained). Training is distributed; only the coefficient
 # vector reaches the driver.
 
-from _imdb_etl_spark.operators.webcorpus import _BUCKET_SQL  # noqa: E402
-
 _LR_TEST_PERMILLE = 250
 _LR_ACC_FLOOR = 0.75
 _LR_NEGRECALL_FLOOR = 0.25
@@ -668,8 +665,6 @@ FROM split
 def quality_logreg_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.functions import array_to_vector
-
-    from _imdb_etl_spark.operators.text import _STOPWORDS, quality_gate_col
 
     (docs,) = load_tables(spark, sf_dir, "documents")
     sw = F.array(*[F.lit(w) for w in _STOPWORDS])

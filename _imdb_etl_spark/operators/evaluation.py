@@ -37,8 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.operators.text import _STOPWORDS, QUALITY_GATE_SQL
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.operators.text import (
+    _STOPWORDS,
+    QUALITY_GATE_SQL,
+    quality_gate_col,
+)
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
 # score domain: integer stopword permille — bounded 0..1000 by
@@ -85,7 +89,6 @@ def _score_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(F.col("text"), " ")
     sw = F.array(*[F.lit(w) for w in _STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda x: F.array_contains(sw, x)))
-    from _imdb_etl_spark.operators.text import quality_gate_col
 
     # NULL text would mint a NULL score group — a 1002nd group outside
     # the _MAX_SCORES bound, ordered OPPOSITE ways by the two engines'

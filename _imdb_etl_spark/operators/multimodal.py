@@ -32,7 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, stage_sorted, stage_to_parquet
 
 _MODALITIES = ["image", "audio", "video"]

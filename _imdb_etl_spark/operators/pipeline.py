@@ -15,13 +15,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import doc_permille_bucket
+from _imdb_etl_spark.operators.dedup import _SHINGLE_SQL, _shingles
 from _imdb_etl_spark.operators.text import (
     QUALITY_GATE_SQL,
     _toks,
     quality_gate_col,
 )
-from _imdb_etl_spark.functions import doc_permille_bucket
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.operators.webcorpus import _BUCKET_SQL
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
 _PREP_SQL = f"""
@@ -161,9 +163,6 @@ _MIX_BUDGET_PERMILLE = 500
 
 
 def _mix_sql() -> str:
-    from _imdb_etl_spark.operators.dedup import _SHINGLE_SQL
-    from _imdb_etl_spark.operators.webcorpus import _BUCKET_SQL
-
     bucket = _BUCKET_SQL.replace("doc_id", "s.doc_id")
 
     return f"""
@@ -247,8 +246,6 @@ ORDER BY r.lang
     "|languages| rows.",
 )
 def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.operators.dedup import _shingles
-
     (docs,) = load_tables(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") >= _N_EVAL).select("doc_id", "text", "lang")
     flags = corpus.select(

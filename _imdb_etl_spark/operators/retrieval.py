@@ -34,7 +34,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import doc_permille_bucket, md5_prefix_int_sql
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.operators.similarity import _cos_sql, _cosine
+from _imdb_etl_spark.operators.webcorpus import _BUCKET_SQL
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, stage_sorted, stage_to_parquet
 
 # BM25 constants (the Lucene defaults) and a fixed query: literals so
@@ -578,8 +580,6 @@ _RRF_TOP = 10
 
 
 def _rrf_sql() -> str:
-    from _imdb_etl_spark.operators.similarity import _cos_sql
-
     return f"""
 WITH lex AS (
   SELECT doc_id,
@@ -629,8 +629,6 @@ LIMIT {_RRF_TOP}
     "swaps for the in-repo ANN routes at corpus scale.",
 )
 def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.operators.similarity import _cosine
-
     # lexical ranks: window over the bounded post-limit BM25 rows
     lex = text_bm25_search(spark, sf_dir)
     wl = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
@@ -697,8 +695,6 @@ _HELDOUT_TEST_PERMILLE = 250
 
 
 def _heldout_sql() -> str:
-    from _imdb_etl_spark.operators.webcorpus import _BUCKET_SQL
-
     return f"""
 WITH split AS (
   -- bucket at DOCUMENT granularity: computing it over the unnested

@@ -33,8 +33,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import rank_centroids_desc
-from _imdb_etl_spark.operators.similarity import _cos_sql, _dot
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.operators.similarity import (
+    _CENTROID_FILTER,
+    _N_CENTROIDS,
+    _N_PROBE,
+    _cos_sql,
+    _dot,
+)
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, spread
 
 _DIM = 64
@@ -603,12 +609,6 @@ def _ivfpq_scored_ctes() -> str:
     """The shared CTE chain through `scored` (and the norm table `n`)
     — ONE definition for the ADC top-k oracle and the refined oracle,
     mirroring the Spark-side _ivfpq_scored split."""
-    from _imdb_etl_spark.operators.similarity import (
-        _CENTROID_FILTER,
-        _N_CENTROIDS,
-        _N_PROBE,
-    )
-
     return f"""
 WITH {_PQ_CTES},
 n AS (
@@ -693,12 +693,6 @@ def _ivfpq_scored(emb: DataFrame) -> DataFrame:
     neighbor_id, approx_dot) for every candidate in a probed list.
     Split out so the plain ADC top-k face and the exact-re-rank face
     (sim_knn_ivfpq_refined) can never drift on index semantics."""
-    from _imdb_etl_spark.operators.similarity import (
-        _CENTROID_FILTER,
-        _N_CENTROIDS,
-        _N_PROBE,
-    )
-
     normed = emb.select(
         "vec_id", "embedding", F.sqrt(_dot("embedding", "embedding")).alias("nrm")
     )
@@ -751,12 +745,6 @@ def _ivf_assign_gemm(normed: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    from _imdb_etl_spark.operators.similarity import (
-        _CENTROID_FILTER,
-        _N_CENTROIDS,
-        _N_PROBE,
-    )
 
     cent_rows = sorted(
         normed.where(F.expr(_CENTROID_FILTER))

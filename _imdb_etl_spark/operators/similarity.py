@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import rank_centroids_desc
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.operators.dedup import (
+    _MINHASH_SQL,
+    _jaccard_verify,
+    connected_components,
+    lsh_candidates,
+)
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import (
     load_tables,
     scratch_dir,
@@ -269,8 +275,6 @@ def _cross_modal_sql() -> str:
     # quadratic shared-shingle self-join — the 1000x probe measured
     # the exact-route composition at 450 s, ~12x/decade, all of it in
     # the pair stage its own family had already demoted in round 6
-    from _imdb_etl_spark.operators.dedup import _MINHASH_SQL
-
     body = _MINHASH_SQL.strip().rstrip(";")
     stripped = body.replace("ORDER BY i.doc_a, i.doc_b", "")
     # the strip is coupled to _MINHASH_SQL's exact final-line text; a
@@ -296,8 +300,6 @@ def _cross_modal_sql() -> str:
     "pytest recall twin (test_crossmodal_lsh_pairs_subset_of_exact).",
 )
 def crossmodal_textdup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.operators.dedup import _jaccard_verify, lsh_candidates
-
     (docs,) = load_tables(spark, sf_dir, "documents")
     doc_sets, cand = lsh_candidates(docs)
     pairs = _jaccard_verify(doc_sets, cand, with_est=False)
@@ -983,8 +985,6 @@ ORDER BY vec_id
     "recursive CTE over the identical pair subquery.",
 )
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.operators.dedup import connected_components
-
     # pair source = the GEMM-verified IVF route, not the expression-dot
     # route: identical pair set (pinned in pytest), but the per-pair
     # codegen dot measured 115 s vs ~4 s BLAS at 10x scale — and the

@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import md5_prefix_int_sql
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.operators.dedup import connected_components
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import (
     load_tables,
     scratch_run,
@@ -1360,8 +1361,6 @@ ORDER BY cluster_id
     "shuffle fell 95.7 -> 4.7 GiB.",
 )
 def dedup_winnow_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.operators.dedup import connected_components
-
     _fp, rp = _winnow_rare_postings(spark, sf_dir)
     # values arrive dictionary-encoded from the shared postings index
     # (xxhash64 at the source — the determinism/collision rationale

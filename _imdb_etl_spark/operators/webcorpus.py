@@ -36,7 +36,14 @@ from _imdb_etl_spark.functions import (
     hex_prefix_int,
     md5_prefix_int_sql,
 )
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.operators.dedup import (
+    _LSH_CAND_CTE,
+    _jaccard_verify,
+    band_table,
+    lsh_candidates,
+    minhash_doc_sets,
+)
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, scratch_dir, spread, stage_to_parquet
 
 _DOMAIN_CAP = 10
@@ -952,8 +959,6 @@ def _incremental_minhash_sql() -> str:
     # semantics, the dedup_*_lsh convention) and the exact-Jaccard
     # verify, then restricts to pairs that CROSS the corpus/batch
     # boundary before the per-language rollup.
-    from _imdb_etl_spark.operators.dedup import _LSH_CAND_CTE
-
     return f"""{_LSH_CAND_CTE},
 inter AS (
   SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
@@ -1011,8 +1016,6 @@ ORDER BY f.lang
     "path misses.",
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.operators.dedup import _jaccard_verify, lsh_candidates
-
     (docs,) = load_tables(spark, sf_dir, "documents")
     doc_sets, cand = lsh_candidates(docs)
     flags = docs.select(
@@ -1510,11 +1513,6 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_index_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from _imdb_etl_spark.operators.dedup import (
-        band_table,
-        minhash_doc_sets,
-    )
-
     base = scratch_dir("mh_index")
 
     (docs,) = load_tables(spark, sf_dir, "documents")

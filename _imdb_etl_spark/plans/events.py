@@ -12,8 +12,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import dec, dsum, hex_prefix_int, md5_prefix_int_sql
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
+from _imdb_etl_spark.streaming.events import _SESSION_SQL
 
 _HOURLY_SQL = """
 SELECT
@@ -52,24 +53,6 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("hour_bucket", "event_type")
     )
-
-
-_SESSION_SQL = """
-WITH gaps AS (
-  SELECT user_id, ts,
-         CASE WHEN epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-                OR lag(ts) OVER w IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT user_id,
-       CAST(SUM(new_session) AS BIGINT) AS n_sessions,
-       COUNT(*) AS n_events
-FROM gaps
-GROUP BY user_id
-ORDER BY user_id
-"""
 
 
 @register(

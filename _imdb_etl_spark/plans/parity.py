@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
 
 REF_DATA = "/root/reference/imdb_db"
 

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import dec, dsum, md5_prefix_int_sql
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, scoped_conf, stage_to_parquet
 
 _SALT_BUCKETS = 16

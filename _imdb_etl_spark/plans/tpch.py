@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import charge, davg, dec, disc_price, dsum
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
 _Q1_SQL = """

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from _imdb_etl_spark.functions import broadcast_if_bounded, dec, disc_price, dsum
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, stage_sorted
 
 _Q15_SQL = """

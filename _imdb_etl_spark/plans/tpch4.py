@@ -39,7 +39,7 @@ from _imdb_etl_spark.functions import (
     disc_price,
     dsum,
 )
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
 _Q2_SQL = """

@@ -3,6 +3,8 @@
 Each entry pairs an idiomatic-DataFrame builder with the equivalent ANSI
 SQL the DuckDB oracle runs on the same parquet tables. The driver
 contract (`__spark_entry__.py` at the repo root) exposes exactly this mapping.
+This module imports only pyspark, so a query module can import it first;
+importing the `plans` package registers every query and sets the order.
 
 Column-name discipline: the builder aliases every computed column and the
 oracle SQL uses identical `AS` names — the driver sorts columns by name

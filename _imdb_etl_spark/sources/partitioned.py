@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import dec, dsum
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, scoped_conf, scratch_dir
 
 _BACKFILL_DAY = "2024-01-05"  # driver events all land in 2024-01

@@ -40,7 +40,8 @@ from pyspark.sql.datasource import (
 )
 
 from _imdb_etl_spark.functions import md5_prefix_int_sql
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
+from _imdb_etl_spark.streaming.events import _run_to_memory
 
 
 class _RangePartition(InputPartition):
@@ -227,8 +228,6 @@ ORDER BY bucket
 def streaming_pysource_bucket_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from _imdb_etl_spark.streaming.events import _run_to_memory
-
     stream = read_synthetic_docs_stream(spark, rows=2000, batch=700)
     agg = stream.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_docs"),

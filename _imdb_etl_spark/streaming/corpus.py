@@ -25,15 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.operators.text import QUALITY_GATE_SQL, quality_gate_col
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
+from _imdb_etl_spark.streaming.events import _run_to_memory, read_table_stream
 
 
 def read_docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents stream with a synthetic deterministic event time
     (epoch + doc_id seconds) — the arrival clock a crawl frontier
     would stamp."""
-    from _imdb_etl_spark.streaming.events import read_table_stream
-
     stream = read_table_stream(spark, sf_dir, "documents")
     return stream.withColumn(
         "ts",
@@ -71,8 +70,6 @@ ORDER BY lang
     "surviving duplicate flips the oracle hash.",
 )
 def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.streaming.events import _run_to_memory
-
     first = read_docs_stream(spark, sf_dir)
     replay = read_docs_stream(spark, sf_dir)
     doubled = first.unionAll(replay)

@@ -28,8 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark.functions import dec, dsum
-from _imdb_etl_spark.plans.events import _SESSION_SQL
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
 
 
 def read_table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -141,6 +140,25 @@ def streaming_hourly_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "total_value",
     ).orderBy("hour_bucket", "event_type")
+
+
+# shared with the batch twin, plans/events.py:events_sessionize
+_SESSION_SQL = """
+WITH gaps AS (
+  SELECT user_id, ts,
+         CASE WHEN epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
+                OR lag(ts) OVER w IS NULL
+              THEN 1 ELSE 0 END AS new_session
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+)
+SELECT user_id,
+       CAST(SUM(new_session) AS BIGINT) AS n_sessions,
+       COUNT(*) AS n_events
+FROM gaps
+GROUP BY user_id
+ORDER BY user_id
+"""
 
 
 @register(

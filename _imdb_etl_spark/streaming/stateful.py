@@ -30,7 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from _imdb_etl_spark.plans.registry import register
+from _imdb_etl_spark.registry import register
+from _imdb_etl_spark.streaming.events import _run_to_memory, read_events_stream
 
 _OUTPUT_SCHEMA = StructType(
     [
@@ -92,8 +93,6 @@ ORDER BY user_id
     "against the declarative oracle on the bounded input.",
 )
 def streaming_stateful_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.streaming.events import _run_to_memory, read_events_stream
-
     events = read_events_stream(spark, sf_dir)
     totals = running_user_totals(events)
     # update-mode memory sink appends one row per (batch, user); keep the
@@ -229,8 +228,6 @@ _TWS_DOC = (
 
 @_register_tws
 def streaming_tws_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.streaming.events import _run_to_memory, read_events_stream
-
     events = read_events_stream(spark, sf_dir)
     extremes = running_user_extremes(events)
     out = _run_to_memory(extremes, output_mode="update")

@@ -71,15 +71,7 @@ def test_gate_window_fits_driver_cut():
     """The driver records only the first GATE_WINDOW_SIZE registry
     entries per round; an intended window longer than the cut silently
     loses its tail (round 4 listed 52 names and two got no gate row)."""
-    from _imdb_etl_spark.plans import (
-        GATE_WINDOW,
-        GATE_WINDOW_SIZE,
-        apply_gate_order,
-    )
-
-    # mirror the driver contract (__spark_entry__.queries), which
-    # re-applies the order to be robust to module import order
-    apply_gate_order()
+    from _imdb_etl_spark.plans import GATE_WINDOW, GATE_WINDOW_SIZE
 
     assert len(GATE_WINDOW) <= GATE_WINDOW_SIZE, (
         f"intended gate window has {len(GATE_WINDOW)} entries; the "
@@ -90,6 +82,46 @@ def test_gate_window_fits_driver_cut():
     assert not missing, f"gate window names not in registry: {missing}"
     # the registry must actually lead with the intended window
     assert list(REGISTRY)[: len(GATE_WINDOW)] == GATE_WINDOW
+
+
+def test_every_module_imports_first_and_keeps_gate_order(tmp_path):
+    """Every package module imports first in a fresh interpreter, and
+    importing the plans package after it leaves the registry in gate
+    order. A Python worker imports a pickled closure's module on its
+    own, and a query module imported before the plans package must not
+    register outside the driver's recorded window."""
+    import os
+    import subprocess
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    mods = sorted(
+        ".".join(p.relative_to(repo).with_suffix("").parts).removesuffix(".__init__")
+        for p in (repo / "_imdb_etl_spark").rglob("*.py")
+    )
+    check = (
+        "import _imdb_etl_spark.plans as p; "
+        "assert list(p.REGISTRY) == p.GATE_WINDOW + p._GATE_REST"
+    )
+    path = [str(repo), *filter(None, [os.environ.get("PYTHONPATH")])]
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(path)}
+
+    def run(mod):
+        return subprocess.run(
+            [sys.executable, "-c", f"import {mod}; {check}"],
+            cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+        )
+
+    with ThreadPoolExecutor(max_workers=os.cpu_count() or 1) as pool:
+        procs = dict(zip(mods, pool.map(run, mods)))
+    failed = [
+        f"{mod}: {(proc.stderr.strip().splitlines() or ['?'])[-1]}"
+        for mod, proc in procs.items()
+        if proc.returncode
+    ]
+    assert not failed, f"{len(failed)} of {len(mods)} modules:\n" + "\n".join(failed)
 
 
 def test_no_cartesian_in_registry_except_intended(spark, sf_dir, imdb_stage, monkeypatch):

@@ -15,16 +15,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import ordered
+
 
 def graf1_usa_india_2019(dim_movies: DataFrame) -> DataFrame:
     """dashboard_visualizations.sql:2-9."""
-    return (
+    return ordered(
         dim_movies.where(
             F.col("country").isin("USA", "India") & (F.col("year") == 2019)
         )
         .groupBy("country")
-        .agg(F.count("movie_id").alias("number_of_movies"))
-        .orderBy(F.desc("number_of_movies"), "country")
+        .agg(F.count("movie_id").alias("number_of_movies")),
+        F.desc("number_of_movies"),
+        "country",
     )
 
 
@@ -33,7 +36,7 @@ def graf2_avg_duration_by_genre(dim_genres: DataFrame, fact_movies: DataFrame) -
     long sum / count, one double division — matches any engine bitwise."""
     dg = dim_genres.alias("dg")
     fm = fact_movies.alias("fm")
-    return (
+    return ordered(
         dg.join(fm, F.col("dg.genre_id") == F.col("fm.genre_id"), "inner")
         .groupBy(F.col("dg.genre_name").alias("genre"))
         .agg(
@@ -42,8 +45,9 @@ def graf2_avg_duration_by_genre(dim_genres: DataFrame, fact_movies: DataFrame) -
                 / F.count("duration"),
                 2,
             ).alias("avg_duration")
-        )
-        .orderBy(F.desc("avg_duration"), "genre")
+        ),
+        F.desc("avg_duration"),
+        "genre",
     )
 
 
@@ -98,11 +102,12 @@ def graf4_top3_directors_top3_genres(
     w = Window.partitionBy("genre_name").orderBy(
         F.desc("movie_count"), F.asc("director_name")
     )
-    return (
+    return ordered(
         per_director.withColumn("director_rank", F.row_number().over(w))
         .where(F.col("director_rank") <= 3)
-        .select("director_name", "movie_count")
-        .orderBy("director_name", "movie_count")
+        .select("director_name", "movie_count"),
+        "director_name",
+        "movie_count",
     )
 
 

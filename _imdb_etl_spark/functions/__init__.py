@@ -53,8 +53,9 @@ def dec(col: str | Column, typ: str = MONEY) -> Column:
 # and the hint additionally requires <= BROADCAST_BYTES_MAX estimated
 # in-memory size. Above either ceiling the hint is dropped and
 # Catalyst/AQE picks the strategy — degrading to a shuffle join
-# instead of OOMing the driver.
-BROADCAST_ROWS_MAX = 4_000_000
+# instead of OOMing the driver. The same row cap decides when
+# ``ordered`` may sort a result in one task.
+SMALL_ROWS_MAX = 4_000_000
 BROADCAST_BYTES_MAX = 256 << 20
 
 # estimated in-memory width per value for fixed-width Spark SQL types
@@ -77,64 +78,125 @@ _FIXED_WIDTH = {
 }
 
 
-# Plan shapes whose every node preserves or reduces row count: for
-# these, the sum of the leaf parquet footers' row counts is an exact
-# UPPER BOUND on the frame's cardinality, so the broadcast gate can
-# prove "small enough" without running its eager measure job.
-# Generate (explode), Join, Union etc. can multiply rows and must
-# fall through to the measured pass. One exception: a global
-# Aggregate over empty input still yields one row, so a plan with an
-# Aggregate is bounded by max(footer sum, 1).
-_CARD_NONINCREASING = {
-    "Project",
-    "Filter",
-    "LogicalRelation",
-    "Relation",
-    "SubqueryAlias",
-    "Aggregate",
-    "Deduplicate",
-    "GlobalLimit",
-    "LocalLimit",
-}
+# Logical nodes that never output more rows than their one child.
+# LocalLimit is here because its k bounds each partition, not the
+# total; the GlobalLimit that Spark always puts above it carries k.
+_ROWS_KEPT = frozenset(
+    {
+        "Project",
+        "Filter",
+        "SubqueryAlias",
+        "View",
+        "Window",
+        "Sort",
+        "Deduplicate",
+        "Distinct",
+        "LocalLimit",
+        "ResolvedHint",
+        "Repartition",
+        "RepartitionByExpression",
+    }
+)
 
 
-def _footer_rows_upper(df) -> int | None:
-    """Exact row-count upper bound from the leaf parquet footers, or
-    None when the bound cannot be proven cheaply: the plan must be
-    cardinality-nonincreasing node by node (see _CARD_NONINCREASING)
-    and every input must be a locally readable parquet file (footer
-    metadata read on the driver — no Spark job). Any failure returns
-    None and the caller falls back to the measured pass, so remote
-    storage or exotic plans degrade to the old behavior."""
-    try:
-        stack = [df._jdf.queryExecution().analyzed()]
-        aggregates = False
-        while stack:
-            node = stack.pop()
-            if node.nodeName() not in _CARD_NONINCREASING:
-                return None
-            aggregates |= node.nodeName() == "Aggregate"
-            for i in range(node.children().size()):
-                stack.append(node.children().apply(i))
-        files = df.inputFiles()
-        if not files or len(files) > 64:
+def _footer_rows(relation) -> int | None:
+    """Sum of the row counts in a parquet relation's file footers, read
+    on the driver with no Spark job; None for any other source, remote
+    files or more than 64 files."""
+    if (
+        relation.getClass().getSimpleName() != "HadoopFsRelation"
+        or relation.fileFormat().shortName() != "parquet"
+    ):
+        return None
+    files = list(relation.inputFiles())
+    if len(files) > 64:
+        return None
+    import pyarrow.parquet as pq
+
+    total = 0
+    for f in files:
+        uri = urlparse(f)
+        if uri.scheme != "file" or uri.netloc:
             return None
-        import pyarrow.parquet as pq
+        total += pq.ParquetFile(unquote(uri.path)).metadata.num_rows
+    return total
 
-        total = 0
-        for f in files:
-            uri = urlparse(f)
-            if uri.scheme != "file" or uri.netloc:
-                return None
-            total += pq.ParquetFile(unquote(uri.path)).metadata.num_rows
-        return max(total, 1) if aggregates else total
+
+def _node_rows_upper(node) -> int | None:
+    name = node.nodeName()
+    if name == "LogicalRelation":
+        return _footer_rows(node.relation())
+    if name == "MemoryPlan":  # a memory sink's rows, held in the driver
+        return node.sink().allData().size()
+    if name == "LocalRelation":
+        return node.data().size()
+    children = node.children()
+    kids = [children.apply(i) for i in range(children.size())]
+    if name == "GlobalLimit":
+        k = node.maxRows()
+        if not k.isDefined():
+            return None
+        child = _node_rows_upper(kids[0])
+        return k.get() if child is None else min(k.get(), child)
+    if name == "Join":
+        left = _node_rows_upper(kids[0])
+        if left is None:
+            return None
+        how = node.joinType().toString()
+        if how in ("LeftSemi", "LeftAnti"):
+            return left
+        right = _node_rows_upper(kids[1])
+        if right is None:
+            return None
+        if how in ("Inner", "Cross"):
+            return left * right
+        if how in ("LeftOuter", "RightOuter", "FullOuter"):
+            # matched pairs plus, at most, every unmatched row of each side
+            return left * right + left + right
+        return None
+    if name == "Aggregate":  # a global aggregate over no rows yields one
+        child = _node_rows_upper(kids[0])
+        return None if child is None else max(child, 1)
+    if name in _ROWS_KEPT:
+        return _node_rows_upper(kids[0])
+    return None
+
+
+def rows_upper(df) -> int | None:
+    """A proven upper bound on the frame's row count, from its analyzed
+    plan and no Spark job, or None when no rule proves one. Leaves:
+    parquet relations count their file footers; memory sinks and local
+    relations the rows the driver holds. Above them: row-keeping nodes
+    (_ROWS_KEPT) pass the child's bound on, an Aggregate gives
+    max(child, 1), a GlobalLimit k gives min(k, child) or k alone, a
+    left semi or anti join the left side's bound, an inner or cross
+    join the product of both sides, and an outer join the product plus
+    both sides. Any other node (Generate, Union, a non-file source)
+    returns None, and so does any error: the bound never guesses."""
+    try:
+        return _node_rows_upper(df._jdf.queryExecution().analyzed())
     except Exception:  # noqa: BLE001
         return None
 
 
+def ordered(df, *cols):
+    """The closing sort of a result. When ``rows_upper`` proves the
+    frame holds at most SMALL_ROWS_MAX rows, sort it in one task
+    (``coalesce(1)`` then a local sort); a global ``orderBy`` would add
+    a sampling job for the range bounds and a range shuffle, whatever
+    the row count. ``coalesce(1)`` is narrow, so the stage above the
+    last exchange, often a final aggregate, runs in that one task too.
+    Otherwise it is ``df.orderBy(*cols)``, so large results keep the
+    parallel sort."""
+    upper = rows_upper(df)
+    if upper is not None and upper <= SMALL_ROWS_MAX:
+        return df.coalesce(1).sortWithinPartitions(*cols)
+    return df.orderBy(*cols)
+
+
 def broadcast_if_bounded(
     df,
-    max_rows: int = BROADCAST_ROWS_MAX,
+    max_rows: int = SMALL_ROWS_MAX,
     max_bytes: int = BROADCAST_BYTES_MAX,
 ):
     """Apply F.broadcast only when the frame is measured broadcast-
@@ -196,17 +258,16 @@ def broadcast_if_bounded(
         else:
             fixed += 64
     # Short-circuit (round 13, guide §3.1/§1): when every output column
-    # is fixed-width and the parquet footers already prove the frame's
-    # row count (hence bytes) under both caps, skip the eager measure
-    # job entirely — at bench scale the measure pass was a visible
-    # per-join constant (tpch_q19 +0.22 s) paid even for trivially tiny
-    # dimensions. The footer count is an exact UPPER bound (only
-    # cardinality-nonincreasing plans qualify), so this only ever
+    # is fixed-width and rows_upper already proves the frame's row
+    # count (hence bytes) under both caps, skip the eager measure job
+    # entirely — at bench scale the measure pass was a visible per-join
+    # constant (tpch_q19 +0.22 s) paid even for trivially tiny
+    # dimensions. The bound is a true UPPER bound, so this only ever
     # broadcasts frames the measured pass would also have broadcast;
     # above the caps (every at-scale refusal path) it falls through to
     # the measured pass unchanged.
     if not measured:
-        upper = _footer_rows_upper(df)
+        upper = rows_upper(df)
         if (
             upper is not None
             and upper <= max_rows

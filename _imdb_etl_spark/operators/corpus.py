@@ -36,6 +36,7 @@ from _imdb_etl_spark.functions import (
     doc_permille_bucket,
     hex_prefix_int,
     md5_prefix_int_sql,
+    ordered,
 )
 from _imdb_etl_spark.operators.dedup import (
     _JACCARD_SQL,
@@ -141,7 +142,7 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = (
         F.when(h < "c", "train").when(h < "e", "val").otherwise("test")
     ).alias("split")
-    return (
+    return ordered(
         docs.select(split, "lang", "n_chars", "doc_id")
         .groupBy("split", "lang")
         .agg(
@@ -149,8 +150,9 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").cast("long").alias("sum_chars"),
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
-        )
-        .orderBy("split", "lang")
+        ),
+        "split",
+        "lang",
     )
 
 
@@ -228,7 +230,7 @@ def boilerplate_ngram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_boiler"))
     )
-    return (
+    return ordered(
         perdoc.join(bp, "doc_id", "left")
         .select(
             "doc_id",
@@ -239,8 +241,8 @@ def boilerplate_ngram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.col("n_ngrams"),
                 6,
             ).alias("boiler_ratio"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -276,7 +278,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     freq = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     tot = freq.agg(F.sum("c").cast("double").alias("t"))
-    return (
+    return ordered(
         toks.join(freq, "w")
         .crossJoin(F.broadcast(tot))  # 1-row scalar: bounded, safe hint
         .groupBy("doc_id")
@@ -285,8 +287,8 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.avg(F.ln(F.col("c").cast("double") / F.col("t"))), 6
             ).alias("avg_logprob"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -372,7 +374,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     pb = assigned.select(
         F.col("doc_id").alias("doc_b"), F.col("split").alias("split_b")
     )
-    return (
+    return ordered(
         pairs.join(pa, "doc_a")
         .join(pb, "doc_b")
         .groupBy(
@@ -385,8 +387,9 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "split_hi",
             "n_pairs",
             (F.col("split_lo") != F.col("split_hi")).alias("is_leakage"),
-        )
-        .orderBy("split_lo", "split_hi")
+        ),
+        "split_lo",
+        "split_hi",
     )
 
 
@@ -444,7 +447,7 @@ def corpus_source_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).alias("n_copies"),
         F.sum("n_chars").alias("chars_in_group"),
     )
-    return (
+    return ordered(
         per_hash.groupBy("source")
         .agg(
             F.sum("n_copies").alias("n_docs"),
@@ -463,8 +466,8 @@ def corpus_source_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame
             F.expr("(1000 * n_dup_docs) div n_docs").alias("dup_permille"),
             "n_quality",
             "total_chars",
-        )
-        .orderBy("source")
+        ),
+        "source",
     )
 
 
@@ -542,14 +545,17 @@ def corpus_chars_tokens_regression(
     varx_n = nd * F.col("sxx") - sxd * sxd
     vary_n = nd * F.col("syy") - syd * syd
     slope = F.round(cov_n / varx_n, 6)
-    return m.select(
+    return ordered(
+        m.select(
+            "lang",
+            "n",
+            slope.alias("slope"),
+            # + 0.0 collapses IEEE -0.0 (hash-visible, ==-invisible)
+            (F.round((syd - slope * sxd) / nd, 6) + 0.0).alias("intercept"),
+            F.round(cov_n * cov_n / (varx_n * vary_n), 6).alias("r2"),
+        ),
         "lang",
-        "n",
-        slope.alias("slope"),
-        # + 0.0 collapses IEEE -0.0 (hash-visible, ==-invisible)
-        (F.round((syd - slope * sxd) / nd, 6) + 0.0).alias("intercept"),
-        F.round(cov_n * cov_n / (varx_n * vary_n), 6).alias("r2"),
-    ).orderBy("lang")
+    )
 
 
 # --- BPE merge-candidate table ---------------------------------------
@@ -613,9 +619,12 @@ def tokenizer_bpe_first_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = counts.orderBy(F.desc("cnt"), F.asc("pair")).limit(_BPE_TOP)
     # global window over exactly <= _BPE_TOP post-limit rows — bounded
     w = Window.orderBy(F.desc("cnt"), F.asc("pair"))
-    return top.select(
-        "pair", "cnt", F.row_number().over(w).alias("merge_rank")
-    ).orderBy("merge_rank")
+    return ordered(
+        top.select(
+            "pair", "cnt", F.row_number().over(w).alias("merge_rank")
+        ),
+        "merge_rank",
+    )
 
 
 # --- supervised quality model (distributed training scorecard) -------
@@ -811,7 +820,7 @@ def tokenizer_bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.crossJoin(F.broadcast(top))
         .select("doc_id", F.length("w").alias("lb"), nrep.alias("nrep"))
     )
-    return (
+    return ordered(
         app.groupBy("doc_id")
         .agg(
             F.sum("lb").alias("symbols_before"),
@@ -826,8 +835,8 @@ def tokenizer_bpe_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "1000 * symbols_after div symbols_before"
             ).alias("compression_permille"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -1397,20 +1406,25 @@ def privacy_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_chars") / 100).cast("long").alias("len_bucket"),
         pii_class.alias("pii_class"),
     ).groupBy("lang", "source", "len_bucket")
-    return grouped.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count_distinct("pii_class").alias("l_diversity"),
-    ).select(
+    return ordered(
+        grouped.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.count_distinct("pii_class").alias("l_diversity"),
+        ).select(
+            "lang",
+            "source",
+            "len_bucket",
+            "n_docs",
+            "l_diversity",
+            F.when(F.col("n_docs") < _KANON_K, "suppress")
+            .when(F.col("l_diversity") < _LDIV_L, "generalize")
+            .otherwise("release")
+            .alias("action"),
+        ),
         "lang",
         "source",
         "len_bucket",
-        "n_docs",
-        "l_diversity",
-        F.when(F.col("n_docs") < _KANON_K, "suppress")
-        .when(F.col("l_diversity") < _LDIV_L, "generalize")
-        .otherwise("release")
-        .alias("action"),
-    ).orderBy("lang", "source", "len_bucket")
+    )
 
 
 # --- CCNet-style perplexity bucketing ---------------------------------
@@ -1513,15 +1527,16 @@ def corpus_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("tail")
         .alias("bucket"),
     )
-    return (
+    return ordered(
         bucketed.groupBy("lang", "bucket")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tokens").cast("long").alias("n_tokens"),
             F.round(F.min("score"), 6).alias("min_score"),
             F.round(F.max("score"), 6).alias("max_score"),
-        )
-        .orderBy("lang", "bucket")
+        ),
+        "lang",
+        "bucket",
     )
 
 
@@ -1624,7 +1639,7 @@ def corpus_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_masked",
         F.when(F.max("is_start").over(w) == 1, 1).otherwise(0),
     )
-    return (
+    return ordered(
         masked.groupBy("doc_id")
         .agg(
             F.max("n_tokens").cast("long").alias("n_tokens"),
@@ -1643,8 +1658,8 @@ def corpus_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                 )
             ).alias("mask_md5"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -1783,7 +1798,7 @@ def corpus_batch_padding_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_tokens").alias("max_tokens"),
         F.sum("n_tokens").alias("real_tokens"),
     )
-    return (
+    return ordered(
         batches.groupBy("strategy")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_batches"),
@@ -1802,8 +1817,8 @@ def corpus_batch_padding_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("waste_permille"),
-        )
-        .orderBy("strategy")
+        ),
+        "strategy",
     )
 
 
@@ -1899,7 +1914,7 @@ def tokenizer_vocab_coverage_ladder(
             F.col("freq"),
         ).otherwise(0)
     )
-    return (
+    return ordered(
         lad.groupBy("vocab_size")
         .agg(
             covered.cast("long").alias("covered_tokens"),
@@ -1915,8 +1930,8 @@ def tokenizer_vocab_coverage_ladder(
             )
             .cast("long")
             .alias("oov_types"),
-        )
-        .orderBy("vocab_size")
+        ),
+        "vocab_size",
     )
 
 
@@ -2041,7 +2056,7 @@ def reco_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = cand.groupBy("custkey", "partkey").agg(F.min("i").alias("i"))
     neg = dd.join(pos, ["custkey", "partkey"], "left_anti")
     w = Window.partitionBy("custkey").orderBy("i")
-    return (
+    return ordered(
         neg.withColumn("neg_rank", F.row_number().over(w))
         .where(F.col("neg_rank") <= _NEG_K)
         .join(pc, "custkey")
@@ -2050,8 +2065,9 @@ def reco_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("neg_rank").cast("int").alias("neg_rank"),
             F.col("partkey").cast("long").alias("partkey"),
             F.col("n_pos").cast("long").alias("n_pos"),
-        )
-        .orderBy("custkey", "neg_rank")
+        ),
+        "custkey",
+        "neg_rank",
     )
 
 
@@ -2135,7 +2151,7 @@ def corpus_canary_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(canaries),  # bounded: one canary per 97 docs
         F.expr("contains(text, needle)"),
     )
-    return (
+    return ordered(
         hits.groupBy("canary_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs_containing"),
@@ -2145,8 +2161,8 @@ def corpus_canary_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .cast("int")
             .alias("leaked"),
-        )
-        .orderBy("canary_id")
+        ),
+        "canary_id",
     )
 
 
@@ -2291,7 +2307,7 @@ def corpus_canary_scan_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = spread(docs).select("doc_id", "text").mapInPandas(
         scan, hit_schema
     )
-    return (
+    return ordered(
         hits.groupBy("canary_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs_containing"),
@@ -2301,8 +2317,8 @@ def corpus_canary_scan_many(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .cast("int")
             .alias("leaked"),
-        )
-        .orderBy("canary_id")
+        ),
+        "canary_id",
     )
 
 
@@ -2392,7 +2408,7 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
             has_pii.alias("has_pii"),
         )
     )
-    return (
+    return ordered(
         flagged.groupBy("lang", "source")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -2407,6 +2423,7 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(1000 * sum(has_pii)) div count(*)")
             .cast("long")
             .alias("pii_permille"),
-        )
-        .orderBy("lang", "source")
+        ),
+        "lang",
+        "source",
     )

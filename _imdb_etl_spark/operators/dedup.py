@@ -27,7 +27,7 @@ import pandas as pd  # module-level: pandas_udf resolves postponed hints here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import hex_prefix_int, md5_prefix_int_sql
+from _imdb_etl_spark.functions import hex_prefix_int, md5_prefix_int_sql, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import (
     load_tables,
@@ -54,10 +54,10 @@ ORDER BY text_hash
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
-    return (
+    return ordered(
         docs.groupBy(F.md5("text").alias("text_hash"))
-        .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("keep_id"))
-        .orderBy("text_hash")
+        .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("keep_id")),
+        "text_hash",
     )
 
 
@@ -79,10 +79,10 @@ ORDER BY norm_hash
 def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower("text"), " +", " "))
-    return (
+    return ordered(
         docs.groupBy(F.md5(norm).alias("norm_hash"))
-        .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("keep_id"))
-        .orderBy("norm_hash")
+        .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("keep_id")),
+        "norm_hash",
     )
 
 
@@ -463,14 +463,15 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     contain = F.size(F.array_intersect("shs_a", "shs_b")).cast("double") / F.col(
         "na"
     )
-    return (
+    return ordered(
         pairs.join(da, F.col("doc_id") == F.col("ka"))
         .join(db, F.col("container_id") == F.col("kb"))
         .where(contain >= _CONTAIN_TAU)
         .select(
             "doc_id", "container_id", F.round(contain, 6).alias("containment")
-        )
-        .orderBy("doc_id", "container_id")
+        ),
+        "doc_id",
+        "container_id",
     )
 
 
@@ -509,13 +510,13 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval_sh = (
         sh.where(F.col("doc_id") < _N_EVAL_DOCS).select("sh").distinct()
     )
-    return (
+    return ordered(
         sh.where(F.col("doc_id") >= _N_EVAL_DOCS)
         .join(F.broadcast(eval_sh), "sh", "inner")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= 3)
-        .orderBy("doc_id")
+        .where(F.col("n_shared") >= 3),
+        "doc_id",
     )
 
 
@@ -559,9 +560,7 @@ def vocab_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AFTER the limit, over exactly <= 100 rows, so the single-task
     # WindowExec warning Spark always emits does not indicate a funnel
     w = Window.orderBy(F.desc("freq"), F.asc("word"))
-    return top.withColumn("token_id", F.row_number().over(w) - 1).orderBy(
-        "token_id"
-    )
+    return ordered(top.withColumn("token_id", F.row_number().over(w) - 1), "token_id")
 
 
 _SIMHASH_BITS = 64
@@ -831,11 +830,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (
+    return ordered(
         cand.withColumn("hamming", hamming)
         .where(F.col("hamming") <= _HAMMING_MAX)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
+        .select("doc_a", "doc_b", "hamming"),
+        "doc_a",
+        "doc_b",
     )
 
 
@@ -1198,11 +1198,14 @@ def neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # orderBy+limit collapses to TakeOrderedAndProject and the final
     # row_number runs over exactly <= _PR_TOP rows — benign
     top = ranks.orderBy(F.desc("rank"), F.asc("node")).limit(_PR_TOP)
-    return top.select(
-        F.col("node").alias("doc_id"),
-        F.round("rank", 6).alias("pagerank"),
-        F.row_number().over(w).alias("rank_order"),
-    ).orderBy("rank_order")
+    return ordered(
+        top.select(
+            F.col("node").alias("doc_id"),
+            F.round("rank", 6).alias("pagerank"),
+            F.row_number().over(w).alias("rank_order"),
+        ),
+        "rank_order",
+    )
 
 
 # --- Bloom-filter decontamination ------------------------------------
@@ -1311,7 +1314,7 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    return (
+    return ordered(
         hits.join(exact, "doc_id", "left")
         .where(F.col("n_bloom_hits") >= _BLOOM_MIN_HITS)
         .select(
@@ -1321,8 +1324,8 @@ def decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.coalesce("n_shared", F.lit(0)) < _BLOOM_MIN_HITS).alias(
                 "bloom_only"
             ),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -1377,7 +1380,7 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("cluster_id", "cluster_size")
         .distinct()
     )
-    return (
+    return ordered(
         sizes.groupBy("cluster_size")
         .agg(F.count(F.lit(1)).alias("n_clusters"))
         .select(
@@ -1387,8 +1390,8 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_clusters") * (F.col("cluster_size") - 1)).alias(
                 "n_removable"
             ),
-        )
-        .orderBy("cluster_size")
+        ),
+        "cluster_size",
     )
 
 
@@ -1446,7 +1449,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("n_chars"), F.asc("doc_id")
     )
-    return (
+    return ordered(
         clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
         .withColumn("rn", F.row_number().over(w))
         .select(
@@ -1455,8 +1458,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster_size",
             "n_chars",
             (F.col("rn") == 1).alias("keep"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -1893,7 +1896,7 @@ def dedup_jaccard_prefix_incremental(
     )
     inter = F.size(F.array_intersect("shs_x", "shs_q")).cast("double")
     jacc = inter / (F.col("nx2") + F.col("nq2") - inter)
-    return (
+    return ordered(
         cand.join(dx, F.col("doc_x") == F.col("kx"))
         .join(dq, F.col("doc_q") == F.col("kq"))
         .where(jacc >= _PREFIX_TAU)
@@ -1901,8 +1904,9 @@ def dedup_jaccard_prefix_incremental(
             F.least("doc_x", "doc_q").alias("doc_a"),
             F.greatest("doc_x", "doc_q").alias("doc_b"),
             F.round(jacc, 6).alias("jaccard"),
-        )
-        .orderBy("doc_a", "doc_b")
+        ),
+        "doc_a",
+        "doc_b",
     )
 
 
@@ -1971,7 +1975,7 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     found = cand.withColumn("f", F.lit(1))
     permille = F.floor(F.col("jaccard") * 1000 + 0.5)
     band = F.floor(permille / F.lit(100)).cast("int")
-    return (
+    return ordered(
         truth.join(found, ["doc_a", "doc_b"], "left")
         .groupBy(band.alias("jacc_band"))
         .agg(
@@ -1982,8 +1986,8 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.count(F.lit(1)),
                 6,
             ).alias("recall"),
-        )
-        .orderBy("jacc_band")
+        ),
+        "jacc_band",
     )
 
 
@@ -2073,7 +2077,7 @@ def neardup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ca = scount.select(F.col("source").alias("ka"), F.col("n_docs").alias("na"))
     cb = scount.select(F.col("source").alias("kb"), F.col("n_docs").alias("nb"))
-    return (
+    return ordered(
         joined.join(F.broadcast(ca), F.col("source_a") == F.col("ka"))
         .join(F.broadcast(cb), F.col("source_b") == F.col("kb"))
         .select(
@@ -2085,8 +2089,10 @@ def neardup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("na") * F.col("nb").cast("double")),
                 9,
             ).alias("dup_rate"),
-        )
-        .orderBy(F.desc("n_dup_pairs"), "source_a", "source_b")
+        ),
+        F.desc("n_dup_pairs"),
+        "source_a",
+        "source_b",
     )
 
 
@@ -2305,7 +2311,7 @@ def neardup_clustering_coefficient(
     tri = wedges.join(close, ["n1", "n2"])
     corners = tri.select(F.explode(F.array("u", "n1", "n2")).alias("node"))
     pt = corners.groupBy("node").agg(F.count(F.lit(1)).alias("t"))
-    return (
+    return ordered(
         deg.select(F.col("u").alias("node"), "d")
         .join(pt, "node", "left")
         .select(
@@ -2319,8 +2325,8 @@ def neardup_clustering_coefficient(
             .otherwise(F.lit(0))
             .cast("long")
             .alias("lcc_permille"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -2441,8 +2447,8 @@ def neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges["b"] == F.col("nb"),
         "left_semi",
     )
-    return (
+    return ordered(
         core_edges.groupBy(F.col("a").alias("doc_id"))
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-        .orderBy("doc_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("core_degree")),
+        "doc_id",
     )

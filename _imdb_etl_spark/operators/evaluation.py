@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import ordered
 from _imdb_etl_spark.operators.text import (
     _STOPWORDS,
     QUALITY_GATE_SQL,
@@ -212,7 +213,7 @@ def quality_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("np") + F.col("nn")).over(w).alias("n_pred"),
         F.sum("np").over(w_all).alias("total_pos"),
     )
-    return (
+    return ordered(
         c.select(
             F.col("score").alias("threshold"),
             F.col("n_pred").alias("n_pred_pos"),
@@ -223,8 +224,8 @@ def quality_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CASE WHEN total_pos = 0 THEN NULL"
                 " ELSE 1000 * tp div total_pos END"
             ).alias("recall_permille"),
-        )
-        .orderBy("threshold")
+        ),
+        "threshold",
     )
 
 
@@ -279,11 +280,14 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mean_score = F.expr("score_mass div n_docs")
     pos_rate = F.expr("1000 * n_pos div n_docs")
-    return b.select(
+    return ordered(
+        b.select(
+            "bin_id",
+            "n_docs",
+            "n_pos",
+            mean_score.alias("mean_score_permille"),
+            pos_rate.alias("pos_rate_permille"),
+            F.abs(mean_score - pos_rate).alias("gap_permille"),
+        ),
         "bin_id",
-        "n_docs",
-        "n_pos",
-        mean_score.alias("mean_score_permille"),
-        pos_rate.alias("pos_rate_permille"),
-        F.abs(mean_score - pos_rate).alias("gap_permille"),
-    ).orderBy("bin_id")
+    )

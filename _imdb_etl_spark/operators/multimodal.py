@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from _imdb_etl_spark.functions import ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, stage_sorted, stage_to_parquet
 
@@ -1057,7 +1058,7 @@ def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("len").alias("n_active"),
     )
     tot = frames.groupBy("asset_id").agg(F.count(F.lit(1)).alias("n_frames"))
-    return (
+    return ordered(
         tot.join(pa, "asset_id", "left")
         .select(
             "asset_id",
@@ -1069,8 +1070,8 @@ def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("longest_segment", F.lit(0))
             .cast("long")
             .alias("longest_segment"),
-        )
-        .orderBy("asset_id")
+        ),
+        "asset_id",
     )
 
 

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import doc_permille_bucket
+from _imdb_etl_spark.functions import doc_permille_bucket, ordered
 from _imdb_etl_spark.operators.dedup import _SHINGLE_SQL, _shingles
 from _imdb_etl_spark.operators.text import (
     QUALITY_GATE_SQL,
@@ -73,7 +73,7 @@ def pipeline_docs_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # avg chars in exact integer micro-units (`div`, never float division):
     # float averaging plus ROUND is representation-sensitive across
     # engines, integer arithmetic is bitwise-identical everywhere
-    return (
+    return ordered(
         corpus.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -85,8 +85,8 @@ def pipeline_docs_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "total_tokens",
             F.expr("(_sum_chars * 1000000L) div n_docs").alias("avg_chars_micro"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -326,7 +326,7 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return (
+    return ordered(
         rates.join(sampled, "lang", "left")
         .select(
             "lang",
@@ -337,6 +337,6 @@ def pipeline_pretrain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("wt").alias("weight"),
             "keep_permille",
             F.coalesce("n_sampled", F.lit(0).cast("long")).alias("n_sampled"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
@@ -105,7 +106,7 @@ def dq_constraint_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.orderBy("check_name")
+    return ordered(out, "check_name")
 
 
 _NULLPROF_SQL = """
@@ -127,7 +128,7 @@ ORDER BY column_name
 def dq_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
     total = F.count(F.lit(1))
-    return (
+    return ordered(
         docs.agg(
             total.alias("n_total"),
             (total - F.count("lang")).alias("lang_nulls"),
@@ -136,8 +137,8 @@ def dq_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "stack(2, 'lang', lang_nulls, n_total, 'text', text_nulls, n_total)"
             " AS (column_name, n_null, n_total)"
-        )
-        .orderBy("column_name")
+        ),
+        "column_name",
     )
 
 

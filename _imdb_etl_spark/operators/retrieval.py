@@ -33,7 +33,7 @@ import pandas as pd  # resolves postponed type hints here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import doc_permille_bucket, md5_prefix_int_sql
+from _imdb_etl_spark.functions import doc_permille_bucket, md5_prefix_int_sql, ordered
 from _imdb_etl_spark.operators.similarity import _cos_sql, _cosine
 from _imdb_etl_spark.operators.webcorpus import _BUCKET_SQL
 from _imdb_etl_spark.registry import register
@@ -218,9 +218,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c2") + F.lit(_LM_K))
         / (F.col("c1") + F.lit(_LM_K) * F.col("v"))
     )
-    return (
-        # no hard hints on the count tables: vocabulary-bounded but not
-        # literally bounded — AQE broadcasts them when they fit
+    return ordered(
         pairs.join(c2, ["w1", "w2"])
         .join(c1, "w1")
         .crossJoin(F.broadcast(v))  # 1-row scalar: bounded, safe hint
@@ -228,8 +226,8 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.round(F.avg(logp), 6).alias("avg_bigram_logprob"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -312,11 +310,12 @@ def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
+    return ordered(
         scored.withColumn("term_rank", F.row_number().over(w))
         .where(F.col("term_rank") <= _TFIDF_TOP)
-        .select("doc_id", "term_rank", "term", "tfidf")
-        .orderBy("doc_id", "term_rank")
+        .select("doc_id", "term_rank", "term", "tfidf"),
+        "doc_id",
+        "term_rank",
     )
 
 
@@ -391,7 +390,7 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     first_seen = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     seen = F.when(F.col("first_doc") < F.col("doc_id"), 1).otherwise(0)
-    return (
+    return ordered(
         grams.join(first_seen, "g")
         .groupBy("doc_id")
         .agg(
@@ -405,8 +404,8 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("1000 * n_seen_before div n_grams").alias(
                 "repeated_permille"
             ),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -455,7 +454,7 @@ def corpus_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dl = tf.groupBy("doc_id").agg(F.sum("c").cast("double").alias("n"))
     p = F.col("c") / F.col("n")
-    return (
+    return ordered(
         tf.join(dl, "doc_id")
         .groupBy("doc_id", "n")
         .agg(
@@ -467,8 +466,8 @@ def corpus_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("bigint").alias("n_tokens"),
             "n_distinct",
             "entropy_nats",
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -673,9 +672,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = fused.orderBy(F.desc("rrf_score"), F.asc("doc_id")).limit(_RRF_TOP)
     wf = Window.orderBy(F.desc("rrf_score"), F.asc("doc_id"))
-    return top.withColumn("fused_rank", F.row_number().over(wf)).orderBy(
-        "fused_rank"
-    )
+    return ordered(top.withColumn("fused_rank", F.row_number().over(wf)), "fused_rank")
 
 
 # --- held-out LM scoring ---------------------------------------------
@@ -801,7 +798,7 @@ def text_lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.coalesce(F.col("c1"), F.lit(0.0)) + F.lit(_LM_K) * F.col("v"))
     )
     unseen = F.when(F.col("c2").isNull(), 1).otherwise(0)
-    return (
+    return ordered(
         pairs.where(F.col("is_test"))
         .join(c2, ["w1", "w2"], "left")
         .join(c1, ["w1"], "left")
@@ -823,6 +820,6 @@ def text_lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_unseen",
             "unseen_permille",
             "avg_heldout_logprob",
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )

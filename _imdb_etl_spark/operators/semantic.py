@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import rank_centroids_desc
+from _imdb_etl_spark.functions import ordered, rank_centroids_desc
 from _imdb_etl_spark.operators.similarity import (
     _CENTROID_FILTER,
     _N_CENTROIDS,
@@ -99,14 +99,14 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_sim"),
         )
     )
-    return (
+    return ordered(
         scored.where(F.col("cos_sim") >= _DECONTAM_TAU)
         .groupBy("vec_id")
         .agg(
             F.count(F.lit(1)).alias("n_eval_hits"),
             F.max("cos_sim").alias("max_sim"),
-        )
-        .orderBy("vec_id")
+        ),
+        "vec_id",
     )
 
 
@@ -174,14 +174,14 @@ def embedding_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("cos_c"),
     )
-    return (
+    return ordered(
         member.groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
             F.round(F.avg("cos_c"), 6).alias("mean_cohesion"),
             F.min("cos_c").alias("min_cohesion"),
-        )
-        .orderBy("label")
+        ),
+        "label",
     )
 
 
@@ -475,10 +475,11 @@ def sim_knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank_w = Window.partitionBy("query_id").orderBy(
         F.desc("approx_dot"), F.asc("neighbor_id")
     )
-    return (
+    return ordered(
         scored.withColumn("neighbor_rank", F.row_number().over(rank_w))
-        .where(F.col("neighbor_rank") <= _PQ_TOP_K)
-        .orderBy("query_id", "neighbor_rank")
+        .where(F.col("neighbor_rank") <= _PQ_TOP_K),
+        "query_id",
+        "neighbor_rank",
     )
 
 
@@ -681,10 +682,11 @@ def sim_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank_w = Window.partitionBy("query_id").orderBy(
         F.desc("approx_dot"), F.asc("neighbor_id")
     )
-    return (
+    return ordered(
         scored.withColumn("neighbor_rank", F.row_number().over(rank_w))
-        .where(F.col("neighbor_rank") <= _IVFPQ_TOP_K)
-        .orderBy("query_id", "neighbor_rank")
+        .where(F.col("neighbor_rank") <= _IVFPQ_TOP_K),
+        "query_id",
+        "neighbor_rank",
     )
 
 
@@ -904,10 +906,11 @@ def sim_knn_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank_w = Window.partitionBy("query_id").orderBy(
         F.desc("exact_cos"), F.asc("neighbor_id")
     )
-    return (
+    return ordered(
         ref.withColumn("neighbor_rank", F.row_number().over(rank_w))
-        .where(F.col("neighbor_rank") <= _IVFPQ_TOP_K)
-        .orderBy("query_id", "neighbor_rank")
+        .where(F.col("neighbor_rank") <= _IVFPQ_TOP_K),
+        "query_id",
+        "neighbor_rank",
     )
 
 

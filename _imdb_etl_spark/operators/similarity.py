@@ -25,7 +25,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import rank_centroids_desc
+from _imdb_etl_spark.functions import ordered, rank_centroids_desc
 from _imdb_etl_spark.operators.dedup import (
     _MINHASH_SQL,
     _jaccard_verify,
@@ -130,10 +130,11 @@ def sim_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")
     )
-    return (
+    return ordered(
         scored.withColumn("neighbor_rank", F.row_number().over(w))
-        .where(F.col("neighbor_rank") <= _TOP_K)
-        .orderBy("query_id", "neighbor_rank")
+        .where(F.col("neighbor_rank") <= _TOP_K),
+        "query_id",
+        "neighbor_rank",
     )
 
 
@@ -248,10 +249,11 @@ def sim_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")
     )
-    return (
+    return ordered(
         scored.withColumn("neighbor_rank", F.row_number().over(w))
-        .where(F.col("neighbor_rank") <= _TOP_K)
-        .orderBy("query_id", "neighbor_rank")
+        .where(F.col("neighbor_rank") <= _TOP_K),
+        "query_id",
+        "neighbor_rank",
     )
 
 
@@ -320,7 +322,7 @@ def crossmodal_textdup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain shuffle joins: the pair set is small post-filter, but the
     # embeddings side is the full corpus — broadcasting it would not
     # survive a large corpus
-    return (
+    return ordered(
         pairs.join(a, F.col("doc_a") == F.col("va"))
         .join(b, F.col("doc_b") == F.col("vb"))
         .select(
@@ -330,8 +332,9 @@ def crossmodal_textdup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6
             ).alias("cosine_sim"),
-        )
-        .orderBy("doc_a", "doc_b")
+        ),
+        "doc_a",
+        "doc_b",
     )
 
 
@@ -931,7 +934,7 @@ def dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"vec_a": ids[ai], "vec_b": ids[bi], "cosine_sim": sims[ai, bi]}
         )
 
-    return (
+    return ordered(
         lists.groupBy("cid")
         .applyInPandas(score_list, schema)
         # pair-keyed max, not DISTINCT: a pair co-occupying two probe
@@ -939,8 +942,9 @@ def dedup_embedding_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # in the last ulp pre-rounding; DISTINCT would then emit it
         # twice, while max collapses it deterministically
         .groupBy("vec_a", "vec_b")
-        .agg(F.max("cosine_sim").alias("cosine_sim"))
-        .orderBy("vec_a", "vec_b")
+        .agg(F.max("cosine_sim").alias("cosine_sim")),
+        "vec_a",
+        "vec_b",
     )
 
 
@@ -1007,10 +1011,10 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
-    return (
+    return ordered(
         labels.join(F.broadcast(sizes), "cluster_id")
-        .select("vec_id", "cluster_id", "cluster_size")
-        .orderBy("vec_id")
+        .select("vec_id", "cluster_id", "cluster_size"),
+        "vec_id",
     )
 
 
@@ -1138,15 +1142,15 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    return (
+    return ordered(
         rows.groupBy("cid")
         .applyInPandas(hist_list, schema)
         .groupBy("tau_centi")
         .agg(
             F.sum("n_pairs").cast("long").alias("n_pairs"),
             F.sum("n_candidates").cast("long").alias("n_candidates"),
-        )
-        .orderBy("tau_centi")
+        ),
+        "tau_centi",
     )
 
 
@@ -1291,7 +1295,7 @@ def sim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     hit = F.when((F.col("er") <= F.col("k")) & (F.col("ar") <= F.col("k")), 1)
-    return (
+    return ordered(
         ks.crossJoin(F.broadcast(nq))  # k-grid x 1-row scalar: bounded
         .join(matched, F.lit(True), "left")
         .groupBy("k", "n")
@@ -1306,8 +1310,8 @@ def sim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CASE WHEN n * k = 0 THEN NULL"
                 " ELSE 1000 * n_matched div (n * k) END"
             ).alias("recall_permille"),
-        )
-        .orderBy("k")
+        ),
+        "k",
     )
 
 
@@ -1443,7 +1447,7 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out = matched if out is None else out.unionByName(matched)
-    return out.orderBy("trunc_dim")
+    return ordered(out, "trunc_dim")
 
 
 # --- hard-negative mining for contrastive training ---------------------
@@ -1531,10 +1535,11 @@ def retrieval_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")
     )
-    return (
+    return ordered(
         scored.withColumn("neg_rank", F.row_number().over(w))
-        .where(F.col("neg_rank") <= _TOP_K)
-        .orderBy("query_id", "neg_rank")
+        .where(F.col("neg_rank") <= _TOP_K),
+        "query_id",
+        "neg_rank",
     )
 
 
@@ -1670,10 +1675,11 @@ def sim_knn_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     wr = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("neighbor_id")
     )
-    return (
+    return ordered(
         rer.withColumn("neighbor_rank", F.row_number().over(wr))
-        .where(F.col("neighbor_rank") <= _TOP_K)
-        .orderBy("query_id", "neighbor_rank")
+        .where(F.col("neighbor_rank") <= _TOP_K),
+        "query_id",
+        "neighbor_rank",
     )
 
 
@@ -1782,7 +1788,7 @@ def embedding_silhouette_simplified(
             6,
         )
     )
-    return (
+    return ordered(
         pv.select("centroid_id", s.alias("s"))
         .groupBy("centroid_id")
         .agg(
@@ -1794,6 +1800,6 @@ def embedding_silhouette_simplified(
             .alias("n_well_separated"),
             F.round(F.min("s"), 6).alias("min_sil"),
             F.round(F.max("s"), 6).alias("max_sil"),
-        )
-        .orderBy("centroid_id")
+        ),
+        "centroid_id",
     )

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import md5_prefix_int_sql
+from _imdb_etl_spark.functions import md5_prefix_int_sql, ordered
 from _imdb_etl_spark.operators.dedup import connected_components
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import (
@@ -55,19 +55,22 @@ ORDER BY doc_id
 )
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
-    return docs.select(
+    return ordered(
+        docs.select(
+            "doc_id",
+            F.length("text").alias("n_chars"),
+            F.size(_toks()).alias("n_tokens"),
+            F.size(F.array_distinct(_toks())).alias("n_types"),
+            F.round(
+                F.aggregate(_toks(), F.lit(0), lambda acc, x: acc + F.length(x)).cast(
+                    "double"
+                )
+                / F.size(_toks()),
+                6,
+            ).alias("avg_token_len"),
+        ),
         "doc_id",
-        F.length("text").alias("n_chars"),
-        F.size(_toks()).alias("n_tokens"),
-        F.size(F.array_distinct(_toks())).alias("n_types"),
-        F.round(
-            F.aggregate(_toks(), F.lit(0), lambda acc, x: acc + F.length(x)).cast(
-                "double"
-            )
-            / F.size(_toks()),
-            6,
-        ).alias("avg_token_len"),
-    ).orderBy("doc_id")
+    )
 
 
 _STOPWORDS = ["the", "a", "an", "of", "and", "to", "in", "is"]
@@ -114,16 +117,19 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
     sw = F.array(*[F.lit(w) for w in _STOPWORDS])
     n_stop = F.size(F.filter(_toks(), lambda x: F.array_contains(sw, x)))
-    return docs.select(
+    return ordered(
+        docs.select(
+            "doc_id",
+            F.round(
+                F.length(F.regexp_replace("text", "[A-Za-z0-9 ]", "")).cast("double")
+                / F.length("text"),
+                6,
+            ).alias("punct_ratio"),
+            F.round(n_stop.cast("double") / F.size(_toks()), 6).alias("stopword_ratio"),
+            F.when(quality_gate_col(), 1).otherwise(0).alias("quality_flag"),
+        ),
         "doc_id",
-        F.round(
-            F.length(F.regexp_replace("text", "[A-Za-z0-9 ]", "")).cast("double")
-            / F.length("text"),
-            6,
-        ).alias("punct_ratio"),
-        F.round(n_stop.cast("double") / F.size(_toks()), 6).alias("stopword_ratio"),
-        F.when(quality_gate_col(), 1).otherwise(0).alias("quality_flag"),
-    ).orderBy("doc_id")
+    )
 
 
 # tiny per-language function-word lexicon; the operator shape (explode ->
@@ -191,7 +197,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = F.size(F.filter(_toks(), lambda x: F.array_contains(words, x)))  # noqa: B023
         per_lang.append(F.struct(n.alias("n_hits"), F.lit(r).alias("r"), F.lit(lang).alias("lex_lang")))
     best = F.greatest(*per_lang)
-    return (
+    return ordered(
         docs.withColumn("m", best)
         .select(
             "doc_id",
@@ -202,8 +208,8 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .cast("long")
             .alias("n_hits"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -229,11 +235,14 @@ ORDER BY doc_id
 def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
     toks = F.expr(f"regexp_extract_all(text, '{_BPE_PATTERN}', 0)")
-    return docs.select(
+    return ordered(
+        docs.select(
+            "doc_id",
+            F.size(toks).alias("n_bpe_tokens"),
+            F.size(F.array_distinct(toks)).alias("n_bpe_types"),
+        ),
         "doc_id",
-        F.size(toks).alias("n_bpe_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_bpe_types"),
-    ).orderBy("doc_id")
+    )
 
 
 _NORM_SQL = f"""
@@ -306,7 +315,7 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     starts = F.sequence(
         F.lit(0), F.floor((F.greatest(F.col("n") - 1, F.lit(0))) / _CHUNK_STRIDE)
     )
-    return (
+    return ordered(
         t.select("doc_id", "toks", "n", F.explode(starts).alias("chunk_no"))
         .select(
             "doc_id",
@@ -321,8 +330,9 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 - F.col("chunk_no") * _CHUNK_STRIDE
             ).cast("long").alias("n_tokens"),
-        )
-        .orderBy("doc_id", "chunk_no")
+        ),
+        "doc_id",
+        "chunk_no",
     )
 
 
@@ -347,13 +357,16 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread the per-row md5-per-shingle work across cores (documents is
     # typically a single input split at test scale)
     docs = spread(docs)
-    return docs.select(
+    return ordered(
+        docs.select(
+            "doc_id",
+            F.expr(
+                "array_min(transform(sequence(1, greatest(length(text) - 7, 1)),"
+                " i -> md5(substr(text, i, 8))))"
+            ).alias("fingerprint"),
+        ),
         "doc_id",
-        F.expr(
-            "array_min(transform(sequence(1, greatest(length(text) - 7, 1)),"
-            " i -> md5(substr(text, i, 8))))"
-        ).alias("fingerprint"),
-    ).orderBy("doc_id")
+    )
 
 
 _REP_SQL = """
@@ -469,26 +482,29 @@ def text_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("dup_tri"),
         F.when(F.col("n") >= 3, F.size("tg")).alias("n_tri"),
     )
-    return t.select(
+    return ordered(
+        t.select(
+            "doc_id",
+            F.round(F.col("top_uni").cast("double") / F.col("n"), 6).alias(
+                "top_unigram_frac"
+            ),
+            F.round(F.col("top_bi").cast("double") / F.col("n_bi"), 6).alias(
+                "top_bigram_frac"
+            ),
+            F.round(F.col("dup_tri").cast("double") / F.col("n_tri"), 6).alias(
+                "dup_trigram_frac"
+            ),
+            F.when(
+                (F.col("top_uni") * 5 <= F.col("n"))
+                & (F.col("n") >= 3)
+                & (F.col("dup_tri") * 10 <= F.col("n_tri") * 3),
+                1,
+            )
+            .otherwise(0)
+            .alias("repetition_ok"),
+        ),
         "doc_id",
-        F.round(F.col("top_uni").cast("double") / F.col("n"), 6).alias(
-            "top_unigram_frac"
-        ),
-        F.round(F.col("top_bi").cast("double") / F.col("n_bi"), 6).alias(
-            "top_bigram_frac"
-        ),
-        F.round(F.col("dup_tri").cast("double") / F.col("n_tri"), 6).alias(
-            "dup_trigram_frac"
-        ),
-        F.when(
-            (F.col("top_uni") * 5 <= F.col("n"))
-            & (F.col("n") >= 3)
-            & (F.col("dup_tri") * 10 <= F.col("n_tri") * 3),
-            1,
-        )
-        .otherwise(0)
-        .alias("repetition_ok"),
-    ).orderBy("doc_id")
+    )
 
 
 _SPAN_K = 5  # tokens per span fingerprint
@@ -573,15 +589,18 @@ def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("n_docs") >= 2, 1)).alias("n_dup_positions"),
         )
     )
-    return per.select(
-        "doc_id",
-        "n_positions",
-        "n_dup_positions",
-        # exact integer div, matching the oracle's // at every scale
-        F.expr("(1000 * n_dup_positions) div n_positions").alias(
-            "dup_permille"
+    return ordered(
+        per.select(
+            "doc_id",
+            "n_positions",
+            "n_dup_positions",
+            # exact integer div, matching the oracle's // at every scale
+            F.expr("(1000 * n_dup_positions) div n_positions").alias(
+                "dup_permille"
+            ),
         ),
-    ).orderBy("doc_id")
+        "doc_id",
+    )
 
 
 _CONFUSION_SQL = f"""
@@ -640,7 +659,7 @@ def text_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
     tot = cells.groupBy("true_lang").agg(F.sum("n_docs").alias("row_total"))
-    return (
+    return ordered(
         cells.join(F.broadcast(tot), "true_lang")
         .select(
             "true_lang",
@@ -648,8 +667,9 @@ def text_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             (F.col("true_lang") == F.col("pred_lang")).alias("is_correct"),
             F.expr("(1000 * n_docs) div row_total").alias("rate_permille"),
-        )
-        .orderBy("true_lang", "pred_lang")
+        ),
+        "true_lang",
+        "pred_lang",
     )
 
 
@@ -767,7 +787,7 @@ def text_remove_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("kept_md5"),
     )
     base = toks.select("doc_id", F.size("t").cast("long").alias("n_tokens"))
-    return (
+    return ordered(
         base.join(ka, "doc_id", "left")
         .select(
             "doc_id",
@@ -776,8 +796,8 @@ def text_remove_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_removed"),
             F.coalesce("kept_md5", F.md5(F.lit(""))).alias("kept_md5"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -943,7 +963,7 @@ def text_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         (hex_prefix_int(F.md5(F.col("w"))) % _HASH_DIMS).alias("dim"),
     ).agg(F.count(F.lit(1)).alias("c"))
-    return (
+    return ordered(
         cells.groupBy("doc_id")
         .agg(
             F.sum("c").cast("long").alias("n_tokens"),
@@ -964,8 +984,8 @@ def text_hashing_vectorizer(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ",",
                 )
             ).alias("vec_md5"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -1134,7 +1154,7 @@ def text_winnowing_fingerprints(
     # 65.7 s with the sort sampling the live ladder vs 28.6 s for one
     # ladder pass; staging 5 narrow columns/doc costs ~2 s and the
     # sort then samples a parquet scan. 1000x: 578 -> ~290 s.
-    return stage_to_parquet(out, "winnow_fp_report").orderBy("doc_id")
+    return ordered(stage_to_parquet(out, "winnow_fp_report"), "doc_id")
 
 
 # --- winnowing pair matching (the MOSS match step) -----------------------

@@ -35,6 +35,7 @@ from _imdb_etl_spark.functions import (
     doc_permille_bucket,
     hex_prefix_int,
     md5_prefix_int_sql,
+    ordered,
 )
 from _imdb_etl_spark.operators.dedup import (
     _LSH_CAND_CTE,
@@ -94,10 +95,10 @@ def corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # inner join is total: every domain has >= 1 row, so rnk = 1 exists
-    return (
+    return ordered(
         totals.join(kept, "source")
-        .select("source", "n_docs", "n_kept", "kept_chars")
-        .orderBy("source")
+        .select("source", "n_docs", "n_kept", "kept_chars"),
+        "source",
     )
 
 
@@ -127,7 +128,7 @@ ORDER BY lang, bucket
 )
 def corpus_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
-    return (
+    return ordered(
         docs.select("lang", "n_chars")
         .withColumn("bucket", F.expr(f"n_chars div {_BUCKET_W}"))
         .groupBy("lang", "bucket")
@@ -136,8 +137,9 @@ def corpus_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").alias("sum_chars"),
             F.min("n_chars").alias("min_chars"),
             F.max("n_chars").alias("max_chars"),
-        )
-        .orderBy("lang", "bucket")
+        ),
+        "lang",
+        "bucket",
     )
 
 
@@ -183,7 +185,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_h = docs.where(~is_batch).select(h).distinct()
     batch = docs.where(is_batch).select("doc_id", "lang", h)
     novel = batch.join(corpus_h, "h", "left_anti")
-    return (
+    return ordered(
         batch.groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_incoming"))
         .join(
@@ -195,8 +197,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n_incoming",
             F.coalesce("n_novel", F.lit(0)).alias("n_novel"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -265,15 +267,15 @@ def dedup_corpus_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     freq = segs.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
     dup = F.col("c") > 1
-    return (
+    return ordered(
         segs.join(freq, "h")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_segs"),
             F.sum(dup.cast("long")).alias("n_dup_segs"),
             F.sum(F.when(dup, 0).otherwise(F.col("n_toks"))).alias("kept_tokens"),
-        )
-        .orderBy("doc_id")
+        ),
+        "doc_id",
     )
 
 
@@ -331,7 +333,7 @@ def corpus_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = doc_permille_bucket("doc_id")
     probe = docs.select("lang", "n_chars", bucket.alias("bucket"))
     kept = F.col("bucket") < F.col("keep_permille")
-    return (
+    return ordered(
         probe.join(F.broadcast(rates), "lang")
         .groupBy("lang", "n_docs", "keep_permille")
         .agg(
@@ -339,8 +341,8 @@ def corpus_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(kept, F.col("n_chars")).otherwise(0)).alias(
                 "kept_chars"
             ),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -407,7 +409,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = wl.join(
         F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "word", "left"
     )
-    return (
+    return ordered(
         flagged.groupBy("lang")
         .agg(
             F.sum("c").alias("n_tokens"),
@@ -422,8 +424,8 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_tokens",
             "n_oov",
             F.expr("(n_oov * 1000) div n_tokens").alias("oov_permille"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -505,11 +507,11 @@ def corpus_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = doc_permille_bucket("doc_id")
     probe = docs.select("lang", bucket.alias("bucket"))
     kept = F.col("bucket") < F.col("keep_permille")
-    return (
+    return ordered(
         probe.join(F.broadcast(rates), "lang")
         .groupBy("lang", "n_docs", F.col("wt").alias("weight"), "keep_permille")
-        .agg(F.sum(kept.cast("long")).alias("n_kept"))
-        .orderBy("lang")
+        .agg(F.sum(kept.cast("long")).alias("n_kept")),
+        "lang",
     )
 
 
@@ -591,7 +593,7 @@ ORDER BY lang
 )
 def corpus_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
-    return (
+    return ordered(
         _epoch_plan_df(docs, 1_000_000)
         .select(
             "lang",
@@ -599,8 +601,8 @@ def corpus_token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("wt").alias("weight"),
             "alloc_tokens",
             F.col("ep").alias("epochs_micro"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -711,7 +713,7 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = cdc_chunk_table(spread(docs))
     freq = chunks.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
     dup = F.col("c") > 1
-    return (
+    return ordered(
         chunks.join(freq, "h")
         .groupBy("lang")
         .agg(
@@ -727,8 +729,8 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_dup_chunks",
             "dup_tokens",
             F.expr("1000 * n_dup_chunks div n_chunks").alias("dup_permille"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -839,7 +841,7 @@ def corpus_upsample_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_copies_out"),
         F.sum("n_toks").alias("out_tokens"),
     )
-    return (
+    return ordered(
         src.join(outp, "lang", "left")
         .select(
             "lang",
@@ -854,8 +856,8 @@ def corpus_upsample_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("out_tokens", F.lit(0).cast("long")).alias(
                 "out_tokens"
             ),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -936,7 +938,7 @@ def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = keyed.select(
         "shard", "n_toks", "idh", F.row_number().over(w).alias("position")
     )
-    return (
+    return ordered(
         pos.groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -946,8 +948,8 @@ def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum((F.col("position") * F.col("idh")) % _CKSUM_MOD)
                 % _CKSUM_MOD
             ).alias("order_checksum"),
-        )
-        .orderBy("shard")
+        ),
+        "shard",
     )
 
 
@@ -1045,7 +1047,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("m", F.lit(1))
     )
-    return (
+    return ordered(
         flags.where("is_batch")
         .join(matched, "doc_id", "left")
         .groupBy("lang")
@@ -1058,8 +1060,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_incoming",
             "n_near_dup",
             (F.col("n_incoming") - F.col("n_near_dup")).alias("n_novel"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -1138,11 +1140,12 @@ def corpus_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.log(u) / F.col("n_chars"), 9).alias("es_key"),
     )
     w = Window.partitionBy("source").orderBy(F.desc("es_key"), "doc_id")
-    return (
+    return ordered(
         keyed.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= _WRES_K)
-        .select("source", "rnk", "doc_id", "n_chars", "es_key")
-        .orderBy("source", "rnk")
+        .select("source", "rnk", "doc_id", "n_chars", "es_key"),
+        "source",
+        "rnk",
     )
 
 
@@ -1242,12 +1245,16 @@ def corpus_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     jsd = 0.5 * (F.col("p_term") + (1 - F.col("p_common")) * ln2) + 0.5 * (
         F.col("q_term") + (1 - F.col("q_common")) * ln2
     )
-    return common.select(
+    return ordered(
+        common.select(
+            "source_a",
+            "source_b",
+            "n_common_tokens",
+            F.round(jsd, 6).alias("jsd_nats"),
+        ),
         "source_a",
         "source_b",
-        "n_common_tokens",
-        F.round(jsd, 6).alias("jsd_nats"),
-    ).orderBy("source_a", "source_b")
+    )
 
 
 # --- Zipf-law fit of the corpus frequency spectrum ---------------------
@@ -1560,7 +1567,7 @@ def dedup_minhash_index_persisted(
         .distinct()
     )
     flags = batch.select("doc_id", "lang")
-    return (
+    return ordered(
         flags.join(matched, flags["doc_id"] == matched["b_doc"], "left")
         .groupBy("lang")
         .agg(
@@ -1579,6 +1586,6 @@ def dedup_minhash_index_persisted(
             "n_incoming",
             "n_near_dup",
             "n_novel",
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )

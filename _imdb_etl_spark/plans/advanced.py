@@ -11,7 +11,7 @@ import pandas as pd  # module-level: pandas_udf resolves postponed hints here
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, dsum
+from _imdb_etl_spark.functions import dec, dsum, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, scoped_conf, stage_sorted
 
@@ -55,7 +55,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "view", F.col("ts"))
     ).over(w)
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-    return (
+    return ordered(
         events.where(F.col("event_type").isin("view", "purchase"))
         .withColumn("prev_view_ts", prev_view)
         .where(F.col("event_type") == "purchase")
@@ -65,8 +65,8 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts", fmt).alias("purchase_ts"),
             F.date_format("prev_view_ts", fmt).alias("asof_view_ts"),
             (F.unix_millis("ts") - F.unix_millis("prev_view_ts")).alias("gap_ms"),
-        )
-        .orderBy("event_id")
+        ),
+        "event_id",
     )
 
 
@@ -91,7 +91,7 @@ ORDER BY gid, status NULLS FIRST, priority NULLS FIRST
 )
 def rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = load_tables(spark, sf_dir, "orders")
-    return (
+    return ordered(
         orders.rollup(
             F.col("o_orderstatus").alias("status"),
             F.col("o_orderpriority").alias("priority"),
@@ -100,10 +100,10 @@ def rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping_id().alias("gid"),
             F.count(F.lit(1)).alias("n_orders"),
             dsum(dec("o_totalprice"), "total_price"),
-        )
-        .orderBy(
-            "gid", F.asc_nulls_first("status"), F.asc_nulls_first("priority")
-        )
+        ),
+        "gid",
+        F.asc_nulls_first("status"),
+        F.asc_nulls_first("priority"),
     )
 
 
@@ -134,14 +134,16 @@ def case_date_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("o_totalprice") < 300000, "medium")
         .otherwise("large")
     )
-    return (
+    return ordered(
         orders.groupBy(
             band.alias("price_band"),
             F.year("o_orderdate").alias("order_year"),
             F.quarter("o_orderdate").alias("order_quarter"),
         )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-        .orderBy("price_band", "order_year", "order_quarter")
+        .agg(F.count(F.lit(1)).alias("n_orders")),
+        "price_band",
+        "order_year",
+        "order_quarter",
     )
 
 
@@ -175,7 +177,7 @@ ORDER BY event_type
 def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load_tables(spark, sf_dir, "events")
     bound = F.greatest(F.col("exact_users") * (3 * _HLL_RSD), F.lit(5.0))
-    return (
+    return ordered(
         events.groupBy("event_type")
         .agg(
             F.count_distinct("user_id").alias("exact_users"),
@@ -187,8 +189,8 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.abs(F.col("approx_users") - F.col("exact_users")) <= bound
             ).alias("within_bound"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
@@ -225,13 +227,16 @@ def embedding_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         ),
     )
-    return emb.select(
+    return ordered(
+        emb.select(
+            "vec_id",
+            F.size("embedding").alias("dim"),
+            F.round(F.sqrt(sq), 6).alias("l2_norm"),
+            F.round(F.array_min("embedding").cast("double"), 6).alias("min_val"),
+            F.round(F.array_max("embedding").cast("double"), 6).alias("max_val"),
+        ),
         "vec_id",
-        F.size("embedding").alias("dim"),
-        F.round(F.sqrt(sq), 6).alias("l2_norm"),
-        F.round(F.array_min("embedding").cast("double"), 6).alias("min_val"),
-        F.round(F.array_max("embedding").cast("double"), 6).alias("max_val"),
-    ).orderBy("vec_id")
+    )
 
 
 def _fuzzy_name_pairs(part: DataFrame) -> DataFrame:
@@ -347,7 +352,7 @@ def fuzzy_part_name_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("n_parts_a") * F.col("n_parts_b"))
         .cast("long")
     )
-    return (
+    return ordered(
         _fuzzy_name_pairs(part)
         .join(ca, "nm_a")
         .join(cb, "nm_b")
@@ -359,8 +364,9 @@ def fuzzy_part_name_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_parts_b",
             n_pairs.alias("n_pairs"),
             F.levenshtein("nm_a", "nm_b").alias("edit_distance"),
-        )
-        .orderBy("name_a", "name_b")
+        ),
+        "name_a",
+        "name_b",
     )
 
 
@@ -384,7 +390,7 @@ ORDER BY flag
 )
 def quantiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lineitem,) = load_tables(spark, sf_dir, "lineitem")
-    return (
+    return ordered(
         lineitem.groupBy(F.col("l_returnflag").alias("flag"))
         .agg(
             F.round(
@@ -395,8 +401,8 @@ def quantiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY l_extendedprice)"),
                 2,
             ).alias("p90_price"),
-        )
-        .orderBy("flag")
+        ),
+        "flag",
     )
 
 
@@ -444,7 +450,7 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = spark.createDataFrame(
         binned, "band string, lo long, hi long, bin long"
     )
-    return (
+    return ordered(
         orders.withColumn(
             "o_bin", F.floor(F.col("o_totalprice") / _BIN_WIDTH)
         )
@@ -458,8 +464,8 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             dsum(dec("o_totalprice"), "total_price"),
-        )
-        .orderBy("band")
+        ),
+        "band",
     )
 
 
@@ -487,7 +493,7 @@ ORDER BY gid, day_bucket NULLS FIRST, hour_bucket NULLS FIRST
 )
 def events_granularity_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load_tables(spark, sf_dir, "events")
-    return (
+    return ordered(
         events.rollup(
             F.date_format("ts", "yyyy-MM-dd").alias("day_bucket"),
             F.date_format("ts", "yyyy-MM-dd HH:00:00").alias("hour_bucket"),
@@ -496,12 +502,10 @@ def events_granularity_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping_id().alias("gid"),
             F.count(F.lit(1)).alias("n_events"),
             dsum(dec("value"), "total_value"),
-        )
-        .orderBy(
-            "gid",
-            F.asc_nulls_first("day_bucket"),
-            F.asc_nulls_first("hour_bucket"),
-        )
+        ),
+        "gid",
+        F.asc_nulls_first("day_bucket"),
+        F.asc_nulls_first("hour_bucket"),
     )
 
 
@@ -633,7 +637,7 @@ def recursive_cte_amortization(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sql(_RECURSIVE_TMPL.format(orders="orders_rec_v")),
             "rcte_amort",
         )
-    return out.orderBy("o_orderkey")
+    return ordered(out, "o_orderkey")
 
 
 # DuckDB needs an explicit ON TRUE for JOIN LATERAL; Spark's parser
@@ -823,15 +827,15 @@ def grouped_agg_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
         return len(price)
 
     (lineitem,) = load_tables(spark, sf_dir, "lineitem")
-    return (
+    return ordered(
         lineitem.groupBy(F.col("l_returnflag").alias("flag"))
         .agg(
             n_rows("l_extendedprice").alias("n_items"),
             wavg_price_cents("l_extendedprice", "l_quantity").alias(
                 "wavg_price_cents"
             ),
-        )
-        .orderBy("flag")
+        ),
+        "flag",
     )
 
 
@@ -918,7 +922,7 @@ def approx_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile_approx("l_extendedprice", 0.5, _GK_ACCURACY).alias("a50"),
         F.percentile_approx("l_extendedprice", 0.9, _GK_ACCURACY).alias("a90"),
     )
-    return (
+    return ordered(
         exact.join(approx, "flag")
         .select(
             "flag",
@@ -926,8 +930,8 @@ def approx_quantiles_price(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("e90", 2).alias("p90_price"),
             F.col("a50").between(F.col("lo50"), F.col("hi50")).alias("p50_within"),
             F.col("a90").between(F.col("lo90"), F.col("hi90")).alias("p90_within"),
-        )
-        .orderBy("flag")
+        ),
+        "flag",
     )
 
 
@@ -972,15 +976,15 @@ def stringagg_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rnk") <= 3)
         .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
     )
-    return (
+    return ordered(
         top.groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.count(F.lit(1)).alias("n_top"),
             F.expr(
                 "listagg(c_name, '|') WITHIN GROUP (ORDER BY rnk)"
             ).alias("top_customers"),
-        )
-        .orderBy("nation")
+        ),
+        "nation",
     )
 
 
@@ -1095,9 +1099,13 @@ def sketch_heavy_users_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in top
     ]
-    return spark.createDataFrame(
-        rows, "user_id bigint, exact_cnt bigint, within_bound boolean"
-    ).orderBy(F.desc("exact_cnt"), "user_id")
+    return ordered(
+        spark.createDataFrame(
+            rows, "user_id bigint, exact_cnt bigint, within_bound boolean"
+        ),
+        F.desc("exact_cnt"),
+        "user_id",
+    )
 
 
 # --- market-basket part affinity -------------------------------------
@@ -1410,11 +1418,11 @@ def setop_except_all_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = events.where(F.col("event_type") == "purchase").select(
         "user_id"
     )
-    return (
+    return ordered(
         views.exceptAll(purchases)
         .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("unconverted_views"))
-        .orderBy("user_id")
+        .agg(F.count(F.lit(1)).alias("unconverted_views")),
+        "user_id",
     )
 
 
@@ -1446,11 +1454,11 @@ def setop_intersect_all_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = events.where(F.col("event_type") == "purchase").select(
         "user_id"
     )
-    return (
+    return ordered(
         views.intersectAll(purchases)
         .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("converted_views"))
-        .orderBy("user_id")
+        .agg(F.count(F.lit(1)).alias("converted_views")),
+        "user_id",
     )
 
 
@@ -1657,7 +1665,7 @@ def sketch_distinct_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_users",
     )
 
-    return typed.unionByName(urow).unionByName(irow).orderBy("set_name")
+    return ordered(typed.unionByName(urow).unionByName(irow), "set_name")
 
 
 # --- exact distinct via mergeable bitmap blocks ------------------------
@@ -1739,4 +1747,4 @@ def distinct_users_bitmap_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "distinct_users",
         )
     )
-    return typed.unionByName(merged).orderBy("set_name")
+    return ordered(typed.unionByName(merged), "set_name")

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, dsum
+from _imdb_etl_spark.functions import dec, dsum, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
@@ -42,7 +42,7 @@ ORDER BY gid, status NULLS FIRST, order_year NULLS FIRST
 )
 def cube_orders_status_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = load_tables(spark, sf_dir, "orders")
-    return (
+    return ordered(
         orders.cube(
             F.col("o_orderstatus").alias("status"),
             F.year("o_orderdate").alias("order_year"),
@@ -51,12 +51,10 @@ def cube_orders_status_year(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.grouping_id().alias("gid"),
             F.count(F.lit(1)).alias("n_orders"),
             dsum(dec("o_totalprice"), "total_price"),
-        )
-        .orderBy(
-            "gid",
-            F.asc_nulls_first("status"),
-            F.asc_nulls_first("order_year"),
-        )
+        ),
+        "gid",
+        F.asc_nulls_first("status"),
+        F.asc_nulls_first("order_year"),
     )
 
 
@@ -87,7 +85,7 @@ ORDER BY p_brand
 )
 def median_exact_price_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem, part = load_tables(spark, sf_dir, "lineitem", "part")
-    return (
+    return ordered(
         lineitem.join(
             F.broadcast(part.select("p_partkey", "p_brand")),
             F.col("l_partkey") == F.col("p_partkey"),
@@ -98,8 +96,8 @@ def median_exact_price_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.percentile("l_extendedprice", F.lit(0.25)).alias("p25_price"),
             F.percentile("l_extendedprice", F.lit(0.50)).alias("median_price"),
             F.percentile("l_extendedprice", F.lit(0.75)).alias("p75_price"),
-        )
-        .orderBy("p_brand")
+        ),
+        "p_brand",
     )
 
 
@@ -178,7 +176,7 @@ def audit_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_orphans"),
         ).select("edge", "n_child", "n_null_fk", "n_orphans")
         out = agg if out is None else out.unionByName(agg)
-    return out.orderBy("edge")
+    return ordered(out, "edge")
 
 
 # Single-pass profile of the orders table: one aggregate computes every
@@ -270,10 +268,10 @@ def profile_table_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("max_str"),
             )
         )
-    return (
+    return ordered(
         orders.agg(*aggs)
-        .select(F.inline(F.array(*structs)))
-        .orderBy("col_name")
+        .select(F.inline(F.array(*structs))),
+        "col_name",
     )
 
 
@@ -350,7 +348,7 @@ def audit_benford_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict = terms.agg(
         (F.round(F.sum(chi2_term), 4) > 26.125).alias("benford_rejected")
     )
-    return (
+    return ordered(
         terms.crossJoin(F.broadcast(verdict))  # 1-row broadcast scalar
         .select(
             "d",
@@ -361,8 +359,8 @@ def audit_benford_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(exp_p, 6).alias("benford_p"),
             F.round(chi2_term, 6).alias("chi2_term"),
             "benford_rejected",
-        )
-        .orderBy("d")
+        ),
+        "d",
     )
 
 
@@ -491,10 +489,12 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             + lt("monetary", "m40") + lt("monetary", "m20")
         ).alias("m_score"),
     )
-    return (
+    return ordered(
         scored.groupBy("r_score", "f_score", "m_score")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .orderBy("r_score", "f_score", "m_score")
+        .agg(F.count(F.lit(1)).alias("n_customers")),
+        "r_score",
+        "f_score",
+        "m_score",
     )
 
 
@@ -934,7 +934,7 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         "total_cents",
     )
-    return (
+    return ordered(
         classed.groupBy("abc_class", "total_cents")
         .agg(
             F.count(F.lit(1)).alias("n_parts"),
@@ -946,8 +946,8 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.col("class_cents").cast("double") / F.col("total_cents"), 6
             ).alias("revenue_share"),
-        )
-        .orderBy("abc_class")
+        ),
+        "abc_class",
     )
 
 
@@ -1047,7 +1047,7 @@ def lineitem_weighted_median_price(
     tot = vc.groupBy(F.col("flag").alias("tf")).agg(
         F.sum("w").cast("long").alias("tw")
     )
-    return (
+    return ordered(
         cum.join(F.broadcast(tot), F.col("flag") == F.col("tf"))
         .groupBy(F.col("flag").alias("l_returnflag"), F.col("tw"))
         .agg(
@@ -1059,8 +1059,8 @@ def lineitem_weighted_median_price(
             "l_returnflag",
             F.col("tw").alias("total_quantity"),
             "weighted_median_price",
-        )
-        .orderBy("l_returnflag")
+        ),
+        "l_returnflag",
     )
 
 
@@ -1136,7 +1136,7 @@ def supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").cast("long").alias("tc")
     )
     share = F.col("cents").cast("double") / F.col("tc")
-    return (
+    return ordered(
         rev.join(tot, F.col("nationkey") == F.col("tk"))
         .join(
             F.broadcast(nation.select("n_nationkey", "n_name")),
@@ -1146,8 +1146,8 @@ def supplier_hhi_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_suppliers"),
             F.round(F.sum(share * share) * 10000, 4).alias("hhi"),
-        )
-        .orderBy("nation")
+        ),
+        "nation",
     )
 
 
@@ -1203,7 +1203,7 @@ def shipping_lag_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("lag_days"),
     )
     qs = [(0.25, "p25_days"), (0.50, "median_days"), (0.75, "p75_days"), (0.95, "p95_days")]
-    return (
+    return ordered(
         lag.groupBy("priority")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_items"),
@@ -1217,8 +1217,8 @@ def shipping_lag_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "priority", "n_items", "min_days",
             "p25_days", "median_days", "p75_days", "p95_days", "max_days",
-        )
-        .orderBy("priority")
+        ),
+        "priority",
     )
 
 
@@ -1328,7 +1328,7 @@ def customers_tier_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     s2 = tiers(spend.where(~F.col("h1"))).withColumnsRenamed(
         {"custkey": "k2", "tier": "t2"}
     )
-    return (
+    return ordered(
         s1.join(s2, F.col("k1") == F.col("k2"), "full_outer")
         .groupBy(
             F.coalesce(F.col("t1").cast("string"), F.lit("none")).alias(
@@ -1338,6 +1338,7 @@ def customers_tier_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "tier_h2"
             ),
         )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_customers"))
-        .orderBy("tier_h1", "tier_h2")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_customers")),
+        "tier_h1",
+        "tier_h2",
     )

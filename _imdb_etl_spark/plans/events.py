@@ -11,7 +11,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, dsum, hex_prefix_int, md5_prefix_int_sql
+from _imdb_etl_spark.functions import (
+    dec,
+    dsum,
+    hex_prefix_int,
+    md5_prefix_int_sql,
+    ordered,
+)
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 from _imdb_etl_spark.streaming.events import _SESSION_SQL
@@ -39,7 +45,7 @@ ORDER BY hour_bucket, event_type
 )
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load_tables(spark, sf_dir, "events")
-    return (
+    return ordered(
         events.groupBy(
             F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:00:00").alias(
                 "hour_bucket"
@@ -50,8 +56,9 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
             dsum(dec("value"), "total_value"),
             F.countDistinct("user_id").alias("n_users"),
-        )
-        .orderBy("hour_bucket", "event_type")
+        ),
+        "hour_bucket",
+        "event_type",
     )
 
 
@@ -69,14 +76,14 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_session = F.when(
         prev_ms.isNull() | (F.unix_millis("ts") - prev_ms > 1_800_000), 1
     ).otherwise(0)
-    return (
+    return ordered(
         events.withColumn("new_session", new_session)
         .groupBy("user_id")
         .agg(
             F.sum("new_session").cast("bigint").alias("n_sessions"),
             F.count(F.lit(1)).alias("n_events"),
-        )
-        .orderBy("user_id")
+        ),
+        "user_id",
     )
 
 
@@ -105,13 +112,13 @@ def events_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB rounds '1.5', Spark nulls/errors); integer sums in double
     # are exact below 2^53
     kd = k.try_cast("double")
-    return (
+    return ordered(
         events.groupBy("event_type")
         .agg(
             F.count(k).alias("n_with_k"),
             (F.sum(kd) / F.count(k)).alias("avg_k"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
@@ -204,14 +211,17 @@ def events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)))
         .na.fill(0)
     )
-    return out.select(
+    return ordered(
+        out.select(
+            "day",
+            F.col("view").alias("views"),
+            F.col("click").alias("clicks"),
+            F.col("purchase").alias("purchases"),
+            F.col("signup").alias("signups"),
+            F.col("error").alias("errors"),
+        ),
         "day",
-        F.col("view").alias("views"),
-        F.col("click").alias("clicks"),
-        F.col("purchase").alias("purchases"),
-        F.col("signup").alias("signups"),
-        F.col("error").alias("errors"),
-    ).orderBy("day")
+    )
 
 
 _UNPIVOT_SQL = """
@@ -251,14 +261,15 @@ def events_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return (
+    return ordered(
         wide.unpivot(
             ids=["day"],
             values=["views", "clicks", "purchases"],
             variableColumnName="kind",
             valueColumnName="n",
-        )
-        .orderBy("day", "kind")
+        ),
+        "day",
+        "kind",
     )
 
 
@@ -287,14 +298,15 @@ def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load_tables(spark, sf_dir, "events")
     v = F.try_parse_json(F.col("props"))
     k = F.try_variant_get(v, "$.k", "bigint")
-    return (
+    return ordered(
         events.select("event_type", k.alias("k"))
         .groupBy("event_type", (F.col("k") % 10).alias("k_bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("k").cast("long").alias("sum_k"),
-        )
-        .orderBy("event_type", "k_bucket")
+        ),
+        "event_type",
+        "k_bucket",
     )
 
 
@@ -353,8 +365,6 @@ def _hour_spine(hourly: DataFrame) -> DataFrame:
 def events_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from _imdb_etl_spark.sources import load_tables
-
     (events,) = load_tables(spark, sf_dir, "events")
     hourly = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
@@ -368,7 +378,7 @@ def events_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("hr")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
+    return ordered(
         spine.join(hourly, ["event_type", "hr"], "left")
         .select(
             "event_type",
@@ -378,8 +388,9 @@ def events_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .over(w)
             .cast("double")
             .alias("filled_value"),
-        )
-        .orderBy("event_type", "hour_bucket")
+        ),
+        "event_type",
+        "hour_bucket",
     )
 
 
@@ -572,14 +583,14 @@ def zorder_events_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = dims.select(
         "ua", "hb", F.expr(_z_terms("ua", "hb", "div")).alias("zval")
     )
-    return (
+    return ordered(
         z.groupBy(F.expr("zval div 4096").alias("z_bucket"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             (F.max("ua") - F.min("ua")).alias("user_span"),
             (F.max("hb") - F.min("hb")).alias("hour_span"),
-        )
-        .orderBy("z_bucket")
+        ),
+        "z_bucket",
     )
 
 
@@ -647,7 +658,7 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes = cells.where(F.col("week_offset") == 0).select(
         "cohort_wk", F.col("n_active").alias("cohort_size")
     )
-    return (
+    return ordered(
         cells.join(F.broadcast(sizes), "cohort_wk")
         .select(
             "cohort_wk",
@@ -657,8 +668,9 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(1000 * n_active) div cohort_size").alias(
                 "retention_permille"
             ),
-        )
-        .orderBy("cohort_wk", "week_offset")
+        ),
+        "cohort_wk",
+        "week_offset",
     )
 
 
@@ -706,7 +718,7 @@ def events_value_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("month").orderBy("day")
     prev = F.lag("p50").over(w)
-    return (
+    return ordered(
         daily.select(
             "day",
             "n_events",
@@ -716,8 +728,8 @@ def events_value_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.abs(F.col("p50") - prev) > 5.0, F.lit(False)).alias(
                 "drift_flag"
             ),
-        )
-        .orderBy("day")
+        ),
+        "day",
     )
 
 
@@ -766,7 +778,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = trans.groupBy("prev_type").agg(
         F.sum("n_transitions").alias("row_total")
     )
-    return (
+    return ordered(
         trans.join(F.broadcast(tot), "prev_type")
         .select(
             "prev_type",
@@ -775,8 +787,9 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(1000 * n_transitions) div row_total").alias(
                 "prob_permille"
             ),
-        )
-        .orderBy("prev_type", "next_type")
+        ),
+        "prev_type",
+        "next_type",
     )
 
 
@@ -821,7 +834,7 @@ ORDER BY user_id, session_start
 )
 def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load_tables(spark, sf_dir, "events")
-    return (
+    return ordered(
         events.groupBy(
             "user_id", F.session_window("ts", "30 minutes").alias("sw")
         )
@@ -834,8 +847,9 @@ def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "session_start"
             ),
         )
-        .select("user_id", "session_start", "n_events", "duration_ms")
-        .orderBy("user_id", "session_start")
+        .select("user_id", "session_start", "n_events", "duration_ms"),
+        "user_id",
+        "session_start",
     )
 
 
@@ -908,7 +922,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("percentile(abs(hsum - med), 0.5D)").alias("mad"))
     )
     joined = hourly.join(stats, "event_type").join(mad, "event_type")
-    return (
+    return ordered(
         joined.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_hours"),
@@ -919,8 +933,8 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.abs(F.col("hsum") - F.col("med")) > 3 * F.col("mad"), 1
                 ).otherwise(0)
             ).alias("n_anomalies"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
@@ -980,15 +994,16 @@ def events_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec("value")).alias("value_dec"),  # mergeable partial
         )
 
-    return (
+    return ordered(
         rollup(base)
         .unionByName(rollup(delta))
         .groupBy("day_bucket", "event_type")
         .agg(
             F.sum("n_events").alias("n_events"),
             F.sum("value_dec").cast("double").alias("total_value"),
-        )
-        .orderBy("day_bucket", "event_type")
+        ),
+        "day_bucket",
+        "event_type",
     )
 
 
@@ -1067,7 +1082,7 @@ def events_sliding_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.countDistinct("user_id").alias("exact_users_7d"))
     )
     bound = F.greatest(F.col("exact_users_7d") * 0.05, F.lit(5.0))
-    return (
+    return ordered(
         est.join(exact, est["tgt"] == exact["tgt2"])
         .select(
             F.date_format("tgt", "yyyy-MM-dd").alias("day_bucket"),
@@ -1075,8 +1090,8 @@ def events_sliding_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.abs(F.col("est") - F.col("exact_users_7d")) <= bound
             ).alias("within_bound"),
-        )
-        .orderBy("day_bucket")
+        ),
+        "day_bucket",
     )
 
 
@@ -1168,14 +1183,17 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (v1 / n) * (v1 / n) / (n - F.lit(1))
         + (v0 / n0) * (v0 / n0) / (n0 - F.lit(1))
     )
-    return j.select(
+    return ordered(
+        j.select(
+            "event_type",
+            n.alias("n"),
+            F.round(m1, 6).alias("mean_value"),
+            (F.round(t, 6) + 0.0).alias("t_stat"),
+            F.round(df_w, 2).alias("welch_df"),
+            (F.abs(t) > 1.96).alias("significant"),
+        ),
         "event_type",
-        n.alias("n"),
-        F.round(m1, 6).alias("mean_value"),
-        (F.round(t, 6) + 0.0).alias("t_stat"),
-        F.round(df_w, 2).alias("welch_df"),
-        (F.abs(t) > 1.96).alias("significant"),
-    ).orderBy("event_type")
+    )
 
 
 # --- CUSUM change-point detection ------------------------------------
@@ -1254,7 +1272,7 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick = Window.partitionBy("event_type").orderBy(
         F.desc(F.abs(F.col("cusum"))), F.asc("hb")
     )
-    return (
+    return ordered(
         path.withColumn("rnk", F.row_number().over(pick))
         .where(F.col("rnk") == 1)
         .select(
@@ -1264,8 +1282,8 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "changepoint_hour"
             ),
             F.round(F.abs(F.col("cusum")), 6).alias("max_abs_cusum"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
@@ -1736,18 +1754,21 @@ def events_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     seqs = events.groupBy("user_id").agg(seq.alias("seq"))
     runs = F.regexp_extract_all("seq", F.lit("e+"), 0)
-    return seqs.select(
+    return ordered(
+        seqs.select(
+            "user_id",
+            F.length("seq").cast("int").alias("n_events"),
+            F.size(F.regexp_extract_all("seq", F.lit("vc*p"), 0))
+            .cast("int")
+            .alias("n_funnels"),
+            F.coalesce(
+                F.array_max(F.transform(runs, lambda x: F.length(x))), F.lit(0)
+            )
+            .cast("int")
+            .alias("longest_error_run"),
+        ),
         "user_id",
-        F.length("seq").cast("int").alias("n_events"),
-        F.size(F.regexp_extract_all("seq", F.lit("vc*p"), 0))
-        .cast("int")
-        .alias("n_funnels"),
-        F.coalesce(
-            F.array_max(F.transform(runs, lambda x: F.length(x))), F.lit(0)
-        )
-        .cast("int")
-        .alias("longest_error_run"),
-    ).orderBy("user_id")
+    )
 
 
 # --- last-touch attribution ------------------------------------------
@@ -1840,13 +1861,13 @@ def events_attribution_last_touch(
     label = F.when(
         in_win & F.col("touch_type").isNotNull(), F.col("touch_type")
     ).otherwise(F.lit("none"))
-    return (
+    return ordered(
         j.groupBy(label.alias("touch_type"))
         .agg(
             F.count(F.lit(1)).alias("conversions"),
             dsum(dec("value"), "attributed_value"),
-        )
-        .orderBy("touch_type")
+        ),
+        "touch_type",
     )
 
 
@@ -1987,7 +2008,7 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("conversions") * 1000000).alias("credit_micro"),
         )
     )
-    return credited.unionByName(unattributed).orderBy("touch_type")
+    return ordered(credited.unionByName(unattributed), "touch_type")
 
 
 # --- gap fill with linear interpolation --------------------------------
@@ -2097,12 +2118,16 @@ def events_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("next_ms") - F.col("prev_ms"))
         )
     )
-    return nbr.select(
+    return ordered(
+        nbr.select(
+            "event_type",
+            F.date_format("hr", "yyyy-MM-dd HH:00:00").alias("hour_bucket"),
+            F.col("avg_v").isNotNull().alias("is_observed"),
+            F.round(interp, 6).alias("v_interp"),
+        ),
         "event_type",
-        F.date_format("hr", "yyyy-MM-dd HH:00:00").alias("hour_bucket"),
-        F.col("avg_v").isNotNull().alias("is_observed"),
-        F.round(interp, 6).alias("v_interp"),
-    ).orderBy("event_type", "hour_bucket")
+        "hour_bucket",
+    )
 
 
 # --- Mann-Whitney U (rank-sum) test ------------------------------------
@@ -2331,7 +2356,7 @@ def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("n_obs") - 1)
     )
     z = (F.col("n") - F.col("mu")) / F.col("sigma")
-    return (
+    return ordered(
         hourly.withColumn("hod", F.hour("hr").cast("long"))
         .join(
             F.broadcast(
@@ -2351,8 +2376,9 @@ def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
             (F.round(z, 6) + 0.0).alias("z_seasonal"),
             (F.abs(z) > 3.0).alias("is_anomaly"),
-        )
-        .orderBy("event_type", "hour_bucket")
+        ),
+        "event_type",
+        "hour_bucket",
     )
 
 
@@ -2451,7 +2477,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lpad((F.col("cohort_m") % 12).cast("string"), 2, "0")
         ),
     )
-    return (
+    return ordered(
         grid.withColumn(
             "cum_ltv", F.sum("revenue_dec").over(w).cast("double")
         )
@@ -2461,8 +2487,9 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_active",
             "revenue",
             "cum_ltv",
-        )
-        .orderBy("cohort_month", "age_month")
+        ),
+        "cohort_month",
+        "age_month",
     )
 
 
@@ -2530,7 +2557,7 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     term = (F.col("n_users") - exp) * (F.col("n_users") - exp) / exp
     with_tot = counts.crossJoin(F.broadcast(tot))  # 1-row broadcast scalar
     verdict = with_tot.agg((F.sum(term) > 10.83).alias("srm_detected"))
-    return (
+    return ordered(
         with_tot.crossJoin(F.broadcast(verdict))  # 1-row broadcast scalar
         .select(
             "variant",
@@ -2538,8 +2565,8 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             exp.alias("expected"),
             F.round(term, 6).alias("chi2_term"),
             "srm_detected",
-        )
-        .orderBy("variant")
+        ),
+        "variant",
     )
 
 
@@ -2615,12 +2642,15 @@ def orders_mom_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col(cur) - F.col(prev)).cast("double") / F.col(prev).cast("double"),
         6,
     ) + 0.0
-    return laged.select(
-        label.alias("month"),
-        F.col("rev").cast("double").alias("revenue"),
-        growth("rev", "prev_m").alias("mom_growth"),
-        growth("rev", "prev_y").alias("yoy_growth"),
-    ).orderBy("month")
+    return ordered(
+        laged.select(
+            label.alias("month"),
+            F.col("rev").cast("double").alias("revenue"),
+            growth("rev", "prev_m").alias("mom_growth"),
+            growth("rev", "prev_y").alias("yoy_growth"),
+        ),
+        "month",
+    )
 
 
 # --- DAU / WAU / MAU engagement ladder ---------------------------------
@@ -2746,7 +2776,7 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wau = coverage(7, "wau").withColumnRenamed("d", "wd")
     mau = coverage(30, "mau").withColumnRenamed("d", "md")
-    return (
+    return ordered(
         dau.join(wau, F.col("d") == F.col("wd"))
         .join(mau, F.col("d") == F.col("md"))
         .select(
@@ -2757,8 +2787,8 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(
                 F.col("dau").cast("double") / F.col("mau"), 6
             ).alias("stickiness"),
-        )
-        .orderBy("day")
+        ),
+        "day",
     )
 
 
@@ -2849,13 +2879,13 @@ def events_attribution_first_touch(
         F.col("first_touch_ts").isNotNull() & F.col("touch_type").isNotNull(),
         F.col("touch_type"),
     ).otherwise("none")
-    return (
+    return ordered(
         j.groupBy(bucket.alias("touch_type"))
         .agg(
             F.count(F.lit(1)).alias("conversions"),
             dsum(dec("value"), "attributed_value"),
-        )
-        .orderBy("touch_type")
+        ),
+        "touch_type",
     )
 
 
@@ -3020,14 +3050,14 @@ def privacy_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         F.round(F.col("true_count") + noise).cast("long"),
     )
-    return (
+    return ordered(
         c.select(
             "event_type",
             "true_count",
             (F.round(noise, 6) + 0.0).alias("noise"),
             released.alias("released_count"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
@@ -3273,7 +3303,7 @@ def events_attribution_time_decay(
     grp = touches.groupBy("user_id", "next_pts").agg(
         F.sum("w_nano").cast("long").alias("sum_w")
     )
-    return (
+    return ordered(
         touches.join(grp, ["user_id", "next_pts"])
         .join(
             purch,
@@ -3288,8 +3318,8 @@ def events_attribution_time_decay(
                     F.col("n_purch") * 1000000.0 * F.col("w_nano") / F.col("sum_w")
                 ).cast("long")
             ).cast("long").alias("credit_micro"),
-        )
-        .orderBy("touch_type")
+        ),
+        "touch_type",
     )
 
 
@@ -3367,7 +3397,7 @@ def events_decompose_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("st"),
         F.hour("hr").cast("long").alias("shod"),
     ).agg(F.round(F.avg(F.col("n") - F.col("trend")), 6).alias("seasonal"))
-    return (
+    return ordered(
         trend.withColumn("hod", F.hour("hr").cast("long"))
         .join(
             F.broadcast(seasonal),
@@ -3384,8 +3414,9 @@ def events_decompose_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("n") - F.col("trend") - F.col("seasonal"), 6)
                 + 0.0
             ).alias("residual"),
-        )
-        .orderBy("event_type", "hour_bucket")
+        ),
+        "event_type",
+        "hour_bucket",
     )
 
 
@@ -3471,12 +3502,15 @@ def events_acf_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt(nd * F.col("sxx") - F.col("sx").cast("double") * F.col("sx"))
         * F.sqrt(nd * F.col("syy") - F.col("sy").cast("double") * F.col("sy"))
     )
-    return sums.select(
+    return ordered(
+        sums.select(
+            "event_type",
+            F.col("n").alias("n_pairs"),
+            (F.round(r, 6) + 0.0).alias("acf_lag1"),
+            (F.abs(r) > 2.0 / F.sqrt(nd)).alias("significant"),
+        ),
         "event_type",
-        F.col("n").alias("n_pairs"),
-        (F.round(r, 6) + 0.0).alias("acf_lag1"),
-        (F.abs(r) > 2.0 / F.sqrt(nd)).alias("significant"),
-    ).orderBy("event_type")
+    )
 
 
 # --- Kaplan-Meier time-to-conversion survival --------------------------
@@ -3646,7 +3680,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hit_zero"),
         )
     )
-    return (
+    return ordered(
         logs.where(F.col("n_events") > 0)
         .select(
             "dur_hr",
@@ -3657,8 +3691,8 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.exp(F.coalesce(F.col("cum_log"), F.lit(0.0))), 6)
             )
             .alias("km_survival"),
-        )
-        .orderBy("dur_hr")
+        ),
+        "dur_hr",
     )
 
 
@@ -3860,8 +3894,6 @@ ORDER BY event_type, hour_bucket
 def events_ewma_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from _imdb_etl_spark.sources import load_tables
-
     (events,) = load_tables(spark, sf_dir, "events")
     hourly = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
@@ -3885,7 +3917,7 @@ def events_ewma_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
         ewma.alias("ewma_x32768"),
     )
     n_scaled = F.col("n") * _EWMA_SCALE
-    return (
+    return ordered(
         scored.where(F.col("rn") > _EWMA_LAGS)
         .select(
             "event_type",
@@ -3901,8 +3933,9 @@ def events_ewma_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .cast("int")
             .alias("is_burst"),
-        )
-        .orderBy("event_type", "hour_bucket")
+        ),
+        "event_type",
+        "hour_bucket",
     )
 
 
@@ -3960,8 +3993,6 @@ ORDER BY d1.day
     "and events_retention_cohorts.",
 )
 def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.sources import load_tables
-
     (events,) = load_tables(spark, sf_dir, "events")
     ud = events.select(
         "user_id", F.col("ts").cast("date").alias("day")
@@ -3980,7 +4011,7 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = daily.select(
         F.col("day").alias("day2"), F.col("n_new").alias("n_new2")
     )
-    return (
+    return ordered(
         daily.join(F.broadcast(d2), F.col("day2") <= F.col("day"))
         .groupBy("day", "n_active", "n_new")
         .agg(F.sum("n_new2").cast("long").alias("cum_users"))
@@ -3992,8 +4023,8 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_returning"),
             "cum_users",
-        )
-        .orderBy("day")
+        ),
+        "day",
     )
 
 
@@ -4047,8 +4078,6 @@ ORDER BY events_per_user
     "runs; the raw id never appears in the output schema.",
 )
 def privacy_pseudonymize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.sources import load_tables
-
     (events,) = load_tables(spark, sf_dir, "events")
     per_user = (
         events.select(
@@ -4063,15 +4092,15 @@ def privacy_pseudonymize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("total_users"),
         F.count_distinct("pseudo_id").alias("total_pseudonyms"),
     )
-    return (
+    return ordered(
         per_user.crossJoin(F.broadcast(audit))  # 1-row scalar audit
         .groupBy(F.col("n_events").alias("events_per_user"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_users"),
             F.max("total_users").cast("long").alias("total_users"),
             F.max("total_pseudonyms").cast("long").alias("total_pseudonyms"),
-        )
-        .orderBy("events_per_user")
+        ),
+        "events_per_user",
     )
 
 
@@ -4139,8 +4168,6 @@ ORDER BY user_id, day
 def features_user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from _imdb_etl_spark.sources import load_tables
-
     (events,) = load_tables(spark, sf_dir, "events")
     ud = events.groupBy(
         "user_id", F.col("ts").cast("date").alias("day")
@@ -4155,7 +4182,7 @@ def features_user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     w7 = w.rangeBetween(-6, 0)
     w30 = w.rangeBetween(-29, 0)
     wcum = w.rowsBetween(Window.unboundedPreceding, 0)
-    return (
+    return ordered(
         idx.select(
             "user_id",
             F.date_format("day", "yyyy-MM-dd").alias("day"),
@@ -4176,8 +4203,9 @@ def features_user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .cast("int")
             .alias("label_active_next_day"),
-        )
-        .orderBy("user_id", "day")
+        ),
+        "user_id",
+        "day",
     )
 
 
@@ -4239,8 +4267,6 @@ ORDER BY b.o_orderkey
     "pytest.",
 )
 def features_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.sources import load_tables
-
     (orders,) = load_tables(spark, sf_dir, "orders")
     base = orders.select(
         "o_orderkey",
@@ -4257,7 +4283,7 @@ def features_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = base.agg(
         F.sum("y").alias("sg"), F.count(F.lit(1)).alias("ng")
     )
-    return (
+    return ordered(
         base.join(F.broadcast(cat), "priority")
         .crossJoin(F.broadcast(g))  # 1-row global prior scalar
         .select(
@@ -4276,8 +4302,8 @@ def features_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("smoothed_enc_permille"),
-        )
-        .orderBy("o_orderkey")
+        ),
+        "o_orderkey",
     )
 
 
@@ -4359,8 +4385,6 @@ ORDER BY bucket_id
     "no global window funnel, per this repo's own lint.",
 )
 def features_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from _imdb_etl_spark.sources import load_tables
-
     (events,) = load_tables(spark, sf_dir, "events")
     base = events.select(
         F.col("value").cast("double").alias("v"),
@@ -4399,7 +4423,7 @@ def features_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total as a 1-row scalar aggregate broadcast back — the same
     # 10 bucket rows a global window would funnel, without the funnel
     total = terms.agg(F.sum("term").alias("psi_sum"))
-    return (
+    return ordered(
         terms.crossJoin(F.broadcast(total))
         .select(
             F.col("bucket_id").cast("int").alias("bucket_id"),
@@ -4407,8 +4431,8 @@ def features_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_cur").cast("long").alias("n_cur"),
             F.round("term", 6).alias("psi_term"),
             F.round("psi_sum", 6).alias("psi_total"),
-        )
-        .orderBy("bucket_id")
+        ),
+        "bucket_id",
     )
 
 
@@ -4489,8 +4513,6 @@ ORDER BY event_type
 def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from _imdb_etl_spark.sources import load_tables
-
     (events,) = load_tables(spark, sf_dir, "events")
     hourly = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("hr")
@@ -4509,7 +4531,7 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("n", 1).over(w).alias("f_naive"),
         F.lag("n", _BACKTEST_PERIOD).over(w).alias("f_seasonal"),
     )
-    return (
+    return ordered(
         scored.where(F.col("rn") > _BACKTEST_PERIOD)
         .groupBy("event_type")
         .agg(
@@ -4527,6 +4549,6 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("mase_permille"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import davg, dec
+from _imdb_etl_spark.functions import davg, dec, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
@@ -43,13 +43,14 @@ ORDER BY number_of_orders DESC, priority
 )
 def graf1(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = load_tables(spark, sf_dir, "orders")
-    return (
+    return ordered(
         orders.where(
             F.col("o_orderstatus").isin("O", "F") & (F.year("o_orderdate") == 1995)
         )
         .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(F.count("o_orderkey").alias("number_of_orders"))
-        .orderBy(F.desc("number_of_orders"), "priority")
+        .agg(F.count("o_orderkey").alias("number_of_orders")),
+        F.desc("number_of_orders"),
+        "priority",
     )
 
 
@@ -72,11 +73,12 @@ ORDER BY avg_quantity DESC, part_type
 )
 def graf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     part, lineitem = load_tables(spark, sf_dir, "part", "lineitem")
-    return (
+    return ordered(
         part.join(lineitem, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy(F.col("p_type").alias("part_type"))
-        .agg(F.round(davg(dec("l_quantity"), "a"), 2).alias("avg_quantity"))
-        .orderBy(F.desc("avg_quantity"), "part_type")
+        .agg(F.round(davg(dec("l_quantity"), "a"), 2).alias("avg_quantity")),
+        F.desc("avg_quantity"),
+        "part_type",
     )
 
 
@@ -173,7 +175,7 @@ def graf4(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("o_orderkey").alias("order_count"))
     )
     w = Window.partitionBy("n_name").orderBy(F.desc("order_count"), F.asc("c_name"))
-    return (
+    return ordered(
         per_customer.withColumn("customer_rank", F.row_number().over(w))
         .where(F.col("customer_rank") <= 3)
         .select(
@@ -181,8 +183,9 @@ def graf4(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation_name"),
             "order_count",
             "customer_rank",
-        )
-        .orderBy("nation_name", "customer_rank")
+        ),
+        "nation_name",
+        "customer_rank",
     )
 
 

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, disc_price, dsum
+from _imdb_etl_spark.functions import dec, disc_price, dsum, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
@@ -29,12 +29,16 @@ ORDER BY order_id, line_no
 )
 def p1_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lineitem,) = load_tables(spark, sf_dir, "lineitem")
-    return lineitem.select(
-        F.col("l_orderkey").alias("order_id"),
-        F.col("l_linenumber").alias("line_no"),
-        F.col("l_quantity").alias("qty"),
-        F.col("l_returnflag").alias("flag"),
-    ).orderBy("order_id", "line_no")
+    return ordered(
+        lineitem.select(
+            F.col("l_orderkey").alias("order_id"),
+            F.col("l_linenumber").alias("line_no"),
+            F.col("l_quantity").alias("qty"),
+            F.col("l_returnflag").alias("flag"),
+        ),
+        "order_id",
+        "line_no",
+    )
 
 
 _P2_SQL = """
@@ -53,12 +57,13 @@ ORDER BY flag, status
 )
 def p2_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lineitem,) = load_tables(spark, sf_dir, "lineitem")
-    return (
+    return ordered(
         lineitem.select(
             F.col("l_returnflag").alias("flag"), F.col("l_linestatus").alias("status")
         )
-        .dropDuplicates()
-        .orderBy("flag", "status")
+        .dropDuplicates(),
+        "flag",
+        "status",
     )
 
 
@@ -77,12 +82,12 @@ ORDER BY brand_id
 )
 def p3_degenerate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (part,) = load_tables(spark, sf_dir, "part")
-    return (
+    return ordered(
         part.select(
             F.col("p_brand").alias("brand_id"), F.col("p_brand").alias("brand_name")
         )
-        .dropDuplicates()
-        .orderBy("brand_id")
+        .dropDuplicates(),
+        "brand_id",
     )
 
 
@@ -108,7 +113,7 @@ ORDER BY person_id, role NULLS FIRST, nation
 )
 def dim_people_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer, orders, nation = load_tables(spark, sf_dir, "customer", "orders", "nation")
-    return (
+    return ordered(
         customer.join(orders, F.col("c_custkey") == F.col("o_custkey"), "left")
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"), "left")
         .select(
@@ -117,8 +122,10 @@ def dim_people_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("role"),
             F.col("n_name").alias("nation"),
         )
-        .dropDuplicates()
-        .orderBy("person_id", F.asc_nulls_first("role"), "nation")
+        .dropDuplicates(),
+        "person_id",
+        F.asc_nulls_first("role"),
+        "nation",
     )
 
 
@@ -154,7 +161,7 @@ def fact_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem, orders, part, supplier = load_tables(
         spark, sf_dir, "lineitem", "orders", "part", "supplier"
     )
-    return (
+    return ordered(
         lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"), "left")
         .join(part, F.col("l_partkey") == F.col("p_partkey"), "left")
         .join(supplier, F.col("l_suppkey") == F.col("s_suppkey"), "left")
@@ -166,8 +173,9 @@ def fact_star(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_name").alias("supplier_name"),
             F.col("l_quantity").alias("qty"),
         )
-        .dropDuplicates()
-        .orderBy("order_id", "line_no")
+        .dropDuplicates(),
+        "order_id",
+        "line_no",
     )
 
 
@@ -189,10 +197,10 @@ ORDER BY c_custkey
 def semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer, orders = load_tables(spark, sf_dir, "customer", "orders")
     big = orders.where(F.col("o_totalprice") > 400000)
-    return (
+    return ordered(
         customer.join(big, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
+        .select("c_custkey", "c_name"),
+        "c_custkey",
     )
 
 
@@ -214,10 +222,10 @@ ORDER BY c_custkey
 def anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer, orders = load_tables(spark, sf_dir, "customer", "orders")
     big = orders.where(F.col("o_totalprice") > 400000)
-    return (
+    return ordered(
         customer.join(big, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
+        .select("c_custkey", "c_name"),
+        "c_custkey",
     )
 
 
@@ -266,7 +274,7 @@ def topk_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum(disc_price(), "revenue"))
     )
     w = Window.partitionBy("p_brand").orderBy(F.desc("revenue"), F.asc("p_partkey"))
-    return (
+    return ordered(
         rev.withColumn("revenue_rank", F.row_number().over(w))
         .where(F.col("revenue_rank") <= 3)
         .select(
@@ -274,8 +282,9 @@ def topk_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p_partkey").alias("partkey"),
             "revenue",
             "revenue_rank",
-        )
-        .orderBy("brand", "revenue_rank")
+        ),
+        "brand",
+        "revenue_rank",
     )
 
 
@@ -295,11 +304,11 @@ ORDER BY nationkey
 )
 def setop_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer, supplier = load_tables(spark, sf_dir, "customer", "supplier")
-    return (
+    return ordered(
         customer.select(F.col("c_nationkey").alias("nationkey"))
         .union(supplier.select(F.col("s_nationkey").alias("nationkey")))
-        .distinct()
-        .orderBy("nationkey")
+        .distinct(),
+        "nationkey",
     )
 
 
@@ -320,7 +329,7 @@ ORDER BY o_orderkey
 )
 def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = load_tables(spark, sf_dir, "orders")
-    return (
+    return ordered(
         orders.where(
             F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1) == "0"
         )
@@ -328,8 +337,8 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "o_custkey",
             F.col("o_totalprice").cast("double").alias("totalprice"),
-        )
-        .orderBy("o_orderkey")
+        ),
+        "o_orderkey",
     )
 
 
@@ -352,15 +361,15 @@ ORDER BY c_mktsegment
 )
 def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     (customer,) = load_tables(spark, sf_dir, "customer")
-    return (
+    return ordered(
         customer.where(
             F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 1).isin(
                 "0", "1", "2", "3"
             )
         )
         .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_sampled"))
-        .orderBy("c_mktsegment")
+        .agg(F.count(F.lit(1)).alias("n_sampled")),
+        "c_mktsegment",
     )
 
 
@@ -398,7 +407,7 @@ def cross_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_regionkey").alias("rk"), F.col("o_orderpriority").alias("prio2"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    return (
+    return ordered(
         region.crossJoin(F.broadcast(prios))
         .join(
             counts,
@@ -407,8 +416,9 @@ def cross_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "r_name", "prio", F.coalesce("n", F.lit(0)).cast("long").alias("n_orders")
-        )
-        .orderBy("r_name", "prio")
+        ),
+        "r_name",
+        "prio",
     )
 
 
@@ -428,10 +438,10 @@ ORDER BY nationkey
 )
 def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer, supplier = load_tables(spark, sf_dir, "customer", "supplier")
-    return (
+    return ordered(
         customer.select(F.col("c_nationkey").alias("nationkey"))
-        .intersect(supplier.select(F.col("s_nationkey").alias("nationkey")))
-        .orderBy("nationkey")
+        .intersect(supplier.select(F.col("s_nationkey").alias("nationkey"))),
+        "nationkey",
     )
 
 
@@ -452,14 +462,14 @@ ORDER BY nationkey
 )
 def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer, supplier = load_tables(spark, sf_dir, "customer", "supplier")
-    return (
+    return ordered(
         customer.select(F.col("c_nationkey").alias("nationkey"))
         .subtract(
             supplier.where(F.col("s_acctbal") > 5000).select(
                 F.col("s_nationkey").alias("nationkey")
             )
-        )
-        .orderBy("nationkey")
+        ),
+        "nationkey",
     )
 
 
@@ -481,14 +491,14 @@ ORDER BY custkey
 )
 def having_frequent(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orders,) = load_tables(spark, sf_dir, "orders")
-    return (
+    return ordered(
         orders.groupBy(F.col("o_custkey").alias("custkey"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             dsum(dec("o_totalprice"), "total_spend"),
         )
-        .where(F.col("n_orders") >= 15)
-        .orderBy("custkey")
+        .where(F.col("n_orders") >= 15),
+        "custkey",
     )
 
 
@@ -526,8 +536,8 @@ def null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(pkey.alias("bkey"))
         .agg(F.count(F.lit(1)).alias("n_big"))
     )
-    return (
+    return ordered(
         a.join(b, F.col("pkey").eqNullSafe(F.col("bkey")), "left")
-        .select("pkey", "n_orders", "n_big")
-        .orderBy(F.asc_nulls_first("pkey"))
+        .select("pkey", "n_orders", "n_big"),
+        F.asc_nulls_first("pkey"),
     )

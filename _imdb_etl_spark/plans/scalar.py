@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
@@ -46,7 +47,7 @@ def scalar_null_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_acctbal",
     )
     d = t.select(F.col("seg").alias("dseg")).distinct()
-    return (
+    return ordered(
         t.join(d, F.col("seg").eqNullSafe(F.col("dseg")))
         .groupBy("dseg")
         .agg(
@@ -60,8 +61,8 @@ def scalar_null_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_nonnull",
             F.coalesce("dseg", F.lit("SUPPRESSED")).alias("seg_label"),
             F.round("raw_bal", 2).alias("sum_bal"),
-        )
-        .orderBy(F.asc_nulls_first("seg"))
+        ),
+        F.asc_nulls_first("seg"),
     )
 
 
@@ -89,17 +90,20 @@ ORDER BY p_partkey
 )
 def scalar_string_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (part,) = load_tables(spark, sf_dir, "part")
-    return part.select(
+    return ordered(
+        part.select(
+            "p_partkey",
+            F.upper("p_name").alias("name_upper"),
+            F.substring("p_name", 1, 8).alias("name_prefix"),
+            F.lpad("p_brand", 12, "*").alias("brand_padded"),
+            F.replace(F.col("p_type"), F.lit(" "), F.lit("_")).alias("type_snake"),
+            F.reverse("p_brand").alias("brand_rev"),
+            F.levenshtein("p_brand", F.lit("Brand#1")).alias("brand_dist"),
+            F.instr("p_type", " ").alias("first_space"),
+            F.length("p_name").alias("name_len"),
+        ),
         "p_partkey",
-        F.upper("p_name").alias("name_upper"),
-        F.substring("p_name", 1, 8).alias("name_prefix"),
-        F.lpad("p_brand", 12, "*").alias("brand_padded"),
-        F.replace(F.col("p_type"), F.lit(" "), F.lit("_")).alias("type_snake"),
-        F.reverse("p_brand").alias("brand_rev"),
-        F.levenshtein("p_brand", F.lit("Brand#1")).alias("brand_dist"),
-        F.instr("p_type", " ").alias("first_space"),
-        F.length("p_name").alias("name_len"),
-    ).orderBy("p_partkey")
+    )
 
 
 _DATE_SQL = """
@@ -177,17 +181,15 @@ def grouping_sets_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").alias("order_year"),
     )
     prio, yr = F.col("priority"), F.col("order_year")
-    return (
+    return ordered(
         projected.groupingSets([[prio], [yr]], prio, yr)
         .agg(
             F.grouping_id().alias("gid"),
             F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy(
-            "gid",
-            F.asc_nulls_first("priority"),
-            F.asc_nulls_first("order_year"),
-        )
+        ),
+        "gid",
+        F.asc_nulls_first("priority"),
+        F.asc_nulls_first("order_year"),
     )
 
 
@@ -217,22 +219,25 @@ ORDER BY vec_id
 def scalar_array_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emb,) = load_tables(spark, sf_dir, "embeddings")
     e = F.col("embedding")
-    return emb.select(
-        "vec_id",
-        F.round(F.element_at(e, 1).cast("double"), 6).alias("first_dim"),
-        F.round(F.array_max(e).cast("double"), 6).alias("max_dim"),
-        F.array_position(e, F.array_max(e)).alias("argmax_1based"),
-        F.round(
-            F.aggregate(
-                F.slice(e, 1, 8), F.lit(0.0), lambda a, x: a + x.cast("double")
+    return ordered(
+        emb.select(
+            "vec_id",
+            F.round(F.element_at(e, 1).cast("double"), 6).alias("first_dim"),
+            F.round(F.array_max(e).cast("double"), 6).alias("max_dim"),
+            F.array_position(e, F.array_max(e)).alias("argmax_1based"),
+            F.round(
+                F.aggregate(
+                    F.slice(e, 1, 8), F.lit(0.0), lambda a, x: a + x.cast("double")
+                ),
+                6,
+            ).alias("head_sum"),
+            F.size(F.filter(e, lambda x: x > 0)).alias("n_positive"),
+            F.round(F.element_at(F.array_sort(e), 1).cast("double"), 6).alias(
+                "min_dim"
             ),
-            6,
-        ).alias("head_sum"),
-        F.size(F.filter(e, lambda x: x > 0)).alias("n_positive"),
-        F.round(F.element_at(F.array_sort(e), 1).cast("double"), 6).alias(
-            "min_dim"
         ),
-    ).orderBy("vec_id")
+        "vec_id",
+    )
 
 
 _COLLATION_SQL = """
@@ -267,15 +272,15 @@ def collation_ci_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("p_partkey") % 2 == 0, F.upper("p_type"))
         .otherwise(F.lower("p_type"))
     )
-    return (
+    return ordered(
         part.select(F.collate(mixed, "UTF8_LCASE").alias("t"), "p_partkey")
         .groupBy("t")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("p_partkey").cast("long").alias("sum_key"),
         )
-        .select(F.lower("t").alias("type_lc"), "n", "sum_key")
-        .orderBy("type_lc")
+        .select(F.lower("t").alias("type_lc"), "n", "sum_key"),
+        "type_lc",
     )
 
 
@@ -321,7 +326,7 @@ def scalar_timestamp_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load_tables(spark, sf_dir, "events")
     ts = F.col("ts")
     fmt = "yyyy-MM-dd HH:mm:ss"
-    return (
+    return ordered(
         events.where(F.col("event_id") < 200)
         .select(
             "event_id",
@@ -359,8 +364,8 @@ def scalar_timestamp_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 fmt,
             ).alias("rebuilt_hour"),
-        )
-        .orderBy("event_id")
+        ),
+        "event_id",
     )
 
 
@@ -440,30 +445,33 @@ def scalar_map_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.create_map(F.lit("status"), F.col("o_orderstatus")),
         F.create_map(F.lit("prio"), F.lit("std")),
     )
-    return o.select(
+    return ordered(
+        o.select(
+            "o_orderkey",
+            F.size(nums).alias("m_size"),
+            F.element_at(strs, "status").alias("status_val"),
+            _map_str(F.transform_values(nums, lambda k, v: v * 2)).alias(
+                "doubled"
+            ),
+            _map_str(F.map_filter(nums, lambda k, v: v > 100000)).alias(
+                "big_entries"
+            ),
+            _map_str(
+                F.map_zip_with(
+                    nums,
+                    F.map_from_arrays(
+                        F.array(F.lit("price"), F.lit("year")),
+                        F.array(F.col("yr"), F.col("cents")),
+                    ),
+                    lambda k, v1, v2: v1 + v2,
+                )
+            ).alias("zipped"),
+            F.array_join(F.array_sort(F.map_keys(strs)), ",").alias(
+                "keys_sorted"
+            ),
+        ),
         "o_orderkey",
-        F.size(nums).alias("m_size"),
-        F.element_at(strs, "status").alias("status_val"),
-        _map_str(F.transform_values(nums, lambda k, v: v * 2)).alias(
-            "doubled"
-        ),
-        _map_str(F.map_filter(nums, lambda k, v: v > 100000)).alias(
-            "big_entries"
-        ),
-        _map_str(
-            F.map_zip_with(
-                nums,
-                F.map_from_arrays(
-                    F.array(F.lit("price"), F.lit("year")),
-                    F.array(F.col("yr"), F.col("cents")),
-                ),
-                lambda k, v1, v2: v1 + v2,
-            )
-        ).alias("zipped"),
-        F.array_join(F.array_sort(F.map_keys(strs)), ",").alias(
-            "keys_sorted"
-        ),
-    ).orderBy("o_orderkey")
+    )
 
 
 # --- bitwise scalar + aggregate surface --------------------------------
@@ -501,7 +509,7 @@ ORDER BY bucket
 def scalar_bitwise_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events,) = load_tables(spark, sf_dir, "events")
     eid = F.col("event_id")
-    return (
+    return ordered(
         events.groupBy((F.col("user_id") % 64).alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -515,8 +523,8 @@ def scalar_bitwise_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("max_shifted"),
             F.min(F.shiftright(eid, 4)).cast("long").alias("min_shifted_down"),
-        )
-        .orderBy("bucket")
+        ),
+        "bucket",
     )
 
 
@@ -609,17 +617,20 @@ def scalar_try_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflow_base = F.when(F.col("pk") % 1024 == 0, max_long).otherwise(
         F.lit(0).cast("long")
     )
-    return base.select(
+    return ordered(
+        base.select(
+            "pk",
+            F.round(F.expr("try_cast(dirty AS DOUBLE)"), 2).alias("cast_val"),
+            F.try_divide(F.col("price").cast("double"), F.col("denom"))
+            .cast("double")
+            .alias("div_val"),
+            F.try_add(overflow_base, F.col("pk")).alias("add_val"),
+            # index cycles 1..4: 1-2 resolve, 3-4 are out of range -> NULL
+            # (index 0 is invalid USAGE, which try_element_at still raises)
+            F.try_element_at(
+                F.array(F.lit("a"), F.lit("b")),
+                (1 + F.col("pk") % 4).cast("int"),
+            ).alias("elem_val"),
+        ),
         "pk",
-        F.round(F.expr("try_cast(dirty AS DOUBLE)"), 2).alias("cast_val"),
-        F.try_divide(F.col("price").cast("double"), F.col("denom"))
-        .cast("double")
-        .alias("div_val"),
-        F.try_add(overflow_base, F.col("pk")).alias("add_val"),
-        # index cycles 1..4: 1-2 resolve, 3-4 are out of range -> NULL
-        # (index 0 is invalid USAGE, which try_element_at still raises)
-        F.try_element_at(
-            F.array(F.lit("a"), F.lit("b")),
-            (1 + F.col("pk") % 4).cast("int"),
-        ).alias("elem_val"),
-    ).orderBy("pk")
+    )

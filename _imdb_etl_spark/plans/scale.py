@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, dsum, md5_prefix_int_sql
+from _imdb_etl_spark.functions import dec, dsum, md5_prefix_int_sql, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, scoped_conf, stage_to_parquet
 
@@ -49,13 +49,13 @@ def salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dec("o_totalprice")).alias("ps"),
         )
     )
-    return (
+    return ordered(
         partial.groupBy(F.col("o_orderpriority").alias("priority"))
         .agg(
             F.sum("pc").alias("n_orders"),
             F.sum("ps").cast("double").alias("total_price"),
-        )
-        .orderBy("priority")
+        ),
+        "priority",
     )
 
 
@@ -94,10 +94,10 @@ def merge_scd1(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched = customer.join(
         vip_keys, F.col("c_custkey") == F.col("k"), "left_anti"
     )
-    return (
+    return ordered(
         untouched.unionByName(updates)
-        .select("c_custkey", "c_name", "c_mktsegment")
-        .orderBy("c_custkey")
+        .select("c_custkey", "c_name", "c_mktsegment"),
+        "c_custkey",
     )
 
 
@@ -206,8 +206,10 @@ def _vip_snapshots(
 def merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer, orders = load_tables(spark, sf_dir, "customer", "orders")
     snaps = _vip_snapshots(customer, orders, "2024-01-01", "2024-07-01")
-    return scd2_history(snaps, "c_custkey", "c_mktsegment").orderBy(
-        "c_custkey", "valid_from"
+    return ordered(
+        scd2_history(snaps, "c_custkey", "c_mktsegment"),
+        "c_custkey",
+        "valid_from",
     )
 
 
@@ -285,14 +287,14 @@ def skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the partitioned join the pattern exists for (at test scale AQE
     # would broadcast the exploded dim and the salt would be inert);
     # shuffle_hash is size-safe at any scale, unlike a broadcast hint
-    return (
+    return ordered(
         fact.join(dim.hint("shuffle_hash"), ["user_id", "salt"])
         .groupBy(F.col("c_name").alias("customer_name"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(dec("value")).cast("double").alias("total_value"),
-        )
-        .orderBy("customer_name")
+        ),
+        "customer_name",
     )
 
 
@@ -347,7 +349,7 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("nprice"),
     )
     diff = old.join(new, F.col("k") == F.col("nk"), "full_outer")
-    return (
+    return ordered(
         diff.where(
             F.col("k").isNull()
             | F.col("nk").isNull()
@@ -361,8 +363,8 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("change_type"),
             F.col("price").alias("old_price"),
             F.col("nprice").alias("new_price"),
-        )
-        .orderBy("k")
+        ),
+        "k",
     )
 
 
@@ -446,7 +448,7 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("o_orderdate") < F.to_timestamp("valid_to"))
         )
     )
-    return (
+    return ordered(
         orders.join(hist, cond, "left")
         .groupBy(
             F.coalesce("c_mktsegment", F.lit("PRE_HISTORY")).alias("segment")
@@ -454,8 +456,8 @@ def scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             dsum(dec("o_totalprice"), "total_price"),
-        )
-        .orderBy("segment")
+        ),
+        "segment",
     )
 
 
@@ -558,7 +560,7 @@ def shuffle_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = k.select(bucket.alias("bucket"), "n")
     t = b.agg(F.sum("n").alias("total"))
-    return (
+    return ordered(
         b.groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_keys"),
@@ -572,8 +574,8 @@ def shuffle_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rows",
             "max_key_rows",
             F.expr("1000 * n_rows div total").alias("load_permille"),
-        )
-        .orderBy("bucket")
+        ),
+        "bucket",
     )
 
 
@@ -736,7 +738,7 @@ def runtime_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # eager: planned (bloom injected) and executed under the confs;
         # the staged frame is bounded at one row per return flag
         out = stage_to_parquet(_bloom_join_frame(spark, sf_dir), "bloom_out")
-    return out.orderBy("returnflag")
+    return ordered(out, "returnflag")
 
 
 # --- AQE skew-join split (the automatic twin of the salted join) --------
@@ -824,7 +826,7 @@ def aqe_skew_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scoped_conf(spark, _AQE_SKEW_CONFS):
         # eager under the AQE-skew confs; bounded at one row/segment
         out = stage_to_parquet(_aqe_skew_frame(spark, sf_dir), "aqeskew_out")
-    return out.orderBy("segment")
+    return ordered(out, "segment")
 
 
 # --- IDENTIFIER() binding + EXECUTE IMMEDIATE --------------------------

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import charge, davg, dec, disc_price, dsum
+from _imdb_etl_spark.functions import charge, davg, dec, disc_price, dsum, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
@@ -54,7 +54,7 @@ ORDER BY l_returnflag, l_linestatus
 )
 def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lineitem,) = load_tables(spark, sf_dir, "lineitem")
-    return (
+    return ordered(
         lineitem.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -66,8 +66,9 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg(dec("l_extendedprice"), "avg_price"),
             davg(dec("l_discount", "decimal(8,2)"), "avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
+        ),
+        "l_returnflag",
+        "l_linestatus",
     )
 
 
@@ -143,7 +144,7 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer, orders, lineitem, supplier, nation, region = load_tables(
         spark, sf_dir, "customer", "orders", "lineitem", "supplier", "nation", "region"
     )
-    return (
+    return ordered(
         customer.join(orders, F.col("c_custkey") == F.col("o_custkey"))
         .where(
             (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -159,8 +160,9 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .where(F.col("r_name") == "ASIA")
         .groupBy("n_name")
-        .agg(dsum(disc_price(), "revenue"))
-        .orderBy(F.desc("revenue"), "n_name")
+        .agg(dsum(disc_price(), "revenue")),
+        F.desc("revenue"),
+        "n_name",
     )
 
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, disc_price, dsum
+from _imdb_etl_spark.functions import dec, disc_price, dsum, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
 
@@ -37,7 +37,7 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     )
     late = lineitem.select("l_orderkey", "l_shipdate")
-    return (
+    return ordered(
         o.join(
             late,
             (F.col("l_orderkey") == F.col("o_orderkey"))
@@ -45,8 +45,8 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
         .groupBy(F.col("o_orderpriority").alias("priority"))
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("priority")
+        .agg(F.count(F.lit(1)).alias("order_count")),
+        "priority",
     )
 
 
@@ -86,7 +86,7 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn = nation.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
     ).where(F.col("n_name").isin("NATION_1", "NATION_2"))
-    return (
+    return ordered(
         lineitem.join(supplier, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(customer, F.col("o_custkey") == F.col("c_custkey"))
@@ -94,8 +94,10 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
         .where(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year"))
-        .agg(dsum(disc_price(), "revenue"))
-        .orderBy("supp_nation", "cust_nation", "ship_year")
+        .agg(dsum(disc_price(), "revenue")),
+        "supp_nation",
+        "cust_nation",
+        "ship_year",
     )
 
 
@@ -268,15 +270,19 @@ def window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("o_custkey").orderBy(F.desc("price"), F.asc("o_orderkey"))
     t = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     run = t.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return per_order.select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderkey").alias("orderkey"),
-        F.rank().over(w).alias("price_rank"),
-        F.dense_rank().over(w).alias("price_dense_rank"),
-        F.lag("price").over(t).cast("double").alias("prev_price"),
-        F.lead("price").over(t).cast("double").alias("next_price"),
-        F.sum("price").over(run).cast("double").alias("running_spend"),
-    ).orderBy("custkey", "orderkey")
+    return ordered(
+        per_order.select(
+            F.col("o_custkey").alias("custkey"),
+            F.col("o_orderkey").alias("orderkey"),
+            F.rank().over(w).alias("price_rank"),
+            F.dense_rank().over(w).alias("price_dense_rank"),
+            F.lag("price").over(t).cast("double").alias("prev_price"),
+            F.lead("price").over(t).cast("double").alias("next_price"),
+            F.sum("price").over(run).cast("double").alias("running_spend"),
+        ),
+        "custkey",
+        "orderkey",
+    )
 
 
 _WINDOW2_SQL = """
@@ -314,15 +320,19 @@ def window_suite2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("o_custkey").orderBy(F.desc("price"), F.asc("o_orderkey"))
     full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return per_order.select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderkey").alias("orderkey"),
-        F.ntile(4).over(w).alias("price_quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("price_pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("price_cume_dist"),
-        F.first("price").over(w).cast("double").alias("max_price"),
-        F.nth_value("price", 2).over(full).cast("double").alias("second_price"),
-    ).orderBy("custkey", "orderkey")
+    return ordered(
+        per_order.select(
+            F.col("o_custkey").alias("custkey"),
+            F.col("o_orderkey").alias("orderkey"),
+            F.ntile(4).over(w).alias("price_quartile"),
+            F.round(F.percent_rank().over(w), 6).alias("price_pct_rank"),
+            F.round(F.cume_dist().over(w), 6).alias("price_cume_dist"),
+            F.first("price").over(w).cast("double").alias("max_price"),
+            F.nth_value("price", 2).over(full).cast("double").alias("second_price"),
+        ),
+        "custkey",
+        "orderkey",
+    )
 
 
 _RANGE_WINDOW_SECONDS = 30 * 86400
@@ -367,11 +377,15 @@ def window_range_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.unix_timestamp("o_orderdate"))
         .rangeBetween(-_RANGE_WINDOW_SECONDS, Window.currentRow)
     )
-    return orders.select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderkey").alias("orderkey"),
-        F.sum(dec("o_totalprice")).over(w).cast("double").alias(
-            "trailing_30d_spend"
+    return ordered(
+        orders.select(
+            F.col("o_custkey").alias("custkey"),
+            F.col("o_orderkey").alias("orderkey"),
+            F.sum(dec("o_totalprice")).over(w).cast("double").alias(
+                "trailing_30d_spend"
+            ),
+            F.count(F.lit(1)).over(w).alias("trailing_30d_orders"),
         ),
-        F.count(F.lit(1)).over(w).alias("trailing_30d_orders"),
-    ).orderBy("custkey", "orderkey")
+        "custkey",
+        "orderkey",
+    )

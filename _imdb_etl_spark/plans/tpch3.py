@@ -10,7 +10,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from _imdb_etl_spark.functions import broadcast_if_bounded, dec, disc_price, dsum
+from _imdb_etl_spark.functions import (
+    broadcast_if_bounded,
+    dec,
+    disc_price,
+    dsum,
+    ordered,
+)
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, stage_sorted
 
@@ -57,10 +63,10 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = revenue.crossJoin(F.broadcast(mx)).where(
         F.col("total_revenue") == F.col("m")
     )
-    return (
+    return ordered(
         supplier.join(top, F.col("s_suppkey") == F.col("supplier_no"))
-        .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
+        .select("s_suppkey", "s_name", "total_revenue"),
+        "s_suppkey",
     )
 
 
@@ -97,7 +103,7 @@ WHERE p_brand = 'Brand#1'
     "the post-filter window partitioning — 187.9 s -> linear. The "
     "broadcast side is the brand's part keys (~1M longs at 1000x), "
     "and the hint is MEASURE-GATED (broadcast_if_bounded): beyond "
-    "BROADCAST_ROWS_MAX keys or BROADCAST_BYTES_MAX estimated bytes "
+    "SMALL_ROWS_MAX keys or BROADCAST_BYTES_MAX estimated bytes "
     "the hint drops and the plan degrades to "
     "a shuffle join — the window still reuses the join exchange. Exact-decimal mean keeps the "
     "threshold comparison engine-stable.",
@@ -150,10 +156,11 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("c_count"))
     )
-    return (
+    return ordered(
         per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
+        .agg(F.count(F.lit(1)).alias("custdist")),
+        F.desc("custdist"),
+        F.desc("c_count"),
     )
 
 

@@ -38,6 +38,7 @@ from _imdb_etl_spark.functions import (
     dec,
     disc_price,
     dsum,
+    ordered,
 )
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables
@@ -86,7 +87,7 @@ LIMIT 20
     "the 1000x probe); now the one fact-table exchange is the pair-agg "
     "over the surviving ~1%. Broadcast sides are filtered KEY "
     "projections (~1M longs / ~450k longs at 1000x), MEASURE-GATED "
-    "(broadcast_if_bounded): beyond BROADCAST_ROWS_MAX rows or "
+    "(broadcast_if_bounded): beyond SMALL_ROWS_MAX rows or "
     "BROADCAST_BYTES_MAX estimated bytes (the eur frame carries "
     "s_name/n_name strings — ADVICE r11) the hint drops "
     "and the plan degrades to a shuffle join — the pair-agg still "
@@ -251,14 +252,14 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     zero = F.lit(0).cast("decimal(12,2)")
     national = F.when(F.col("supp_nation") == "NATION_7", F.col("volume")).otherwise(zero)
-    return (
+    return ordered(
         flat.groupBy("o_year")
         .agg(
             (F.sum(national).cast("double") / F.sum("volume").cast("double")).alias(
                 "mkt_share"
             )
-        )
-        .orderBy("o_year")
+        ),
+        "o_year",
     )
 
 
@@ -293,7 +294,7 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (s_suppkey, s_nationkey) supplier projection ride
     # broadcast_if_bounded — lineitem is filtered to matching parts
     # map-side before the one remaining fact-sized shuffle (orders).
-    return (
+    return ordered(
         lineitem.join(
             broadcast_if_bounded(
                 part.where(F.col("p_name").contains("gear")).select("p_partkey")
@@ -312,8 +313,9 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
             disc_price().alias("amount"),
         )
         .groupBy("nation", "o_year")
-        .agg(dsum(F.col("amount"), "sum_profit"))
-        .orderBy("nation", F.desc("o_year"))
+        .agg(dsum(F.col("amount"), "sum_profit")),
+        "nation",
+        F.desc("o_year"),
     )
 
 
@@ -354,11 +356,12 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(dec("l_extendedprice")).alias("val"))
     )
     tot = pv.agg(F.sum("val").alias("total"))
-    return (
+    return ordered(
         pv.join(F.broadcast(tot))
         .where(F.col("val").cast("double") > F.col("total").cast("double") * 0.002)
-        .select("l_partkey", F.col("val").cast("double").alias("val"))
-        .orderBy(F.desc("val"), "l_partkey")
+        .select("l_partkey", F.col("val").cast("double").alias("val")),
+        F.desc("val"),
+        "l_partkey",
     )
 
 
@@ -387,7 +390,7 @@ ORDER BY l_returnflag
 def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem, orders = load_tables(spark, sf_dir, "lineitem", "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
+    return ordered(
         lineitem.where(
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -398,8 +401,8 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-        .orderBy("l_returnflag")
+        ),
+        "l_returnflag",
     )
 
 
@@ -430,7 +433,7 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem, part, supplier = load_tables(spark, sf_dir, "lineitem", "part", "supplier")
     pairs = lineitem.select("l_partkey", "l_suppkey").distinct()
     bad = supplier.where(F.col("s_acctbal") < 0).select("s_suppkey")
-    return (
+    return ordered(
         pairs.join(bad, F.col("s_suppkey") == F.col("l_suppkey"), "left_anti")
         .join(
             part.where(
@@ -441,8 +444,11 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p_partkey") == F.col("l_partkey"),
         )
         .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
+        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt")),
+        F.desc("supplier_cnt"),
+        "p_brand",
+        "p_type",
+        "p_size",
     )
 
 
@@ -508,14 +514,14 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    return (
+    return ordered(
         supplier.join(dominant, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(
             F.broadcast(nation.where(F.col("n_name") == "NATION_9")),
             F.col("n_nationkey") == F.col("s_nationkey"),
         )
-        .select("s_name", "s_acctbal")
-        .orderBy("s_name")
+        .select("s_name", "s_acctbal"),
+        "s_name",
     )
 
 
@@ -619,7 +625,7 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresh = pool.where(F.col("c_acctbal") > 0).agg(
         davg(dec("c_acctbal"), "avg_bal")
     )
-    return (
+    return ordered(
         pool.join(F.broadcast(thresh))
         .where(F.col("c_acctbal") > F.col("avg_bal"))
         .join(
@@ -631,6 +637,6 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("numcust"),
             dsum(dec("c_acctbal"), "totacctbal"),
-        )
-        .orderBy("cntrycode")
+        ),
+        "cntrycode",
     )

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import hex_prefix_int, md5_prefix_int_sql
+from _imdb_etl_spark.functions import hex_prefix_int, md5_prefix_int_sql, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, scratch_dir
 
@@ -69,7 +69,7 @@ def orc_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             + hex_prefix_int(F.md5("text"), 8)
         ).cast("long")
     ).alias("content_sig")
-    return (
+    return ordered(
         back.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -77,6 +77,6 @@ def orc_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
             sig,
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )

@@ -20,7 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, dsum
+from _imdb_etl_spark.functions import dec, dsum, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, scoped_conf, scratch_dir
 
@@ -72,14 +72,14 @@ def sink_dynamic_partition_backfill(
         )
 
     back = spark.read.parquet(tbl)
-    return (
+    return ordered(
         back.groupBy("event_date")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             dsum(dec("value"), "total_value"),
             F.count_distinct("user_id").alias("n_users"),
-        )
-        .orderBy("event_date")
+        ),
+        "event_date",
     )
 
 
@@ -126,14 +126,14 @@ def bucketed_join_orders_lineitem(
     o = spark.table(_bucket_table("o"))
     li = spark.table(_bucket_table("l"))
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
+    return ordered(
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy(F.col("o_orderstatus").alias("status"))
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             dsum(rev.cast("decimal(18,6)"), "revenue"),
-        )
-        .orderBy("status")
+        ),
+        "status",
     )
 
 
@@ -235,12 +235,12 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("basePath", tbl)
         .parquet(tbl)
     )
-    return (
+    return ordered(
         merged.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.count("quality_score").cast("long").alias("n_with_score"),
             F.sum("quality_score").cast("long").alias("sum_score"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )

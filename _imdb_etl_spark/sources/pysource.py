@@ -39,7 +39,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from _imdb_etl_spark.functions import md5_prefix_int_sql
+from _imdb_etl_spark.functions import md5_prefix_int_sql, ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.streaming.events import _run_to_memory
 
@@ -132,15 +132,15 @@ ORDER BY bucket
 )
 def pysource_synthetic_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = read_synthetic_docs(spark, rows=2000, partitions=8)
-    return (
+    return ordered(
         df.groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
             F.max("sig").alias("max_sig"),
-        )
-        .orderBy("bucket")
+        ),
+        "bucket",
     )
 
 
@@ -234,7 +234,7 @@ def streaming_pysource_bucket_counts(
         F.sum("doc_id").cast("long").alias("sum_id"),
     )
     out = _run_to_memory(agg)
-    return out.orderBy("bucket")
+    return ordered(out, "bucket")
 
 
 # ---------------------------------------------------------------------------
@@ -358,15 +358,15 @@ def pysink_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.schema("doc_id bigint, lang string, n_chars bigint").json(
         f"{out}/part-*.json"
     )
-    return (
+    return ordered(
         back.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("sum_chars"),
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )
 
 
@@ -511,13 +511,13 @@ def pysource_pushdown_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = read_pushdown_range(spark, rows=2000, step=250).where(
         (F.col("doc_id") >= _PUSHDOWN_LO) & (F.col("doc_id") < _PUSHDOWN_HI)
     )
-    return (
+    return ordered(
         df.groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
             F.max("sig").alias("max_sig"),
-        )
-        .orderBy("bucket")
+        ),
+        "bucket",
     )

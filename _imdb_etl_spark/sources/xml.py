@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.sources import load_tables, scratch_dir
 
@@ -66,7 +67,7 @@ def xml_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .schema(_DOC_SCHEMA)
         .load(out)
     )
-    return (
+    return ordered(
         back.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -74,6 +75,6 @@ def xml_roundtrip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("text")).alias("sum_text_len"),
             F.min("doc_id").alias("min_doc"),
             F.max("doc_id").alias("max_doc"),
-        )
-        .orderBy("lang")
+        ),
+        "lang",
     )

@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import ordered
 from _imdb_etl_spark.operators.text import QUALITY_GATE_SQL, quality_gate_col
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.streaming.events import _run_to_memory, read_table_stream
@@ -84,4 +85,4 @@ def streaming_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_unique_quality_docs")
     )
     out = _run_to_memory(agg)
-    return out.orderBy("lang")
+    return ordered(out, "lang")

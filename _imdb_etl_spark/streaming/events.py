@@ -27,7 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import dec, dsum
+from _imdb_etl_spark.functions import dec, dsum, ordered
 from _imdb_etl_spark.registry import register
 
 
@@ -132,14 +132,18 @@ def streaming_hourly_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = _run_to_memory(agg)
-    return out.select(
-        F.date_format(F.col("window.start"), "yyyy-MM-dd HH:00:00").alias(
-            "hour_bucket"
+    return ordered(
+        out.select(
+            F.date_format(F.col("window.start"), "yyyy-MM-dd HH:00:00").alias(
+                "hour_bucket"
+            ),
+            "event_type",
+            "n_events",
+            "total_value",
         ),
+        "hour_bucket",
         "event_type",
-        "n_events",
-        "total_value",
-    ).orderBy("hour_bucket", "event_type")
+    )
 
 
 # shared with the batch twin, plans/events.py:events_sessionize
@@ -172,13 +176,13 @@ def streaming_sessionize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, sf_dir)
     sessions = streaming_sessionize(events)
     out = _run_to_memory(sessions)
-    return (
+    return ordered(
         out.groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
             F.sum("n_events").alias("n_events"),
-        )
-        .orderBy("user_id")
+        ),
+        "user_id",
     )
 
 
@@ -216,13 +220,13 @@ def streaming_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     out = _run_to_memory(deduped, output_mode="append")
-    return (
+    return ordered(
         out.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             dsum(dec("value"), "total_value"),
-        )
-        .orderBy("event_type")
+        ),
+        "event_type",
     )
 
 
@@ -282,12 +286,16 @@ def streaming_ss_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     out = _run_to_memory(joined, output_mode="append")
-    return out.select(
-        F.col("p_user").alias("user_id"),
+    return ordered(
+        out.select(
+            F.col("p_user").alias("user_id"),
+            "p_event_id",
+            "v_event_id",
+            (F.unix_millis("p_ts") - F.unix_millis("v_ts")).alias("gap_ms"),
+        ),
         "p_event_id",
         "v_event_id",
-        (F.unix_millis("p_ts") - F.unix_millis("v_ts")).alias("gap_ms"),
-    ).orderBy("p_event_id", "v_event_id")
+    )
 
 
 _STREAM_ENRICH_SQL = """
@@ -331,7 +339,7 @@ def streaming_enrich_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = _run_to_memory(agg)
-    return out.orderBy("nation")
+    return ordered(out, "nation")
 
 
 # --- foreachBatch idempotent upsert sink -------------------------------

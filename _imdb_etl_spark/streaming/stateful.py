@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from _imdb_etl_spark.functions import ordered
 from _imdb_etl_spark.registry import register
 from _imdb_etl_spark.streaming.events import _run_to_memory, read_events_stream
 
@@ -98,13 +99,13 @@ def streaming_stateful_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # update-mode memory sink appends one row per (batch, user); keep the
     # final state per user (max n_events is the latest)
     out = _run_to_memory(totals, output_mode="update")
-    return (
+    return ordered(
         out.groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
             F.max_by("total_value", "n_events").alias("total_value"),
-        )
-        .orderBy("user_id")
+        ),
+        "user_id",
     )
 
 

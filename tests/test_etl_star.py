@@ -153,3 +153,30 @@ def test_graf6(tables, oracle):
         oracle.sql(oracle_imdb.GRAF_SQL["graf6"]),
         "graf6",
     )
+
+
+# --- closing sorts through functions.ordered ---
+
+
+@pytest.mark.parametrize(
+    "graf, inputs",
+    [
+        (g.graf1_usa_india_2019, ["dim_movies"]),
+        (g.graf2_avg_duration_by_genre, ["dim_genres", "fact_movies"]),
+        (
+            g.graf4_top3_directors_top3_genres,
+            ["fact_movies", "dim_people", "dim_genres", "ratings_staging"],
+        ),
+    ],
+)
+def test_graf_closing_sort_keeps_order(tables, monkeypatch, graf, inputs):
+    """A graf routed through ``ordered`` returns the rows of the global
+    sort in the same order; a cap of -1 forces the global sort. The
+    oracle hash sorts rows first, so only this test sees the order."""
+    from _imdb_etl_spark import functions
+
+    got = [tuple(r) for r in graf(*(tables[t] for t in inputs)).collect()]
+    monkeypatch.setattr(functions, "SMALL_ROWS_MAX", -1)
+    plan = graf(*(tables[t] for t in inputs))
+    assert "rangepartitioning" in plan._jdf.queryExecution().executedPlan().toString()
+    assert got == [tuple(r) for r in plan.collect()]

@@ -672,10 +672,7 @@ def test_broadcast_gate_footer_short_circuit(spark, sf_dir):
     direction)."""
     from pyspark.sql import functions as F
 
-    from _imdb_etl_spark.functions import (
-        _footer_rows_upper,
-        broadcast_if_bounded,
-    )
+    from _imdb_etl_spark.functions import broadcast_if_bounded, rows_upper
     from _imdb_etl_spark.sources import load_tables
 
     (nation,) = load_tables(spark, sf_dir, "nation")
@@ -684,12 +681,12 @@ def test_broadcast_gate_footer_short_circuit(spark, sf_dir):
     )
     # footer bound: exact file row count for a nonincreasing plan
     n_file = nation.count()
-    assert _footer_rows_upper(keys) == n_file
-    # row-multiplying (explode) and join shapes: no bound
-    assert _footer_rows_upper(
+    assert rows_upper(keys) == n_file
+    # row-multiplying explode: no bound; a cross join: the product
+    assert rows_upper(
         keys.select(F.explode(F.array("n_nationkey", "n_regionkey")))
     ) is None
-    assert _footer_rows_upper(keys.crossJoin(nation.select("n_name"))) is None
+    assert rows_upper(keys.crossJoin(nation.select("n_name"))) == n_file * n_file
 
     def is_hinted(df):
         return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
@@ -717,15 +714,15 @@ def test_footer_bound_counts_global_aggregate_row(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from _imdb_etl_spark.functions import _footer_rows_upper
+    from _imdb_etl_spark.functions import rows_upper
 
     path = str(tmp_path / "empty.parquet")
     pq.write_table(pa.table({"x": pa.array([], pa.int64())}), path)
     df = spark.read.parquet(path)
-    assert _footer_rows_upper(df.select("x")) == 0
+    assert rows_upper(df.select("x")) == 0
     agg = df.agg(F.max("x").alias("m"))
     assert agg.count() == 1
-    assert _footer_rows_upper(agg) == 1
+    assert rows_upper(agg) == 1
 
 
 def test_footer_short_circuit_on_path_with_space(spark, tmp_path):
@@ -735,14 +732,14 @@ def test_footer_short_circuit_on_path_with_space(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from _imdb_etl_spark.functions import _footer_rows_upper, broadcast_if_bounded
+    from _imdb_etl_spark.functions import broadcast_if_bounded, rows_upper
 
     d = tmp_path / "with space"
     d.mkdir()
     pq.write_table(pa.table({"k": pa.array(range(7), pa.int64())}), str(d / "t.parquet"))
     df = spark.read.parquet(str(d)).select("k")
     assert any("%20" in f for f in df.inputFiles())
-    assert _footer_rows_upper(df) == 7
+    assert rows_upper(df) == 7
     sc = spark.sparkContext
     sc.setJobGroup("gate-space", "footer probe under a spaced path")
     try:

@@ -30,6 +30,9 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
     from _imdb_etl_spark.session import codegen_compiles, get_spark
+    from tests.fixtures import stand_in_for_reference
+
+    stand_in_for_reference()
 
     spark = get_spark(app_name="check")
     con = duckdb.connect()

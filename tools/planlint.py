@@ -9,6 +9,10 @@ training — are skipped) and flags:
   funnels through one task. Legitimate only for scalar aggregates
   (one-row output) and post-top-k stages, which the lint recognizes by
   the node ABOVE the exchange.
+- ``Coalesce 1``: the same funnel without an exchange. Legitimate only
+  directly under the local ``Sort [...], false`` of
+  ``functions.ordered``, which coalesces only a result its row bound
+  proves small.
 - ``CartesianProduct`` / ``BroadcastNestedLoopJoin``: O(N*M) pair work.
   Legitimate only for by-design exact baselines and one-row broadcast
   scalars, allow-listed explicitly.
@@ -17,6 +21,10 @@ training — are skipped) and flags:
   (ArrowEvalPython / mapInPandas / FlatMapGroupsInPandas).
 - ``InMemoryTableScan`` on an uncached path (missed or accidental
   ``.cache()``).
+
+It also prints, without failing, the census of plans that still close
+with a global ``Sort`` over a result ``functions.rows_upper`` proves
+small: the closing sorts ``functions.ordered`` could take over.
 
 Usage: python tools/planlint.py [sf_dir] [query ...]
 Exit 1 if any non-allow-listed flag fires.
@@ -113,6 +121,9 @@ _BENIGN_ABOVE = re.compile(
     r"|GlobalLimit \d{1,4}(?!\d)"
 )
 
+# functions.ordered's local sort, the one node a Coalesce 1 may feed
+_ORDERED_SORT = re.compile(r"\bSort \[.*\], false, \d+$")
+
 # Operators that cannot be compiled without executing (streaming runs to
 # a memory sink; KMeans trains eagerly). Their plans are asserted in
 # dedicated pytest cases instead.
@@ -146,6 +157,10 @@ def lint_plan(name: str, plan: str) -> list[str]:
             above = lines[i - 1] if i else ""
             if not _BENIGN_ABOVE.search(above):
                 flags.append(f"single-partition exchange feeding: {above.strip()[:90]}")
+        if ln.rstrip().endswith("Coalesce 1"):
+            above = lines[i - 1] if i else ""
+            if not _ORDERED_SORT.search(above):
+                flags.append(f"coalesce(1) feeding: {above.strip()[:90]}")
     if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
         if (name, "cartesian") not in ALLOW and not _benign_nested_loop(plan):
             flags.append("cartesian/nested-loop join")
@@ -154,18 +169,30 @@ def lint_plan(name: str, plan: str) -> list[str]:
     return flags
 
 
+def _closes_with_global_sort(df) -> bool:
+    """The analyzed plan's root, below any projections, is a global Sort."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() == "Project":
+        node = node.children().apply(0)
+    return node.nodeName() == "Sort" and getattr(node, "global")()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
+    from _imdb_etl_spark.functions import SMALL_ROWS_MAX, rows_upper
     from _imdb_etl_spark.plans import REGISTRY
     from _imdb_etl_spark.session import get_spark
+    from tests.fixtures import stand_in_for_reference
 
     spark = get_spark(app_name="planlint")
     spark.sparkContext.setLogLevel("ERROR")
+    stand_in_for_reference()
 
     bad = 0
     checked = 0
+    small_global = []
     for name, spec in REGISTRY.items():
         if only and name not in only:
             continue
@@ -179,12 +206,20 @@ def main() -> int:
             bad += 1
             continue
         checked += 1
+        if _closes_with_global_sort(df):
+            upper = rows_upper(df)
+            if upper is not None and upper <= SMALL_ROWS_MAX:
+                small_global.append(name)
         flags = lint_plan(name, plan)
         if flags:
             bad += 1
             for f in flags:
                 print(f"FLAG  {name}: {f}")
-    print(f"\n{checked} plans checked, {bad} flagged")
+    print(
+        f"\n{len(small_global)} plans close with a global Sort over a provably "
+        f"small result: {', '.join(small_global) or '-'}"
+    )
+    print(f"{checked} plans checked, {bad} flagged")
     return 1 if bad else 0
 
 

@@ -8,6 +8,15 @@ appends a deterministic tiebreaker to the reference's ORDER BY (quirk 5:
 the reference's own top-k is nondeterministic under ties) so outputs are
 reproducible and oracle-hashable; tests mirror the same tiebreakers in
 the DuckDB oracle.
+
+Each builder first passes its inputs through ``functions.single_partition``.
+When the row bound proves every input within ``ONE_PARTITION_ROWS_MAX``
+rows, the measured size up to which one task beats the parallel plan,
+each is read as one partition: the aggregates, windows and closing sorts
+above plan no exchange, and the joins broadcast their dim side beside a
+one-partition streamed side, so a graf launches only its broadcast jobs
+and one result job. When any input is unproven or larger, none is
+coalesced and the builder plans the shuffles it always did.
 """
 
 from __future__ import annotations
@@ -15,11 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from _imdb_etl_spark.functions import ordered
+from _imdb_etl_spark.functions import ordered, single_partition
 
 
 def graf1_usa_india_2019(dim_movies: DataFrame) -> DataFrame:
     """dashboard_visualizations.sql:2-9."""
+    (dim_movies,) = single_partition(dim_movies)
     return ordered(
         dim_movies.where(
             F.col("country").isin("USA", "India") & (F.col("year") == 2019)
@@ -34,6 +44,7 @@ def graf1_usa_india_2019(dim_movies: DataFrame) -> DataFrame:
 def graf2_avg_duration_by_genre(dim_genres: DataFrame, fact_movies: DataFrame) -> DataFrame:
     """dashboard_visualizations.sql:13-22. AVG over int duration: exact
     long sum / count, one double division — matches any engine bitwise."""
+    dim_genres, fact_movies = single_partition(dim_genres, fact_movies)
     dg = dim_genres.alias("dg")
     fm = fact_movies.alias("fm")
     return ordered(
@@ -53,6 +64,7 @@ def graf2_avg_duration_by_genre(dim_genres: DataFrame, fact_movies: DataFrame) -
 
 def graf3_top10_directors(fact_movies: DataFrame, dim_people: DataFrame) -> DataFrame:
     """dashboard_visualizations.sql:24-34."""
+    fact_movies, dim_people = single_partition(fact_movies, dim_people)
     return (
         fact_movies.join(
             dim_people, fact_movies["director_id"] == dim_people["person_id"], "inner"
@@ -74,6 +86,9 @@ def graf4_top3_directors_top3_genres(
     rating>6 movies; CTE2 per-(director, genre) counts ranked by
     ROW_NUMBER; final rank<=3. Note it reads ratings_staging (quirk 3)
     and uses > 6 per the SQL, not the README's prose "> 8" (quirk 4)."""
+    fact_movies, dim_people, dim_genres, ratings_staging = single_partition(
+        fact_movies, dim_people, dim_genres, ratings_staging
+    )
     fm = fact_movies.alias("fm")
     r = ratings_staging.alias("r")
     dg = dim_genres.alias("dg")
@@ -116,6 +131,9 @@ def graf5_top10_actors_by_roles(
 ) -> DataFrame:
     """dashboard_visualizations.sql:72-84 — reads role_mapping_staging
     (quirk 3); COUNT(*) counts the dim_people fan-out by design."""
+    role_mapping_staging, dim_people = single_partition(
+        role_mapping_staging, dim_people
+    )
     return (
         role_mapping_staging.where(F.col("category").isin("actor", "actress"))
         .join(
@@ -133,6 +151,7 @@ def graf5_top10_actors_by_roles(
 def graf6_movies_by_country(dim_movies: DataFrame) -> DataFrame:
     """dashboard_visualizations.sql:86-95 — the multi-valued country
     string is an atomic group key, as in the reference."""
+    (dim_movies,) = single_partition(dim_movies)
     return (
         dim_movies.groupBy("country")
         .agg(F.count("movie_id").alias("movie_count"))

@@ -17,9 +17,17 @@ Reference quirks deliberately preserved (SURVEY.md §2.10):
    reference's only dependency mechanism and we encode it as an
    explicit phase.
 
-Scale posture: every transform is declarative (select/join/distinct), so
-Catalyst plans broadcast joins for the dim-sized sides and two-phase
-hash aggregates for the DISTINCTs; nothing here collects to the driver.
+Scale posture: every transform is declarative (select/join/distinct),
+and nothing here collects to the driver. ``materialize_pipeline`` passes
+the inputs of each CTAS through ``functions.single_partition``: when the
+row bound proves every input small (the loaded staging caches count
+their rows, the stored dims their parquet footers), each is read as one
+partition, so the DISTINCTs and the joins of the dims and the fact plan
+no shuffle and each CTAS writes one file. When any input is unproven or
+above ``ONE_PARTITION_ROWS_MAX`` rows (the measured size up to which one
+task beats the parallel plan), none is coalesced: Catalyst plans
+broadcast joins for the dim-sized sides and two-phase hash aggregates
+for the DISTINCTs, as at any scale.
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from _imdb_etl_spark.functions import single_partition
 from _imdb_etl_spark.schemas import STAGING_LOADS
 from _imdb_etl_spark.sources.csv_source import read_staging_csv
 
@@ -185,13 +194,14 @@ def materialize_pipeline(spark: SparkSession, stage_dir: str) -> dict[str, DataF
                 for name, (file_name, schema, drop_malformed) in STAGING_LOADS.items()
             },
         )
+        small = dict(zip(staging, single_partition(*staging.values())))
         dims = {
-            "dim_movies": build_dim_movies(staging["movies_staging"]),
-            "dim_genres": build_dim_genres(staging["genres_staging"]),
+            "dim_movies": build_dim_movies(small["movies_staging"]),
+            "dim_genres": build_dim_genres(small["genres_staging"]),
             "dim_people": build_dim_people(
-                staging["name_staging"],
-                staging["role_mapping_staging"],
-                staging["director_mapping_staging"],
+                small["name_staging"],
+                small["role_mapping_staging"],
+                small["director_mapping_staging"],
             ),
         }
         _concurrently(
@@ -199,11 +209,13 @@ def materialize_pipeline(spark: SparkSession, stage_dir: str) -> dict[str, DataF
             {name: functools.partial(save_as_table, df, name) for name, df in dims.items()},
         )
         fact = build_fact_movies(
-            staging["movies_staging"],
-            staging["ratings_staging"],
-            staging["genres_staging"],
-            spark.table("dim_genres"),
-            spark.table("dim_people"),
+            *single_partition(
+                staging["movies_staging"],
+                staging["ratings_staging"],
+                staging["genres_staging"],
+                spark.table("dim_genres"),
+                spark.table("dim_people"),
+            )
         )
         save_as_table(fact, "fact_movies")
     except BaseException:

@@ -53,10 +53,25 @@ def dec(col: str | Column, typ: str = MONEY) -> Column:
 # and the hint additionally requires <= BROADCAST_BYTES_MAX estimated
 # in-memory size. Above either ceiling the hint is dropped and
 # Catalyst/AQE picks the strategy — degrading to a shuffle join
-# instead of OOMing the driver. The same row cap decides when
-# ``ordered`` may sort a result in one task.
+# instead of OOMing the driver. No frame above the same row cap is ever
+# read as one partition (``single_partition``).
 SMALL_ROWS_MAX = 4_000_000
 BROADCAST_BYTES_MAX = 256 << 20
+
+# The largest proven input bound for which ``single_partition`` runs a
+# whole plan in one partition. Measured head to head on the star ETL and
+# its six grafs over ``tests.fixtures`` stages: local[2] with perfbench's
+# JVM flags, alternating gate-on and gate-off rounds in one session,
+# medians of materialize / grafs seconds. Largest input bound 16k rows
+# (n=10 000): one partition wins (1.75 / 1.34 s against 1.88 / 1.76).
+# 79k (n=50 000): wins (4.13 / 1.78 against 4.57 / 1.98). 158k
+# (n=100 000): ties (8.76 / 2.73 against 8.69 / 2.65). 237k
+# (n=150 000): the grafs lose (2.9 against 2.6 s). 316k (n=200 000):
+# loses (16.3 / 4.32 against 14.0 / 3.61), once each staging CSV spans
+# two scan splits and two tasks share the work. 1.6M (n=1 000 000):
+# the grafs lose by a third (19.0 against 14.0 s). One partition is one
+# task however many cores the host has, so the cap sits below the tie.
+ONE_PARTITION_ROWS_MAX = 100_000
 
 # estimated in-memory width per value for fixed-width Spark SQL types
 # (UnsafeRow-ish: 8-byte word per field; decimals/timestamps a word,
@@ -130,6 +145,10 @@ def _node_rows_upper(node) -> int | None:
         return node.sink().allData().size()
     if name == "LocalRelation":
         return node.data().size()
+    if name == "InMemoryRelation":  # a cache counts its rows as it loads
+        if not node.cacheBuilder().isCachedColumnBuffersLoaded():
+            return None
+        return node.stats().rowCount().get()
     children = node.children()
     kids = [children.apply(i) for i in range(children.size())]
     if name == "GlobalLimit":
@@ -166,32 +185,62 @@ def rows_upper(df) -> int | None:
     """A proven upper bound on the frame's row count, from its analyzed
     plan and no Spark job, or None when no rule proves one. Leaves:
     parquet relations count their file footers; memory sinks and local
-    relations the rows the driver holds. Above them: row-keeping nodes
-    (_ROWS_KEPT) pass the child's bound on, an Aggregate gives
-    max(child, 1), a GlobalLimit k gives min(k, child) or k alone, a
-    left semi or anti join the left side's bound, an inner or cross
-    join the product of both sides, and an outer join the product plus
-    both sides. Any other node (Generate, Union, a non-file source)
-    returns None, and so does any error: the bound never guesses."""
+    relations the rows the driver holds; a loaded cache its row count.
+    Above them: row-keeping nodes (_ROWS_KEPT) pass the child's bound
+    on, an Aggregate gives max(child, 1), a GlobalLimit k gives
+    min(k, child) or k alone, a left semi or anti join the left side's
+    bound, an inner or cross join the product of both sides, and an
+    outer join the product plus both sides. Any other node (Generate,
+    Union, a non-file source) returns None, and so does any error: the
+    bound never guesses.
+
+    Caches are looked up only when the plan as written has no bound and
+    the session holds cached data, so an uncached plan costs one walk.
+    A cache that is not loaded yet, or no longer, has no bound."""
     try:
-        return _node_rows_upper(df._jdf.queryExecution().analyzed())
+        plan = df._jdf.queryExecution().analyzed()
+        upper = _node_rows_upper(plan)
+        if upper is None:
+            caches = df.sparkSession._jsparkSession.sharedState().cacheManager()
+            if not caches.isEmpty():
+                upper = _node_rows_upper(caches.useCachedData(plan))
+        return upper
     except Exception:  # noqa: BLE001
         return None
 
 
+def single_partition(*frames, max_rows: int = ONE_PARTITION_ROWS_MAX):
+    """The one small-input gate. When ``rows_upper`` proves every frame
+    holds at most ``max_rows`` rows, and never more than SMALL_ROWS_MAX,
+    return each as ``coalesce(1)``; otherwise return the frames
+    unchanged, so a large input keeps the parallel plan. All or none:
+    one unproven or large frame leaves every frame as it was.
+
+    A single-partition child satisfies every clustered and ordered
+    distribution, so an aggregate, window, sort or sort-merge join above
+    coalesced inputs plans no exchange, and a broadcast join keeps its
+    streamed side in one partition. Each exchange not planned is a stage
+    and, under AQE, a job not launched: at small sizes their fixed
+    driver-side cost outweighs the work they split. The default cap is
+    measured for a whole plan over the frames running in that one task
+    (ONE_PARTITION_ROWS_MAX)."""
+    cap = min(max_rows, SMALL_ROWS_MAX)
+    for df in frames:
+        upper = rows_upper(df)
+        if upper is None or upper > cap:
+            return frames
+    return tuple(df.coalesce(1) for df in frames)
+
+
 def ordered(df, *cols):
-    """The closing sort of a result. When ``rows_upper`` proves the
-    frame holds at most SMALL_ROWS_MAX rows, sort it in one task
-    (``coalesce(1)`` then a local sort); a global ``orderBy`` would add
-    a sampling job for the range bounds and a range shuffle, whatever
-    the row count. ``coalesce(1)`` is narrow, so the stage above the
-    last exchange, often a final aggregate, runs in that one task too.
-    Otherwise it is ``df.orderBy(*cols)``, so large results keep the
-    parallel sort."""
-    upper = rows_upper(df)
-    if upper is not None and upper <= SMALL_ROWS_MAX:
-        return df.coalesce(1).sortWithinPartitions(*cols)
-    return df.orderBy(*cols)
+    """The closing sort of a result: ``orderBy`` over the small-input
+    gate. A result ``rows_upper`` proves at most SMALL_ROWS_MAX rows is
+    sorted in one task, with no sampling job for range bounds and no
+    range shuffle; only the stage above the last exchange, often a final
+    aggregate, runs in that task too (``coalesce(1)`` is narrow), so the
+    cap is the engine's small-result ceiling, not the whole-plan one.
+    Otherwise it is the parallel ``df.orderBy(*cols)``."""
+    return single_partition(df, max_rows=SMALL_ROWS_MAX)[0].orderBy(*cols)
 
 
 def broadcast_if_bounded(

@@ -181,6 +181,11 @@ ORDER BY d.doc_id
     "aggregation.",
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return ordered(_lang_preds(spark, sf_dir), "doc_id")
+
+
+def _lang_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc (doc_id, pred_lang, n_hits), unsorted."""
     # Zero-shuffle formulation: the lexicon is a compile-time constant,
     # so per-language hit counts are narrow array expressions
     # (size(filter(toks, in lang_words))) and the per-doc argmax is a
@@ -197,19 +202,15 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = F.size(F.filter(_toks(), lambda x: F.array_contains(words, x)))  # noqa: B023
         per_lang.append(F.struct(n.alias("n_hits"), F.lit(r).alias("r"), F.lit(lang).alias("lex_lang")))
     best = F.greatest(*per_lang)
-    return ordered(
-        docs.withColumn("m", best)
-        .select(
-            "doc_id",
-            F.when(F.col("m.n_hits") > 0, F.col("m.lex_lang"))
-            .otherwise("und")
-            .alias("pred_lang"),
-            F.when(F.col("m.n_hits") > 0, F.col("m.n_hits"))
-            .otherwise(0)
-            .cast("long")
-            .alias("n_hits"),
-        ),
+    return docs.withColumn("m", best).select(
         "doc_id",
+        F.when(F.col("m.n_hits") > 0, F.col("m.lex_lang"))
+        .otherwise("und")
+        .alias("pred_lang"),
+        F.when(F.col("m.n_hits") > 0, F.col("m.n_hits"))
+        .otherwise(0)
+        .cast("long")
+        .alias("n_hits"),
     )
 
 
@@ -651,7 +652,7 @@ ORDER BY c.true_lang, c.pred_lang
 )
 def text_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = load_tables(spark, sf_dir, "documents")
-    preds = text_lang_id(spark, sf_dir).select("doc_id", "pred_lang")
+    preds = _lang_preds(spark, sf_dir).select("doc_id", "pred_lang")
     cells = (
         docs.select("doc_id", F.col("lang").alias("true_lang"))
         .join(preds, "doc_id")

@@ -22,7 +22,7 @@ from _imdb_etl_spark.session import codegen_compiles
 from _imdb_etl_spark.sources.sinks import drop_table
 from _imdb_etl_spark.testing import canon_rows
 from tests import fixtures
-from tests.test_etl_star import assert_matches
+from tests.test_etl_star import assert_matches, shuffles
 
 _PERFBENCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"
@@ -96,6 +96,35 @@ def test_materialize_cycles_free_staging(spark, imdb_stage, oracle):
                 assert_matches(t[name], oracle.sql(f"SELECT * FROM {name}"), name)
             drop_staging(spark)
             assert _persistent_rdds(spark) == start
+    finally:
+        _drop_etl_tables(spark)
+
+
+def test_star_ctas_plans_no_shuffle_unless_gate_is_off(spark, imdb_stage, oracle, monkeypatch):
+    """Each CTAS reads its proven-small inputs as one partition, so its
+    plan has no hash or range exchange, only broadcasts. With the gate's
+    cap below any bound each CTAS plans its exchanges again. Both ways
+    the four star tables equal the oracle's."""
+    from _imdb_etl_spark import functions
+    from _imdb_etl_spark.sources import sinks
+
+    plans = {}
+    save = sinks.save_as_table
+
+    def recorded(df, name, *args, **kwargs):
+        plans[name] = shuffles(df)
+        return save(df, name, *args, **kwargs)
+
+    monkeypatch.setattr(sinks, "save_as_table", recorded)
+    try:
+        for cap, shuffled in ((functions.SMALL_ROWS_MAX, False), (-1, True)):
+            monkeypatch.setattr(functions, "SMALL_ROWS_MAX", cap)
+            plans.clear()
+            t = materialize_pipeline(spark, imdb_stage)
+            assert sorted(plans) == sorted(STAR_TABLES)
+            for name in STAR_TABLES:
+                assert bool(plans[name]) == shuffled, (name, plans[name])
+                assert_matches(t[name], oracle.sql(f"SELECT * FROM {name}"), name)
     finally:
         _drop_etl_tables(spark)
 

@@ -8,6 +8,8 @@ test_etl_materialize.py.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,6 +23,12 @@ def diff_samples(a: list[str], b: list[str], k: int = 3) -> str:
     lines = [f"  left-only:  {r!r}" for r in list(sa - sb)[:k]]
     lines += [f"  right-only: {r!r}" for r in list(sb - sa)[:k]]
     return "\n".join(lines)
+
+
+def shuffles(df) -> list[str]:
+    """The exchanges in the frame's physical plan other than broadcasts."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln.strip() for ln in plan.splitlines() if re.search(r"(?<!Broadcast)Exchange ", ln)]
 
 
 def assert_matches(sdf, rel, label=""):
@@ -180,3 +188,55 @@ def test_graf_closing_sort_keeps_order(tables, monkeypatch, graf, inputs):
     plan = graf(*(tables[t] for t in inputs))
     assert "rangepartitioning" in plan._jdf.queryExecution().executedPlan().toString()
     assert got == [tuple(r) for r in plan.collect()]
+
+
+# --- the small-input gate (functions.single_partition) ---
+
+# each graf, its inputs and the jobs it launches once its inputs pass the
+# gate: one per broadcast, then the result job
+GRAFS = [
+    (g.graf1_usa_india_2019, ["dim_movies"], 1),
+    (g.graf2_avg_duration_by_genre, ["dim_genres", "fact_movies"], 2),
+    (g.graf3_top10_directors, ["fact_movies", "dim_people"], 2),
+    (
+        g.graf4_top3_directors_top3_genres,
+        ["fact_movies", "dim_people", "dim_genres", "ratings_staging"],
+        7,
+    ),
+    (g.graf5_top10_actors_by_roles, ["role_mapping_staging", "dim_people"], 2),
+    (g.graf6_movies_by_country, ["dim_movies"], 1),
+]
+
+
+@pytest.mark.parametrize("graf, inputs, jobs", GRAFS, ids=lambda v: getattr(v, "__name__", None))
+def test_graf_runs_in_one_partition(spark, tables, graf, inputs, jobs):
+    """At fixture scale every input is proven small, so a graf plans no
+    hash or range exchange, only its broadcasts, and launches one job
+    per broadcast plus the result job."""
+    df = graf(*(tables[t] for t in inputs))
+    assert shuffles(df) == []
+    sc = spark.sparkContext
+    group = f"graf-jobs-{graf.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    assert shuffles(df) == []
+
+
+@pytest.mark.parametrize("graf, inputs, jobs", GRAFS, ids=lambda v: getattr(v, "__name__", None))
+def test_graf_without_gate_plans_shuffles_same_rows(tables, monkeypatch, graf, inputs, jobs):
+    """With the gate's cap below any bound, nothing is coalesced: the
+    graf plans its hash exchanges again and returns the same rows in
+    the same order."""
+    from _imdb_etl_spark import functions
+
+    got = [tuple(r) for r in graf(*(tables[t] for t in inputs)).collect()]
+    monkeypatch.setattr(functions, "SMALL_ROWS_MAX", -1)
+    forced = graf(*(tables[t] for t in inputs))
+    assert any("hashpartitioning" in ln for ln in shuffles(forced))
+    assert got == [tuple(r) for r in forced.collect()]

@@ -1,10 +1,12 @@
-"""``functions.ordered``, the closing-sort helper, and ``rows_upper``,
-the row bound it and the broadcast gate's short-circuit rely on.
+"""``functions.ordered``, the closing-sort helper, the small-input gate
+``single_partition`` it sorts over, and ``rows_upper``, the row bound
+they and the broadcast gate's short-circuit rely on.
 
 A result the bound proves small is sorted in one task (``coalesce(1)``
-then a local sort); anything else keeps the global ``orderBy`` and its
-range partitioning. The oracle hash sorts rows before hashing, so the
-order tests here are the only check of the helper's output order.
+then a sort that needs no range exchange); anything else keeps the
+global ``orderBy`` and its range partitioning. The oracle hash sorts
+rows before hashing, so the order tests here are the only check of the
+helper's output order.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from _imdb_etl_spark import functions
-from _imdb_etl_spark.functions import ordered, rows_upper
+from _imdb_etl_spark.functions import ordered, rows_upper, single_partition
 from _imdb_etl_spark.plans import REGISTRY
 from _imdb_etl_spark.sources import load_tables
 
@@ -120,6 +122,41 @@ def test_bound_generate_and_other_sources_are_none(spark, two_files):
     assert rows_upper(spark.range(10)) is None
 
 
+def test_bound_loaded_cache_is_its_row_count(spark):
+    """A cache counts its rows once loaded, below a node that has no
+    bound of its own, so a cached read of any source is bounded. Before
+    it is loaded, Spark's estimate for the cached plan proves nothing."""
+    df = spark.range(7).select(F.explode(F.array("id", "id")).alias("k")).cache()
+    ids = spark.range(5).cache()
+    try:
+        assert rows_upper(df) is None and rows_upper(ids) is None  # not loaded yet
+        assert df.count() == 14
+        assert rows_upper(df) == 14
+        assert rows_upper(df.where(F.col("k") > 3).groupBy("k").count()) == 14
+    finally:
+        df.unpersist()
+        ids.unpersist()
+
+
+def test_bound_unpersisted_cache_is_none(spark):
+    df = spark.range(5).cache()
+    df.count()
+    assert rows_upper(df) == 5
+    df.unpersist(blocking=True)
+    assert rows_upper(df) is None
+
+
+def test_single_partition_is_all_or_none(two_files):
+    a, b = two_files
+    small = single_partition(a, b)
+    assert [df.rdd.getNumPartitions() for df in small] == [1, 1]
+    assert [sorted(r.k for r in df.collect()) for df in small] == [[0, 1, 2, 3, 4], [0, 1, 2]]
+    unproven = b.select(F.explode(F.array("k")).alias("k"))
+    assert single_partition(a, unproven) == (a, unproven)
+    # a frame above the cap leaves both as they were
+    assert single_partition(a, b, max_rows=4) == (a, b)
+
+
 def test_planlint_coalesce_is_benign_only_under_ordered_sort():
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
     import planlint
@@ -130,6 +167,6 @@ def test_planlint_coalesce_is_benign_only_under_ordered_sort():
         "   +- Coalesce 1\n"
         "      +- FileScan parquet [k#1]\n"
     )
-    assert planlint.lint_plan("q", plan.format(glob="false")) == []
-    assert planlint.lint_plan("q", plan.format(glob="true"))
+    assert planlint.lint_plan("q", plan.format(glob="true")) == []
+    assert planlint.lint_plan("q", plan.format(glob="false"))
     assert planlint.lint_plan("q", plan.replace("Sort [k#1 ASC NULLS FIRST], {glob}, 0", "Project [k#1]"))

@@ -10,9 +10,10 @@ training — are skipped) and flags:
   (one-row output) and post-top-k stages, which the lint recognizes by
   the node ABOVE the exchange.
 - ``Coalesce 1``: the same funnel without an exchange. Legitimate only
-  directly under the local ``Sort [...], false`` of
-  ``functions.ordered``, which coalesces only a result its row bound
-  proves small.
+  directly under the ``Sort [...], true`` of ``functions.ordered``: its
+  gate, ``functions.single_partition``, coalesces only a result its row
+  bound proves small, and a global sort over one partition plans no
+  range exchange.
 - ``CartesianProduct`` / ``BroadcastNestedLoopJoin``: O(N*M) pair work.
   Legitimate only for by-design exact baselines and one-row broadcast
   scalars, allow-listed explicitly.
@@ -23,8 +24,9 @@ training — are skipped) and flags:
   ``.cache()``).
 
 It also prints, without failing, the census of plans that still close
-with a global ``Sort`` over a result ``functions.rows_upper`` proves
-small: the closing sorts ``functions.ordered`` could take over.
+with a range-partitioned global ``Sort`` over a result
+``functions.rows_upper`` proves small: the closing sorts
+``functions.ordered`` could take over.
 
 Usage: python tools/planlint.py [sf_dir] [query ...]
 Exit 1 if any non-allow-listed flag fires.
@@ -121,8 +123,8 @@ _BENIGN_ABOVE = re.compile(
     r"|GlobalLimit \d{1,4}(?!\d)"
 )
 
-# functions.ordered's local sort, the one node a Coalesce 1 may feed
-_ORDERED_SORT = re.compile(r"\bSort \[.*\], false, \d+$")
+# functions.ordered's sort, the one node a Coalesce 1 may feed
+_ORDERED_SORT = re.compile(r"\bSort \[.*\], true, \d+$")
 
 # Operators that cannot be compiled without executing (streaming runs to
 # a memory sink; KMeans trains eagerly). Their plans are asserted in
@@ -170,11 +172,19 @@ def lint_plan(name: str, plan: str) -> list[str]:
 
 
 def _closes_with_global_sort(df) -> bool:
-    """The analyzed plan's root, below any projections, is a global Sort."""
+    """The analyzed plan's root, below any projections, is a global Sort
+    that is not ``functions.ordered``'s sort over ``coalesce(1)``."""
     node = df._jdf.queryExecution().analyzed()
     while node.nodeName() == "Project":
         node = node.children().apply(0)
-    return node.nodeName() == "Sort" and getattr(node, "global")()
+    if node.nodeName() != "Sort" or not getattr(node, "global")():
+        return False
+    child = node.children().apply(0)
+    return not (
+        child.nodeName() == "Repartition"
+        and child.numPartitions() == 1
+        and not child.shuffle()
+    )
 
 
 def main() -> int:
